@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.GraftSession
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. The driver runs
@@ -22,19 +26,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val RecycleEvery = 48
 
+  /** The bench session: the engine's own factory, plus the one
+    * bench-only log setting below. `perfbench` reaches this method by
+    * reflection, so its name and `(String)` signature stay.
+    */
   private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, "graft-bench")
     // The two-level prefix-sum in Packing runs one deliberate window
     // over the O(#partitions) totals frame; Spark warns "No Partition
     // Defined" on every run, and dozens of benign copies bury real
@@ -43,8 +40,82 @@ object Bench {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.window",
         org.apache.logging.log4j.Level.ERROR)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     spark
+  }
+
+  /** `Class: message` of the innermost cause — what a failure record
+    * keeps instead of a bare -1.
+    */
+  private[graft] def rootCause(t: Throwable): String = {
+    val root = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
+    s"${root.getClass.getName}: ${root.getMessage}"
+  }
+
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in oracle SQL or an error message
+    * would otherwise make the whole file unparseable.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** One timed rep: seconds (-1 on failure), residual blocks and bytes,
+    * and the failure's root cause.
+    */
+  private[graft] final case class Rep(sec: Double, residBlocks: Long, residBytes: Long,
+      error: Option[String])
+
+  /** Time one rep of `fn` into the noop sink, then clean up outside the
+    * timed window. The residuals are sampled AFTER the per-rep cleanup,
+    * so a nonzero value is state this rep leaked into the next one —
+    * the r10 board's rising-rep sequences (q321 [10, 21, 94])
+    * were only attributable by re-running BenchOne on an idle machine;
+    * with the residuals in BENCH_DETAIL.json the artifact itself shows
+    * whether a rise was leaked state or environment.
+    */
+  private[graft] def runOnce(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Rep = {
+    val t0 = System.nanoTime()
+    // noop sink only: count() would let Catalyst prune every
+    // output-only expression subtree and time a different workload
+    val error =
+      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
+      catch { case NonFatal(e) => Some(rootCause(e)) }
+    // a FAILED rep must never become the reported minimum (a query
+    // that dies in 0.3s would otherwise "win" over its real 10s
+    // runs, silently): -1 marks failure; min-selection ignores it
+    val sec = if (error.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
+    // Per-REP cleanup (outside the timed window): operators sever
+    // lineage via localCheckpoint and release their own caches, but
+    // the RESULT frame's checkpoint blocks stay pinned after the
+    // sink — so rep2 used to run against rep1's leaked blocks (the
+    // r9 q157 in-board rise: reps [3.25, 6.19, 5.64] while the
+    // isolated BenchOne falls 10.2 → 2.0). Checkpoint blocks are
+    // never reused across reps, so dropping storage here only
+    // removes noise.
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    // clearCache's removals are asynchronous: sampling immediately
+    // would count in-flight cleanup as "leaked" and the telemetry
+    // would misattribute ordinary async removal. Poll briefly
+    // (outside the timed window) until storage settles; anything
+    // still pinned after the grace window is a genuine leak.
+    var resid = spark.sparkContext.getRDDStorageInfo
+    var waited = 0
+    while (resid.nonEmpty && waited < 2000) {
+      Thread.sleep(100); waited += 100
+      resid = spark.sparkContext.getRDDStorageInfo
+    }
+    Rep(sec, resid.map(_.numCachedPartitions.toLong).sum,
+      resid.map(i => i.memSize + i.diskSize).sum, error)
   }
 
   /** Engine warmup so the first measured query of a (fresh) session
@@ -63,12 +134,12 @@ object Bench {
           Window.partitionBy("r_regionkey").orderBy("r_regionkey")))
         .join(r, Seq("r_regionkey"))
         .write.mode("overwrite").format("noop").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCores.toString
     var spark = buildSession(cpus)
     warmup(spark, sfDir)
     // SPARK_GRAFT_ONLY=q65_nearest_dense_grid,q71_… runs a subset (an
@@ -77,52 +148,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // (seconds or -1 on failure, residual blocks, residual bytes):
-    // the residuals are sampled AFTER the per-rep cleanup, so a
-    // nonzero value is state this rep leaked into the next one — the
-    // r10 driver board's rising-rep sequences (q321 [10, 21, 94])
-    // were only attributable by re-running BenchOne on an idle
-    // machine; with the residuals in BENCH_DETAIL.json the artifact
-    // itself shows whether a rise was leaked state or environment.
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long, Long) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch {
-          case _: Throwable =>
-            // noop may be unavailable; fall back to count
-            try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-        }
-      // a FAILED rep must never become the reported minimum (a query
-      // that dies in 0.3s would otherwise "win" over its real 10s
-      // runs, silently): -1 marks failure; min-selection ignores it
-      val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // Per-REP cleanup (outside the timed window): operators sever
-      // lineage via localCheckpoint and release their own caches, but
-      // the RESULT frame's checkpoint blocks stay pinned after the
-      // sink — so rep2 used to run against rep1's leaked blocks (the
-      // r9 q157 in-board rise: reps [3.25, 6.19, 5.64] while the
-      // isolated BenchOne falls 10.2 → 2.0). Checkpoint blocks are
-      // never reused across reps, so dropping storage here only
-      // removes noise.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // clearCache's removals are asynchronous: sampling immediately
-      // would count in-flight cleanup as "leaked" and the telemetry
-      // would misattribute ordinary async removal. Poll briefly
-      // (outside the timed window) until storage settles; anything
-      // still pinned after the grace window is a genuine leak.
-      var resid = spark.sparkContext.getRDDStorageInfo
-      var waited = 0
-      while (resid.nonEmpty && waited < 2000) {
-        Thread.sleep(100); waited += 100
-        resid = spark.sparkContext.getRDDStorageInfo
-      }
-      (sec, resid.map(_.numCachedPartitions.toLong).sum,
-        resid.map(i => i.memSize + i.diskSize).sum)
-    }
     // Single-run timing made per-query regressions unfalsifiable (r4→r5
     // showed 3-4x swings on untouched queries). Each query now runs
     // twice in the warm session; if the two runs disagree by >25% (and
@@ -146,17 +171,17 @@ object Bench {
         spark = buildSession(cpus)
         warmup(spark, sfDir)
       }
-      val a = runOnce(fn)
-      val b = runOnce(fn)
-      val good = Seq(a, b).map(_._1).filter(_ >= 0)
+      val a = runOnce(spark, sfDir, fn)
+      val b = runOnce(spark, sfDir, fn)
+      val good = Seq(a, b).map(_.sec).filter(_ >= 0)
       val lo = if (good.nonEmpty) good.min else -1.0
       // tie-break third run on >25% disagreement between good reps, or
       // on any failed rep (a failure is the strongest disagreement)
       val reps =
         if (good.size < 2 || (lo > 0.5 && (good.max - lo) / lo > 0.25))
-          Seq(a, b, runOnce(fn))
+          Seq(a, b, runOnce(spark, sfDir, fn))
         else Seq(a, b)
-      val goodAll = reps.map(_._1).filter(_ >= 0)
+      val goodAll = reps.map(_.sec).filter(_ >= 0)
       // storage is dropped per-rep inside runOnce; periodically nudge
       // GC so the weak-ref-driven ContextCleaner actually releases
       // shuffle files and broadcasts
@@ -176,11 +201,13 @@ object Bench {
       .mkString("{", ",", "}")
     val detail = results.map { case (k, v, reps) =>
       "\"" + k + "\":{\"value\":" + f"$v%.3f" + ",\"reps\":[" +
-        reps.map(r => f"${r._1}%.3f").mkString(",") +
+        reps.map(r => f"${r.sec}%.3f").mkString(",") +
         "],\"resid_blocks\":[" +
-        reps.map(_._2.toString).mkString(",") +
+        reps.map(_.residBlocks.toString).mkString(",") +
         "],\"resid_bytes\":[" +
-        reps.map(_._3.toString).mkString(",") + "]}"
+        reps.map(_.residBytes.toString).mkString(",") + "]" +
+        reps.flatMap(_.error).headOption
+          .fold("")(e => ",\"error\":" + jsonString(e)) + "}"
     }.mkString("{", ",", "}")
     val detailJson =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","recycle_every":$RecycleEvery,"queries":$detail,"sf":"$sfDir"}"""
@@ -188,7 +215,7 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_DETAIL.json"),
         (detailJson + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Capture-independent record (r15 verdict #3): BENCH_r13-r15 all
     // recorded parsed:null because the driver parses a bounded stdout
     // capture — even the compact tail line evidently didn't survive
@@ -201,7 +228,7 @@ object Bench {
         java.nio.file.Paths.get("BENCH_SUMMARY.json"),
         (f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"queries":$qs,"sf":"$sfDir"}""" + "\n")
           .getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
     // Driver-proof compact record (r14 verdict #1): the per-query line

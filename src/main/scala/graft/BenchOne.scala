@@ -1,45 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Times a single declared query in isolation:
   * `runMain graft.BenchOne <queryName> [reps]` with
   * `SPARK_GRAFT_SF_DIR` set — the per-query iteration loop the full
-  * Bench is too slow for.
+  * Bench is too slow for. Each rep goes through `Bench.runOnce`, so the
+  * timed region, sink and per-rep cleanup are the full Bench's.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-one")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-bench-one")
     val q = SparkEntry.queries(name)
-    for (i <- 1 to reps) {
-      val t0 = System.nanoTime()
-      // SAME sink as the full Bench (noop write): count() would let
-      // Catalyst prune every output-only expression subtree and
-      // under-report queries whose cost is in the projected columns
-      // (q143 reads 0.6 s under count vs its true 2.4 s materialized)
-      q(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[benchone] $name rep$i: $sec%.2f s")
-      // same per-rep cleanup as Bench.runOnce (apples-to-apples):
-      // drop leaked result-checkpoint blocks before the next rep
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    val runs = (1 to reps).map { i =>
+      val r = Bench.runOnce(spark, sfDir, q)
+      println(r.error.fold(f"[benchone] $name rep$i: ${r.sec}%.2f s")(
+        e => s"[benchone] $name rep$i: failed: $e"))
+      r
     }
     spark.stop()
+    if (runs.exists(_.error.nonEmpty)) sys.exit(1)
   }
 }

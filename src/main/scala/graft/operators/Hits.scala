@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * any engine replays the fixed point bit-exactly. Magnitude
   * discipline: values grow ≤ ×(opposing side mass) per half-step, so
   * every unnormalized stretch is capped at 2 rounds (the envelope
-  * ProbeScaleEval measures on dense complete-bipartite graphs at 8
-  * rounds) — and because the only null source in the rescale is a
+  * BASELINE.md's r11 HITS re-probe measured on dense complete-bipartite
+  * graphs at 8 rounds) — and because the only null source in the rescale is a
   * 38-digit overflow (inputs are non-null by construction), the
   * normalize step RAISES on a null product instead of letting the
   * closing left-join coalesce read it as a legitimate 0.
@@ -195,9 +195,10 @@ object Hits {
       // Exact renormalization of h every SECOND round bounds the
       // decimal magnitude: unnormalized growth is ×(side mass) per
       // half-step and K_{2000,500}-dense graphs overflow 38 digits
-      // by round 4 (found by ProbeScaleEval — the closing rescale's
-      // v·scale product went null). A 2-round stretch is the
-      // envelope the probe validates through 8 rounds. (The r10
+      // by round 4 (found by the round-10 scale probe, BASELINE.md —
+      // the closing rescale's v·scale product went null). A 2-round
+      // stretch is the envelope the r11 re-probe validated through 8
+      // rounds. (The r10
       // single-mid-point placement let 6-8-iteration runs regrow a
       // 4-round stretch — exactly the undetected-overflow window
       // ADVICE r10 flagged.)

@@ -34,10 +34,10 @@ import graft.functions.VectorFunctions
   *     members by the same portable md5 rank. Skewed corpora (a hot
   *     semantic region captured by one centroid) therefore cap every
   *     final cell near the target instead of letting one cell go
-  *     quadratic. ProbeScaleEval plants exactly this skew at 10-40×
-  *     the bench embedding volume and asserts Σ|cell|² stays within
-  *     the linear bound while planted exact duplicates are all
-  *     caught.
+  *     quadratic. The r11 scale probe (BASELINE.md) planted exactly
+  *     this skew at 10-40× the bench embedding volume and measured
+  *     Σ|cell|² within the linear bound with every planted exact
+  *     duplicate caught.
   *
   * The quantizer stays the PORTABLE md5-rank draw
   * ([[Similarity.ivfTopKPortable]]'s recipe): centroids are the

@@ -1142,40 +1142,6 @@ object ExtensionQueries {
       (lit(41.5) + (col("o_orderkey") % 950).cast("double") / 100.0).as("s_lat"),
       (lit(-5.0) + (col("o_orderkey") % 1450).cast("double") / 100.0).as("s_lon"))
 
-  /** The broadcast min_by form on q65's dense inputs — NOT a declared
-    * query (same |customers|·|sites| scoring volume as the window
-    * form, minus its sort); kept for the BenchGridRace head-to-head.
-    */
-  def qNearestSiteDenseMinBy(s: SparkSession, dir: String): DataFrame = {
-    // explicit fan-out: the probe side is one parquet split, and a
-    // broadcast nested-loop join parallelizes only over probe
-    // partitions — without this the exhaustive scorer runs on ONE core
-    val pts = customerPoints(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-      .withColumn("lat", greatest(least(col("lat"), lit(51.0)), lit(41.5)))
-      .withColumn("lon", greatest(least(col("lon"), lit(9.5)), lit(-5.0)))
-    NearestJoin.nearestByMinBy(
-      pts, denseSites(s, dir), Seq("c_custkey"),
-      GeoFunctions.haversineKm(col("lat"), col("lon"), col("s_lat"), col("s_lon")),
-      tieBreak = col("site_id"))
-      .select(col("c_custkey"), col("site_id"), round(col("dist_km"), 3).as("dist_km"))
-  }
-
-  /** The broadcast window form on q65's dense inputs — NOT a declared
-    * query (it scores |customers|·|sites| pairs, the regime the grid
-    * path exists to avoid); kept for the BenchGridRace head-to-head.
-    */
-  def qNearestSiteDenseWindow(s: SparkSession, dir: String): DataFrame = {
-    val pts = customerPoints(s, dir)
-      .withColumn("lat", greatest(least(col("lat"), lit(51.0)), lit(41.5)))
-      .withColumn("lon", greatest(least(col("lon"), lit(9.5)), lit(-5.0)))
-    NearestJoin.nearestByWindow(
-      pts, denseSites(s, dir), "c_custkey",
-      GeoFunctions.haversineKm(col("lat"), col("lon"), col("s_lat"), col("s_lon")),
-      tieBreak = Seq(col("site_id")))
-      .select(col("c_custkey"), col("site_id"), round(col("dist_km"), 3).as("dist_km"))
-  }
-
   /** Nearest dense site per customer through the adaptive grid path —
     * exact (grid + provably-safe radius + exhaustive fallback), so it
     * hash-matches a DuckDB window-over-cross-join oracle.

@@ -1,13 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 import graft.SparkEntry
+import graft.core.GraftSession
 
 /** Plan inspector: prints the formatted physical plan of one or all
-  * declared queries — the iterate-on-the-plan loop the builder prompt
-  * mandates (PushedFilters reach the scan? WholeStageCodegen spans
-  * wide? broadcasts where expected?).
+  * declared queries — the iterate-on-the-plan loop (PushedFilters
+  * reach the scan? WholeStageCodegen spans wide? broadcasts where
+  * expected?).
   *
   * usage: runMain graft.tools.Explain <sfDir> [queryName]
   */
@@ -15,21 +16,13 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val only = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(appName = "graft-explain")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_ == n) }
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
         try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: $e") }
+        catch { case NonFatal(e) => println(s"explain failed: $e") }
       }
     spark.stop()
   }

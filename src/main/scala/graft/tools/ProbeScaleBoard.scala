@@ -1,6 +1,10 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+
+import graft.core.GraftSession
 
 /** FULL-BOARD real-data scale sweep (r13 verdict #6: turn the 24-query
   * sf0.1 → sf1 spot-board into a board-wide measured exponent): every
@@ -27,23 +31,9 @@ object ProbeScaleBoard {
     val scaledDir = args(1)
     val timeoutSec = if (args.length > 2) args(2).toInt else 240
     val ratioThreshold = if (args.length > 3) args(3).toDouble else 4.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val recycleEvery = 48
 
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-scale-board")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.host", "localhost")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
+    def build(): SparkSession = GraftSession.local(appName = "graft-scale-board")
     var spark = build()
 
     def cleanup(): Unit = {
@@ -52,14 +42,14 @@ object ProbeScaleBoard {
         .foreach(_.unpersist(blocking = true))
     }
 
-    /** One timed noop-sink rep under a watchdog; -1 = failed or DNF. */
-    def rep(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Double = {
-      val tag = s"board:$name:$dir:${System.nanoTime()}"
-      spark.sparkContext.setJobGroup(tag, tag, interruptOnCancel = true)
-      @volatile var done = false
+    /** Runs `body` in job group `tag` under a watchdog that cancels the
+      * group at the deadline; `onFail` stands in for a failed or
+      * cancelled run.
+      */
+    def watched[T](tag: String, onFail: T)(body: => T): T = {
       val sc = spark.sparkContext
+      sc.setJobGroup(tag, tag, interruptOnCancel = true)
+      @volatile var done = false
       val watchdog = new Thread(() => {
         val deadline = System.nanoTime() + timeoutSec * 1e9.toLong
         while (!done && System.nanoTime() < deadline) Thread.sleep(500)
@@ -67,16 +57,23 @@ object ProbeScaleBoard {
       })
       watchdog.setDaemon(true)
       watchdog.start()
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          fn(spark, dir).write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-        finally {
-          done = true
-          spark.sparkContext.clearJobGroup()
-        }
+      try body
+      catch { case NonFatal(_) => onFail }
+      finally {
+        done = true
+        sc.clearJobGroup()
+      }
+    }
+
+    /** One timed noop-sink rep under a watchdog; -1 = failed or DNF. */
+    def rep(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        dir: String): Double = {
+      val sec = watched(s"board:$name:$dir:${System.nanoTime()}", -1.0) {
+        val t0 = System.nanoTime()
+        fn(spark, dir).write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       cleanup()
       sec
     }
@@ -119,27 +116,10 @@ object ProbeScaleBoard {
           // reps — a DNF leg must not re-run unbounded here (review
           // r14: a hung scaled leg would stall the whole sweep at
           // the adjudication it triggered)
-          def cnt(dir: String): String = {
-            val tag = s"board-rows:$name:$dir:${System.nanoTime()}"
-            spark.sparkContext.setJobGroup(tag, tag,
-              interruptOnCancel = true)
-            @volatile var done = false
-            val sc = spark.sparkContext
-            val watchdog = new Thread(() => {
-              val deadline = System.nanoTime() + timeoutSec * 1e9.toLong
-              while (!done && System.nanoTime() < deadline)
-                Thread.sleep(500)
-              if (!done) sc.cancelJobGroup(tag)
-            })
-            watchdog.setDaemon(true)
-            watchdog.start()
-            try fn(spark, dir).count().toString
-            catch { case _: Throwable => "DNF" }
-            finally {
-              done = true
-              spark.sparkContext.clearJobGroup()
+          def cnt(dir: String): String =
+            watched(s"board-rows:$name:$dir:${System.nanoTime()}", "DNF") {
+              fn(spark, dir).count().toString
             }
-          }
           val ra = cnt(baseDir); cleanup()
           val rb = cnt(scaledDir); cleanup()
           s" rows_base=$ra rows_scaled=$rb"

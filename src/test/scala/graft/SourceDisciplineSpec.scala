@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine's two scale disciplines as EXECUTABLE rules, not prose:
+/** The engine's source disciplines as EXECUTABLE rules, not prose:
   *
   *  1. No `udf(...)` anywhere in main source — per-row logic is
   *     either `org.apache.spark.sql.functions` algebra or a compiled
@@ -16,6 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     offsets, histogram/threshold frames) — a new unbounded
   *     collect in any other operator fails this suite before it
   *     fails a 100-TB run.
+  *  3. One session factory: only `core/GraftSession.scala` builds a
+  *     SparkSession, so Bench, Verify and the tools cannot drift
+  *     apart in engine conf again.
   */
 class SourceDisciplineSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -24,8 +27,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
     Files.walk(mainRoot).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
 
-  // files with documented bounded collects (see their scaladocs);
-  // tools/ probes are iteration aids, not the declared surface
+  // files with documented bounded collects (see their scaladocs)
   private val collectAllowlist = Set(
     "lake/StatsManifest.scala",      // per-file min/max manifest rows
     "operators/Experiments.scala",   // k-bounded assignment tables
@@ -49,10 +51,29 @@ class SourceDisciplineSpec extends AnyFunSuite {
   test("collect() only in the documented bounded-collect files") {
     val offenders = scalaFiles.filter { p =>
       val rel = mainRoot.relativize(p).toString
-      !rel.startsWith("tools/") && !collectAllowlist(rel) &&
+      !collectAllowlist(rel) &&
         Files.readString(p).contains(".collect()")
     }
     assert(offenders.isEmpty,
       s"undocumented .collect() in: ${offenders.map(mainRoot.relativize)}")
+  }
+
+  test("SparkSession.builder only in core/GraftSession.scala") {
+    val offenders = scalaFiles.filter { p =>
+      Files.readString(p).linesIterator.exists(l =>
+        !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+          l.matches(".*(SparkSession\\s*\\.\\s*builder\\b|\\.builder\\s*\\(\\s*\\)).*"))
+    }.map(mainRoot.relativize(_).toString)
+    assert(offenders == Seq("core/GraftSession.scala"),
+      s"SparkSession built outside the factory: $offenders")
+  }
+
+  // perfbench times graft.Bench's session by reflecting on this exact
+  // method and silently falls back to another factory if it is gone.
+  // Checked on the class file only: calling it would getOrCreate and
+  // reconfigure the shared TestSpark session.
+  test("Bench still declares buildSession(String): SparkSession") {
+    val m = Class.forName("graft.Bench$").getDeclaredMethod("buildSession", classOf[String])
+    assert(m.getReturnType == classOf[org.apache.spark.sql.SparkSession])
   }
 }

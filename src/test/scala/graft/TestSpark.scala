@@ -2,20 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.GraftSession
+
 /** One shared local session for all suites (mirrors the reference's
-  * session-scoped fixture, `tests/conftest.py:9-25`: local, UTC).
+  * session-scoped fixture, `tests/conftest.py:9-25`: local, UTC): the
+  * engine's own session conf plus a test-only warehouse dir.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
+    val s = GraftSession.builder(4, "graft-test")
       // managed-table surface (bucketed tables) kept out of the repo
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
