@@ -11,9 +11,19 @@ import graft.model.Schemas
   * The reference parses raw JSON **on the driver** in Python
   * (`src/helpers.py:179-190`, `src/format_flights.py:62-102`) and only
   * then hands rows to Spark. We move the whole parse into the engine:
-  * `spark.read.schema(...).json` → `explode(states)` → per-slot
+  * whole-file text → `from_json` → `explode(states)` → per-slot
   * `element_at(...).cast(...)` — distributed, codegen'd, zero
   * driver materialization.
+  *
+  * Why whole text and not the `multiLine` JSON reader: `states` is
+  * `array<array<string>>` holding numbers and booleans, and for every
+  * such token Spark's file-backed JSON parser copies the token's exact
+  * text back out of the input stream, re-opening the file (and its
+  * `.crc`) each time — about 13k filesystem opens per 1,000-state
+  * snapshot, each one a request on S3A. Reading the file as one string
+  * keeps every token in memory. `wholetext` holds a whole file in one
+  * string, so a file must stay under the 2 GB string limit; a
+  * world-wide OpenSky snapshot is about 1–2 MB.
   *
   * Semantics preserved exactly (SURVEY.md §2.2, §2.8):
   *  - out-of-range positional index → null   (`_safe_get`, py:19-23)
@@ -30,16 +40,19 @@ object FormatFlights {
   private def epochToUtcTs(c: Column): Column =
     to_utc_timestamp(to_timestamp(from_unixtime(c)), "UTC")
 
-  /** Parse one raw OpenSky payload (possibly multi-line JSON files) into
-    * the 18-column formatted schema.
+  /** Parse raw OpenSky payload files (pretty-printed or single-line
+    * JSON, one payload per file) into the 18-column formatted schema.
     */
-  def fromRawJson(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .schema(Schemas.rawFlightsSchema)
-      .option("multiLine", true)
-      .json(path)
-    fromRaw(raw)
-  }
+  def fromRawJson(spark: SparkSession, path: String): DataFrame =
+    fromRaw(parsePayloads(spark.read.option("wholetext", true).text(path)))
+
+  /** Whole-file payload text (`value`, one file per row) → the raw
+    * schema. A malformed payload parses to all-null fields, so its
+    * one null-states row is dropped by the lat/lon filter.
+    */
+  def parsePayloads(text: DataFrame): DataFrame =
+    text.select(from_json(col("value"), Schemas.rawFlightsSchema).as("_raw"))
+      .select("_raw.*")
 
   /** Same, from an already-loaded raw frame (tests, streaming). */
   def fromRaw(raw: DataFrame): DataFrame = {

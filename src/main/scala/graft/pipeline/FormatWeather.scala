@@ -14,6 +14,9 @@ import graft.model.Schemas
   * (`src/format_weather.py:22-39` field list; timestamps `:50-54`).
   * `current.time` is a zone-less local-ISO string ("2026-02-26T16:00")
   * parsed under the UTC session timezone, matching the reference.
+  * Unlike flights it keeps the `multiLine` file reader: its schema types
+  * every numeric token as a number, so the per-token re-read that makes
+  * `FormatFlights` parse whole-file text never happens here.
   */
 object FormatWeather {
 

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.feature.{StandardScaler, StandardScalerModel, VectorAssembler}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
@@ -22,15 +22,18 @@ import graft.model.MlConstants._
   * with the fitted scaler's μ/σ embedded as literals, Euclidean distance
   * to the row's own centroid, flagged when dist > mean + 2·stddev_samp.
   *
-  * Driver-side work is O(k) only (centroids, μ/σ, 3-row stats) — the
-  * same "collect tiny stats → re-inject as literals" pattern the
-  * reference uses (F13), which costs an extra pass but avoids a
-  * driver-blocking scalar subquery. The input is cached for the
-  * duration because KMeans iterates over it.
+  * Driver-side work is O(k) only (centroids, μ/σ, one stats row) — the
+  * same "fetch tiny stats → re-inject as literals" pattern the
+  * reference uses (F13), which avoids a driver-blocking scalar
+  * subquery. After the fit, one global aggregate yields everything
+  * the driver needs: each cluster's size and mean altitude (for the
+  * labels) and the distance μ/σ (for the anomaly threshold). The input
+  * is cached for the duration because KMeans iterates over it.
   */
 object PhaseClassifier {
 
   private val featureCols = PhaseFeatures // velocity, baro_altitude, vertical_rate
+  private val phaseNames = Array("Takeoff / Landing", "Climb / Descent", "Cruise")
 
   /** Adds flight_phase, flight_phase_id, is_anomaly, anomaly_score.
     * Internal ML columns are dropped before return (`:387`).
@@ -79,16 +82,25 @@ object PhaseClassifier {
     val kmeansModel = model.stages(2).asInstanceOf[KMeansModel]
     val centroids = kmeansModel.clusterCenters.map(_.toArray)
 
-    val clustered = model.transform(withFeatures)
+    val clustered = model.transform(withFeatures).withColumn("_dist_to_centroid",
+      centroidDistance(scalerModel.mean.toArray, scalerModel.std.toArray, centroids))
+
+    // the one stats pass: per cluster (size, mean altitude), then μ, σ
+    val stats = clustered.select(centroids.indices.flatMap { cid =>
+      val in = col("_ml_cluster_id") === cid
+      Seq(count(when(in, 1)), avg(when(in, col("baro_altitude"))))
+    } ++ distStats: _*).first()
 
     val labeled =
-      if (clustersAreMeaningful(centroids)) kmeansLabeled(clustered)
-      else ruleLabeled(clustered)
+      if (clustersAreMeaningful(centroids)) {
+        val clusters = centroids.indices.map { cid =>
+          (cid, stats.getLong(2 * cid),
+            if (stats.isNullAt(2 * cid + 1)) None else Some(stats.getDouble(2 * cid + 1)))
+        }
+        kmeansLabeled(clustered, phaseByCluster(clusters))
+      } else ruleLabeled(clustered)
 
-    val withAnomaly = anomalyFromModel(
-      labeled, scalerModel.mean.toArray, scalerModel.std.toArray, centroids)
-
-    withAnomaly.drop(
+    flagged(labeled, threshold(stats, 2 * centroids.length)).drop(
       (featureCols.map("_ml_" + _) ++
         Seq("_ml_features_raw", "_ml_features", "_ml_cluster_id",
           "_dist_to_centroid")).toIndexedSeq: _*)
@@ -107,22 +119,25 @@ object PhaseClassifier {
     maxDist >= MinCentroidSeparation
   }
 
-  /** B5 — label clusters by ascending avg altitude: lowest → Takeoff /
+  /** B5 — rank clusters by ascending avg altitude: lowest → Takeoff /
     * Landing, highest → Cruise, middle → Climb / Descent (`:247-284`).
-    * flight_phase_id stays the raw cluster id.
+    * Input is (cluster id, rows, avg altitude). A cluster with no rows
+    * gets no label, one whose altitudes are all null ranks as 0.0, and
+    * ties rank by cluster id.
     */
-  private def kmeansLabeled(clustered: DataFrame): DataFrame = {
-    val stats = clustered
-      .groupBy(col("_ml_cluster_id"))
-      .agg(avg(col("baro_altitude")).as("avg_altitude"))
-      .collect() // ≤ k rows — driver math is correct here (A1/A5)
-      .map(r => (r.getInt(0), Option(r.get(1)).map(_.toString.toDouble).getOrElse(0.0)))
-      .sortBy(_._2)
-    val phaseNames = Array("Takeoff / Landing", "Climb / Descent", "Cruise")
-    val labelByCluster: Map[Int, String] =
-      stats.zipWithIndex.map { case ((cid, _), rank) =>
+  private[pipeline] def phaseByCluster(
+      clusters: Seq[(Int, Long, Option[Double])]): Map[Int, String] =
+    clusters.collect { case (cid, rows, alt) if rows > 0 => (alt.getOrElse(0.0), cid) }
+      .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      .zipWithIndex.map { case ((_, cid), rank) =>
         cid -> phaseNames(math.min(rank, phaseNames.length - 1))
       }.toMap
+
+  /** flight_phase from the cluster labels; flight_phase_id stays the raw
+    * cluster id.
+    */
+  private def kmeansLabeled(
+      clustered: DataFrame, labelByCluster: Map[Int, String]): DataFrame = {
     val labelExpr = labelByCluster.foldLeft(lit(null).cast("string")) {
       case (acc, (cid, name)) =>
         when(col("_ml_cluster_id") === cid, name).otherwise(acc)
@@ -145,11 +160,10 @@ object PhaseClassifier {
   /** B7 — distance to own centroid in scaled space, μ/σ/centroids as
     * literals (F13 pattern, `:333-388`).
     */
-  private def anomalyFromModel(
-      df: DataFrame,
+  private def centroidDistance(
       mean: Array[Double],
       std: Array[Double],
-      centroids: Array[Array[Double]]): DataFrame = {
+      centroids: Array[Array[Double]]): Column = {
     // scaled_j = (x_j - μ_j) / σ_j ; σ==0 → Spark yields null/inf like
     // the reference's float division.
     val scaled: Array[Column] = featureCols.zipWithIndex.map { case (c, j) =>
@@ -164,8 +178,7 @@ object PhaseClassifier {
       val d = s - centroidCoord(j)
       d * d
     }.reduce(_ + _)
-    val withDist = df.withColumn("_dist_to_centroid", sqrt(dist2))
-    thresholdFlag(withDist)
+    sqrt(dist2)
   }
 
   /** Rule-mode anomaly when no model could be fit (n<k): distance in
@@ -176,21 +189,26 @@ object PhaseClassifier {
       val d = col(s"_ml_$c")
       d * d
     }.reduce(_ + _)
-    thresholdFlag(df.withColumn("_dist_to_centroid", sqrt(dist2)))
+    val withDist = df.withColumn("_dist_to_centroid", sqrt(dist2))
+    flagged(withDist, threshold(withDist.select(distStats: _*).first(), 0))
       .drop("_dist_to_centroid")
   }
 
-  /** A2 + flag: threshold = avg + AnomalySigma · stddev_samp; stddev is
-    * null when n≤1 → nothing anomalous (pinned; SURVEY.md §7.4).
+  /** μ and σ of the centroid distance, read back by `threshold`. */
+  private def distStats: Seq[Column] =
+    Seq(avg(col("_dist_to_centroid")), stddev_samp(col("_dist_to_centroid")))
+
+  /** A2: threshold = μ + AnomalySigma · σ from the `distStats` pair at
+    * `at`; σ is null when n≤1 → no threshold (pinned; SURVEY.md §7.4).
     */
-  private def thresholdFlag(withDist: DataFrame): DataFrame = {
-    val row = withDist
-      .select(avg(col("_dist_to_centroid")).as("mu"),
-        stddev_samp(col("_dist_to_centroid")).as("sigma"))
-      .first()
-    val threshold: Option[Double] =
-      if (row.isNullAt(0) || row.isNullAt(1)) None
-      else Some(row.getDouble(0) + AnomalySigma * row.getDouble(1))
+  private def threshold(stats: Row, at: Int): Option[Double] =
+    if (stats.isNullAt(at) || stats.isNullAt(at + 1)) None
+    else Some(stats.getDouble(at) + AnomalySigma * stats.getDouble(at + 1))
+
+  /** Flag: anomalous when the distance exceeds the threshold; nothing is
+    * anomalous without one.
+    */
+  private def flagged(withDist: DataFrame, threshold: Option[Double]): DataFrame = {
     withDist
       .withColumn("anomaly_score", round(col("_dist_to_centroid"), 4))
       .withColumn("is_anomaly",

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.model.Schemas
 import graft.pipeline.{CombineJob, FormatFlights, UsageProjection}
 
 /** Streaming wrapper of the whole pipeline: raw-JSON file source →
@@ -35,13 +34,13 @@ object FlightStream {
       weather: DataFrame,
       outDir: String,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
+    // same whole-file parse as the batch reader (FormatFlights.fromRawJson)
     val raw = spark.readStream
-      .schema(Schemas.rawFlightsSchema)
-      .option("multiLine", true)
+      .option("wholetext", true)
       .option("maxFilesPerTrigger", 96) // bound per-batch work at scale
-      .json(rawDir)
+      .text(rawDir)
 
-    val formatted = FormatFlights.fromRaw(raw)
+    val formatted = FormatFlights.fromRaw(FormatFlights.parsePayloads(raw))
 
     formatted.writeStream
       .trigger(trigger)

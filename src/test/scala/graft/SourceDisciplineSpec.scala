@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. One session factory: only `core/GraftSession.scala` builds a
   *     SparkSession, so Bench, Verify and the tools cannot drift
   *     apart in engine conf again.
+  *  4. The `multiLine` JSON file reader only for the weather feed: on
+  *     an `array<array<string>>` of numbers (the flights `states`) it
+  *     re-opens the file once per token, so flights parse whole-file
+  *     text with `from_json` instead (FormatFlights scaladoc).
   */
 class SourceDisciplineSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -36,7 +40,6 @@ class SourceDisciplineSpec extends AnyFunSuite {
     "operators/ProductQuantization.scala", // nlist-row coarse quantizer
     "operators/SemanticDedup.scala", // k-row sampled quantizer
     "operators/Similarity.scala",    // k-row sampled centroids
-    "pipeline/PhaseClassifier.scala",// ≤k cluster rows (reference A1)
     "streaming/EventStreams.scala")  // 1-row min/max bounds
 
   test("no udf() anywhere in main source") {
@@ -66,6 +69,16 @@ class SourceDisciplineSpec extends AnyFunSuite {
     }.map(mainRoot.relativize(_).toString)
     assert(offenders == Seq("core/GraftSession.scala"),
       s"SparkSession built outside the factory: $offenders")
+  }
+
+  test("multiLine JSON reader only in pipeline/FormatWeather.scala") {
+    val offenders = scalaFiles.filter { p =>
+      Files.readString(p).linesIterator.exists(l =>
+        !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+          l.matches("(?i).*\"multiline\".*"))
+    }.map(mainRoot.relativize(_).toString)
+    assert(offenders == Seq("pipeline/FormatWeather.scala"),
+      s"multiLine JSON reader outside FormatWeather: $offenders")
   }
 
   // perfbench times graft.Bench's session by reflecting on this exact

@@ -32,6 +32,10 @@ class CombineJobSpec extends AnyFunSuite {
       (1 to 12).map(i => F(f"climb$i%03d", 45.7 + i * 0.001, 4.8, 150 + i, 2500 + i * 10, 12.0)) ++
       (1 to 12).map(i => F(f"cruise$i%03d", 43.6 + i * 0.001, 1.4, 230 + i, 11000 + i * 5, 0.2))
 
+  // sits BETWEEN the three natural clusters (k=3 is saturated by the
+  // real groups, so it cannot capture its own centroid)
+  private val outlier = F("outlier", 44.0, 3.0, 100.0, 6000.0, 6.0)
+
   test("nearest-weather join attaches the true closest station") {
     val flights = Seq(
       F("nearcdg", 48.75, 2.25, 200, 5000, 1.0), // ~Paris CDG
@@ -74,7 +78,6 @@ class CombineJobSpec extends AnyFunSuite {
     // the outlier sits BETWEEN the three natural clusters (k=3 is
     // saturated by the real groups, so it cannot capture its own
     // centroid — it lands far from its assigned one)
-    val outlier = F("outlier", 44.0, 3.0, 100.0, 6000.0, 6.0)
     val enriched = PhaseClassifier.enrich((separated :+ outlier).toDF).cache()
     val flagged = enriched.filter($"is_anomaly").select("icao24")
       .as[String].collect()
@@ -83,6 +86,69 @@ class CombineJobSpec extends AnyFunSuite {
     val score = enriched.filter($"icao24" === "outlier")
       .select("anomaly_score").first().getDouble(0)
     assert(score > 0)
+  }
+
+  test("separated batch + outlier: phase, cluster id and anomaly pinned per aircraft") {
+    // icao24|flight_phase|flight_phase_id|is_anomaly|anomaly_score, pinned
+    // so that a change to the stats pass cannot move a label or a flag
+    val pinned =
+      """climb001|Climb / Descent|1|false|0.1082
+      |climb002|Climb / Descent|1|false|0.1058
+      |climb003|Climb / Descent|1|false|0.1051
+      |climb004|Climb / Descent|1|false|0.106
+      |climb005|Climb / Descent|1|false|0.1086
+      |climb006|Climb / Descent|1|false|0.1128
+      |climb007|Climb / Descent|1|false|0.1183
+      |climb008|Climb / Descent|1|false|0.1251
+      |climb009|Climb / Descent|1|false|0.1329
+      |climb010|Climb / Descent|1|false|0.1415
+      |climb011|Climb / Descent|1|false|0.1508
+      |climb012|Climb / Descent|1|false|0.1607
+      |cruise001|Cruise|0|false|0.0731
+      |cruise002|Cruise|0|false|0.0598
+      |cruise003|Cruise|0|false|0.0465
+      |cruise004|Cruise|0|false|0.0332
+      |cruise005|Cruise|0|false|0.0199
+      |cruise006|Cruise|0|false|0.0066
+      |cruise007|Cruise|0|false|0.0066
+      |cruise008|Cruise|0|false|0.0199
+      |cruise009|Cruise|0|false|0.0332
+      |cruise010|Cruise|0|false|0.0465
+      |cruise011|Cruise|0|false|0.0598
+      |cruise012|Cruise|0|false|0.0731
+      |low001|Takeoff / Landing|2|false|0.0364
+      |low002|Takeoff / Landing|2|false|0.0298
+      |low003|Takeoff / Landing|2|false|0.0232
+      |low004|Takeoff / Landing|2|false|0.0166
+      |low005|Takeoff / Landing|2|false|0.0099
+      |low006|Takeoff / Landing|2|false|0.0033
+      |low007|Takeoff / Landing|2|false|0.0033
+      |low008|Takeoff / Landing|2|false|0.0099
+      |low009|Takeoff / Landing|2|false|0.0166
+      |low010|Takeoff / Landing|2|false|0.0232
+      |low011|Takeoff / Landing|2|false|0.0298
+      |low012|Takeoff / Landing|2|false|0.0364
+      |outlier|Climb / Descent|1|true|1.3849""".stripMargin.linesIterator.map(_.split('|')).map {
+        case Array(id, phase, cid, anomaly, score) =>
+          id -> ((phase, cid.toInt, anomaly.toBoolean, score.toDouble))
+      }.toMap
+    val got = PhaseClassifier.enrich((separated :+ outlier).toDF)
+      .select("icao24", "flight_phase", "flight_phase_id", "is_anomaly", "anomaly_score")
+      .collect().map(r => r.getString(0) ->
+        ((r.getString(1), r.getInt(2), r.getBoolean(3), r.getDouble(4)))).toMap
+    assert(got == pinned)
+  }
+
+  test("cluster ranking: empty clusters unlabelled, all-null altitude ranks 0.0, ties by id") {
+    assert(PhaseClassifier.phaseByCluster(Seq(
+      (0, 5L, Some(9000.0)), (1, 0L, None), (2, 7L, Some(300.0)))) ==
+      Map(2 -> "Takeoff / Landing", 0 -> "Climb / Descent"))
+    assert(PhaseClassifier.phaseByCluster(Seq(
+      (0, 4L, Some(10.0)), (1, 3L, None), (2, 2L, Some(-5.0)))) ==
+      Map(2 -> "Takeoff / Landing", 1 -> "Climb / Descent", 0 -> "Cruise"))
+    assert(PhaseClassifier.phaseByCluster(Seq(
+      (2, 1L, Some(500.0)), (0, 1L, Some(500.0)), (1, 1L, Some(100.0)))) ==
+      Map(1 -> "Takeoff / Landing", 0 -> "Climb / Descent", 2 -> "Cruise"))
   }
 
   test("degenerate batches: empty and single-row") {

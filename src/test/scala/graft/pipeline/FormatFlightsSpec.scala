@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Row
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -78,5 +80,102 @@ class FormatFlightsSpec extends AnyFunSuite {
     val out = FormatFlights.fromRaw(raw)
     assert(out.columns.length == 18)
     assert(out.count() == 0)
+  }
+
+  // ---- file-level reads through fromRawJson (the production reader) ----
+
+  /** FIXTURES.md §1 verbatim: the pretty-printed layout OpenSky serves. */
+  private val fixturePretty =
+    """{
+      |  "time": 1772121600,
+      |  "_extracted_at": "2026-02-26T16:00:05.123456",
+      |  "states": [
+      |    ["3c6444", "DLH9CK  ", "Germany", 1772121599, 1772121600,
+      |     2.3522, 48.8566, 11277.6, false, 231.5, 85.2, -0.33,
+      |     null, 11582.4, "1000", false, 0]
+      |  ]
+      |}
+      |""".stripMargin
+
+  /** Writes each (file name, content) into one fresh directory. */
+  private def rawDir(files: (String, String)*): String = {
+    val dir = Files.createTempDirectory("graft_raw_flights")
+    files.foreach { case (name, body) => Files.writeString(dir.resolve(name), body) }
+    dir.toString
+  }
+
+  private def rows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.getAs[String]("icao24"))
+
+  private def assertFormattedSchema(df: DataFrame): Unit =
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Schemas.formattedFlightsSchema.map(f => f.name -> f.dataType))
+
+  test("file read: pretty-printed and single-line payloads give identical rows") {
+    val pretty = FormatFlights.fromRawJson(spark, rawDir("flights.json" -> fixturePretty))
+    val single = FormatFlights.fromRawJson(spark,
+      rawDir("flights.json" -> fixturePretty.replaceAll("\n", " ")))
+    assertFormattedSchema(pretty)
+    val got = rows(pretty)
+    assert(got == rows(single))
+    assert(got.size == 1)
+    val r = got.head
+    assert(r.getAs[String]("callsign") == "DLH9CK")
+    assert(r.getAs[Double]("baro_altitude") == 11277.6)
+    assert(r.getAs[Double]("vertical_rate") == -0.33)
+    assert(r.getAs[Double]("geo_altitude") == 11582.4)
+    assert(r.getAs[Boolean]("on_ground") == false)
+    assert(r.getAs[String]("squawk") == "1000")
+    assert(r.getAs[Int]("position_source") == 0)
+    assert(r.getAs[java.sql.Timestamp]("time_position").toInstant.getEpochSecond == 1772121599L)
+  }
+
+  test("file read: one row per file, both layouts in one directory") {
+    val both = FormatFlights.fromRawJson(spark, rawDir(
+      "a.json" -> fixturePretty,
+      "b.json" -> fixturePretty.replaceAll("\n", " ")))
+    val got = rows(both)
+    assert(got.size == 2)
+    assert(got(0) == got(1))
+  }
+
+  test("file read: multi-line edge-case states match the in-memory parse") {
+    val states = Seq(goodState, noCoords, truncated, badTypes)
+    val pretty =
+      s"""{
+         |  "time": 1772121600,
+         |  "_extracted_at": "2026-02-26T16:00:05.123456",
+         |  "states": [
+         |    ${states.mkString(",\n    ")}
+         |  ]
+         |}
+         |""".stripMargin
+    val fromFile = FormatFlights.fromRawJson(spark, rawDir("flights.json" -> pretty))
+    val inMemory = FormatFlights.fromRaw(
+      TestSpark.jsonDf(Schemas.rawFlightsSchema, Seq(payload(states))))
+    val got = rows(fromFile)
+    assert(got.map(_.getAs[String]("icao24")) == Seq("3c6444", "bbbbbb", "cccccc"))
+    assert(got == rows(inMemory))
+  }
+
+  test("file read: empty states gives 0 rows with the 18-column schema") {
+    val out = FormatFlights.fromRawJson(spark, rawDir("flights.json" ->
+      """{
+        |  "time": 1772121600,
+        |  "_extracted_at": "2026-02-26T16:00:05",
+        |  "states": []
+        |}
+        |""".stripMargin))
+    assertFormattedSchema(out)
+    assert(out.count() == 0)
+  }
+
+  test("file read: truncated or malformed file gives 0 rows with the 18-column schema") {
+    val cut = fixturePretty.take(fixturePretty.indexOf("11277.6"))
+    for (body <- Seq(cut, "not json at all", "")) {
+      val out = FormatFlights.fromRawJson(spark, rawDir("flights.json" -> body))
+      assertFormattedSchema(out)
+      assert(out.count() == 0, s"rows from malformed payload: ${body.take(40)}")
+    }
   }
 }
