@@ -101,19 +101,12 @@ object TextFunctions {
   def wordSetCount(toks: Column, words: Seq[String]): Column =
     graft.functions.expressions.TextExpressions.word_set_count(toks, words)
 
-  /** Count occurrences of `word` as a whole token. */
-  def wordCount(text: Column, word: String): Column =
-    wordCountIn(tokens(lower(text)), word)
-
   /** Stopword-token ratio — a classic quality signal. */
   def stopwordRatioFrom(toks: Column): Column = {
     val n = size(toks)
     val stops = wordSetCount(toks, stopwordsEn)
     when(n === 0, 0.0).otherwise(stops.cast("double") / n)
   }
-
-  def stopwordRatio(text: Column): Column =
-    stopwordRatioFrom(tokens(lower(text)))
 
   /** Composite quality score in [0,1]: penalizes extreme length, high
     * punctuation, shouting, and stopword-free (keyword-stuffed) text.

@@ -1,5 +1,7 @@
 package graft.lake
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -23,7 +25,7 @@ final class EsIndexBootstrap(esUrl: String, indexName: String) {
   /** Cluster reachable? (reference `es.ping()`). */
   def ping(): Boolean =
     try { Http.get(s"$esUrl/", timeoutSec = 10L); true }
-    catch { case _: Throwable => false }
+    catch { case NonFatal(_) => false }
 
   /** Does the index exist? 404 = no; other non-2xx propagate (an
     * auth failure must not masquerade as "missing index" and trigger

@@ -27,27 +27,6 @@ object Schemas {
     StructField("states", ArrayType(ArrayType(StringType)))
   ))
 
-  /** OpenSky state-vector positional index → field name
-    * (reference `src/format_flights.py:71-101`; indices 12 and 15 unused).
-    */
-  val stateVectorIndex: Seq[(Int, String, DataType)] = Seq(
-    (0, "icao24", StringType),
-    (1, "callsign", StringType),
-    (2, "origin_country", StringType),
-    (3, "time_position", LongType),
-    (4, "last_contact", LongType),
-    (5, "longitude", DoubleType),
-    (6, "latitude", DoubleType),
-    (7, "baro_altitude", DoubleType),
-    (8, "on_ground", BooleanType),
-    (9, "velocity", DoubleType),
-    (10, "true_track", DoubleType),
-    (11, "vertical_rate", DoubleType),
-    (13, "geo_altitude", DoubleType),
-    (14, "squawk", StringType),
-    (16, "position_source", IntegerType)
-  )
-
   /** Formatted flights layer — 18 columns
     * (reference StructType `src/format_flights.py:105-128` + derived
     * `position_source_label` / timestamp columns `:140-162`).
@@ -97,27 +76,6 @@ object Schemas {
     )))
   ))
 
-  /** Formatted weather layer — 15 columns
-    * (reference `src/format_weather.py:22-57`).
-    */
-  val formattedWeatherSchema: StructType = StructType(Seq(
-    StructField("latitude", DoubleType),
-    StructField("longitude", DoubleType),
-    StructField("elevation", DoubleType),
-    StructField("weather_time", TimestampType),
-    StructField("temperature_2m", DoubleType),
-    StructField("relative_humidity_2m", DoubleType),
-    StructField("wind_speed_10m", DoubleType),
-    StructField("wind_direction_10m", DoubleType),
-    StructField("wind_gusts_10m", DoubleType),
-    StructField("precipitation", DoubleType),
-    StructField("rain", DoubleType),
-    StructField("cloud_cover", DoubleType),
-    StructField("weather_code", DoubleType),
-    StructField("visibility", DoubleType),
-    StructField("extracted_at", TimestampType)
-  ))
-
   /** The 6 fixed weather stations (reference `src/extract_weather.py:42-49`). */
   case class Station(name: String, latitude: Double, longitude: Double)
   val stations: Seq[Station] = Seq(
@@ -128,11 +86,6 @@ object Schemas {
     Station("Nantes", 47.460152, -0.529704),
     Station("Lille", 50.561237, 3.086957)
   )
-
-  /** France bounding box [latMin, latMax, lonMin, lonMax]
-    * (reference `src/serverless_function_call.py:10`).
-    */
-  val franceBBox: (Double, Double, Double, Double) = (41.3, 51.1, -5.1, 9.6)
 }
 
 /** ML + anomaly constants (reference `src/combine_spark.py:25-32`). */
@@ -145,19 +98,3 @@ object MlConstants {
   val PhaseFeatures: Array[String] =
     Array("velocity", "baro_altitude", "vertical_rate")
 }
-
-/** Typed rows at module boundaries. */
-case class FlightState(
-    icao24: String,
-    callsign: Option[String],
-    origin_country: Option[String],
-    longitude: Option[Double],
-    latitude: Option[Double],
-    baro_altitude: Option[Double],
-    on_ground: Option[Boolean],
-    geo_altitude: Option[Double],
-    velocity: Option[Double],
-    true_track: Option[Double],
-    vertical_rate: Option[Double],
-    squawk: Option[String],
-    position_source: Option[Int])

@@ -2,6 +2,8 @@ package graft.multimodal
 
 import java.awt.image.BufferedImage
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -84,7 +86,7 @@ object ImageHash {
             else
               try Option(javax.imageio.ImageIO.read(
                 new java.io.ByteArrayInputStream(payload)))
-              catch { case _: Throwable => None }
+              catch { case NonFatal(_) => None }
           decoded match {
             case Some(img) =>
               Row.fromSeq(row.toSeq ++

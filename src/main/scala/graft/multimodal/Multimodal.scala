@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -135,7 +137,7 @@ object Multimodal {
             MediaFeatures(w, h, 1, sum / (w.toLong * h).toDouble,
               stubEmbedding(payload, embeddingDim))
           }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     viaImageIO.orElse(parseImageDims(payload).map { case (w, h) =>
       stubDecode(payload, embeddingDim).copy(width = w, height = h, n_frames = 1)
     })

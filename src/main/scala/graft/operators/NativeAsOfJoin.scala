@@ -13,8 +13,8 @@ import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
   * streaming merge instead of the tagged union + window.
   *
   * The planner strategy is self-registered on the session
-  * (`spark.experimental.extraStrategies`) so the operator works on any
-  * session, not only builders that installed `GraftExtensions`.
+  * (`spark.experimental.extraStrategies`) on first use, so the
+  * operator works on any session the factory builds.
   */
 object NativeAsOfJoin {
 

@@ -27,8 +27,11 @@ import graft.model.MlConstants._
   * reference uses (F13), which avoids a driver-blocking scalar
   * subquery. After the fit, one global aggregate yields everything
   * the driver needs: each cluster's size and mean altitude (for the
-  * labels) and the distance μ/σ (for the anomaly threshold). The input
-  * is cached for the duration because KMeans iterates over it.
+  * labels) and the distance μ/σ (for the anomaly threshold). KMeans
+  * iterates over the input, so it is pinned with a lazy
+  * `localCheckpoint`: the row count materializes it in the same job,
+  * and its blocks are released with the frame instead of staying
+  * cached after the call.
   */
 object PhaseClassifier {
 
@@ -40,7 +43,7 @@ object PhaseClassifier {
     */
   def enrich(input: DataFrame): DataFrame = {
     val spark = input.sparkSession
-    val df = input.cache()
+    val df = input.localCheckpoint(eager = false)
     val n = df.count()
 
     if (n == 0) {

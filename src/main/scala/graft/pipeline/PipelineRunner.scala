@@ -56,12 +56,11 @@ final class PipelineRunner(
     formattedFlights.write.mode(SaveMode.Overwrite).parquet(fFlightsDir)
     formattedWeather.write.mode(SaveMode.Overwrite).parquet(fWeatherDir)
 
-    // combine — read back the latest partitions (layer contract), enrich
-    val flights = spark.read.parquet(
-      paths.latestPartition(spark, "formatted", "opensky", "flights").get)
-    val weather = spark.read.parquet(
-      paths.latestPartition(spark, "formatted", "open_meteo", "weather").get)
-    val enriched = CombineJob.enrich(flights, weather)
+    // combine — read back the partitions this run wrote (layer
+    // contract), enrich; not the newest ones, so a re-run of an earlier
+    // hour enriches that hour's snapshot
+    val enriched = CombineJob.enrich(
+      spark.read.parquet(fFlightsDir), spark.read.parquet(fWeatherDir))
     val enrichedDir = paths.partitionPath("enriched", "sky_safe", "flights_weather", at)
     enriched.write.mode(SaveMode.Overwrite).parquet(enrichedDir)
 

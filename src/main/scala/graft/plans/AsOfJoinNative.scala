@@ -60,8 +60,7 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Registered through
-  * `GraftExtensions` (builder path) or self-registered by
+/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Self-registered by
   * `NativeAsOfJoin` via `spark.experimental.extraStrategies`.
   */
 object AsOfJoinStrategy extends SparkStrategy {

@@ -754,12 +754,10 @@ object ExtensionQueries {
     graft.streaming.EventStreams.replayToTable(
       RelationalQueries.events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value")),
-      df => df.withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "5 minutes").as("win"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
+      df => graft.streaming.EventStreams.windowedCounts(
+          df, "5 minutes", lateness = "0 seconds")
         .select(
-          date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+          date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
           col("event_type"), col("n"), col("sum_value")),
       horizonSeconds = 600)
       .filter(col("event_type") =!= "_sentinel")
@@ -775,8 +773,8 @@ object ExtensionQueries {
     graft.streaming.EventStreams.replayToTable(
       RelationalQueries.events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value")),
-      df => df.withWatermark("ts", "90 days")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
+      df => graft.streaming.EventStreams.dedupWithinWatermark(
+          df, Seq("user_id", "event_type"), "90 days")
         .select(col("user_id"), col("event_type")),
       horizonSeconds = 60)
       .filter(col("event_type") =!= "_sentinel")
@@ -791,9 +789,7 @@ object ExtensionQueries {
     graft.streaming.EventStreams.replayToTable(
       RelationalQueries.events(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value")),
-      df => df.withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes").as("sess"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
+      df => graft.streaming.EventStreams.sessionWindows(df, "30 minutes", "0 seconds")
         .select(col("user_id"), col("n_events")),
       horizonSeconds = 3900)
       .filter(col("user_id") =!= -1L)
@@ -821,51 +817,14 @@ object ExtensionQueries {
         val clicks = df.filter(col("event_type") === "click")
           .select(col("user_id"), col("event_id").as("click_id"),
             col("ts").as("click_ts"))
-          .withWatermark("click_ts", "2 hours")
         val purchases = df.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("_pu"), col("event_id").as("purchase_id"),
+          .select(col("user_id"), col("event_id").as("purchase_id"),
             col("ts").as("purchase_ts"))
-          .withWatermark("purchase_ts", "2 hours")
-        clicks.join(purchases,
-          col("user_id") === col("_pu") &&
-            col("purchase_ts") >= col("click_ts") - expr("INTERVAL 30 MINUTES") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
+        graft.streaming.EventStreams.streamStreamJoin(clicks, purchases,
+            "user_id", "click_ts", "purchase_ts", 1800, 1800, "2 hours")
           .select(col("user_id"), col("click_id"), col("purchase_id"))
       },
       horizonSeconds = 7260)
-
-  /** LEFT OUTER watermarked stream-stream join: clicks with no
-    * purchase within ±30 min emit a null-purchase row once BOTH
-    * watermarks pass the click's match horizon. The sentinel must flow
-    * through both sides' watermark operators (the global watermark is
-    * the min across them), so it is kept through the type filters and
-    * its join output dropped at the end; the horizon exceeds
-    * lateness + join bound so every real click's outer row is evicted
-    * and emitted before the replay stops.
-    */
-  def qStreamStreamLeftJoin(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventStreams.replayToTable(
-      RelationalQueries.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"), col("value")),
-      df => {
-        val clicks = df.filter(col("event_type").isin("click", "_sentinel"))
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "2 hours")
-        val purchases = df.filter(col("event_type").isin("purchase", "_sentinel"))
-          .select(col("user_id").as("_pu"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts"))
-          .withWatermark("purchase_ts", "2 hours")
-        clicks.join(purchases,
-          col("user_id") === col("_pu") &&
-            col("purchase_ts") >= col("click_ts") - expr("INTERVAL 30 MINUTES") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-          .select(col("user_id"), col("click_id"), col("purchase_id"))
-      },
-      horizonSeconds = 9100) // > lateness (7200) + bound (1800) + margin
-      .filter(col("user_id") =!= -1L)
 
   /** Tumbling daily window aggregate (streaming-window batch analog). */
   def qDailyWindow(s: SparkSession, dir: String): DataFrame =
@@ -4002,7 +3961,7 @@ object ExtensionQueries {
       // batch boundary (state carried across >=1 commit) and the output
       // of a watermarked window agg over time-ordered range batches is
       // batch-composition-independent — one fewer micro-batch cycle is
-      // ~0.7 s off the replay floor at hash parity (replay-timing probe)
+      // ~0.7 s off the replay floor at hash parity (BASELINE.md r12)
       horizonSeconds = 3600, numBatches = 2)
       .filter(col("lang_pred").isNotNull)
   }
@@ -4395,7 +4354,7 @@ object ExtensionQueries {
       // batch boundary (state carried across >=1 commit) and the output
       // of a watermarked window agg over time-ordered range batches is
       // batch-composition-independent — one fewer micro-batch cycle is
-      // ~0.7 s off the replay floor at hash parity (replay-timing probe)
+      // ~0.7 s off the replay floor at hash parity (BASELINE.md r12)
       horizonSeconds = 3600, numBatches = 2)
       .filter(col("token").isNotNull)
   }
@@ -4896,7 +4855,7 @@ object ExtensionQueries {
       // batch boundary (state carried across >=1 commit) and the output
       // of a watermarked window agg over time-ordered range batches is
       // batch-composition-independent — one fewer micro-batch cycle is
-      // ~0.7 s off the replay floor at hash parity (replay-timing probe)
+      // ~0.7 s off the replay floor at hash parity (BASELINE.md r12)
       horizonSeconds = 3600, numBatches = 2)
       .filter(col("source").isNotNull)
   }

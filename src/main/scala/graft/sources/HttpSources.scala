@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
@@ -99,7 +101,7 @@ object Http {
     while (i < attempts) {
       try return f
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e; i += 1
           if (i < attempts) Thread.sleep(backoffMs * i)
       }
@@ -223,7 +225,7 @@ final class OpenMeteoSource(
         val node = mapper.readTree(body).asInstanceOf[ObjectNode]
         node.put("_extracted_at", extractedAt())
         arr.add(node)
-      } catch { case e: Throwable => onError(lat, lon, e) }
+      } catch { case NonFatal(e) => onError(lat, lon, e) }
     }
     RawFiles.write(spark, targetDir, "weather_raw.json",
       mapper.writeValueAsString(arr))

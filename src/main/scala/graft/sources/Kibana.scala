@@ -3,6 +3,8 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -144,7 +146,7 @@ final class KibanaProvisioner(
     */
   def pokeKibana(): Boolean =
     try { Http.get(s"$kibanaUrl/api/status", timeoutSec = 5L); true }
-    catch { case _: Throwable => false }
+    catch { case NonFatal(_) => false }
 
   /** ONE non-blocking poke of the serving index's `_count` — true iff
     * the index answers and holds ≥ 1 document (the reference sensor's
@@ -156,35 +158,27 @@ final class KibanaProvisioner(
     try {
       val body = Http.get(s"$esUrl/$index/_count", timeoutSec = 10L)
       mapper.readTree(body).path("count").asLong(0L) > 0L
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 
   /** Polls `/api/status` until Kibana answers 200 (it can take a while
     * to start); false after `maxRetries` attempts.
     */
-  def waitForKibana(): Boolean = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      try {
-        Http.get(s"$kibanaUrl/api/status", timeoutSec = 5L)
-        return true
-      } catch { case _: Throwable => () }
-      attempt += 1
-      if (attempt < maxRetries) Thread.sleep(retryDelayMs)
-    }
-    false
-  }
+  def waitForKibana(): Boolean = pollUntil(pokeKibana())
 
   /** Polls the serving index's `_count` until it holds at least one
     * document — provisioning a dashboard over an empty index renders
     * broken panels, so the reference gates on data first.
     */
-  def waitForIndexData(esUrl: String, index: String): Boolean = {
+  def waitForIndexData(esUrl: String, index: String): Boolean =
+    pollUntil(pokeIndexData(esUrl, index))
+
+  /** Up to `maxRetries` pokes, `retryDelayMs` apart; true on the first
+    * that succeeds.
+    */
+  private def pollUntil(poke: => Boolean): Boolean = {
     var attempt = 0
     while (attempt < maxRetries) {
-      try {
-        val body = Http.get(s"$esUrl/$index/_count", timeoutSec = 10L)
-        if (mapper.readTree(body).path("count").asLong(0L) > 0L) return true
-      } catch { case _: Throwable => () }
+      if (poke) return true
       attempt += 1
       if (attempt < maxRetries) Thread.sleep(retryDelayMs)
     }

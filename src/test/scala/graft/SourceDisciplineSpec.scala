@@ -23,6 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     an `array<array<string>>` of numbers (the flights `states`) it
   *     re-opens the file once per token, so flights parse whole-file
   *     text with `from_json` instead (FormatFlights scaladoc).
+  *  5. No `case x: Throwable`: a catch-all would also swallow fatal
+  *     errors (OOM, interrupts, linkage errors) and turn them into a
+  *     quiet value; `NonFatal` is the catch-all.
   */
 class SourceDisciplineSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -79,6 +82,15 @@ class SourceDisciplineSpec extends AnyFunSuite {
     }.map(mainRoot.relativize(_).toString)
     assert(offenders == Seq("pipeline/FormatWeather.scala"),
       s"multiLine JSON reader outside FormatWeather: $offenders")
+  }
+
+  test("no catch of Throwable in main source") {
+    val offenders = scalaFiles.filter { p =>
+      Files.readString(p).linesIterator.exists(l =>
+        !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+          l.matches(".*\\bcase\\s+\\w+\\s*:\\s*Throwable\\b.*"))
+    }.map(mainRoot.relativize(_).toString)
+    assert(offenders.isEmpty, s"case _: Throwable in: $offenders")
   }
 
   // perfbench times graft.Bench's session by reflecting on this exact

@@ -166,4 +166,27 @@ class TextFunctionsSpec extends AnyFunSuite {
     got.foreach(r => assert(r.getInt(0) == r.getInt(1),
       s"ladder ${r.getInt(0)} != full DP ${r.getInt(1)}"))
   }
+
+  test("compiled kernels through the Column API") {
+    import graft.functions.expressions.TextExpressions._
+    val row = spark.range(1).select(
+      word_shingles(array(lit("a"), lit("b"), lit("c")), 2).as("ws"),
+      char_shingles(lit("abcd"), 3).as("cs"),
+      size(minhash_sig(array(lit("x"), lit("y")), 16)).as("sig_len"),
+      simhash64(array(lit("tok"))).as("sh"),
+      dot_product(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("dot"),
+      round(cosine_sim(array(lit(1.0), lit(0.0)), array(lit(1.0), lit(0.0))), 6).as("cos"),
+      rolling_fingerprint(array(lit("a"), lit("b"))).as("fp"),
+      unicode_normalize(lit("e\u0301"), "NFC").as("nfc"),
+      interleave_bits(lit(3L), lit(5L), 8).as("z")).first()
+    assert(row.getAs[collection.Seq[String]]("ws").toSet == Set("a b", "b c"))
+    assert(row.getAs[collection.Seq[String]]("cs").toSet == Set("abc", "bcd"))
+    assert(row.getAs[Int]("sig_len") == 16)
+    assert(row.getAs[Long]("sh") != 0L)
+    assert(row.getAs[Double]("dot") == 11.0)
+    assert(row.getAs[Double]("cos") == 1.0)
+    assert(row.getAs[Long]("fp") != 0L)
+    assert(row.getAs[String]("nfc") == "\u00e9") // e + combining acute → é
+    assert(row.getAs[Long]("z") == 39L) // (3,5) interleaved, a on even bits
+  }
 }

@@ -3,6 +3,7 @@ package graft.lake
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +12,37 @@ import graft.pipeline.{FileReplaySource, PipelineRunner}
 
 class LakeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  // fixture A: four states, one without coordinates
+  private val flightsJson =
+    """{"time": 1772121600, "_extracted_at": "2026-02-26T16:00:05",
+      | "states": [["3c6444", "DLH9CK  ", "Germany", 1772121599, 1772121600,
+      | 2.3522, 48.8566, 11277.6, false, 231.5, 85.2, -0.33,
+      | null, 11582.4, "1000", false, 0],
+      | ["ab1234", "AFR01", "France", 1772121599, 1772121600,
+      | 5.1, 45.7, 150.0, false, 50.0, 10.0, 0.0,
+      | null, 160.0, "7000", false, 0],
+      | ["cd5678", "BAW9", "UK", 1772121599, 1772121600,
+      | 3.0, 50.5, 2500.0, false, 150.0, 20.0, 12.0,
+      | null, 2600.0, "7001", false, 1],
+      | ["badrow", "X", "??", 1, 2, null, null, 0.0, true, 0.0, 0.0,
+      | 0.0, null, 0.0, "0000", false, 0]]}""".stripMargin.replaceAll("\n", " ")
+  private val weatherJson =
+    """[{"latitude": 48.709632, "longitude": 2.208563, "elevation": 89.0,
+      | "_extracted_at": "2026-02-26T16:00:03",
+      | "current": {"time": "2026-02-26T16:00", "temperature_2m": 7.4,
+      |  "relative_humidity_2m": 82, "wind_speed_10m": 18.3,
+      |  "wind_direction_10m": 240, "wind_gusts_10m": 55.1,
+      |  "precipitation": 0.6, "rain": 0.6, "cloud_cover": 90,
+      |  "weather_code": 61, "visibility": 24140.0}},
+      | {"latitude": 50.561237, "longitude": 3.086957, "elevation": 20.0,
+      | "_extracted_at": "2026-02-26T16:00:03",
+      | "current": {"time": "2026-02-26T16:00", "temperature_2m": 5.0,
+      |  "relative_humidity_2m": 90, "wind_speed_10m": 30.0,
+      |  "wind_direction_10m": 200, "wind_gusts_10m": 85.0,
+      |  "precipitation": 6.5, "rain": 6.5, "cloud_cover": 100,
+      |  "weather_code": 95, "visibility": 800.0}}]"""
+      .stripMargin.replaceAll("\n", " ")
 
   test("latest-partition resolver picks newest date then hour") {
     val root = Files.createTempDirectory("graft_lake").toString
@@ -27,35 +59,6 @@ class LakeSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_lake2").toString
     val fixtures = Files.createTempDirectory("graft_fx").toString
 
-    val flightsJson =
-      """{"time": 1772121600, "_extracted_at": "2026-02-26T16:00:05",
-        | "states": [["3c6444", "DLH9CK  ", "Germany", 1772121599, 1772121600,
-        | 2.3522, 48.8566, 11277.6, false, 231.5, 85.2, -0.33,
-        | null, 11582.4, "1000", false, 0],
-        | ["ab1234", "AFR01", "France", 1772121599, 1772121600,
-        | 5.1, 45.7, 150.0, false, 50.0, 10.0, 0.0,
-        | null, 160.0, "7000", false, 0],
-        | ["cd5678", "BAW9", "UK", 1772121599, 1772121600,
-        | 3.0, 50.5, 2500.0, false, 150.0, 20.0, 12.0,
-        | null, 2600.0, "7001", false, 1],
-        | ["badrow", "X", "??", 1, 2, null, null, 0.0, true, 0.0, 0.0,
-        | 0.0, null, 0.0, "0000", false, 0]]}""".stripMargin.replaceAll("\n", " ")
-    val weatherJson =
-      """[{"latitude": 48.709632, "longitude": 2.208563, "elevation": 89.0,
-        | "_extracted_at": "2026-02-26T16:00:03",
-        | "current": {"time": "2026-02-26T16:00", "temperature_2m": 7.4,
-        |  "relative_humidity_2m": 82, "wind_speed_10m": 18.3,
-        |  "wind_direction_10m": 240, "wind_gusts_10m": 55.1,
-        |  "precipitation": 0.6, "rain": 0.6, "cloud_cover": 90,
-        |  "weather_code": 61, "visibility": 24140.0}},
-        | {"latitude": 50.561237, "longitude": 3.086957, "elevation": 20.0,
-        | "_extracted_at": "2026-02-26T16:00:03",
-        | "current": {"time": "2026-02-26T16:00", "temperature_2m": 5.0,
-        |  "relative_humidity_2m": 90, "wind_speed_10m": 30.0,
-        |  "wind_direction_10m": 200, "wind_gusts_10m": 85.0,
-        |  "precipitation": 6.5, "rain": 6.5, "cloud_cover": 100,
-        |  "weather_code": 95, "visibility": 800.0}}]"""
-        .stripMargin.replaceAll("\n", " ")
     Files.writeString(java.nio.file.Paths.get(fixtures, "flights.json"), flightsJson)
     Files.writeString(java.nio.file.Paths.get(fixtures, "weather.json"), weatherJson)
 
@@ -93,5 +96,30 @@ class LakeSpec extends AnyFunSuite {
     val again = runner.runOnce(spark, LocalDateTime.of(2026, 2, 26, 16, 0))
     assert(again.enrichedRows == 3)
     assert(spark.read.json(s"$sinkDir/gen=000001").count() == 3)
+  }
+
+  test("re-run of an earlier hour enriches that hour's snapshot") {
+    val root = Files.createTempDirectory("graft_lake3").toString
+    val fixtures = Files.createTempDirectory("graft_fx3").toString
+    // fixture B: A's states under other aircraft ids
+    val flightsB = Seq("3c6444", "ab1234", "cd5678", "badrow")
+      .foldLeft(flightsJson)((j, id) => j.replace(s"\"$id\"", s"\"b$id\""))
+    Files.writeString(java.nio.file.Paths.get(fixtures, "a.json"), flightsJson)
+    Files.writeString(java.nio.file.Paths.get(fixtures, "b.json"), flightsB)
+    Files.writeString(java.nio.file.Paths.get(fixtures, "weather.json"), weatherJson)
+    val paths = LakePaths(root)
+    def runner(flights: String) = new PipelineRunner(paths,
+      new FileReplaySource(s"$fixtures/$flights"),
+      new FileReplaySource(s"$fixtures/weather.json"),
+      new JsonDirSink(Files.createTempDirectory("graft_sink3").toString))
+
+    val (h16, h17) = (LocalDateTime.of(2026, 2, 26, 16, 0), LocalDateTime.of(2026, 2, 26, 17, 0))
+    runner("b.json").runOnce(spark, h17)
+    runner("a.json").runOnce(spark, h16)
+    def ids(at: LocalDateTime): Set[String] = spark.read
+      .parquet(paths.partitionPath("enriched", "sky_safe", "flights_weather", at))
+      .select("icao24").as(Encoders.STRING).collect().toSet
+    assert(ids(h16) == Set("3c6444", "ab1234", "cd5678"))
+    assert(ids(h17) == Set("b3c6444", "bab1234", "bcd5678"))
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -184,5 +185,12 @@ class CombineJobSpec extends AnyFunSuite {
       .subsetOf(cols))
     assert(!cols.exists(_.startsWith("_ml")))
     assert(enriched.count() == separated.size)
+  }
+
+  test("enrich leaves its input uncached once the result is written") {
+    val df = (separated :+ outlier).toDF
+    val out = java.nio.file.Files.createTempDirectory("graft_phase").toString
+    PhaseClassifier.enrich(df).write.mode("overwrite").parquet(out)
+    assert(df.storageLevel == StorageLevel.NONE)
   }
 }
