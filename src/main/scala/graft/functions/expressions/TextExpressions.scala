@@ -29,6 +29,24 @@ object TextExpressions {
 
   private val SeedXxhash = 42L
 
+  /** Whether `a` has no null element. */
+  private def noNulls(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Whether two arrays pair up element for element with no null: the
+    * only case in which the `aggregate(zip_with(...))` fold a pairwise
+    * kernel replaces returns a value (zip_with pads the shorter array
+    * with nulls, and one null element nulls the sum).
+    */
+  private def pairable(a: ArrayData, b: ArrayData): Boolean =
+    a.numElements() == b.numElements() && noNulls(a) && noNulls(b)
+
   /** Distinct word n-gram shingles of a token array, space-joined.
     * Matches the `slidingJoin` column-algebra semantics (first-
     * occurrence order, windows shorter than n dropped).
@@ -148,11 +166,13 @@ object TextExpressions {
   }
 
   /** Dot product of two numeric arrays in double precision (float
-    * elements widened before multiply — same as the zip_with form).
+    * elements widened before multiply — same as the zip_with form);
+    * NULL for different lengths or a null element, as that form.
     */
   case class DotProductExpr(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
     private def elemIsFloat(e: Expression): Boolean = e.dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
@@ -160,7 +180,8 @@ object TextExpressions {
     override def nullSafeEval(l: Any, r: Any): Any = {
       val a = l.asInstanceOf[ArrayData]
       val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
+      if (!pairable(a, b)) return null
+      val n = a.numElements()
       val af = elemIsFloat(left); val bf = elemIsFloat(right)
       var acc = 0.0
       var i = 0
@@ -176,10 +197,13 @@ object TextExpressions {
       copy(left = l, right = r)
   }
 
-  /** Cosine similarity of two numeric arrays; 0.0 for zero vectors. */
+  /** Cosine similarity of two numeric arrays; 0.0 for zero vectors,
+    * NULL for different lengths or a null element.
+    */
   case class CosineSimExpr(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
     private def elemIsFloat(e: Expression): Boolean = e.dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
@@ -187,7 +211,8 @@ object TextExpressions {
     override def nullSafeEval(l: Any, r: Any): Any = {
       val a = l.asInstanceOf[ArrayData]
       val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
+      if (!pairable(a, b)) return null
+      val n = a.numElements()
       val af = elemIsFloat(left); val bf = elemIsFloat(right)
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
@@ -511,16 +536,18 @@ object TextExpressions {
     * (x−y)²), 0L, +)` column algebra at every PQ call site: the
     * values are the identical exact integer sums (long arithmetic
     * throughout, same non-ANSI wrap semantics), only the per-element
-    * lambda interpretation goes away. Both inputs must be equal-length
-    * long arrays (the lattice contract every caller already holds).
+    * lambda interpretation goes away. Arrays of different lengths or
+    * with a null element give NULL, as the fold does.
     */
   case class LongSqDistExpr(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
+    override def nullable: Boolean = true
     override def nullSafeEval(l: Any, r: Any): Any = {
       val a = l.asInstanceOf[ArrayData]
       val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
+      if (!pairable(a, b)) return null
+      val n = a.numElements()
       var acc = 0L
       var i = 0
       while (i < n) {
@@ -592,15 +619,18 @@ object TextExpressions {
   /** Exact int64 dot product of two long-array vectors — the
     * companion kernel to [[LongSqDistExpr]] for the integer-lattice
     * cosine/containment gates (same exact long arithmetic as the
-    * interpreted aggregate(zip_with(x·y)) fold it replaces).
+    * interpreted aggregate(zip_with(x·y)) fold it replaces, and NULL
+    * where the fold is NULL: different lengths or a null element).
     */
   case class LongDotExpr(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
     override def dataType: DataType = LongType
+    override def nullable: Boolean = true
     override def nullSafeEval(l: Any, r: Any): Any = {
       val a = l.asInstanceOf[ArrayData]
       val b = r.asInstanceOf[ArrayData]
-      val n = math.min(a.numElements(), b.numElements())
+      if (!pairable(a, b)) return null
+      val n = a.numElements()
       var acc = 0L
       var i = 0
       while (i < n) {
@@ -618,11 +648,13 @@ object TextExpressions {
     * kernel. Centroids are plan constants (broadcast with the closure),
     * so assignment is a single compiled pass with no join or ML
     * pipeline. `Seq` (not `Array`) fields keep case-class equality
-    * structural for Catalyst canonicalization.
+    * structural for Catalyst canonicalization. A vector with a null
+    * element, or whose length differs from a centroid's, gets NULL.
     */
   case class NearestCentroidExpr(child: Expression, centroids: Seq[Seq[Double]])
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = IntegerType
+    override def nullable: Boolean = true
     @transient private lazy val cents: Array[Array[Double]] =
       centroids.map(_.toArray).toArray
     private def elemIsFloat: Boolean = child.dataType match {
@@ -631,6 +663,8 @@ object TextExpressions {
     }
     override def nullSafeEval(input: Any): Any = {
       val a = input.asInstanceOf[ArrayData]
+      val n = a.numElements()
+      if (!noNulls(a) || cents.exists(_.length != n)) return null
       val af = elemIsFloat
       val k = cents.length
       var best = 0
@@ -638,7 +672,6 @@ object TextExpressions {
       var j = 0
       while (j < k) {
         val c = cents(j)
-        val n = math.min(a.numElements(), c.length)
         var d = 0.0
         var i = 0
         while (i < n) {

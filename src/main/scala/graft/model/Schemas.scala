@@ -93,6 +93,7 @@ object MlConstants {
   val KClusters = 3
   val KMeansSeed = 42L
   val KMeansMaxIter = 20
+  val KMeansTolerance = 1e-4
   val AnomalySigma = 2.0
   val MinCentroidSeparation = 1.0
   val PhaseFeatures: Array[String] =

@@ -13,11 +13,14 @@ import graft.functions.GeoFunctions
   * Strategy notes for scale:
   *  - The right side (weather stations) is tiny → `broadcast` +
   *    `BroadcastNestedLoopJoin`: no shuffle of the big side at all.
-  *  - Winner selection uses map-side `min_by(struct(...), dist)` via
-  *    `groupBy` when the left key is unique per row, which partial-
-  *    aggregates before the exchange — strictly cheaper than the
-  *    reference's window (`row_number` forces a full shuffle + sort of
-  *    N×M rows). A window variant is kept for parity testing.
+  *  - Two winner selections. `nearestByWindow` keeps the reference's
+  *    plan shape (`row_number` per left key over `dist`, rank 1: a
+  *    shuffle and sort of N×M rows); `flightsToNearestWeather`, the
+  *    pipeline's flights × stations join, runs it. `nearestByMinBy`
+  *    picks the winner with `min_by(struct(...), dist)` via `groupBy`,
+  *    which partial-aggregates map-side so the exchange carries one
+  *    row per left key; the grid paths below and the nearest-site
+  *    queries run it.
   *  - Ties: the reference's `row_number` over `orderBy(dist)` breaks
   *    ties nondeterministically; we pin a secondary ordering on the
   *    right-side key columns (SURVEY.md §7.4).

@@ -16,8 +16,10 @@ import graft.operators.NearestJoin
   *
   * Unlike the reference — which re-executes the whole lineage for each
   * of its ≥6 count()/collect()/first() actions (anti-pattern, SURVEY.md
-  * §4) — the joined frame is cached once inside PhaseClassifier and all
-  * metrics can be derived from the returned frame in one pass.
+  * §4) — PhaseClassifier pins the scored frame with a lazy
+  * `localCheckpoint` that its first pass materializes, so the join runs
+  * once per batch, and the run metrics are counted while the returned
+  * frame is written (`PipelineRunner`).
   */
 object CombineJob {
 

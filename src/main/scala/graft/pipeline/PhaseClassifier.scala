@@ -1,11 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.feature.{StandardScaler, StandardScalerModel, VectorAssembler}
+import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.stat.GraftSummarizerBridge
+import org.apache.spark.mllib.clustering.{KMeans, KMeansModel}
+import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 import graft.functions.RiskFunctions
 import graft.model.MlConstants._
@@ -13,40 +19,73 @@ import graft.model.MlConstants._
 /** Hybrid flight-phase classifier + centroid-distance anomaly detector
   * (B3–B7 in SURVEY.md §2.9; reference `src/combine_spark.py:180-391`).
   *
-  * Pipeline: VectorAssembler(velocity, baro_altitude, vertical_rate) →
-  * StandardScaler(withMean, withStd) → KMeans(k=3, seed=42, maxIter=20),
+  * Model: the features (velocity, baro_altitude, vertical_rate) are
+  * standardized with the batch's mean and std, `(x − μ)·(1/σ)` with the
+  * factor 0 where σ = 0 (StandardScaler withMean/withStd), and
+  * clustered by K-means (k=3, seed 42, maxIter 20, k-means|| init),
   * refit per batch. If the max pairwise centroid distance in scaled
   * space is < 1.0 the clusters are "not meaningful" and a rule-based
   * fallback labels the phases instead (`:224-241`, `:301-318`). Anomaly
   * scoring runs in BOTH modes (`:326-327`): features re-standardized
-  * with the fitted scaler's μ/σ embedded as literals, Euclidean distance
-  * to the row's own centroid, flagged when dist > mean + 2·stddev_samp.
+  * with the fitted μ/σ embedded as literals, Euclidean distance to the
+  * row's own centroid, flagged when dist > mean + 2·stddev_samp.
   *
-  * Driver-side work is O(k) only (centroids, μ/σ, one stats row) — the
-  * same "fetch tiny stats → re-inject as literals" pattern the
-  * reference uses (F13), which avoids a driver-blocking scalar
-  * subquery. After the fit, one global aggregate yields everything
-  * the driver needs: each cluster's size and mean altitude (for the
-  * labels) and the distance μ/σ (for the anomaly threshold). KMeans
-  * iterates over the input, so it is pinned with a lazy
-  * `localCheckpoint`: the row count materializes it in the same job,
-  * and its blocks are released with the frame instead of staying
-  * cached after the call.
+  * The fit is the ML `Pipeline(VectorAssembler, StandardScaler,
+  * KMeans)` without its side passes: the row count, μ and σ come from
+  * one `treeAggregate` over Spark's own `SummarizerBuffer` (the buffer
+  * `StandardScaler.fit` aggregates with), VectorAssembler still builds
+  * the K-means input (and still rejects a NaN feature), and
+  * `mllib.clustering.KMeans.run` is the row solver ML `KMeans.fit`
+  * delegates to here. `PhaseFitSpec` checks μ, σ, the centers and every
+  * row's cluster id against the ML pipeline bit for bit.
+  *
+  * Spark jobs per K-means batch: one for the count/μ/σ pass, which
+  * also materializes the lazy `localCheckpoint` the solver iterates
+  * over; the solver's own (k-means|| init, then one per Lloyd
+  * iteration until the centers move less than 1e-4); and one global
+  * aggregate for everything the driver needs: each cluster's size and
+  * mean altitude (for the labels) and the distance μ/σ (for the
+  * anomaly threshold). The ML pipeline spends four more passes on the
+  * same fit (a separate count, StandardScaler's aggregate, KMeans'
+  * solver-choice summary and its training summary's cluster sizes):
+  * on a 1,000-state benchmark minute the enrich step (join, fit, stats
+  * pass and write) runs 17 jobs, 24 with the ML pipeline. Driver-side
+  * work is O(k) only (centroids, μ/σ, one stats row) — the "fetch tiny
+  * stats → re-inject as literals" pattern the reference uses (F13).
+  * The checkpoint's blocks are released with the frame instead of
+  * staying cached after the call.
   */
 object PhaseClassifier {
 
   private val featureCols = PhaseFeatures // velocity, baro_altitude, vertical_rate
   private val phaseNames = Array("Takeoff / Landing", "Climb / Descent", "Cruise")
 
+  /** The fitted phase model of one batch: its row count, the scaler's
+    * μ and σ (empty without rows), and the K-means model (none when
+    * the batch has fewer than k rows).
+    */
+  private[pipeline] final case class PhaseModel(
+      rows: Long, mean: Array[Double], std: Array[Double], kmeans: Option[KMeansModel]) {
+
+    /** StandardScalerModel's scale factor per feature: 1/σ, 0 where σ = 0. */
+    def factor: Array[Double] = std.map(s => if (s == 0.0) 0.0 else 1.0 / s)
+
+    /** The K-means cluster id of each row, from its `_ml_` features. */
+    def clusterId: Column = ColumnBridge.column(ClusterIdExpr(
+      featureCols.map(c => ColumnBridge.expression(col(s"_ml_$c"))).toSeq,
+      mean.toSeq, factor.toSeq, kmeans.get))
+  }
+
   /** Adds flight_phase, flight_phase_id, is_anomaly, anomaly_score.
     * Internal ML columns are dropped before return (`:387`).
     */
   def enrich(input: DataFrame): DataFrame = {
-    val spark = input.sparkSession
     val df = input.localCheckpoint(eager = false)
-    val n = df.count()
+    val withFeatures = features(df)
+    val model = fit(withFeatures)
+    val internal = featureCols.map("_ml_" + _).toIndexedSeq
 
-    if (n == 0) {
+    if (model.rows == 0) {
       // Degenerate: empty batch — emit schema-complete empty result
       // (pinned semantic; the reference would crash, SURVEY.md §7.4).
       return df
@@ -56,37 +95,16 @@ object PhaseClassifier {
         .withColumn("is_anomaly", lit(false))
     }
 
-    // Null-safe features (reference coalesces to 0.0, `:193-195`)
-    val withFeatures = featureCols.foldLeft(df) { (d, c) =>
-      d.withColumn(s"_ml_$c", coalesce(col(c), lit(0.0)))
-    }
-
-    if (n < KClusters) {
+    val kmeans = model.kmeans.getOrElse {
       // Too few rows to fit k=3 — rule fallback, no anomaly stats
       // possible beyond the n<=1 stddev-null rule.
-      return ruleLabeled(withFeatures)
-        .transform(anomalyWithoutModel)
-        .drop(featureCols.map("_ml_" + _).toIndexedSeq: _*)
+      return ruleLabeled(withFeatures).transform(anomalyWithoutModel).drop(internal: _*)
     }
+    val centroids = kmeans.clusterCenters.map(_.toArray)
 
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.map("_ml_" + _))
-      .setOutputCol("_ml_features_raw")
-    val scaler = new StandardScaler()
-      .setWithMean(true).setWithStd(true)
-      .setInputCol("_ml_features_raw").setOutputCol("_ml_features")
-    val kmeans = new KMeans()
-      .setK(KClusters).setSeed(KMeansSeed).setMaxIter(KMeansMaxIter)
-      .setFeaturesCol("_ml_features").setPredictionCol("_ml_cluster_id")
-
-    val model = new Pipeline().setStages(Array(assembler, scaler, kmeans))
-      .fit(withFeatures)
-    val scalerModel = model.stages(1).asInstanceOf[StandardScalerModel]
-    val kmeansModel = model.stages(2).asInstanceOf[KMeansModel]
-    val centroids = kmeansModel.clusterCenters.map(_.toArray)
-
-    val clustered = model.transform(withFeatures).withColumn("_dist_to_centroid",
-      centroidDistance(scalerModel.mean.toArray, scalerModel.std.toArray, centroids))
+    val clustered = withFeatures
+      .withColumn("_ml_cluster_id", model.clusterId)
+      .withColumn("_dist_to_centroid", centroidDistance(model.mean, model.std, centroids))
 
     // the one stats pass: per cluster (size, mean altitude), then μ, σ
     val stats = clustered.select(centroids.indices.flatMap { cid =>
@@ -103,10 +121,75 @@ object PhaseClassifier {
         kmeansLabeled(clustered, phaseByCluster(clusters))
       } else ruleLabeled(clustered)
 
-    flagged(labeled, threshold(stats, 2 * centroids.length)).drop(
-      (featureCols.map("_ml_" + _) ++
-        Seq("_ml_features_raw", "_ml_features", "_ml_cluster_id",
-          "_dist_to_centroid")).toIndexedSeq: _*)
+    flagged(labeled, threshold(stats, 2 * centroids.length))
+      .drop(internal ++ Seq("_ml_cluster_id", "_dist_to_centroid"): _*)
+  }
+
+  /** Null-safe `_ml_` feature columns (the reference coalesces to 0.0,
+    * `:193-195`).
+    */
+  private[pipeline] def features(df: DataFrame): DataFrame =
+    featureCols.foldLeft(df) { (d, c) =>
+      d.withColumn(s"_ml_$c", coalesce(col(c), lit(0.0)))
+    }
+
+  /** Fits the phase model to a frame carrying the `_ml_` features.
+    * μ and σ are kept as `StandardScalerModel` keeps them (compressed,
+    * so a -0.0 reads back as 0.0). VectorAssembler fails the batch on a
+    * NaN feature in the first pass, whatever the batch size.
+    */
+  private[pipeline] def fit(withFeatures: DataFrame): PhaseModel = {
+    val vectors = new VectorAssembler()
+      .setInputCols(featureCols.map("_ml_" + _)).setOutputCol("_ml_features_raw")
+      .transform(withFeatures).select("_ml_features_raw").rdd.map(_.getAs[Vector](0))
+    val (rows, mean, std) = GraftSummarizerBridge.countMeanStd(vectors)
+    val fitted = PhaseModel(rows, mean.compressed.toArray, std.compressed.toArray, None)
+    if (rows < KClusters) return fitted
+
+    val (mu, sigma, factor) = (fitted.mean, fitted.std, fitted.factor)
+    val instances = vectors.map { v =>
+      val z = standardized(v.toArray, mu, factor)
+      // ML KMeans' checkNonNanVectors, on the same scaled vectors
+      if (z.exists(x => x.isNaN || x.isInfinite)) throw new IllegalArgumentException(
+        s"Vector values MUST NOT be NaN or Infinity, but got ${z.mkString("[", ",", "]")}" +
+          s" (features ${v.toArray.mkString("[", ",", "]")} scaled by mean" +
+          s" ${mu.mkString("[", ",", "]")}, std ${sigma.mkString("[", ",", "]")})")
+      OldVectors.dense(z)
+    }
+    fitted.copy(kmeans = Some(new KMeans()
+      .setK(KClusters).setSeed(KMeansSeed).setMaxIterations(KMeansMaxIter)
+      .setInitializationMode(KMeans.K_MEANS_PARALLEL).setEpsilon(KMeansTolerance)
+      .run(instances)))
+  }
+
+  /** `(x − μ)·factor` per feature, StandardScalerModel's arithmetic. */
+  private def standardized(x: Array[Double], mean: Array[Double],
+      factor: Array[Double]): Array[Double] =
+    Array.tabulate(x.length)(i => (x(i) - mean(i)) * factor(i))
+
+  /** The row's K-means cluster: its features standardized as in the
+    * fit, then `KMeansModel.predict` (the call ML's `KMeansModel`
+    * makes per row).
+    */
+  private final case class ClusterIdExpr(children: Seq[Expression], mean: Seq[Double],
+      factor: Seq[Double], model: KMeansModel) extends Expression with CodegenFallback {
+    override def dataType: DataType = IntegerType
+    override def nullable: Boolean = children.exists(_.nullable)
+    @transient private lazy val mu = mean.toArray
+    @transient private lazy val scale = factor.toArray
+    override def eval(input: InternalRow): Any = {
+      val x = new Array[Double](children.length)
+      var i = 0
+      while (i < x.length) {
+        val v = children(i).eval(input)
+        if (v == null) return null
+        x(i) = v.asInstanceOf[Double]
+        i += 1
+      }
+      Integer.valueOf(model.predict(OldVectors.dense(standardized(x, mu, scale))))
+    }
+    override protected def withNewChildrenInternal(
+        newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
   }
 
   /** B4 — max pairwise centroid L2 distance in scaled space must reach

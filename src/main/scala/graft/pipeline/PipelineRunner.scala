@@ -2,7 +2,8 @@ package graft.pipeline
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.expr
 
 import graft.lake.{DocumentSink, LakePaths}
 
@@ -58,18 +59,26 @@ final class PipelineRunner(
 
     // combine — read back the partitions this run wrote (layer
     // contract), enrich; not the newest ones, so a re-run of an earlier
-    // hour enriches that hour's snapshot
+    // hour enriches that hour's snapshot. Each read-back names the
+    // schema the frame was written with, which spares the Spark job
+    // that infers it from the parquet footers.
     val enriched = CombineJob.enrich(
-      spark.read.parquet(fFlightsDir), spark.read.parquet(fWeatherDir))
+      readBack(spark, formattedFlights, fFlightsDir), readBack(spark, formattedWeather, fWeatherDir))
     val enrichedDir = paths.partitionPath("enriched", "sky_safe", "flights_weather", at)
-    enriched.write.mode(SaveMode.Overwrite).parquet(enrichedDir)
+    // the run metrics are counted while the enriched layer is written
+    // (the reference re-runs the whole lineage per count — SURVEY.md §4
+    // anti-pattern)
+    val counted = Observation("run_metrics")
+    enriched.observe(counted, expr("count(*)").as("rows"),
+      expr("sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END)").as("anomalies"))
+      .write.mode(SaveMode.Overwrite).parquet(enrichedDir)
 
     // usage + index
-    val usage = UsageProjection.usage(spark.read.parquet(enrichedDir))
+    val usage = UsageProjection.usage(readBack(spark, enriched, enrichedDir))
     val usageDir = paths.partitionPath("usage", "sky_safe", "dashboard", at)
     usage.write.mode(SaveMode.Overwrite).parquet(usageDir)
     val docs = UsageProjection.latestPerAircraft(
-      UsageProjection.documents(spark.read.parquet(usageDir)))
+      UsageProjection.documents(readBack(spark, usage, usageDir)))
     // typed serving contract enforced at the sink boundary — the
     // engine-side analog of the reference's pinned ES index mapping
     // (src/index_elastic.py:22-62): mis-typed documents fail here, not
@@ -77,14 +86,16 @@ final class PipelineRunner(
     new graft.lake.ContractSink(sink, graft.lake.ServingContract.flightDocuments)
       .upsert(docs, "icao24")
 
-    // one aggregation pass for the run metrics (the reference re-runs
-    // the whole lineage per count — SURVEY.md §4 anti-pattern)
-    val enrichedCached = spark.read.parquet(enrichedDir)
-    val row = enrichedCached.selectExpr(
-      "count(*) AS rows",
-      "sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END) AS anomalies").first()
-    RunMetrics(row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    val metrics = counted.get
+    RunMetrics(metrics("rows").asInstanceOf[Long],
+      Option(metrics("anomalies")).fold(0L)(_.asInstanceOf[Long]))
   }
+
+  /** The layer `written` was just written to `dir`, read back with its
+    * schema.
+    */
+  private def readBack(spark: SparkSession, written: DataFrame, dir: String): DataFrame =
+    spark.read.schema(written.schema).parquet(dir)
 }
 
 final case class RunMetrics(enrichedRows: Long, anomalies: Long)

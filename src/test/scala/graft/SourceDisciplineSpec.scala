@@ -26,6 +26,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  5. No `case x: Throwable`: a catch-all would also swallow fatal
   *     errors (OOM, interrupts, linkage errors) and turn them into a
   *     quiet value; `NonFatal` is the catch-all.
+  *  6. Every parquet read in `pipeline/` names its schema: an inferred
+  *     read costs a Spark job that lists the files and merges their
+  *     footers, once per layer per minute.
   */
 class SourceDisciplineSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -91,6 +94,19 @@ class SourceDisciplineSpec extends AnyFunSuite {
           l.matches(".*\\bcase\\s+\\w+\\s*:\\s*Throwable\\b.*"))
     }.map(mainRoot.relativize(_).toString)
     assert(offenders.isEmpty, s"case _: Throwable in: $offenders")
+  }
+
+  test("every pipeline/ parquet read names its schema") {
+    // from each `.read` to the `.parquet(` that ends its chain
+    val read = "(?s)\\.read\\b((?:(?!\\.(?:read|write)\\b).)*?)\\.parquet\\s*\\(".r
+    val reads = scalaFiles.filter(mainRoot.relativize(_).startsWith("pipeline")).flatMap { p =>
+      val code = Files.readString(p).linesIterator
+        .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("//")).mkString("\n")
+      read.findAllMatchIn(code).map(m => (mainRoot.relativize(p).toString, m.group(0)))
+    }
+    assert(reads.nonEmpty, "no parquet read found in pipeline/")
+    val offenders = reads.filterNot(_._2.contains(".schema("))
+    assert(offenders.isEmpty, s"schema-inferring parquet reads: $offenders")
   }
 
   // perfbench times graft.Bench's session by reflecting on this exact

@@ -66,6 +66,32 @@ class LongVecKernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("ragged or null-element vectors give NULL, like the zip_with folds") {
+    val df = Seq(
+      (Seq(Some(1L), Some(2L), Some(3L)), Seq(Some(1L), Some(2L))),
+      (Seq(Some(1L), None), Seq(Some(1L), Some(2L))),
+      (Seq.empty[Option[Long]], Seq.empty[Option[Long]]))
+      .toDF("a", "b")
+    val out = df.select(
+      TextExpressions.long_sq_dist(col("a"), col("b")).as("d"),
+      TextExpressions.long_dot(col("a"), col("b")).as("p"),
+      aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
+        lit(0L), (acc, v) => acc + v).as("fd"),
+      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
+        lit(0L), (acc, v) => acc + v).as("fp")).collect()
+    out.foreach(r => assert((r.get(0), r.get(1)) == ((r.get(2), r.get(3)))))
+    assert(out.take(2).forall(r => r.isNullAt(0) && r.isNullAt(1)))
+    // equal-length empty arrays keep the fold's start value
+    assert(out(2).getLong(0) == 0L && out(2).getLong(1) == 0L)
+    // non-null literal arrays of different lengths: nullable and NULL
+    val lit2 = spark.range(1).select(
+      TextExpressions.long_sq_dist(array(lit(1L)), array(lit(1L), lit(2L))).as("d"),
+      TextExpressions.long_dot(array(lit(1L)), array(lit(1L), lit(2L))).as("p"))
+    assert(lit2.schema.forall(_.nullable))
+    val r = lit2.first()
+    assert(r.isNullAt(0) && r.isNullAt(1))
+  }
+
   test("null vector propagates null (binary expression contract)") {
     val df = Seq((Some(Seq(1L, 2L)), Option.empty[Seq[Long]]))
       .toDF("a", "b")

@@ -189,4 +189,36 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(row.getAs[String]("nfc") == "\u00e9") // e + combining acute → é
     assert(row.getAs[Long]("z") == 39L) // (3,5) interleaved, a on even bits
   }
+
+  test("double-vector kernels give NULL for ragged or null-element vectors") {
+    import graft.functions.expressions.TextExpressions._
+    val spark0 = TestSpark.spark
+    import spark0.implicits._
+    val cells = Seq(Seq(0.0, 0.0), Seq(1.0, 1.0))
+    val out = Seq(
+      (Seq(Some(1.0), Some(2.0), Some(3.0)), Seq(Some(1.0), Some(2.0))),
+      (Seq(Some(1.0), None), Seq(Some(1.0), Some(2.0))),
+      (Seq.empty[Option[Double]], Seq.empty[Option[Double]]),
+      (Seq(Some(0.9), Some(1.2)), Seq(Some(1.0), Some(1.0))))
+      .toDF("a", "b")
+      .select(dot_product($"a", $"b"), cosine_sim($"a", $"b"), nearest_centroid($"a", cells),
+        aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0.0), (acc, v) => acc + v))
+      .collect()
+    // dot product: the zip_with fold's value, NULL included
+    out.foreach(r => assert(Option(r.get(0)) == Option(r.get(3))))
+    assert(out(0).isNullAt(0) && out(1).isNullAt(0) && out(2).getDouble(0) == 0.0)
+    assert(out(0).isNullAt(1) && out(1).isNullAt(1) && out(2).getDouble(1) == 0.0)
+    assert(out(3).getDouble(0) == 0.9 + 1.2)
+    // nearest centroid: NULL unless the vector has the centroids' length
+    // and no null element
+    assert((0 to 2).forall(out(_).isNullAt(2)) && out(3).getInt(2) == 1)
+    // non-null literal arrays of different lengths: nullable and NULL
+    val lits = spark0.range(1).select(
+      dot_product(array(lit(1.0)), array(lit(1.0), lit(2.0))),
+      cosine_sim(array(lit(1.0)), array(lit(1.0), lit(2.0))),
+      nearest_centroid(array(lit(1.0)), cells))
+    assert(lits.schema.forall(_.nullable))
+    val r = lits.first()
+    assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
+  }
 }

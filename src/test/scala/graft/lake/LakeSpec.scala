@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.pipeline.{FileReplaySource, PipelineRunner}
+import graft.pipeline.{FileReplaySource, PipelineRunner, RunMetrics}
 
 class LakeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,6 +43,61 @@ class LakeSpec extends AnyFunSuite {
       |  "precipitation": 6.5, "rain": 6.5, "cloud_cover": 100,
       |  "weather_code": 95, "visibility": 800.0}}]"""
       .stripMargin.replaceAll("\n", " ")
+
+  /** An OpenSky states snapshot; a state is (icao24, lon, lat,
+    * baro_altitude, velocity, vertical_rate), a null lon/lat is a state
+    * without coordinates.
+    */
+  private def snapshot(states: Seq[(String, String, String, Double, Double, Double)]): String =
+    states.map { case (id, lon, lat, alt, vel, vr) =>
+      s"""["$id", "CS$id", "France", 1772121599, 1772121600, $lon, $lat, $alt,
+         | false, $vel, 90.0, $vr, null, $alt, "1000", false, 0]""".stripMargin
+    }.mkString("""{"time": 1772121600, "_extracted_at": "2026-02-26T16:00:05", "states": [""",
+      ", ", "]}").replaceAll("\n", " ")
+
+  /** Runs one minute over `flights` and returns its metrics with the
+    * enriched partition it wrote.
+    */
+  private def runFlights(flights: String): (RunMetrics, org.apache.spark.sql.DataFrame) = {
+    val root = Files.createTempDirectory("graft_lake_m").toString
+    val fixtures = Files.createTempDirectory("graft_fx_m").toString
+    Files.writeString(java.nio.file.Paths.get(fixtures, "flights.json"), flights)
+    Files.writeString(java.nio.file.Paths.get(fixtures, "weather.json"), weatherJson)
+    val at = LocalDateTime.of(2026, 2, 26, 16, 0)
+    val metrics = new PipelineRunner(LakePaths(root),
+      new FileReplaySource(s"$fixtures/flights.json"),
+      new FileReplaySource(s"$fixtures/weather.json"),
+      new JsonDirSink(Files.createTempDirectory("graft_sink_m").toString)).runOnce(spark, at)
+    (metrics, spark.read.parquet(
+      LakePaths(root).partitionPath("enriched", "sky_safe", "flights_weather", at)))
+  }
+
+  test("run metrics equal the enriched partition's row and anomaly counts") {
+    // three separated flight groups near the two stations plus one
+    // aircraft between them (CombineJobSpec's outlier batch)
+    def group(p: String, lat: Double, f: Int => (Double, Double, Double)) =
+      (1 to 12).map { i =>
+        val (alt, vel, vr) = f(i)
+        (f"$p$i%03d", "2.3", (lat + i * 0.001).toString, alt, vel, vr)
+      }
+    val states = group("lo", 48.8, i => (150.0 + i, 50 + i * 0.5, 0.1)) ++
+      group("cl", 49.5, i => (2500.0 + i * 10, 150.0 + i, 12.0)) ++
+      group("cr", 50.4, i => (11000.0 + i * 5, 230.0 + i, 0.2)) :+
+      (("outlr", "3.0", "49.0", 6000.0, 100.0, 6.0))
+    val (metrics, enriched) = runFlights(snapshot(states))
+    assert(metrics.enrichedRows == enriched.count())
+    assert(metrics.enrichedRows == 37)
+    assert(metrics.anomalies == enriched.filter(col("is_anomaly")).count())
+    assert(enriched.filter(col("is_anomaly") && col("icao24") === "outlr").count() == 1)
+  }
+
+  test("a snapshot whose states all lack coordinates gives RunMetrics(0, 0)") {
+    val (metrics, enriched) = runFlights(snapshot(Seq(
+      ("nocoo1", "null", "null", 1000.0, 100.0, 0.0),
+      ("nocoo2", "null", "null", 9000.0, 200.0, 1.0))))
+    assert(metrics == RunMetrics(0, 0))
+    assert(enriched.count() == 0)
+  }
 
   test("latest-partition resolver picks newest date then hour") {
     val root = Files.createTempDirectory("graft_lake").toString

@@ -164,6 +164,29 @@ class CombineJobSpec extends AnyFunSuite {
     assert(r.getAs[String]("flight_phase") != null)
   }
 
+  /** Every message on the cause chain of the failure that running
+    * `enrich` on `batch` raises.
+    */
+  private def failure(batch: Seq[F]): String = {
+    val e = intercept[Exception] {
+      PhaseClassifier.enrich(batch.toDF).write.format("noop").mode("overwrite").save()
+    }
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+  }
+
+  test("a NaN feature fails the batch, naming the value") {
+    val msg = failure(separated :+ outlier.copy(velocity = Double.NaN))
+    assert(msg.contains("Encountered NaN"), msg)
+  }
+
+  test("an infinite feature fails the batch, naming the value") {
+    val pos = failure(separated :+ outlier.copy(baro_altitude = Double.PositiveInfinity))
+    assert(pos.contains("MUST NOT be NaN or Infinity") && pos.contains("Infinity"), pos)
+    val neg = failure(separated :+ outlier.copy(vertical_rate = Double.NegativeInfinity))
+    assert(neg.contains("MUST NOT be NaN or Infinity") && neg.contains("-Infinity"), neg)
+  }
+
   test("all-null features coalesce to 0 and classify without error") {
     val df = spark.sql(
       """SELECT 'x' AS icao24, 44.0 AS latitude, 3.0 AS longitude,
