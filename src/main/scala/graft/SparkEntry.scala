@@ -908,12 +908,6 @@ object SparkEntry {
        |FROM z""".stripMargin
   }
 
-  /** Label-propagation oracle: the synchronous recurrence unrolled as
-    * chained CTEs over the q113 near-dup pair generator (both edge
-    * directions). Tie break mirrors the operator exactly: highest
-    * neighbor-label count, then smallest label (ROW_NUMBER ordered
-    * count DESC, label ASC).
-    */
   /** BPE training oracle: the R-round merge loop unrolled as chained
     * CTEs. Words are marker-wrapped symbol strings (chr(1) sym
     * chr(2) …); each round takes the (count DESC, l, r) argmax over
@@ -983,6 +977,12 @@ object SparkEntry {
        |FROM enc""".stripMargin
   }
 
+  /** Label-propagation oracle: the synchronous recurrence unrolled as
+    * chained CTEs over the q113 near-dup pair generator (both edge
+    * directions). Tie break mirrors the operator exactly: highest
+    * neighbor-label count, then smallest label (ROW_NUMBER ordered
+    * count DESC, label ASC).
+    */
   private def lpaSql(iters: Int): String = {
     val rounds = (1 to iters).map { i =>
       s"""r$i AS (SELECT dst AS node, label FROM (
@@ -8012,9 +8012,6 @@ object SparkEntry {
       |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       |) WHERE sim >= 0.4""".stripMargin
 
-  /** Exact cosine top-10 for query vectors vec_id<5 — the oracle for
-    * both q31 (brute force) and q63 (IVF with every cell probed).
-    */
   /** q183's unrolled oracle: the SAME integer quantization (shifted
     * grid, constants cancel in distances), md5-seeded init, and two
     * centroid updates via `SUM // COUNT` (floor division on
@@ -8067,6 +8064,9 @@ object SparkEntry {
        |FROM a3 WHERE rn = 1""".stripMargin
   }
 
+  /** Exact cosine top-10 for query vectors vec_id<5 — the oracle for
+    * both q31 (brute force) and q63 (IVF with every cell probed).
+    */
   private def knnBruteForceSql: String =
     """SELECT query_id, vec_id, ROUND(sim, 6) AS cosine_sim,
       |  CAST(rn AS INTEGER) AS rank FROM (
@@ -8262,11 +8262,6 @@ object SparkEntry {
       |    || repeat('001100', CAST(nc AS INTEGER)) AS header_hex
       |FROM p""".stripMargin
 
-  /** q291 oracle: planted (candidate, reference) pairs, per-order
-    * clipped corpus counts, ln on the 1e-8 lattice, integer-exact
-    * brevity-penalty exponent. Per-order CTEs are generated so both
-    * engines replay the same gram construction.
-    */
   /** Shared PQ oracle CTEs (q307/q318/q326/q327): lattice corpus,
     * md5-sampled codebook + queries, subspace distances, codes and
     * the per-query ADC lookup tables — everything before the
@@ -9401,6 +9396,11 @@ cl$n AS (
       |    AS rouge_l_f
       |FROM agg""".stripMargin
 
+  /** q291 oracle: planted (candidate, reference) pairs, per-order
+    * clipped corpus counts, ln on the 1e-8 lattice, integer-exact
+    * brevity-penalty exponent. Per-order CTEs are generated so both
+    * engines replay the same gram construction.
+    */
   private def bleuSql: String = {
     val perN = (1 to 4).map { n =>
       s""",

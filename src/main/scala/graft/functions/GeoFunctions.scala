@@ -36,12 +36,4 @@ object GeoFunctions {
     */
   def planarDist2(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     (lat2 - lat1) * (lat2 - lat1) + (lon2 - lon1) * (lon2 - lon1)
-
-  /** Bounding-box predicate (reference bbox filter semantics,
-    * `src/serverless_function_call.py:10`).
-    */
-  def inBBox(lat: Column, lon: Column,
-             latMin: Double, latMax: Double,
-             lonMin: Double, lonMax: Double): Column =
-    lat.between(latMin, latMax) && lon.between(lonMin, lonMax)
 }

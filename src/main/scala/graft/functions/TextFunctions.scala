@@ -84,7 +84,13 @@ object TextFunctions {
     "es" -> Seq("el", "la", "y", "es"),
     "zh" -> Seq("的", "是", "了", "在"))
 
-  /** Count occurrences of `word` in a token array.
+  /** Count tokens that belong to `words` — one compiled hash-set pass
+    * (TextExpressions kernel) instead of an interpreted filter lambda.
+    */
+  def wordSetCount(toks: Column, words: Seq[String]): Column =
+    graft.functions.expressions.TextExpressions.word_set_count(toks, words)
+
+  /** Stopword-token ratio — a classic quality signal.
     *
     * PERFORMANCE CONTRACT for all `...From(toks)` functions: pass a
     * MATERIALIZED column (`withColumn("_toks", tokens(...))`), not the
@@ -92,16 +98,6 @@ object TextFunctions {
     * re-evaluate captured sub-expressions per array element, so an
     * inline `tokens(text)` argument turns O(n) scans into O(n²).
     */
-  def wordCountIn(toks: Column, word: String): Column =
-    size(filter(toks, t => t === word)).cast("int")
-
-  /** Count tokens that belong to `words` — one compiled hash-set pass
-    * (TextExpressions kernel) instead of an interpreted filter lambda.
-    */
-  def wordSetCount(toks: Column, words: Seq[String]): Column =
-    graft.functions.expressions.TextExpressions.word_set_count(toks, words)
-
-  /** Stopword-token ratio — a classic quality signal. */
   def stopwordRatioFrom(toks: Column): Column = {
     val n = size(toks)
     val stops = wordSetCount(toks, stopwordsEn)
@@ -123,9 +119,6 @@ object TextFunctions {
     round(lengthTerm * 0.3 + punctTerm * 0.25 + upperTerm * 0.2 + stopTerm * 0.25, 6)
   }
 
-  def qualityScore(text: Column): Column =
-    qualityScoreFrom(text, tokens(lower(text)))
-
   /** Per-language marker-stopword hit count (n-gram-free heuristic
     * language ID): returns the language whose marker tokens appear most
     * often, "und" (undetermined) when nothing matches.
@@ -137,8 +130,6 @@ object TextFunctions {
     val best = greatest(scored: _*)
     when(best.getField("score") > 0, best.getField("lang")).otherwise("und")
   }
-
-  def langId(text: Column): Column = langIdFrom(tokens(lower(text)))
 
   /** 64-bit polynomial rolling-hash fingerprint of the token sequence
     * (order-sensitive document fingerprint). fp = Σ tokHash·31^i via a
@@ -157,18 +148,6 @@ object TextFunctions {
     */
   def portableFingerprintFrom(toks: Column): Column =
     graft.functions.expressions.TextExpressions.portable_fingerprint(toks)
-
-  /** Character n-gram (shingle) set from a materialized single-spaced
-    * lowercase column — compiled kernel (TextExpressions).
-    */
-  def charShinglesFromCleaned(cleaned: Column, n: Int): Column =
-    graft.functions.expressions.TextExpressions.char_shingles(cleaned, n)
-
-  /** Normalization for [[charShinglesFromCleaned]]. */
-  def cleanedText(text: Column): Column = lower(regexp_replace(text, "\\s+", " "))
-
-  def charShingles(text: Column, n: Int): Column =
-    charShinglesFromCleaned(cleanedText(text), n)
 
   /** Word n-gram shingles (distinct) — compiled kernel. */
   def wordShinglesFromTokens(toks: Column, n: Int): Column =

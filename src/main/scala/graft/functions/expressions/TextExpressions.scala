@@ -75,29 +75,6 @@ object TextExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Distinct character n-gram shingles straight off the string (no
-    * per-char array materialization). Input is expected pre-cleaned
-    * (lowercased, whitespace-collapsed); shingles are over Unicode
-    * code points.
-    */
-  case class CharShinglesExpr(child: Expression, n: Int)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(input: Any): Any = {
-      val s = input.asInstanceOf[UTF8String].toString
-      val cps = s.codePoints().toArray
-      if (cps.length < n) return new GenericArrayData(Array.empty[Any])
-      val seen = new java.util.LinkedHashSet[UTF8String]()
-      var i = 0
-      while (i <= cps.length - n) {
-        seen.add(UTF8String.fromString(new String(cps, i, n)))
-        i += 1
-      }
-      new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /** MinHash signature over a shingle array: same hash family as the
     * column-algebra form (xxhash64 seed 42 → mod P → affine per
     * permutation), all in one compiled pass. Empty input → all-P
@@ -463,41 +440,6 @@ object TextExpressions {
       copy(left = l, right = r)
   }
 
-  /** Bin index of a numeric value against a sorted edge table (plan
-    * constant): binary search over `edges`, returning the count of
-    * edges ≤ value — a value below every edge gets 0, above every edge
-    * gets `edges.length`. With edges = per-column approxQuantile cuts,
-    * this is the distributed substitute for a rank-normalizing global
-    * window: O(log bins) per row, no sort, no shuffle.
-    */
-  case class QuantileBinExpr(child: Expression, edges: Seq[Double])
-      extends UnaryExpression with CodegenFallback {
-    require(edges.nonEmpty, "edges must be non-empty")
-    private val edgeArr: Array[Double] = edges.toArray
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any = {
-      val v = input match {
-        case d: java.lang.Double => d.doubleValue()
-        case f: java.lang.Float => f.doubleValue()
-        case l: java.lang.Long => l.doubleValue()
-        case i: java.lang.Integer => i.doubleValue()
-        case s: java.lang.Short => s.doubleValue()
-        case b: java.lang.Byte => b.doubleValue()
-        case d: Decimal => d.toDouble
-        case other => other.toString.toDouble
-      }
-      var idx = java.util.Arrays.binarySearch(edgeArr, v)
-      if (idx < 0) idx = -idx - 1
-      else {
-        // exact hit: step past duplicate edges so the mapping is
-        // deterministic (count of edges <= v)
-        while (idx < edgeArr.length && edgeArr(idx) <= v) idx += 1
-      }
-      java.lang.Long.valueOf(idx.toLong)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   /** Jaccard similarity of two string arrays treated as sets —
     * |A ∩ B| / |A ∪ B|, 0.0 when the union is empty. One hash-set
     * build + one probe pass per row instead of the three interpreted
@@ -798,8 +740,6 @@ object TextExpressions {
 
   def word_shingles(toks: Column, n: Int): Column =
     toCol(WordShinglesExpr(expr(toks), n))
-  def char_shingles(cleaned: Column, n: Int): Column =
-    toCol(CharShinglesExpr(expr(cleaned), n))
   def minhash_sig(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
     toCol(MinHashSigExpr(expr(shingles), numHashes, seed))
   def simhash64(toks: Column): Column = toCol(SimHash64Expr(expr(toks)))
@@ -832,8 +772,6 @@ object TextExpressions {
     toCol(PortableMinHashSigExpr(expr(shingles), numHashes))
   def interleave_bits(a: Column, b: Column, bits: Int = 21): Column =
     toCol(InterleaveBitsExpr(expr(a), expr(b), bits))
-  def quantile_bin(v: Column, edges: Seq[Double]): Column =
-    toCol(QuantileBinExpr(expr(v), edges))
   def unicode_normalize(s: Column, form: String = "NFC"): Column =
     toCol(UnicodeNormalizeExpr(expr(s), form))
   def gear_boundaries(text: Column, maskBits: Int): Column =

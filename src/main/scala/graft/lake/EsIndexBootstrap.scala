@@ -19,6 +19,10 @@ import graft.sources.Http
   * Driver-side control plane only: two tiny HTTP calls per run, no
   * data movement — the bulk payload itself stays executor-side in
   * [[BulkHttpSink]].
+  *
+  * Only specs drive `EsIndexBootstrap.flightMappingJson`; the
+  * bootstrap stays as the paper's serving-index setup (ROADMAP
+  * direction 6).
   */
 final class EsIndexBootstrap(esUrl: String, indexName: String) {
 

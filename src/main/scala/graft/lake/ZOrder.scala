@@ -1,64 +1,30 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.TextExpressions
 
-/** Z-order (Morton-curve) clustering for multi-dimensional data
+/** Z-order (Morton-curve) cell assignment for multi-dimensional data
   * skipping.
   *
   * A linear sort on one column gives perfect file-level min/max
   * pruning on that column and none on any other. Sorting by the
-  * interleaved bit code of two columns clusters BOTH: each output
-  * file covers a small rectangle of the (a, b) space, so parquet
+  * interleaved bit code of two columns clusters BOTH: each run of the
+  * curve covers a small rectangle of the (x, y) space, so parquet
   * row-group/file min-max statistics prune scans filtered on EITHER
   * column — the standard lakehouse layout technique for
   * two-predicate tables (e.g. (user, time) or (lat, lon)).
-  *
-  * Values are quantile-normalized per column before interleaving, so
-  * skewed or negative distributions spread evenly across the curve.
-  * The normalization is SAMPLED (one `approxQuantile` sketch pass per
-  * column on the driver, then a compiled binary-search bin lookup per
-  * row) — there is no global sort or single-partition window anywhere:
-  * the whole layout job is sketch pass → map pass → range shuffle,
-  * which holds at whole-table 100 TB scale.
   */
 object ZOrder {
 
-  /** Per-column quantile cut points: `bins - 1` sorted edges splitting
-    * the column into `bins` roughly equal-population cells. One
-    * Greenwald-Khanna sketch pass — no sort.
-    */
-  def quantileEdges(df: DataFrame, column: String, bins: Int): Array[Double] = {
-    require(bins >= 2 && bins <= (1 << 16), s"bins must be in [2, 65536], got $bins")
-    val probs = (1 until bins).map(_.toDouble / bins).toArray
-    df.select(col(column).cast("double").as(column))
-      .stat.approxQuantile(column, probs, 0.25 / bins)
-  }
-
-  /** Morton code of two numeric columns, each quantile-normalized into
-    * `bits`-bit grid cells via the given edge tables (plan constants —
-    * compiled binary search per row, no window, no shuffle).
-    */
-  def zValue(a: Column, b: Column, edgesA: Seq[Double], edgesB: Seq[Double],
-      bits: Int): Column = {
-    require(edgesA.length < (1 << bits) && edgesB.length < (1 << bits),
-      "edge table must fit the bit width")
-    TextExpressions.interleave_bits(
-      TextExpressions.quantile_bin(a, edgesA),
-      TextExpressions.quantile_bin(b, edgesB), bits)
-  }
-
-  /** Oracle-exact fixed-grid variant of the curve: cells quantized on
-    * a FIXED bounding box instead of sampled quantile bins — fully
-    * deterministic (hash-checkable against a SQL oracle), and the
-    * right normalization for naturally box-bounded domains like geo
+  /** Cells quantized on a FIXED bounding box — fully deterministic
+    * (hash-checkable against a SQL oracle), and the right
+    * normalization for naturally box-bounded domains like geo
     * coordinates. Adds `zval` (Morton code of the clamped cell
     * coords) and `bucket` (1-based `ntile` over (zval, tieBreak) —
-    * exact equal-population, and its single ordered pass is the same
-    * range exchange a z-ordered write needs anyway; the sampled
-    * [[clusterByZ]] is the whole-table 100 TB path).
+    * exact equal-population; its single ordered pass is the same
+    * range exchange a z-ordered write needs anyway).
     */
   def assignFixedGrid(
       df: DataFrame,
@@ -83,31 +49,5 @@ object ZOrder {
       .withColumn("bucket",
         ntile(buckets).over(org.apache.spark.sql.expressions.Window
           .orderBy(col("zval"), col(tieBreak))).cast("long"))
-  }
-
-  /** Rewrite `df` into `numFiles` files clustered on the Z-curve of
-    * (colA, colB). Range partitioning on the z-value gives each file a
-    * contiguous curve segment = a compact rectangle in (a, b).
-    *
-    * `bits` controls grid resolution (2^bits cells per dimension);
-    * pruning only needs cells ≳ numFiles per dimension, and the edge
-    * tables stay bounded driver-side constants (2^10 doubles each by
-    * default).
-    */
-  def clusterByZ(
-      df: DataFrame,
-      colA: String,
-      colB: String,
-      numFiles: Int,
-      bits: Int = 10): DataFrame = {
-    val bins = 1 << bits
-    val edgesA = quantileEdges(df, colA, bins)
-    val edgesB = quantileEdges(df, colB, bins)
-    val withZ = df.withColumn("_z",
-      zValue(col(colA), col(colB), edgesA.toSeq, edgesB.toSeq, bits))
-    withZ
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
   }
 }

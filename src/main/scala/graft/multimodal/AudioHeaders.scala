@@ -162,34 +162,6 @@ object AudioHeaders {
         dur6(audioBytes * 8L, bitrate * 1000L).as("duration_s")))
   }
 
-  /** Magic-dispatched parse: struct(container, sample_rate, channels,
-    * bits_per_sample, n_samples, duration_s); container null when the
-    * payload is neither.
-    */
-  def parseAudio(payload: Column): Column = {
-    val wav = parseWav(payload)
-    val flac = parseFlac(payload)
-    val container = when(wav.isNotNull, "wav")
-      .when(flac.isNotNull, "flac")
-    val best = coalesce(wav, flac)
-    struct(
-      container.as("container"),
-      best.getField("sample_rate").as("sample_rate"),
-      best.getField("channels").as("channels"),
-      best.getField("bits_per_sample").as("bits_per_sample"),
-      best.getField("n_samples").as("n_samples"),
-      best.getField("duration_s").as("duration_s"))
-  }
-
-  /** [[parseAudio]] with the two container parses STAGED as
-    * projection columns (dropped on return): [[parseAudio]]'s
-    * `coalesce(wav, flac).getField` fan-out re-inlines both FULL
-    * parses once per output field (~10 copies of the byte algebra in
-    * one expression — past the JIT's method budget, the projection
-    * runs deoptimized; measured on q260). Staged, each parse is
-    * computed once and the dispatch reads cheap attributes — the
-    * [[VideoHeaders.withMp4]] recipe.
-    */
   /** Sample-level PCM audit over the first `maxSamples` 16-bit
     * samples of a WAV "data" chunk — the loudness / clipping / DC
     * catalog pass that runs AFTER header triage: peak amplitude,
@@ -316,6 +288,19 @@ object AudioHeaders {
       .drop(out + "_h", out + "_v")
   }
 
+  /** Magic-dispatched parse of `binCol` into `out`: struct(container,
+    * sample_rate, channels, bits_per_sample, n_samples, duration_s);
+    * container null when the payload is neither WAV nor FLAC.
+    *
+    * The two container parses are STAGED as projection columns
+    * (dropped on return). A single-expression
+    * `coalesce(wav, flac).getField` fan-out re-inlines both FULL
+    * parses once per output field (~10 copies of the byte algebra in
+    * one expression — past the JIT's method budget, the projection
+    * runs deoptimized; measured on q260). Staged, each parse is
+    * computed once and the dispatch reads cheap attributes — the
+    * [[VideoHeaders.withMp4]] recipe.
+    */
   def withAudio(df: org.apache.spark.sql.DataFrame, binCol: String,
       out: String): org.apache.spark.sql.DataFrame = {
     val bin = col(binCol)

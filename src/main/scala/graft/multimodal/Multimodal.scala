@@ -19,9 +19,9 @@ import org.apache.spark.sql.types._
   *     checksum:   string>   // sha-256 of payload
   * }}}
   *
-  * Decode/resize/frame-sample are implemented as `mapPartitions` over
-  * a typed Dataset with an explicit batch shape (the Scala analog of
-  * a vectorized Python `mapInPandas` stage: the partition iterator is
+  * Decode is implemented as `mapPartitions` over a typed Dataset
+  * with an explicit batch shape (the Scala analog of a vectorized
+  * Python `mapInPandas` stage: the partition iterator is
   * consumed in fixed-size batches so a real decoder could amortize
   * per-batch model/codec setup).
   *
@@ -185,39 +185,4 @@ object Multimodal {
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
-
-  /** Frame sampling for video-typed media: emit one row per sampled
-    * frame index (explode is pure column algebra; the per-frame decode
-    * happens lazily downstream in [[decodeFeatures]]).
-    */
-  def sampleFrames(df: DataFrame, mediaCol: String, everyNth: Int): DataFrame =
-    df.withColumn("frame_index",
-      explode(sequence(lit(0),
-        greatest((col(s"$mediaCol.n_bytes") / lit(1024)).cast("int") - 1, lit(0)),
-        lit(everyNth))))
-
-  /** Resize (stub): produce a new media struct whose payload is the
-    * deterministic stub "re-encode" at the target dimensions —
-    * payload truncated/cycled to w·h bytes, metadata and checksum
-    * recomputed by the same column algebra as [[asMedia]]. A real
-    * implementation swaps ONLY the payload expression for a codec
-    * call; the struct contract, sizes, and checksums stay identical.
-    */
-  def resizeStub(df: DataFrame, mediaCol: String, width: Int, height: Int): DataFrame = {
-    val target = width * height
-    // rpad on binary both truncates and zero-pads to the exact target
-    // length — one pure column expression, no UDF
-    val resized = expr(s"rpad($mediaCol.payload, $target, x'00')")
-    df.withColumn(mediaCol,
-      asMedia(resized, col(s"$mediaCol.media_type")))
-  }
-
-  /** Size-bucketed repartitioning: large payloads skew partitions;
-    * bucket by payload size so each task carries comparable bytes —
-    * the knob that matters at 100 TB (task-size balance), exposed as an
-    * explicit operator.
-    */
-  def repartitionBySize(df: DataFrame, mediaCol: String, partitions: Int): DataFrame =
-    df.repartitionByRange(partitions,
-      col(s"$mediaCol.n_bytes"), xxhash64(col(s"$mediaCol.checksum")))
 }

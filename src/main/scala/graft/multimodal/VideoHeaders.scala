@@ -46,67 +46,21 @@ object VideoHeaders {
   private def boxType(bin: Column, pos: Column): Column =
     hex(bin.substr(pos + lit(4L), lit(4)))
 
-  /** Parse an MP4 (ISO-BMFF) header: struct(major_brand, version,
-    * timescale, duration, n_tracks, duration_s) — nulls when the
-    * payload is not ftyp-led with moov directly or after one padding
-    * box, or when moov's first child is not a v0/v1 mvhd.
+  /** Parse an MP4 (ISO-BMFF) header from `binCol` into `out`:
+    * struct(major_brand, version, timescale, duration, n_tracks,
+    * duration_s) — null when the payload is not ftyp-led with moov
+    * directly or after one padding box, or when moov's first child is
+    * not a v0/v1 mvhd.
     *
-    * Single-expression form, retained for per-column use in specs;
-    * production catalogs should use [[withMp4]] — each derived
-    * offset here re-inlines its predecessors, which past ~3 chained
-    * hops blows the generated method past janino's limit and drops
-    * the parse out of codegen (the measured q290 failure mode;
-    * q274's query-side fix).
-    */
-  def parseMp4(payload: Column): Column = {
-    val isFtyp = boxType(payload, lit(1L)) === FtypId
-    val brand = payload.substr(lit(9), lit(4)).cast("string")
-    // moov directly after ftyp, or after ONE free/wide padding box
-    val b1 = lit(1L) + be32(payload, lit(1L))
-    val b2 = b1 + be32(payload, b1)
-    val moovOff = when(boxType(payload, b1) === MoovId, b1)
-      .when(boxType(payload, b1).isin(SkipIds: _*) &&
-        boxType(payload, b2) === MoovId, b2)
-    val moovEnd = moovOff + be32(payload, moovOff)
-    // first moov child must be mvhd
-    val child = moovOff + lit(8L)
-    val isMvhd = boxType(payload, child) === MvhdId
-    val mvhdSize = be32(payload, child)
-    val version = u8(payload, child + lit(8L))
-    val timescale = when(version === 0L, be32(payload, child + lit(20L)))
-      .otherwise(be32(payload, child + lit(28L)))
-    val duration = when(version === 0L, be32(payload, child + lit(24L)))
-      .otherwise(be64(payload, child + lit(32L)))
-    // bounded trak walk: hop over planted-minimal boxes, each hop
-    // validated against the moov extent
-    def isTrak(t: Column): Column =
-      t < moovEnd && boxType(payload, t) === TrakId
-    val t1 = child + mvhdSize
-    val i1 = isTrak(t1)
-    val t2 = t1 + be32(payload, t1)
-    val i2 = i1 && isTrak(t2)
-    val t3 = t2 + be32(payload, t2)
-    val i3 = i2 && isTrak(t3)
-    val nTracks = when(i1, 1L).otherwise(0L) + when(i2, 1L).otherwise(0L) +
-      when(i3, 1L).otherwise(0L)
-    when(isFtyp && moovOff.isNotNull && isMvhd &&
-      (version === 0L || version === 1L) && timescale > 0L,
-      struct(
-        brand.as("major_brand"),
-        version.as("version"),
-        timescale.as("timescale"),
-        duration.as("duration"),
-        nTracks.as("n_tracks"),
-        dur6(duration, timescale).as("duration_s")))
-  }
-
-  /** [[parseMp4]] with every derived offset STAGED as a projection
-    * column (dropped on return): aliases are non-cheap
-    * multi-referenced expressions, so CollapseProject keeps the
-    * stages separate and whole-stage codegen binds each offset to
-    * ONE local variable — generated code linear in the walk depth
-    * instead of exponential (measured on q274: 40.7 s interpreted →
-    * sub-second staged, the ImageHeaders.withJpeg recipe).
+    * Every derived offset is STAGED as a projection column (dropped
+    * on return): aliases are non-cheap multi-referenced expressions,
+    * so CollapseProject keeps the stages separate and whole-stage
+    * codegen binds each offset to ONE local variable — generated code
+    * linear in the walk depth. A single-expression parse re-inlines
+    * each offset's predecessors, which past ~3 chained hops blows the
+    * generated method past janino's limit and drops the parse out of
+    * codegen (measured on q274: 40.7 s interpreted → sub-second
+    * staged, the ImageHeaders.withJpeg recipe).
     */
   def withMp4(df: org.apache.spark.sql.DataFrame, binCol: String,
       out: String): org.apache.spark.sql.DataFrame = {

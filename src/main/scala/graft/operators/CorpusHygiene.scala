@@ -151,7 +151,7 @@ object CorpusHygiene {
   }
 
   /** Mixed-language detection: marker-token votes per language (the
-    * q22 langId marker sets), emitted as counts plus the top/second
+    * q22 `langIdFrom` marker sets), emitted as counts plus the top/second
     * languages and their vote ratio — `is_mixed` flags documents
     * whose second language polls ≥ half the winner with ≥ 2 votes
     * (boilerplate-with-embedded-quotes, code-switching, concatenated
@@ -194,24 +194,6 @@ object CorpusHygiene {
           col("_snd.v") * 2L >= col("_top.v")).as("is_mixed")): _*)
   }
 
-  /** SENTENCE-level dedup accounting (the CCNet/C4 pipeline stage
-    * between exact doc dedup and span removal): segment each document
-    * into sentences (the Readability boundary convention — runs of
-    * [.!?] followed by whitespace, counted over rtrim'd text),
-    * normalize each sentence (strip the terminal punctuation run,
-    * trim), and flag every sentence whose normalized form occurs ≥ 2
-    * times ACROSS THE CORPUS (including twice in one document). Per
-    * document: sentence count, duplicated-sentence count, the
-    * duplicated fraction, and a keep flag at `maxDupFrac` — the
-    * boilerplate-page filter ("subscribe", "all rights reserved"
-    * pages are mostly corpus-duplicated sentences).
-    *
-    * Scale shape: one explode to sentence rows, frequencies by a
-    * 16-hex md5 key (narrow shuffle — the key, not the sentence,
-    * moves), one hash join back on the key, one per-doc aggregate.
-    * The frequency table is corpus-sized, so the join is a plain
-    * shuffled hash join, never a broadcast.
-    */
   /** Per-source boilerplate HEADER detection — the strip-the-shared-
     * prefix pass a crawl-cleaning pipeline runs per site: for every
     * prefix length k ≤ `maxK`, find the source's modal k-token
@@ -273,6 +255,24 @@ object CorpusHygiene {
           .otherwise(col("_best.s")).as("modal_share"))
   }
 
+  /** SENTENCE-level dedup accounting (the CCNet/C4 pipeline stage
+    * between exact doc dedup and span removal): segment each document
+    * into sentences (the Readability boundary convention — runs of
+    * [.!?] followed by whitespace, counted over rtrim'd text),
+    * normalize each sentence (strip the terminal punctuation run,
+    * trim), and flag every sentence whose normalized form occurs ≥ 2
+    * times ACROSS THE CORPUS (including twice in one document). Per
+    * document: sentence count, duplicated-sentence count, the
+    * duplicated fraction, and a keep flag at `maxDupFrac` — the
+    * boilerplate-page filter ("subscribe", "all rights reserved"
+    * pages are mostly corpus-duplicated sentences).
+    *
+    * Scale shape: one explode to sentence rows, frequencies by a
+    * 16-hex md5 key (narrow shuffle — the key, not the sentence,
+    * moves), one hash join back on the key, one per-doc aggregate.
+    * The frequency table is corpus-sized, so the join is a plain
+    * shuffled hash join, never a broadcast.
+    */
   def sentenceDedup(df: DataFrame, idCol: String, textCol: String,
       maxDupFrac: Double = 0.5): DataFrame = {
     val sents = df

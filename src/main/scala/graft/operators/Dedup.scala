@@ -7,7 +7,7 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for LLM-scale corpora (SURVEY.md §7.5):
-  * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
+  * exact, MinHash+LSH, SimHash, exact Jaccard, embedding-cosine.
   *
   * Scale design: every near-dup variant is
   * shingle/sign → bucket → *bucket-equi-join* → verify — the candidate
@@ -18,21 +18,6 @@ import graft.functions.VectorFunctions
 object Dedup {
 
   // ── Exact ───────────────────────────────────────────────────────────
-
-  /** Exact dedup on a column set: keeps the FULL row with the smallest
-    * `idCol` per duplicate group (deterministic, unlike
-    * `dropDuplicates` whose survivor is partition-order dependent),
-    * plus the group size as `n_copies`. Map-side `min_by` combine —
-    * only one candidate row per group per mapper reaches the shuffle.
-    */
-  def exactKeepMinId(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
-    val payload = struct(df.columns.toSeq.map(col): _*)
-    df.groupBy(keyCols.map(col).toSeq: _*)
-      .agg(min_by(payload, col(idCol)).as("_row"),
-        count(lit(1)).as("n_copies"))
-      .select(df.columns.toSeq.map(c => col(s"_row.`$c`").as(c))
-        :+ col("n_copies"): _*)
-  }
 
   /** Content hash groups: sha-256 of the text with group sizes —
     * the classic "exact near-zero-cost first pass" before any fuzzy
@@ -45,11 +30,12 @@ object Dedup {
 
   /** Quality-weighted survivor selection: keeps the FULL row with the
     * HIGHEST `scoreCol` per group (ties broken by smallest `idCol`),
-    * plus the group size as `n_candidates` — [[exactKeepMinId]] with a
-    * ranking function instead of first-seen, the form corpus curation
-    * actually wants ("of these duplicates, keep the best one"). Same
-    * scale shape: map-side `min_by` combine, one candidate row per
-    * group per mapper through the shuffle, no window sort.
+    * plus the group size as `n_candidates` — unlike `dropDuplicates`,
+    * whose survivor is partition-order dependent, this ranks the
+    * candidates, the form corpus curation actually wants ("of these
+    * duplicates, keep the best one"). Map-side `min_by` combine: one
+    * candidate row per group per mapper through the shuffle, no
+    * window sort.
     */
   def exactKeepBest(df: DataFrame, idCol: String, keyCols: Seq[String],
       scoreCol: String): DataFrame = {
@@ -239,50 +225,6 @@ object Dedup {
     */
   def simHash64(tokensCol: Column): Column =
     graft.functions.expressions.TextExpressions.simhash64(tokensCol)
-
-  // ── n-gram Jaccard (bucketed, no LSH) ───────────────────────────────
-
-  /** Character-n-gram Jaccard near-dup pairs with cheap blocking: docs
-    * are bucketed by (length band, first shingle hash band) to bound the
-    * pairwise comparison; exact Jaccard verifies. Suited to short-doc
-    * corpora; MinHash is the scale path for long docs.
-    */
-  def ngramJaccardPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 4,
-      threshold: Double = 0.7): DataFrame = {
-    // Jaccard(A,B) ≥ t implies |A| ≥ |A∩B| ≥ t·|A∪B| ≥ t·|B| — the
-    // DISTINCT-shingle counts of a qualifying pair have ratio ≥ t (raw
-    // text lengths do NOT obey this bound: heavily repeated content can
-    // give near-identical shingle sets at very different lengths). So
-    // band the distinct-shingle count on a LOG scale with base 1/t: any
-    // qualifying pair then differs by at most one band, and exploding
-    // each doc into its own + next band makes the equi-join lossless.
-    val logBase = math.log(1.0 / threshold)
-    val prepared = df.select(col(idCol).as("doc_id"),
-      cleanedText(col(textCol)).as("_cleaned"))
-      .withColumn("shingles", charShinglesFromCleaned(col("_cleaned"), n))
-      .withColumn("len_band",
-        floor(log(size(array_distinct(col("shingles"))).cast("double") + 1.0) / logBase))
-      .drop("_cleaned")
-
-    val blocked = prepared.select(col("doc_id"), col("shingles"),
-      explode(array(col("len_band"), col("len_band") + 1)).as("block"))
-
-    val left = blocked.select(col("block"), col("doc_id").as("id_a"),
-      col("shingles").as("sh_a"))
-    val right = blocked.select(col("block"), col("doc_id").as("id_b"),
-      col("shingles").as("sh_b"))
-
-    left.join(right, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("jaccard_sim", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard_sim"), 6).as("jaccard_sim"))
-  }
 
   /** EXACT Jaccard ≥ t pairs via an inverted index — the scale path
     * for exact set-similarity self-join, replacing the O(n²) cross

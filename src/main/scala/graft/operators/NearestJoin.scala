@@ -93,25 +93,6 @@ object NearestJoin {
       tieBreak = Seq(col("w_latitude"), col("w_longitude")))
   }
 
-  /** Grid-bucketed nearest join — the LARGE-site-set path (SURVEY.md
-    * §2.3 J2's "geohash-bucketed" alternative). Broadcast cross join
-    * stops scaling once the site table does; here both sides bucket
-    * into `cellDeg`-degree grid cells, each site replicates into its
-    * 3×3 cell neighborhood, and candidates come from an EQUI join on
-    * the cell — per point, only nearby sites are scored.
-    *
-    * Exactness: any site OUTSIDE a point's 3×3 ring is at least
-    * `cellDeg` degrees away in some axis, i.e. at least
-    * `cellDeg · 110 km · cos(|lat|+cellDeg)` away. A ring winner at or
-    * under that radius is therefore provably the global nearest; ring
-    * winners beyond it — and points with an empty ring — fall back to
-    * the exhaustive broadcast path, so the result equals brute-force
-    * nearest for EVERY point, with the fallback sized by `cellDeg`
-    * against site density (tiny when cells are chosen sensibly).
-    *
-    * Longitude cells are not wrapped at ±180°; near the poles the safe
-    * radius collapses and everything falls back (conservative).
-    */
   /** [[nearestByGrid]] with the cell size derived from a SAMPLED
     * nearest-distance bound — the regime guard the fixed-cell form
     * lacks, robust to ANY site distribution (uniform, clustered,
@@ -221,6 +202,25 @@ object NearestJoin {
       nearestByGrid(left, sites, leftKeys, latL, lonL, latR, lonR, tieBreak, cellDeg)
   }
 
+  /** Grid-bucketed nearest join — the LARGE-site-set path (SURVEY.md
+    * §2.3 J2's "geohash-bucketed" alternative). Broadcast cross join
+    * stops scaling once the site table does; here both sides bucket
+    * into `cellDeg`-degree grid cells, each site replicates into its
+    * 3×3 cell neighborhood, and candidates come from an EQUI join on
+    * the cell — per point, only nearby sites are scored.
+    *
+    * Exactness: any site OUTSIDE a point's 3×3 ring is at least
+    * `cellDeg` degrees away in some axis, i.e. at least
+    * `cellDeg · 110 km · cos(|lat|+cellDeg)` away. A ring winner at or
+    * under that radius is therefore provably the global nearest; ring
+    * winners beyond it — and points with an empty ring — fall back to
+    * the exhaustive broadcast path, so the result equals brute-force
+    * nearest for EVERY point, with the fallback sized by `cellDeg`
+    * against site density (tiny when cells are chosen sensibly).
+    *
+    * Longitude cells are not wrapped at ±180°; near the poles the safe
+    * radius collapses and everything falls back (conservative).
+    */
   def nearestByGrid(
       left: DataFrame,
       right: DataFrame,

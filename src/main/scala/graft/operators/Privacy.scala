@@ -151,31 +151,6 @@ object Privacy {
         (col("n_distinct_sensitive") >= l).as("l_diverse"): _*)
   }
 
-  /** t-closeness audit (Li, Li & Venkatasubramanian 2007) — the
-    * skewness-attack companion to [[lDiversity]]: a QI cell can be
-    * l-diverse and still leak when its sensitive-value DISTRIBUTION
-    * differs sharply from the corpus-wide one ("this cell is 90%
-    * value X where the corpus is 5%"). Per QI group this reports the
-    * variational distance (the categorical EMD of the paper) between
-    * the cell's sensitive distribution and the global distribution:
-    *
-    *   emd = (1/2) * sum_v | n_cv / n_c  -  N_v / N |
-    *
-    * computed EXACTLY as `sum_v |n_cv*N - N_v*n_c|` on DECIMAL(38,0)
-    * (int64 products overflow at 100-TB row counts) over a common
-    * denominator `2*n_c*N`, with ONE closing double division — so
-    * the reported distance hash-matches a HUGEINT oracle bit for
-    * bit. Values absent from a cell still contribute their global
-    * mass (the |0 - N_v/N| term), which is why the sum runs over the
-    * GLOBAL sensitive domain, not the cell's.
-    *
-    * Output per group: qiCols + (n_rows, emd, t_close = emd <= t).
-    *
-    * Scale shape: one (QI, sensitive) count aggregate and one
-    * (sensitive) count aggregate — both bounded by the released
-    * domain, not the row count — then a domain×domain broadcast
-    * cross of the tiny frames. No row-side shuffle, no windows.
-    */
   /** Laplace-mechanism histogram release — the ε-differential-privacy
     * counting query (Dwork et al. 2006): each released cell is
     * count + Lap(Δ/ε) with sensitivity Δ = 1 (one row contributes to
@@ -224,6 +199,31 @@ object Privacy {
       .withColumn("released_clamped", greatest(col("released"), lit(0.0)))
   }
 
+  /** t-closeness audit (Li, Li & Venkatasubramanian 2007) — the
+    * skewness-attack companion to [[lDiversity]]: a QI cell can be
+    * l-diverse and still leak when its sensitive-value DISTRIBUTION
+    * differs sharply from the corpus-wide one ("this cell is 90%
+    * value X where the corpus is 5%"). Per QI group this reports the
+    * variational distance (the categorical EMD of the paper) between
+    * the cell's sensitive distribution and the global distribution:
+    *
+    *   emd = (1/2) * sum_v | n_cv / n_c  -  N_v / N |
+    *
+    * computed EXACTLY as `sum_v |n_cv*N - N_v*n_c|` on DECIMAL(38,0)
+    * (int64 products overflow at 100-TB row counts) over a common
+    * denominator `2*n_c*N`, with ONE closing double division — so
+    * the reported distance hash-matches a HUGEINT oracle bit for
+    * bit. Values absent from a cell still contribute their global
+    * mass (the |0 - N_v/N| term), which is why the sum runs over the
+    * GLOBAL sensitive domain, not the cell's.
+    *
+    * Output per group: qiCols + (n_rows, emd, t_close = emd <= t).
+    *
+    * Scale shape: one (QI, sensitive) count aggregate and one
+    * (sensitive) count aggregate — both bounded by the released
+    * domain, not the row count — then a domain×domain broadcast
+    * cross of the tiny frames. No row-side shuffle, no windows.
+    */
   def tCloseness(df: DataFrame, qiCols: Seq[String],
       sensitiveCol: String, t: Double): DataFrame = {
     require(t > 0.0 && t < 1.0, s"t must be in (0,1): $t")

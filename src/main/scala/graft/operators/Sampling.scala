@@ -86,12 +86,6 @@ object Sampling {
     membership.select(col(idCol), col(groupCol),
       splitColumn(col(groupCol), salt, trainFrac, valFrac).as("split"))
 
-  /** Deterministic uniform subsample: keeps ~`fraction` of rows. */
-  def deterministicSample(df: DataFrame, idCol: String, fraction: Double,
-      salt: String = "sample_v1"): DataFrame =
-    df.filter(
-      substring(hashUniform(col(idCol), salt), 1, 4) < hexThreshold(fraction))
-
   /** Deterministic stratified subsample: per-stratum fractions (e.g.
     * language rebalancing — downsample dominant languages, keep the
     * rest). Strata missing from `fractions` keep `defaultFraction`.
@@ -123,9 +117,10 @@ object Sampling {
     * Scale shape: the allocation runs on the tiny per-stratum counts
     * frame (its global windows are O(#strata)); the row-level work is
     * one rank window partitioned by stratum — an honest per-stratum
-    * sort. For few-strata/huge-strata regimes, pre-filter with
-    * `deterministicSample` at pct+ε then exact-rank the survivors:
-    * same result, the sort sees ~pct of the data.
+    * sort. For few-strata/huge-strata regimes, pre-filter with a
+    * [[hashUniform]] draw below [[hexThreshold]] at pct+ε then
+    * exact-rank the survivors: same result, the sort sees ~pct of the
+    * data.
     */
   def exactQuotaSplit(df: DataFrame, idCol: String, stratumCol: String,
       pct: Int, salt: String = "quota_v1"): DataFrame = {
@@ -255,8 +250,8 @@ object Sampling {
     * Scale shape: one rank window partitioned by the group key — an
     * honest per-group sort of only the hot groups' rows. For
     * heavy-tailed corpora where one domain is a large fraction of all
-    * rows, pre-filter giant groups with [[deterministicSample]] at
-    * cap/n_g + ε and exact-rank the survivors (same result, the sort
+    * rows, pre-filter giant groups with a [[hashUniform]] draw below
+    * [[hexThreshold]] at cap/n_g + ε and exact-rank the survivors (same result, the sort
     * sees ~cap rows per group); the window itself never needs a
     * global sort.
     */
@@ -312,26 +307,6 @@ object Sampling {
           .as("target"))
   }
 
-  /** Keep EXACTLY ⌈fraction·N⌉ best rows by score — the quality-gate
-    * selection step (keep the top p% of a corpus by quality score)
-    * with a deterministic (score desc, id asc) order, WITHOUT the
-    * naive plan's global sort.
-    *
-    * `ROW_NUMBER() OVER (ORDER BY score)` funnels the whole corpus
-    * through one partition — a non-starter at 100 TB. This operator
-    * instead: (1) one agg shuffle builds the score histogram — its
-    * size is the number of DISTINCT scores, which for 6-dp-rounded
-    * quality scores in [0,1] is ≤ ~10⁶ rows regardless of corpus
-    * size, so the driver cumsum is a bounded collect (the IVF-sample
-    * precedent); (2) the threshold score t and the boundary deficit m
-    * fall out of the cumulative counts; (3) `score > t` keeps rows
-    * with a narrow filter, and only the single boundary bin
-    * (`score == t`) pays an ordered top-m by id — per-partition heaps
-    * over one bin, never the corpus. Null scores are never kept.
-    *
-    * Exactly ⌈fraction·N⌉ rows survive — a plain `score >= cutoff`
-    * filter can't promise that when ties straddle the cutoff.
-    */
   /** Deterministic global training order: rank 1..N in
     * md5(id:salt) order — "shuffle the corpus once, reproducibly"
     * (every epoch = a new salt), WITHOUT funnelling N rows through
@@ -535,6 +510,26 @@ object Sampling {
     above.unionByName(boundary)
   }
 
+  /** Keep EXACTLY ⌈fraction·N⌉ best rows by score — the quality-gate
+    * selection step (keep the top p% of a corpus by quality score)
+    * with a deterministic (score desc, id asc) order, WITHOUT the
+    * naive plan's global sort.
+    *
+    * `ROW_NUMBER() OVER (ORDER BY score)` funnels the whole corpus
+    * through one partition — a non-starter at 100 TB. This operator
+    * instead: (1) one agg shuffle builds the score histogram — its
+    * size is the number of DISTINCT scores, which for 6-dp-rounded
+    * quality scores in [0,1] is ≤ ~10⁶ rows regardless of corpus
+    * size, so the driver cumsum is a bounded collect (the IVF-sample
+    * precedent); (2) the threshold score t and the boundary deficit m
+    * fall out of the cumulative counts; (3) `score > t` keeps rows
+    * with a narrow filter, and only the single boundary bin
+    * (`score == t`) pays an ordered top-m by id — per-partition heaps
+    * over one bin, never the corpus. Null scores are never kept.
+    *
+    * Exactly ⌈fraction·N⌉ rows survive — a plain `score >= cutoff`
+    * filter can't promise that when ties straddle the cutoff.
+    */
   def topFractionByScore(df: DataFrame, idCol: String, scoreCol: String,
       fraction: Double, maxScoreBins: Int = 2000001): DataFrame = {
     require(fraction > 0.0 && fraction <= 1.0,

@@ -93,21 +93,6 @@ object TextSearch {
           log(col("n").cast("double") / col("df").cast("double"))).as("tfidf"))
   }
 
-  /** Corpus-frequency vocabulary + per-doc out-of-vocabulary rate —
-    * the tokenizer-coverage signal an LLM-data pipeline uses to flag
-    * documents a fixed vocab represents poorly (high OOV ⇒ boilerplate
-    * noise, wrong language, or corrupt encoding). The vocabulary is
-    * the top `vocabSize` words by (count DESC, word ASC — the
-    * deterministic tie-break); per doc, `oov_rate` is the fraction of
-    * token OCCURRENCES outside it.
-    *
-    * Scale shape: building the vocab is one groupBy over tokens with a
-    * bounded TakeOrdered (never a full sort of the term space); the
-    * V-row vocab is then BROADCAST to the per-doc scoring pass, so the
-    * corpus-sized token frame shuffles once (the doc_id agg) and never
-    * carries text. `oov_rate` is an exact double (integer-exact counts
-    * divided once, rounded to 6 dp).
-    */
   /** Corpus unigram surprisal — mean −ln p(token) per document, the
     * statistical quality signal (vs q23's rule-based score): documents
     * of very common boilerplate score low, rare-token noise scores
@@ -287,6 +272,21 @@ object TextSearch {
           .as("novelty"))
   }
 
+  /** Corpus-frequency vocabulary + per-doc out-of-vocabulary rate —
+    * the tokenizer-coverage signal an LLM-data pipeline uses to flag
+    * documents a fixed vocab represents poorly (high OOV ⇒ boilerplate
+    * noise, wrong language, or corrupt encoding). The vocabulary is
+    * the top `vocabSize` words by (count DESC, word ASC — the
+    * deterministic tie-break); per doc, `oov_rate` is the fraction of
+    * token OCCURRENCES outside it.
+    *
+    * Scale shape: building the vocab is one groupBy over tokens with a
+    * bounded TakeOrdered (never a full sort of the term space); the
+    * V-row vocab is then BROADCAST to the per-doc scoring pass, so the
+    * corpus-sized token frame shuffles once (the doc_id agg) and never
+    * carries text. `oov_rate` is an exact double (integer-exact counts
+    * divided once, rounded to 6 dp).
+    */
   def vocabOovRate(docs: DataFrame, idCol: String, textCol: String,
       vocabSize: Int): DataFrame = {
     require(vocabSize >= 1, s"vocabSize must be positive: $vocabSize")

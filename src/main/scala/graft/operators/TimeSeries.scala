@@ -46,22 +46,6 @@ object TimeSeries {
           .cast("double").as("locf_value"))
   }
 
-  /** Exponentially time-decayed value aggregate per key — the
-    * feature-store recency feature: score = Σ value·e^(−λ·Δdays),
-    * Δ measured back from the corpus max timestamp, so recent events
-    * dominate and old ones fade with half-life ln(2)/λ days.
-    *
-    * Determinism: λ must arrive as a LITERAL double (the caller
-    * spells e.g. `0.6931471805599453 / 7.0`, mirrored verbatim in the
-    * oracle) — deriving it via ln(2) at runtime would tie the result
-    * to one libm's ulp. Per-event contributions round to 6 dp and
-    * carry as DECIMAL, so per-key sums are aggregation-order
-    * independent; exp() itself is the same accepted ulp class as the
-    * BM25/KL ln() (absorbed by the 6-dp round).
-    *
-    * Scale shape: one max() scalar broadcast, one map-side-combinable
-    * groupBy — a single shuffle keyed by the aggregation key.
-    */
   /** Per-key least-squares time trend: slope/intercept of value over
     * day offsets from the key's own first event — the drift detector
     * for per-entity metrics (is this user's engagement rising?).
@@ -277,6 +261,22 @@ object TimeSeries {
         round(z, 6).as("z"), (abs(z) > zThreshold).as("anomalous"))
   }
 
+  /** Exponentially time-decayed value aggregate per key — the
+    * feature-store recency feature: score = Σ value·e^(−λ·Δdays),
+    * Δ measured back from the corpus max timestamp, so recent events
+    * dominate and old ones fade with half-life ln(2)/λ days.
+    *
+    * Determinism: λ must arrive as a LITERAL double (the caller
+    * spells e.g. `0.6931471805599453 / 7.0`, mirrored verbatim in the
+    * oracle) — deriving it via ln(2) at runtime would tie the result
+    * to one libm's ulp. Per-event contributions round to 6 dp and
+    * carry as DECIMAL, so per-key sums are aggregation-order
+    * independent; exp() itself is the same accepted ulp class as the
+    * BM25/KL ln() (absorbed by the 6-dp round).
+    *
+    * Scale shape: one max() scalar broadcast, one map-side-combinable
+    * groupBy — a single shuffle keyed by the aggregation key.
+    */
   def decayedSum(events: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, lambdaPerDay: Double): DataFrame = {
     val tRef = events.agg(max(unix_micros(col(tsCol))).as("_tref"))

@@ -17,6 +17,9 @@ import scala.util.control.NonFatal
   * Engine-agnostic by design: the policy wraps any `=> T` body, so it
   * composes with [[PipelineRunner.runOnce]] without the runner knowing
   * about retries. The sleeper is injected for deterministic tests.
+  *
+  * Only specs drive [[runSerialized]]; it stays as the paper's
+  * Airflow-parity run policy (ROADMAP direction 6).
   */
 final class Orchestrator(
     retries: Int = 1,

@@ -1,9 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.lake.Upsert.dedupByKey
 
 /** enriched → usage (28-column dashboard projection) and the serving
   * document transform (P6 + B8 + A8 in SURVEY.md §2).
@@ -59,10 +58,16 @@ object UsageProjection {
   }
 
   /** A8 — keyed latest-state semantics of the upsert sink: one row per
-    * aircraft, newest `extracted_at` wins (reference `_id=icao24`
-    * upsert, `src/index_elastic.py:205`).
+    * aircraft, newest `extracted_at` wins, ties to the newest non-null
+    * `observation_time` (reference `_id=icao24` upsert,
+    * `src/index_elastic.py:205`). `row_number`, not `dropDuplicates`,
+    * so "newest" is well-defined.
     */
-  def latestPerAircraft(docs: DataFrame): DataFrame =
-    dedupByKey(docs, "icao24", col("extracted_at"),
-      Seq(col("observation_time").desc_nulls_last))
+  def latestPerAircraft(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("icao24"))
+      .orderBy(col("extracted_at").desc, col("observation_time").desc_nulls_last)
+    docs.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn")
+  }
 }

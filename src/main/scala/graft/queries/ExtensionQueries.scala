@@ -567,17 +567,6 @@ object ExtensionQueries {
       convergeCheckEvery = 4)
   }
 
-  /** PageRank with the convergence exit ENGAGED (q332): the planted
-    * fast-converging fixture — a directed ring over the customer
-    * keys (every node outdeg = indeg = 1), which sits AT the integer
-    * fixed point from round 1: R₁(v) = 150000 + (85·(10⁶ div 1)) div
-    * 100 = 10⁶ = R₀(v). With iterations = 8 and check cadence 1 the
-    * run stops after one round (rounds_run = 1), and the oracle
-    * replays the same stop test over its unrolled rounds — the r12
-    * verdict's "exit engaged on a planted fast-converging fixture",
-    * hash-checked. (The ring is built with the range-partitioned
-    * two-level successor recipe — no global-order window.)
-    */
   /** Windowed perplexity profile (q333): per document the
     * worst/best/mean 16-bigram-window score under the corpus's own
     * KN bigram model — span-level quality localization (the CCNet
@@ -658,6 +647,17 @@ object ExtensionQueries {
     graft.operators.RepeatedSpans.selfRepetitionProfile(
       tbl(s, dir, "documents"), "doc_id", "text")
 
+  /** PageRank with the convergence exit ENGAGED (q332): the planted
+    * fast-converging fixture — a directed ring over the customer
+    * keys (every node outdeg = indeg = 1), which sits AT the integer
+    * fixed point from round 1: R₁(v) = 150000 + (85·(10⁶ div 1)) div
+    * 100 = 10⁶ = R₀(v). With iterations = 8 and check cadence 1 the
+    * run stops after one round (rounds_run = 1), and the oracle
+    * replays the same stop test over its unrolled rounds — the r12
+    * verdict's "exit engaged on a planted fast-converging fixture",
+    * hash-checked. (The ring is built with the range-partitioned
+    * two-level successor recipe — no global-order window.)
+    */
   def qPageRankConverged(s: SparkSession, dir: String): DataFrame = {
     // ring = successor in global key order, max wrapping to min —
     // built with the range-partitioned two-level recipe
@@ -722,12 +722,6 @@ object ExtensionQueries {
       .agg(count(lit(1)).cast("long").as("n_sessions"),
         sum(col("n_events")).cast("long").as("n_events"))
 
-  /** Watermarked tumbling-window counts run as a REAL stream (append
-    * mode, windows closed by watermark advancement) and replayed to
-    * completion — the declarative streaming-window machinery under the
-    * same epoch-bucket oracle as its batch form. Decimal-carried sums
-    * keep the float aggregation order-independent across micro-batches.
-    */
   /** Stream-static enrichment replay: events joined per micro-batch
     * against a customer-derived user→segment dim, then 5-minute
     * windowed counts per segment. Oracle = the batch join+agg.
@@ -750,6 +744,12 @@ object ExtensionQueries {
       horizonSeconds = 600)
   }
 
+  /** Watermarked tumbling-window counts run as a REAL stream (append
+    * mode, windows closed by watermark advancement) and replayed to
+    * completion — the declarative streaming-window machinery under the
+    * same epoch-bucket oracle as its batch form. Decimal-carried sums
+    * keep the float aggregation order-independent across micro-batches.
+    */
   def qWindowedStream(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventStreams.replayToTable(
       RelationalQueries.events(s, dir)
@@ -1068,9 +1068,6 @@ object ExtensionQueries {
       tieBreak = col("station"))
       .select(col("c_custkey"), col("station"), col("dist_km").as("dist2"))
 
-  /** Haversine nearest (true reference semantics, trig → rows-only;
-    * ScalaTest pins the km values on fixture coordinates).
-    */
   /** Same nearest-station semantics through the density-adaptive grid
     * path — must return byte-identical winners to the broadcast window
     * form, so it shares q37's oracle. With only 6 stations the regime
@@ -1116,6 +1113,9 @@ object ExtensionQueries {
       .select(col("c_custkey"), col("site_id"), round(col("dist_km"), 3).as("dist_km"))
   }
 
+  /** Haversine nearest (true reference semantics, trig → rows-only;
+    * ScalaTest pins the km values on fixture coordinates).
+    */
   def qNearestStationHaversine(s: SparkSession, dir: String): DataFrame = {
     val pts = customerPoints(s, dir)
       .withColumn("lat", greatest(least(col("lat"), lit(51.0)), lit(41.5)))
@@ -1228,8 +1228,7 @@ object ExtensionQueries {
     * fixed cell grid on the (lon, lat) box, Morton interleave
     * (compiled kernel), 64 equal-population buckets — the write-side
     * layout that gives 2-D min/max pruning at scan time, in its
-    * deterministic hash-checkable form (the sampled quantile-bin
-    * `clusterByZ` is the whole-table path). All-double quantization
+    * deterministic hash-checkable form. All-double quantization
     * arithmetic is bit-identical across engines.
     */
   def qZOrderLayout(s: SparkSession, dir: String): DataFrame =
@@ -3113,6 +3112,20 @@ object ExtensionQueries {
           col("integrity_holds")))
   }
 
+  /** Little-endian hex of a 16/32-bit field: `%0Nx`, then the bytes
+    * reordered — the WAV header encoders of q260, q305 and q319.
+    */
+  private def le16Hex(v: Column): Column = {
+    val h = format_string("%04x", v)
+    concat(substring(h, 3, 2), substring(h, 1, 2))
+  }
+
+  private def le32Hex(v: Column): Column = {
+    val h = format_string("%08x", v)
+    concat(substring(h, 7, 2), substring(h, 5, 2),
+      substring(h, 3, 2), substring(h, 1, 2))
+  }
+
   /** Audio header metadata via pure byte arithmetic — planted WAV and
     * FLAC fixture payloads, built byte-for-byte IN the query from
     * doc_id-derived parameters (sample rate, channels, bit depth,
@@ -3147,16 +3160,6 @@ object ExtensionQueries {
       (pmod(d, lit(3)) + 1).cast("int")).cast("long")
     val nSamples = pmod(d * 2654435761L, lit(480000L)) + 1L
 
-    // little-endian hex fields from %0Nx + byte reordering
-    def le16(v: Column): Column = {
-      val h = format_string("%04x", v)
-      concat(substring(h, 3, 2), substring(h, 1, 2))
-    }
-    def le32(v: Column): Column = {
-      val h = format_string("%08x", v)
-      concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2))
-    }
     // channel·bits products are tiny and bits is byte-aligned, so the
     // double division is exact and the long cast is the true quotient
     val blockAlign = (wavCh * wavBits / lit(8L)).cast("long")
@@ -3166,10 +3169,10 @@ object ExtensionQueries {
       lit("4c495354" + "04000000" + "494e464f")).otherwise(lit(""))
     val riffSize = lit(36L) + dataSize +
       when(pmod(d, lit(3)) === 0, 12L).otherwise(0L)
-    val wavHex = concat(lit("52494646"), le32(riffSize), lit("57415645"),
-      lit("666d7420"), lit("10000000"), lit("0100"), le16(wavCh),
-      le32(rate), le32(byteRate), le16(blockAlign), le16(wavBits),
-      listChunk, lit("64617461"), le32(dataSize))
+    val wavHex = concat(lit("52494646"), le32Hex(riffSize), lit("57415645"),
+      lit("666d7420"), lit("10000000"), lit("0100"), le16Hex(wavCh),
+      le32Hex(rate), le32Hex(byteRate), le16Hex(blockAlign), le16Hex(wavBits),
+      listChunk, lit("64617461"), le32Hex(dataSize))
     // FLAC: magic + last|STREAMINFO header + 34-byte block; the
     // rate/channels/bits/samples quad is one bit-packed u64
     val packed = rate * 17592186044416L + (flacCh - 1L) * 2199023255552L +
@@ -3208,15 +3211,6 @@ object ExtensionQueries {
   def qWavPcm(s: SparkSession, dir: String): DataFrame = {
     import graft.multimodal.AudioHeaders
     val d = col("doc_id")
-    def le16h(v: Column): Column = {
-      val h = format_string("%04x", v)
-      concat(substring(h, 3, 2), substring(h, 1, 2))
-    }
-    def le32h(v: Column): Column = {
-      val h = format_string("%08x", v)
-      concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2))
-    }
     val nData = pmod(d, lit(9)) + 16L
     val sampleHex = concat_ws("",
       transform(sequence(lit(0L), nData - 1L), j => {
@@ -3224,13 +3218,13 @@ object ExtensionQueries {
         val sv = when(pmod(d + j, lit(8)) === 0,
           when(pmod(j, lit(2)) === 0, lit(32767L)).otherwise(lit(-32768L)))
           .otherwise(base)
-        le16h(pmod(sv + 65536L, lit(65536L)))
+        le16Hex(pmod(sv + 65536L, lit(65536L)))
       }))
     val dataSize = nData * 2L
-    val wavHex = concat(lit("52494646"), le32h(lit(36L) + dataSize),
+    val wavHex = concat(lit("52494646"), le32Hex(lit(36L) + dataSize),
       lit("57415645"), lit("666d7420"), lit("10000000"), lit("0100"),
-      lit("0100"), le32h(lit(16000L)), le32h(lit(32000L)), lit("0200"),
-      lit("1000"), lit("64617461"), le32h(dataSize), sampleHex)
+      lit("0100"), le32Hex(lit(16000L)), le32Hex(lit(32000L)), lit("0200"),
+      lit("1000"), lit("64617461"), le32Hex(dataSize), sampleHex)
     AudioHeaders.withWavPcm(
         tbl(s, dir, "documents").select(d, unhex(wavHex).as("_p")),
         "_p", "_a", maxSamples = 20)
@@ -3252,11 +3246,6 @@ object ExtensionQueries {
   def qUlawPcm(s: SparkSession, dir: String): DataFrame = {
     import graft.multimodal.AudioHeaders
     val d = col("doc_id")
-    def le32h(v: Column): Column = {
-      val h = format_string("%08x", v)
-      concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2))
-    }
     val nData = pmod(d, lit(7)) + 18L
     val byteHex = concat_ws("",
       transform(sequence(lit(0L), nData - 1L), j => {
@@ -3265,10 +3254,10 @@ object ExtensionQueries {
           .otherwise(pmod(d * 37L + j * 101L, lit(256L)))
         format_string("%02x", b)
       }))
-    val wavHex = concat(lit("52494646"), le32h(lit(36L) + nData),
+    val wavHex = concat(lit("52494646"), le32Hex(lit(36L) + nData),
       lit("57415645"), lit("666d7420"), lit("10000000"), lit("0700"),
-      lit("0100"), le32h(lit(8000L)), le32h(lit(8000L)), lit("0100"),
-      lit("0800"), lit("64617461"), le32h(nData), byteHex)
+      lit("0100"), le32Hex(lit(8000L)), le32Hex(lit(8000L)), lit("0100"),
+      lit("0800"), lit("64617461"), le32Hex(nData), byteHex)
     AudioHeaders.withUlawPcm(
         tbl(s, dir, "documents").select(d, unhex(wavHex).as("_p")),
         "_p", "_a", maxSamples = 20)

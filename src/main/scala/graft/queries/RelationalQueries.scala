@@ -487,8 +487,8 @@ object RelationalQueries {
     * `broadcast` hint so the plan is 4 BroadcastHashJoins regardless of
     * stats freshness (asserted in PlanAssertionsSpec); the hints pin
     * the bench-scale plan — at cluster scale the orders/customer joins
-    * would instead be bucket-co-located (see lake.Bucketing) and only
-    * nation/region stay broadcast.
+    * would instead be bucket-co-located (`bucketBy` + `sortBy` on the
+    * join key at write time) and only nation/region stay broadcast.
     */
   def q36RegionRevenue(s: SparkSession, dir: String): DataFrame =
     tbl(s, dir, "lineitem")

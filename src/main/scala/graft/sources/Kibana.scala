@@ -20,6 +20,9 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * dashboard's field list can never drift from the documents the sink
   * actually writes — and the import client reproduces the same wait /
   * import / report protocol on `java.net.http`.
+  *
+  * Only specs drive this file's provisioning; it stays as the paper's
+  * S11 reproduction (ROADMAP direction 6).
   */
 object KibanaSavedObjects {
 

@@ -37,11 +37,4 @@ class GeoFunctionsSpec extends AnyFunSuite {
     assert(math.abs(ab - ba) / ab < 1e-6)
     assert(ab > 0)
   }
-
-  test("bbox predicate keeps France, drops Madrid") {
-    val df = Seq((48.85, 2.35), (40.41, -3.70)).toDF("lat", "lon")
-    val kept = df.filter(GeoFunctions.inBBox($"lat", $"lon", 41.3, 51.1, -5.1, 9.6))
-      .count()
-    assert(kept == 1)
-  }
 }

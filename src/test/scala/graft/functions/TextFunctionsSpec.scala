@@ -39,22 +39,23 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(one[Int]("a  b", TextFunctions.tokenCount(col("text"))) == 2)
   }
 
+  private val langOf =
+    TextFunctions.langIdFrom(TextFunctions.tokens(lower(col("text"))))
+
   test("language id picks the marked language") {
-    assert(one[String]("the cat and the dog is here",
-      TextFunctions.langId(col("text"))) == "en")
-    assert(one[String]("le chat et la maison est grande",
-      TextFunctions.langId(col("text"))) == "fr")
-    assert(one[String]("der hund und die katze ist hier",
-      TextFunctions.langId(col("text"))) == "de")
-    assert(one[String]("xyzzy plugh qwerty",
-      TextFunctions.langId(col("text"))) == "und")
+    assert(one[String]("the cat and the dog is here", langOf) == "en")
+    assert(one[String]("le chat et la maison est grande", langOf) == "fr")
+    assert(one[String]("der hund und die katze ist hier", langOf) == "de")
+    assert(one[String]("xyzzy plugh qwerty", langOf) == "und")
   }
 
   test("quality score penalizes junk") {
     val clean = "the quick brown fox jumps over the lazy dog and it is fine"
     val shouty = "BUY NOW!!! CLICK HERE!!! FREE $$$ WIN BIG!!!"
-    val qClean = one[Double](clean, TextFunctions.qualityScore(col("text")))
-    val qShout = one[Double](shouty, TextFunctions.qualityScore(col("text")))
+    val score = TextFunctions.qualityScoreFrom(col("text"),
+      TextFunctions.tokens(lower(col("text"))))
+    val qClean = one[Double](clean, score)
+    val qShout = one[Double](shouty, score)
     assert(qClean > qShout)
     assert(qClean >= 0.0 && qClean <= 1.0 && qShout >= 0.0)
   }
@@ -87,9 +88,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(rev != got)
   }
 
-  test("shingles: char 3-grams and word 2-grams") {
-    val ch = one[collection.Seq[String]]("abcd", TextFunctions.charShingles(col("text"), 3))
-    assert(ch.toSet == Set("abc", "bcd"))
+  test("shingles: word 2-grams") {
     val wd = one[collection.Seq[String]]("a b c", TextFunctions.wordShingles(col("text"), 2))
     assert(wd.toSet == Set("a b", "b c"))
   }
@@ -171,7 +170,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     import graft.functions.expressions.TextExpressions._
     val row = spark.range(1).select(
       word_shingles(array(lit("a"), lit("b"), lit("c")), 2).as("ws"),
-      char_shingles(lit("abcd"), 3).as("cs"),
       size(minhash_sig(array(lit("x"), lit("y")), 16)).as("sig_len"),
       simhash64(array(lit("tok"))).as("sh"),
       dot_product(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("dot"),
@@ -180,7 +178,6 @@ class TextFunctionsSpec extends AnyFunSuite {
       unicode_normalize(lit("e\u0301"), "NFC").as("nfc"),
       interleave_bits(lit(3L), lit(5L), 8).as("z")).first()
     assert(row.getAs[collection.Seq[String]]("ws").toSet == Set("a b", "b c"))
-    assert(row.getAs[collection.Seq[String]]("cs").toSet == Set("abc", "bcd"))
     assert(row.getAs[Int]("sig_len") == 16)
     assert(row.getAs[Long]("sh") != 0L)
     assert(row.getAs[Double]("dot") == 11.0)

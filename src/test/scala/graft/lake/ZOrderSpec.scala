@@ -1,15 +1,11 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark
 
-/** Z-order layout must cluster BOTH dimensions: per-file min/max
-  * ranges stay small on each column, where a linear sort only bounds
-  * its leading column.
+/** The Morton interleave kernel behind `ZOrder.assignFixedGrid`
+  * (q118): known codes for small cell coordinates.
   */
 class ZOrderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -23,56 +19,5 @@ class ZOrderSpec extends AnyFunSuite {
     // a bits on even positions, b on odd: (1,0)->1, (0,1)->2, (1,1)->3,
     // (3,5)-> a=11b -> 0b0101; b=101b -> 0b100010 -> 0b100111 = 39
     assert(df.as[Long].collect().toSeq == Seq(0L, 1L, 2L, 3L, 39L))
-  }
-
-  test("quantile_bin kernel: binary-search bin = count of edges <= value") {
-    import graft.functions.expressions.TextExpressions
-    val edges = Seq(10.0, 20.0, 20.0, 30.0)
-    val df = Seq(5.0, 10.0, 15.0, 20.0, 25.0, 30.0, 99.0).toDF("v")
-      .select(TextExpressions.quantile_bin($"v", edges).as("bin"))
-    assert(df.as[Long].collect().toSeq == Seq(0L, 1L, 1L, 3L, 3L, 4L, 4L))
-  }
-
-  test("z-layout plan has no global window or single-partition exchange") {
-    val df = (0 until 1000).map(i => (i % 97, i % 89)).toDF("x", "y")
-    val plan = ZOrder.clusterByZ(df, "x", "y", numFiles = 4)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"rank window leaked into plan:\n$plan")
-    assert(!plan.contains("SinglePartition"), s"single-partition exchange:\n$plan")
-    assert(plan.contains("rangepartitioning".toLowerCase) ||
-      plan.toLowerCase.contains("range"), s"expected range shuffle:\n$plan")
-  }
-
-  test("z-clustered files bound both dimensions; linear sort only one") {
-    val rnd = new scala.util.Random(5)
-    val rows = (0 until 20000).map(_ => (rnd.nextInt(10000), rnd.nextInt(10000)))
-    val df = rows.toDF("x", "y")
-    val base = Files.createTempDirectory("graft-zorder").toString
-
-    ZOrder.clusterByZ(df, "x", "y", numFiles = 16)
-      .write.parquet(s"$base/bz")
-    df.repartitionByRange(16, $"x").sortWithinPartitions("x")
-      .write.parquet(s"$base/bx")
-
-    def avgRangePerFile(path: String, c: String): Double = {
-      val perFile = spark.read.parquet(path)
-        .groupBy(input_file_name())
-        .agg((max(col(c)) - min(col(c))).cast("double").as("r"))
-        .select(avg($"r")).as[Double].first()
-      perFile
-    }
-
-    val global = 10000.0
-    val zx = avgRangePerFile(s"$base/bz", "x")
-    val zy = avgRangePerFile(s"$base/bz", "y")
-    val lx = avgRangePerFile(s"$base/bx", "x")
-    val ly = avgRangePerFile(s"$base/bx", "y")
-
-    // z-order: both dims bounded well below the global range
-    assert(zx < global * 0.55, s"z x-range $zx")
-    assert(zy < global * 0.55, s"z y-range $zy")
-    // linear: leading column tightly bounded, trailing column unbounded
-    assert(lx < global * 0.15, s"linear x-range $lx")
-    assert(ly > global * 0.8, s"linear y-range $ly")
   }
 }

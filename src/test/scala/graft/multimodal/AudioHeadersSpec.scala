@@ -63,9 +63,9 @@ class AudioHeadersSpec extends AnyFunSuite {
   }
 
   private def parse(payloads: Seq[Array[Byte]]): Seq[Row] =
-    payloads.zipWithIndex.map { case (p, i) => (i, p) }
-      .toDF("id", "payload")
-      .select(col("id"), AudioHeaders.parseAudio(col("payload")).as("a"))
+    AudioHeaders.withAudio(
+        payloads.zipWithIndex.map { case (p, i) => (i, p) }.toDF("id", "payload"),
+        "payload", "a")
       .orderBy("id")
       .select("a.container", "a.sample_rate", "a.channels",
         "a.bits_per_sample", "a.n_samples", "a.duration_s")

@@ -98,31 +98,4 @@ class MultimodalSpec extends AnyFunSuite {
     assert(plan.contains("MapPartitions"), plan)
     assert(!plan.contains("Scan ExistingRDD"), s"df.rdd round-trip severs lineage:\n$plan")
   }
-
-  test("sampleFrames explodes ~1 row per KiB step") {
-    val frames = Multimodal.sampleFrames(mediaDf.filter(col("media_id") === 4L),
-      "media", everyNth = 2)
-    // 8192 bytes → 8 KiB → frame indices 0,2,4,6
-    assert(frames.select("frame_index").as[Int].collect().sorted.toSeq ==
-      Seq(0, 2, 4, 6))
-  }
-
-  test("resizeStub: payload at target size, metadata and checksum recomputed") {
-    val out = Multimodal.resizeStub(mediaDf, "media", width = 8, height = 8)
-    assert(out.schema("media").dataType == Multimodal.mediaSchema)
-    val rows = out.select("media.n_bytes", "media.checksum").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    assert(rows.forall(_._1 == 64L)) // every payload resized to 8×8 bytes
-    // checksum is recomputed over the RESIZED payload, so equal resized
-    // payloads collapse to equal checksums
-    assert(rows.map(_._2).distinct.length <= rows.length)
-    val orig = mediaDf.select("media.checksum").collect().map(_.getString(0))
-    assert(!rows.map(_._2).sameElements(orig))
-  }
-
-  test("repartitionBySize yields the requested partitioning") {
-    val rep = Multimodal.repartitionBySize(mediaDf, "media", 3)
-    assert(rep.rdd.getNumPartitions == 3)
-    assert(rep.count() == 4)
-  }
 }

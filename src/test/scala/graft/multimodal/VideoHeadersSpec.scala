@@ -39,8 +39,7 @@ class VideoHeadersSpec extends AnyFunSuite {
   private def trak: Array[Byte] = box("trak", Array.fill[Byte](8)(0))
 
   private def parse(payload: Array[Byte]): Row =
-    Seq(Tuple1(payload)).toDF("p")
-      .select(VideoHeaders.parseMp4(col("p")).as("v"))
+    VideoHeaders.withMp4(Seq(Tuple1(payload)).toDF("p"), "p", "v")
       .select(col("v.*")).collect()(0)
 
   test("v0 mvhd: brand, timescale, 32-bit duration, 2 traks") {
@@ -82,8 +81,8 @@ class VideoHeadersSpec extends AnyFunSuite {
     val twoPads = ftyp("isom") ++ free ++ free ++
       box("moov", mvhdV0(1, 2, 600, 600))
     for (p <- Seq(junk, noMvhd, twoPads)) {
-      val isNull = Seq(Tuple1(p)).toDF("p")
-        .select(VideoHeaders.parseMp4(col("p")).isNull.as("n"))
+      val isNull = VideoHeaders.withMp4(Seq(Tuple1(p)).toDF("p"), "p", "v")
+        .select(col("v").isNull.as("n"))
         .collect()(0).getBoolean(0)
       assert(isNull, s"expected null for ${p.length}-byte payload")
     }

@@ -49,37 +49,6 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.exists(p => p._1 == 4L && p._2 == 6L && p._3 <= 16))
   }
 
-  test("char n-gram jaccard pairs with length blocking") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 4, threshold = 0.7)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(pairs.contains((1L, 3L)))
-    assert(!pairs.contains((1L, 4L)))
-  }
-
-  test("log-band blocking keeps long docs whose length gap spans fixed bands") {
-    // ~360-char doc of UNIQUE words + a 36-char suffix: 4-gram Jaccard
-    // ≈ 0.9 ≥ 0.7, but the length gap (36) spans 2+ fixed-16 bands —
-    // the log-scale bands must still co-locate the pair
-    val longBase = (0 until 60).map(i => f"tok$i%02d").mkString(" ")
-    val longer = longBase + " " + (0 until 6).map(i => f"zax$i%02d").mkString(" ")
-    val df = Seq((1L, longBase), (2L, longer)).toDF("doc_id", "text")
-    val pairs = Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 4, threshold = 0.7)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
-  }
-
-  test("distinct-shingle banding pairs repeated-content docs of very different lengths") {
-    // "abab"×50 vs "abab"×4: distinct 4-gram sets are near-identical
-    // (Jaccard 1.0) but raw lengths 200 vs 16 sit many log-bands apart —
-    // banding on the DISTINCT-shingle count must still co-locate them.
-    val df = Seq((1L, "abab" * 50), (2L, "abab" * 4)).toDF("doc_id", "text")
-    val pairs = Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 4, threshold = 0.7)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
-  }
-
   test("near-dup operators release their internal caches (≤1 materialized result each)") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size

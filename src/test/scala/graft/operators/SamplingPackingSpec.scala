@@ -28,16 +28,6 @@ class SamplingPackingSpec extends AnyFunSuite {
     assert(sub.except(split.filter($"id" < 100)).isEmpty)
   }
 
-  test("different salts decorrelate draws") {
-    val ids = (0L until 2000L).toDF("id")
-    val a = Sampling.deterministicSample(ids, "id", 0.5, "salt_a")
-      .as[Long].collect().toSet
-    val b = Sampling.deterministicSample(ids, "id", 0.5, "salt_b")
-      .as[Long].collect().toSet
-    val overlap = a.intersect(b).size.toDouble / math.max(a.size, 1)
-    assert(overlap > 0.35 && overlap < 0.65, s"overlap=$overlap")
-  }
-
   test("stratified sample downsamples only the targeted strata") {
     val df = (0L until 3000L).map(i => (i, if (i % 3 == 0) "en" else "fr"))
       .toDF("id", "lang")

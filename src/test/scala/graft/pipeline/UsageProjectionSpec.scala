@@ -104,4 +104,17 @@ class UsageProjectionSpec extends AnyFunSuite {
     assert(latest.count() == 2)
     assert(latest.filter($"icao24" === "abc123").first().getAs[Int]("gen") == 2)
   }
+
+  test("latest-per-aircraft breaks extracted_at ties on the newest non-null observation_time") {
+    val docs = Seq(
+      ("abc123", "2026-02-26T16:01:00", Option("2026-02-26T16:00:30"), 1),
+      ("abc123", "2026-02-26T16:01:00", Option("2026-02-26T16:00:50"), 2),
+      ("abc123", "2026-02-26T16:01:00", Option.empty[String], 3),
+      ("def456", "2026-02-26T16:01:00", Option.empty[String], 4),
+      ("def456", "2026-02-26T16:01:00", Option("2026-02-26T16:00:10"), 5)
+    ).toDF("icao24", "extracted_at", "observation_time", "gen")
+    val latest = UsageProjection.latestPerAircraft(docs)
+      .select("icao24", "gen").as[(String, Int)].collect().toMap
+    assert(latest == Map("abc123" -> 2, "def456" -> 5))
+  }
 }
