@@ -14,9 +14,9 @@ import org.apache.spark.sql.DataFrame
   * own tag, never its source table's, so first-caller-wins can never
   * hand one frame another frame's count). The first call per JVM per
   * key counts once; every later call — across queries sharing the
-  * frame and across bench reps — reads the memo. Mutable-source
-  * callers must [[invalidate]] on write, exactly like a catalog
-  * stats refresh.
+  * frame and across bench reps — reads the memo. Entries are never
+  * dropped, so a key must never name a frame whose rows can change
+  * within the JVM.
   */
 object CorpusStats {
 
@@ -37,9 +37,4 @@ object CorpusStats {
       (if (prev != null) prev else n).longValue()
     }
   }
-
-  /** Drop a memoized count (the catalog-stats-refresh hook for callers
-    * whose source can change between reads).
-    */
-  def invalidate(key: String): Unit = cache.remove(key)
 }

@@ -131,20 +131,11 @@ object TextFunctions {
     when(best.getField("score") > 0, best.getField("lang")).otherwise("und")
   }
 
-  /** 64-bit polynomial rolling-hash fingerprint of the token sequence
-    * (order-sensitive document fingerprint). fp = Σ tokHash·31^i via a
-    * left fold — stable across runs and partitionings.
-    */
-  def fingerprintFrom(toks: Column): Column =
-    graft.functions.expressions.TextExpressions.rolling_fingerprint(toks)
-
-  def fingerprint(text: Column): Column = fingerprintFrom(tokens(text))
-
-  /** Oracle-checkable variant of [[fingerprintFrom]]: same rolling
-    * fold, but the per-token hash is md5-derived (DuckDB's
-    * `md5_number_lower`) so any engine with md5 reproduces it
-    * bit-exactly — use when the fingerprint must be verified
-    * cross-engine rather than merely stable.
+  /** 64-bit rolling-hash fingerprint of the token sequence (an
+    * order-sensitive document fingerprint): a left fold over the
+    * tokens whose per-token hash is md5-derived (DuckDB's
+    * `md5_number_lower`), so it is stable across runs and
+    * partitionings and any engine with md5 reproduces it bit-exactly.
     */
   def portableFingerprintFrom(toks: Column): Column =
     graft.functions.expressions.TextExpressions.portable_fingerprint(toks)

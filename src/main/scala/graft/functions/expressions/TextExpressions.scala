@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,8 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * second rung.)
   */
 object TextExpressions {
-
-  private val SeedXxhash = 42L
 
   /** Whether `a` has no null element. */
   private def noNulls(a: ArrayData): Boolean = {
@@ -71,73 +68,6 @@ object TextExpressions {
         i += 1
       }
       new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** MinHash signature over a shingle array: same hash family as the
-    * column-algebra form (xxhash64 seed 42 → mod P → affine per
-    * permutation), all in one compiled pass. Empty input → all-P
-    * sentinel signature.
-    */
-  case class MinHashSigExpr(child: Expression, numHashes: Int, seed: Long)
-      extends UnaryExpression with CodegenFallback {
-    private val P = 4294967311L
-    private lazy val params: Array[(Long, Long)] = {
-      val rnd = new scala.util.Random(seed)
-      Array.fill(numHashes)((math.abs(rnd.nextLong()) % (P - 1) + 1,
-        math.abs(rnd.nextLong()) % P))
-    }
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val mins = Array.fill(numHashes)(P)
-      var i = 0
-      val m = arr.numElements()
-      while (i < m) {
-        val s = arr.getUTF8String(i)
-        val h = XXH64.hashUTF8String(s, SeedXxhash)
-        val base = ((h % P) + P) % P
-        var k = 0
-        while (k < numHashes) {
-          val (a, b) = params(k)
-          val v = ((base * a + b) % P + P) % P
-          if (v < mins(k)) mins(k) = v
-          k += 1
-        }
-        i += 1
-      }
-      new GenericArrayData(mins)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** 64-bit SimHash of a token array (xxhash64 bit votes). */
-  case class SimHash64Expr(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val votes = new Array[Int](64)
-      var i = 0
-      val m = arr.numElements()
-      while (i < m) {
-        val s = arr.getUTF8String(i)
-        val h = XXH64.hashUTF8String(s, SeedXxhash)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-        i += 1
-      }
-      var sig = 0L
-      var b = 0
-      while (b < 64) {
-        if (votes(b) > 0) sig |= (1L << b)
-        b += 1
-      }
-      java.lang.Long.valueOf(sig)
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
@@ -231,37 +161,12 @@ object TextExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Order-sensitive rolling-hash fingerprint of a token array:
-    * fold(acc * P + xxhash64(tok)) with FNV offset/prime constants —
-    * bit-identical to the `aggregate` higher-order-function form it
-    * replaces (xxhash64 seed 42, Long overflow wrap).
-    */
-  case class RollingFingerprintExpr(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    private val Offset = 1469598103934665603L
-    private val Prime = 1099511628211L
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      var acc = Offset
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        acc = acc * Prime + XXH64.hashUTF8String(arr.getUTF8String(i), SeedXxhash)
-        i += 1
-      }
-      java.lang.Long.valueOf(acc)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** Cross-engine rolling fingerprint: the same FNV-style fold as
-    * [[RollingFingerprintExpr]] (acc = acc·P + h(tok) in wrapping
-    * 64-bit arithmetic) but with h(tok) = the little-endian uint64 of
-    * md5(tok) bytes 8..15 — exactly DuckDB's `md5_number_lower` — so
-    * an exact SQL oracle exists as a HUGEINT mod-2⁶⁴ `list_reduce`
-    * (two's-complement wrap ≡ unsigned mod 2⁶⁴). The xxhash variant
-    * stays the fast path; this one is the oracle-checkable path.
+  /** Order-sensitive rolling fingerprint of a token array: the
+    * FNV-style fold acc = acc·P + h(tok) from the FNV offset, in
+    * wrapping 64-bit arithmetic, with h(tok) = the little-endian
+    * uint64 of md5(tok) bytes 8..15 — exactly DuckDB's
+    * `md5_number_lower` — so an exact SQL oracle exists as a HUGEINT
+    * mod-2⁶⁴ `list_reduce` (two's-complement wrap ≡ unsigned mod 2⁶⁴).
     */
   case class PortableFingerprintExpr(child: Expression)
       extends UnaryExpression with CodegenFallback {
@@ -740,9 +645,6 @@ object TextExpressions {
 
   def word_shingles(toks: Column, n: Int): Column =
     toCol(WordShinglesExpr(expr(toks), n))
-  def minhash_sig(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    toCol(MinHashSigExpr(expr(shingles), numHashes, seed))
-  def simhash64(toks: Column): Column = toCol(SimHash64Expr(expr(toks)))
   def dot_product(a: Column, b: Column): Column =
     toCol(DotProductExpr(expr(a), expr(b)))
   def cosine_sim(a: Column, b: Column): Column =
@@ -762,8 +664,6 @@ object TextExpressions {
     toCol(LcsLengthExpr(expr(cand), expr(ref)))
   def word_set_count(toks: Column, words: Seq[String]): Column =
     toCol(WordSetCountExpr(expr(toks), words))
-  def rolling_fingerprint(toks: Column): Column =
-    toCol(RollingFingerprintExpr(expr(toks)))
   def portable_fingerprint(toks: Column): Column =
     toCol(PortableFingerprintExpr(expr(toks)))
   def portable_simhash60(toks: Column): Column =

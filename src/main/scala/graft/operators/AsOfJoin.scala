@@ -5,17 +5,16 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** As-of joins: attach to every left row the single nearest right row
-  * with the same key — the most recent at-or-before (`backward`) or
-  * the earliest at-or-after (`forward`) by timestamp. The classic
+/** As-of join: attach to every left row the most recent right row
+  * with the same key at or before its timestamp. The classic
   * time-series enrichment operator (trades→quotes, events→state) that
   * Spark has no native relational operator for.
   *
   * Implementation is a tagged union + one window pass, not a range
   * join: both sides are unioned on an aligned schema, shuffled ONCE by
   * the key, sorted by (ts, side, tie-break), and the right payload is
-  * propagated with `last`/`first(ignoreNulls = true)` over a one-sided
-  * row frame. Left rows then read the nearest payload directly.
+  * propagated with `last(ignoreNulls = true)` over a preceding-rows
+  * frame. Left rows then read the nearest payload directly.
   *
   * Scale notes (100 TB): cost is a single hash-partition shuffle of
   * |L| + |R| rows plus a per-partition sort — the same shape as a
@@ -24,9 +23,9 @@ import org.apache.spark.sql.types.StructType
   * upstream with [[SkewTools]]; AQE handles moderate skew.
   *
   * Determinism: ties on `rightTs` are pinned by `tieBreakCol` (kept in
-  * its native type — casting it would null out string ids). Backward
-  * picks the LAST entry under the frame (max tie-break at the winning
-  * timestamp); forward picks the FIRST (min tie-break).
+  * its native type — casting it would null out string ids): the LAST
+  * entry under the frame wins (max tie-break at the winning
+  * timestamp).
   */
 object AsOfJoin {
 
@@ -50,39 +49,7 @@ object AsOfJoin {
       tieBreakCol: String,
       matchedTsCol: String = "matched_ts",
       strict: Boolean = false,
-      tolerance: Option[Long] = None): DataFrame =
-    joinImpl(left, right, keys, leftTs, rightTs, rightPayload, tieBreakCol,
-      matchedTsCol, strict, tolerance, backwardDirection = true)
-
-  /** Earliest right row with `rightTs >= leftTs` (`strict` ⇒ `>`).
-    * Mirror image of [[backward]] — same single shuffle.
-    */
-  def forward(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      rightPayload: Seq[String],
-      tieBreakCol: String,
-      matchedTsCol: String = "matched_ts",
-      strict: Boolean = false,
-      tolerance: Option[Long] = None): DataFrame =
-    joinImpl(left, right, keys, leftTs, rightTs, rightPayload, tieBreakCol,
-      matchedTsCol, strict, tolerance, backwardDirection = false)
-
-  private def joinImpl(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      rightPayload: Seq[String],
-      tieBreakCol: String,
-      matchedTsCol: String,
-      strict: Boolean,
-      tolerance: Option[Long],
-      backwardDirection: Boolean): DataFrame = {
+      tolerance: Option[Long] = None): DataFrame = {
 
     val payloadStruct = struct(
       (rightPayload.map(col) :+ col(rightTs).as(matchedTsCol)): _*)
@@ -91,13 +58,10 @@ object AsOfJoin {
     val lrowType = left.select(lrowStruct.as("_l")).schema("_l").dataType
     val tieType = right.schema(tieBreakCol).dataType
 
-    // Equal-ts right rows must sort on the frame side of the left row
-    // for inclusive semantics (so the frame sees them) and on the
-    // opposite side for strict (so it cannot). Backward frames look at
-    // preceding rows; forward frames at following rows.
-    val rightSide =
-      if (backwardDirection) { if (strict) 2 else 0 }
-      else { if (strict) 0 else 2 }
+    // Equal-ts right rows sort before the left row for inclusive
+    // semantics (so the preceding-rows frame sees them) and after it
+    // for strict (so it cannot).
+    val rightSide = if (strict) 2 else 0
 
     val taggedRight = right.select(
       keys.map(col) ++ Seq(
@@ -114,29 +78,18 @@ object AsOfJoin {
         lit(null).cast(payloadType).as("_p"),
         lrowStruct.as("_l")): _*)
 
-    val byKey = Window.partitionBy(keys.map(col): _*)
-    val w: WindowSpec =
-      if (backwardDirection)
-        byKey.orderBy(col("_ts").asc, col("_side").asc, col("_tb").asc_nulls_last)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      else
-        byKey.orderBy(col("_ts").asc, col("_side").asc, col("_tb").asc_nulls_first)
-          .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val picker =
-      if (backwardDirection) last(col("_p"), ignoreNulls = true)
-      else first(col("_p"), ignoreNulls = true)
+    val w: WindowSpec = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("_ts").asc, col("_side").asc, col("_tb").asc_nulls_last)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     val matched = taggedRight.unionByName(taggedLeft)
-      .withColumn("_m", picker.over(w))
+      .withColumn("_m", last(col("_p"), ignoreNulls = true).over(w))
       .filter(col("_side") === 1)
 
     val withinTol: Column = tolerance match {
       case Some(secs) =>
         val gapMicros =
-          if (backwardDirection)
-            unix_micros(col("_ts")) - unix_micros(col("_m")(matchedTsCol))
-          else
-            unix_micros(col("_m")(matchedTsCol)) - unix_micros(col("_ts"))
+          unix_micros(col("_ts")) - unix_micros(col("_m")(matchedTsCol))
         when(col("_m").isNotNull && gapMicros <= secs * 1000000L, col("_m"))
       case None => col("_m")
     }

@@ -1,19 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for LLM-scale corpora (SURVEY.md §7.5):
-  * exact, MinHash+LSH, SimHash, exact Jaccard, embedding-cosine.
+  * exact hashing, exact Jaccard and containment via inverted indexes,
+  * the exhaustive MinHash/embedding verify twins, duplicate clustering
+  * and edit-distance verify.
   *
-  * Scale design: every near-dup variant is
-  * shingle/sign → bucket → *bucket-equi-join* → verify — the candidate
-  * join always shuffles on a bucket key (never a cross join), so the
-  * plan survives a 100× scale-up; bucket skew is handled by AQE skew
-  * join. All hashing is seeded/constant → runs are deterministic.
+  * The banded near-dup families — MinHash-LSH, SimHash and embedding
+  * sign-LSH — each have one implementation, the md5-based one in
+  * [[PortableMinHash]], [[PortableSimHash]] and [[PortableSignLsh]]:
+  * its output can be hash-checked against an external SQL oracle.
+  * They share this object's verify and cache-release stages.
+  *
+  * Scale design: every indexed variant joins on an element or bucket
+  * key (never a cross join outside the exhaustive twins), so the plan
+  * survives a 100× scale-up; key skew is handled by AQE skew join. All
+  * hashing is constant → runs are deterministic.
   */
 object Dedup {
 
@@ -49,67 +56,9 @@ object Dedup {
         :+ col("n_candidates"): _*)
   }
 
-  // ── MinHash + LSH ───────────────────────────────────────────────────
-
-  /** MinHash signature (array<long> of length `numHashes`) over a
-    * shingle array: min over shingles of (a·x + b) mod P per hash,
-    * x = xxhash64(shingle) mod P — one compiled pass
-    * (TextExpressions.MinHashSigExpr). Empty shingle set → all-`P`
-    * sentinel (never collides with a real signature).
-    */
-  def minHashSignature(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    graft.functions.expressions.TextExpressions.minhash_sig(shingles, numHashes, seed)
-
-  /** Banded LSH candidate pairs + exact-Jaccard verification.
-    *
-    * @param threshold minimum true Jaccard over `shingleWords`-gram sets
-    * @return (id_a, id_b, jaccard_sim) with id_a < id_b, one row per pair
-    */
-  def minHashNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleWords: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val prepared = prepareShingles(df, idCol, textCol, shingleWords)
-      .withColumn("sig", minHashSignature(col("shingles"), numHashes))
-      // consumed 4x (band self-join both sides + two shingle lookups):
-      // persist or the shingling kernel runs four times
-      .persist()
-
-    // one row per (doc, band): band key = hash of the signature slice.
-    // Only (ids, band key) travel through the candidate shuffle — the
-    // shingle arrays are re-attached AFTER pair dedup, so the band
-    // join and the distinct operate on narrow rows.
-    val banded = prepared.select(
-      col("doc_id"),
-      explode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band_idx"),
-            xxhash64(slice(col("sig"), b * rows + lit(1), lit(rows))).as("band_hash")))
-      ).as("band"))
-      .select(col("doc_id"),
-        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
-
-    val candidates = banded.select(col("band_idx"), col("band_hash"),
-        col("doc_id").as("id_a"))
-      .join(banded.select(col("band_idx"), col("band_hash"),
-        col("doc_id").as("id_b")), Seq("band_idx", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // same pair can collide in many bands
-
-    materializeAndRelease(verifyJaccard(candidates, prepared, threshold), prepared)
-  }
-
-  /** The MinHash pipeline's shingle preparation, shared verbatim by the
-    * LSH path and the exhaustive verify path: tokens are materialized
-    * before shingling (lambda-capture contract in TextFunctions: an
-    * inline tokenizer would re-run per shingle).
+  /** The exhaustive MinHash verify's shingle preparation: tokens are
+    * materialized before shingling (lambda-capture contract in
+    * TextFunctions: an inline tokenizer would re-run per shingle).
     */
   private def prepareShingles(
       df: DataFrame, idCol: String, textCol: String, shingleWords: Int): DataFrame =
@@ -118,9 +67,8 @@ object Dedup {
       .withColumn("shingles", wordShinglesFromTokens(col("_toks"), shingleWords))
       .drop("_toks")
 
-  /** The MinHash pipeline's verify stage, shared verbatim by the LSH
-    * path and the exhaustive path: attach shingle sets to candidate id
-    * pairs, exact-Jaccard filter.
+  /** The exhaustive MinHash verify stage: attach shingle sets to
+    * candidate id pairs, exact-Jaccard filter.
     */
   private def verifyJaccard(
       candidates: DataFrame, shingled: DataFrame, threshold: Double): DataFrame = {
@@ -135,11 +83,11 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard_sim"), 6).as("jaccard_sim"))
   }
 
-  /** [[minHashNearDupPairs]] with LSH blocking DISABLED: every id pair
-    * is a candidate, then the SAME shingle-prep and exact-Jaccard
-    * verify stages run. Quadratic by construction — exists so the
-    * verify machinery can be proven exact against an exhaustive SQL
-    * oracle on a bounded corpus; the banded path is the scale path.
+  /** MinHash near-dup with LSH blocking DISABLED: every id pair is a
+    * candidate, then the shingle-prep and exact-Jaccard verify stages
+    * run. Quadratic by construction — exists so the verify machinery
+    * can be proven exact against an exhaustive SQL oracle on a bounded
+    * corpus; [[PortableMinHash.nearDupPairs]] is the scale path.
     */
   def minHashVerifyExhaustive(
       df: DataFrame,
@@ -161,70 +109,11 @@ object Dedup {
     * The pair list a near-dup operator returns is orders of magnitude
     * smaller than its inputs, so the checkpoint is cheap even at scale.
     */
-  private def materializeAndRelease(result: DataFrame, cached: DataFrame*): DataFrame = {
+  private[operators] def materializeAndRelease(result: DataFrame, cached: DataFrame*): DataFrame = {
     val out = result.localCheckpoint(true)
     cached.foreach(_.unpersist())
     out
   }
-
-  // ── SimHash ─────────────────────────────────────────────────────────
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hammingDist(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs: signature → `bands` chunks of 64/bands
-    * bits as join keys → verify by Hamming distance ≤ maxHamming.
-    *
-    * Exact-band blocking is LOSSLESS only under the pigeonhole bound
-    * `maxHamming < bands`: a pair differing in ≤ maxHamming bits then
-    * has at least one untouched band. The guard enforces it — with it,
-    * every pair passing the Hamming verify is guaranteed to surface.
-    * Defaults are the canonical 64-bit SimHash setting (hamming ≤ 3,
-    * 4 × 16-bit bands): lossless AND selective — narrower bands (more
-    * of them) admit quadratic candidate volume as band keys shrink.
-    */
-  def simHashNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      bands: Int = 4,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < bands,
-      s"pigeonhole: need maxHamming < bands for lossless blocking " +
-        s"(got bands=$bands, maxHamming=$maxHamming)")
-    val bitsPerBand = 64 / bands
-    val prepared = df.select(col(idCol).as("doc_id"),
-      tokens(lower(col(textCol))).as("_toks"))
-      .select(col("doc_id"), simHash64(col("_toks")).as("sig"))
-
-    val banded = prepared.select(col("doc_id"), col("sig"),
-      explode(array((0 until bands).map { j =>
-        struct(lit(j).as("band_idx"),
-          shiftright(col("sig"), j * bitsPerBand)
-            .bitwiseAND(lit((1L << bitsPerBand) - 1)).as("band_key"))
-      }: _*)).as("band"))
-      .select(col("doc_id"), col("sig"),
-        col("band.band_idx").as("band_idx"), col("band.band_key").as("band_key"))
-
-    val left = banded.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val right = banded.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("id_b"), col("sig").as("sig_b"))
-
-    left.join(right, Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", hammingDist(col("sig_a"), col("sig_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** 64-bit SimHash of a token array (xxhash64 bit votes) — compiled
-    * kernel (TextExpressions.SimHash64Expr).
-    */
-  def simHash64(tokensCol: Column): Column =
-    graft.functions.expressions.TextExpressions.simhash64(tokensCol)
 
   /** EXACT Jaccard ≥ t pairs via an inverted index — the scale path
     * for exact set-similarity self-join, replacing the O(n²) cross
@@ -362,81 +251,41 @@ object Dedup {
 
   // ── Embedding cosine near-dup ───────────────────────────────────────
 
-  /** Deterministic random hyperplanes for sign-LSH. */
-  def randomPlanes(numPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Embedding near-dup: sign-LSH bucket join + exact cosine verify.
-    * Multi-probe: each vector lands in its bucket and all 1-bit-flip
-    * neighbors, trading bandwidth for recall.
+  /** The embedding pipeline's verify stage, shared verbatim by
+    * [[PortableSignLsh.nearDupPairs]] and the exhaustive path:
+    * re-attach vectors to candidate id pairs (`prepared` carries
+    * `vec_id` and `vec`), exact-cosine filter.
     */
-  def embeddingNearDupPairs(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double = 0.95,
-      numPlanes: Int = 12,
-      seed: Long = 42L): DataFrame = {
-    val planes = randomPlanes(numPlanes, dim, seed)
-    // consumed three times (bucket explode + two vector re-attach
-    // joins) — persist or the projection kernel runs three times; the
-    // cache is released before returning (materializeAndRelease).
-    val prepared = df.select(col(idCol).as("vec_id_"), col(vecCol).as("vec"))
-      .withColumn("bucket0", VectorFunctions.lshBucket(col("vec"), planes))
-      .persist()
-    // probe buckets: own + 1-bit flips. Only (id, bucket) rows are
-    // replicated — vectors are re-attached after pair dedup.
-    val probes = explode(array(
-      (col("bucket0") +: (0 until numPlanes).map(i =>
-        col("bucket0").bitwiseXOR(lit(1L << i)))): _*)).as("bucket")
-    val blocked = prepared.select(col("vec_id_"), probes)
-
-    val candidates = blocked.select(col("bucket"), col("vec_id_").as("id_a"))
-      .join(blocked.select(col("bucket"), col("vec_id_").as("id_b")), Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-
-    materializeAndRelease(verifyCosine(candidates, prepared, threshold), prepared)
-  }
-
-  /** The embedding pipeline's verify stage, shared verbatim by the
-    * sign-LSH path and the exhaustive path: re-attach vectors to
-    * candidate id pairs, exact-cosine filter.
-    */
-  private def verifyCosine(
+  private[operators] def verifyCosine(
       candidates: DataFrame, prepared: DataFrame, threshold: Double): DataFrame = {
-    val vecLookup = prepared.select(col("vec_id_"), col("vec"))
+    val vecLookup = prepared.select(col("vec_id"), col("vec"))
     candidates
-      .join(vecLookup.select(col("vec_id_").as("id_a"), col("vec").as("vec_a")),
+      .join(vecLookup.select(col("vec_id").as("id_a"), col("vec").as("vec_a")),
         Seq("id_a"))
-      .join(vecLookup.select(col("vec_id_").as("id_b"), col("vec").as("vec_b")),
+      .join(vecLookup.select(col("vec_id").as("id_b"), col("vec").as("vec_b")),
         Seq("id_b"))
       .withColumn("cosine_sim", VectorFunctions.cosine(col("vec_a"), col("vec_b")))
       .filter(col("cosine_sim") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cosine_sim"), 6).as("cosine_sim"))
   }
 
-  /** [[embeddingNearDupPairs]] with LSH blocking DISABLED: every id
-    * pair is a candidate, then the SAME exact-cosine verify runs —
-    * quadratic by construction, exists so the verify machinery can be
-    * proven exact against an exhaustive SQL oracle on a bounded vector
-    * set (the q64-for-embeddings pattern); the bucketed path is the
-    * scale path.
+  /** [[PortableSignLsh.nearDupPairs]] with LSH blocking DISABLED:
+    * every id pair is a candidate, then the SAME exact-cosine verify
+    * runs — quadratic by construction, exists so the verify machinery
+    * can be proven exact against an exhaustive SQL oracle on a bounded
+    * vector set (the q64-for-embeddings pattern); the bucketed path is
+    * the scale path.
     */
   def embeddingVerifyExhaustive(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double): DataFrame = {
-    val prepared = df.select(col(idCol).as("vec_id_"), col(vecCol).as("vec"))
+    val prepared = df.select(col(idCol).as("vec_id"), col(vecCol).as("vec"))
       .persist()
-    val ids = prepared.select(col("vec_id_"))
-    val candidates = ids.select(col("vec_id_").as("id_a"))
-      .crossJoin(ids.select(col("vec_id_").as("id_b")))
+    val ids = prepared.select(col("vec_id"))
+    val candidates = ids.select(col("vec_id").as("id_a"))
+      .crossJoin(ids.select(col("vec_id").as("id_b")))
       .filter(col("id_a") < col("id_b"))
     materializeAndRelease(verifyCosine(candidates, prepared, threshold), prepared)
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -9,10 +9,9 @@ import graft.functions.TextFunctions
   * the standard one-base-hash affine family, bit-identical in every
   * engine — so the banded operator itself (not just its exhaustive
   * verify stage) can be hash-checked against an external SQL oracle.
-  * This is the [[PortableSimHash]] recipe applied to MinHash; the
-  * engine's fast path ([[Dedup.minHashNearDupPairs]], xxhash +
-  * affine-permutation compiled kernel) keeps the same shape and
-  * remains the non-portable variant.
+  * This is the [[PortableSimHash]] recipe applied to MinHash, and the
+  * family's one banded implementation;
+  * [[Dedup.minHashVerifyExhaustive]] is its unblocked twin.
   *
   * Unlike SimHash banding (lossless by pigeonhole), MinHash banding is
   * probabilistic: a qualifying pair is emitted only if it ALSO collides
@@ -36,9 +35,9 @@ import graft.functions.TextFunctions
   *   - output: (id_a < id_b) pairs that share ≥ 1 band key AND have
   *     exact token-set Jaccard ≥ threshold, jaccard rounded to 6 dp
   *
-  * Scale shape: identical to the fast path — one pass computes
-  * (doc_id, sig) at ONE md5 per shingle (the affine family replaced
-  * the md5-per-(j,shingle) hex-string mins that cost 12 s at sf0.1);
+  * Scale shape: one pass computes (doc_id, sig) at ONE md5 per
+  * shingle (the affine family replaced the md5-per-(j,shingle)
+  * hex-string mins that cost 12 s at sf0.1);
   * the candidate shuffle carries only (band, key, id) rows; token sets
   * are re-attached only to the deduped candidate pairs for the exact
   * verify. Nothing quadratic.
@@ -110,9 +109,7 @@ object PortableMinHash {
       .select(col("id_a"), col("id_b"),
         round(col("jaccard_sim"), 6).as("jaccard_sim"))
 
-    val out = verified.localCheckpoint(true)
-    sigs.unpersist()
-    out
+    Dedup.materializeAndRelease(verified, sigs)
   }
 
   /** LSH band-plan calibration — choose (bands, rows) BEFORE running
@@ -324,9 +321,7 @@ object PortableMinHash {
         round(col("jaccard_sim"), 6).as("jaccard_sim"))
       .crossJoin(broadcast(commit))
 
-    val out = verified.localCheckpoint(true)
-    sigs.unpersist()
-    out
+    Dedup.materializeAndRelease(verified, sigs)
   }
 
   /** 1 − (1 − s^r)^b as the pinned left-fold double chain (s^r and
@@ -408,8 +403,6 @@ object PortableMinHash {
         when(col("_new_a") && col("_new_b"), "batch_internal")
           .otherwise("batch_vs_base").as("pair_kind"))
 
-    val out = verified.localCheckpoint(true)
-    sigs.unpersist()
-    out
+    Dedup.materializeAndRelease(verified, sigs)
   }
 }

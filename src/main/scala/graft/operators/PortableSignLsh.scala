@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -11,8 +11,9 @@ import graft.functions.VectorFunctions
   * operator itself — multi-probe blocking decisions included — can be
   * hash-checked against an external SQL oracle. This is the
   * [[PortableSimHash]]/[[PortableMinHash]] recipe applied to the
-  * embedding family; [[Dedup.embeddingNearDupPairs]] (Gaussian planes)
-  * stays the tunable scale variant with identical plan shape.
+  * embedding family, and the family's one bucketed implementation;
+  * [[Dedup.embeddingVerifyExhaustive]] is its unblocked twin and
+  * shares its verify stage.
   *
   * Exactness argument, piece by piece:
   *   - plane weight w(h,d) = +1.0 if the FIRST hex nibble of
@@ -29,15 +30,13 @@ import graft.functions.VectorFunctions
   *     closed-form predicate the oracle states as `bit_count(xor) ≤ 2`
   *   - verify: exact cosine ≥ threshold, rounded to 6 dp
   *
-  * Scale shape: identical to the Gaussian path — one narrow pass per
-  * vector computes the bucket; only (id, probe-bucket) rows enter the
-  * candidate shuffle; vectors are re-attached to the deduped pairs.
+  * Scale shape: one narrow pass per vector computes the bucket; only
+  * (id, probe-bucket) rows enter the candidate shuffle; vectors are
+  * re-attached to the deduped pairs.
   */
 object PortableSignLsh {
 
-  /** ±1 plane weights from md5 — the deterministic cross-engine
-    * replacement for [[Dedup.randomPlanes]].
-    */
+  /** ±1 plane weights from md5 — deterministic in every engine. */
   def md5SignPlanes(numPlanes: Int, dim: Int): Seq[Seq[Double]] =
     (0 until numPlanes).map { h =>
       (0 until dim).map { d =>
@@ -78,20 +77,7 @@ object PortableSignLsh {
       .select("id_a", "id_b")
       .distinct()
 
-    val lookup = prepared.select(col("vec_id"), col("vec"))
-    val verified = candidates
-      .join(lookup.select(col("vec_id").as("id_a"), col("vec").as("vec_a")),
-        Seq("id_a"))
-      .join(lookup.select(col("vec_id").as("id_b"), col("vec").as("vec_b")),
-        Seq("id_b"))
-      .withColumn("cosine_sim",
-        VectorFunctions.cosine(col("vec_a"), col("vec_b")))
-      .filter(col("cosine_sim") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("cosine_sim"), 6).as("cosine_sim"))
-
-    val out = verified.localCheckpoint(true)
-    prepared.unpersist()
-    out
+    Dedup.materializeAndRelease(
+      Dedup.verifyCosine(candidates, prepared, threshold), prepared)
   }
 }

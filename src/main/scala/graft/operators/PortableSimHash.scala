@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -9,11 +9,9 @@ import graft.functions.TextFunctions
   * per-token hash is md5 (bit-identical in every engine) instead of a
   * JVM-private hash, so the whole pipeline — fingerprint, banding,
   * Hamming verify — is expressible in ANSI-ish SQL and can be
-  * hash-checked against an external oracle end to end. The engine's
-  * fast path ([[Dedup.simHashNearDupPairs]], xxhash-based compiled
-  * kernel) keeps the same shape; this variant trades a little kernel
-  * speed for cross-engine verifiability of the EXACT operator output,
-  * not just its verify stage.
+  * hash-checked against an external oracle end to end: the EXACT
+  * operator output, not just its verify stage. It is the SimHash
+  * family's one implementation.
   *
   * Fingerprint definition (60 bits, p = 0..59):
   *   - tokens: lowercase, whitespace split, empties dropped, DISTINCT
@@ -24,10 +22,10 @@ import graft.functions.TextFunctions
   *     (the s_p = 0 tie is 0 — integer-exact, no float anywhere)
   *   - fp = Σ_p bit_p · 2^p, a non-negative long < 2^60
   *
-  * Scale shape: identical to the xxhash SimHash — one narrow pass
-  * computes (id, fp); candidates come from an equi-join on
-  * `nBands` fingerprint bands (Hamming ≤ maxHamming < nBands forces
-  * band equality somewhere, so banding is LOSSLESS by pigeonhole);
+  * Scale shape: one narrow pass computes (id, fp); candidates come
+  * from an equi-join on `nBands` fingerprint bands (Hamming ≤
+  * maxHamming < nBands forces band equality somewhere, so banding is
+  * LOSSLESS by pigeonhole);
   * the verify re-joins only the candidate ids. Nothing quadratic, no
   * shuffle carries payloads — only (id, fp) and (band, key) rows.
   */
@@ -92,8 +90,6 @@ object PortableSimHash {
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    val out = verified.localCheckpoint(true)
-    fps.unpersist()
-    out
+    Dedup.materializeAndRelease(verified, fps)
   }
 }

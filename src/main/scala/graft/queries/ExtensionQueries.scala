@@ -104,9 +104,7 @@ object ExtensionQueries {
     * cutoff): the band-collision curve must be steep enough that the
     * corpus's high background similarity (~0.5) does not flood the
     * candidate join — 16×4 banding fires at ~64% for J=0.5 pairs,
-    * 8×8 at ~3%. [[Dedup.minHashNearDupPairs]] (xxhash + affine
-    * compiled kernel, one hash per token) stays the fastest-kernel
-    * variant, spec-pinned in DedupSpec.
+    * 8×8 at ~3%.
     */
   def qDedupMinHash(s: SparkSession, dir: String): DataFrame =
     graft.operators.PortableMinHash.nearDupPairs(
@@ -119,8 +117,6 @@ object ExtensionQueries {
     * oracle states the output in closed form (all pairs with
     * Hamming ≤ 3) and the banded engine path must reproduce it
     * exactly. Canonical setting: hamming ≤ 3 with 4 × 15-bit bands.
-    * [[Dedup.simHashNearDupPairs]] (xxhash kernel) stays the
-    * fastest-kernel variant, spec-pinned in DedupSpec.
     */
   def qDedupSimHash(s: SparkSession, dir: String): DataFrame =
     graft.operators.PortableSimHash.nearDupPairs(
@@ -130,8 +126,9 @@ object ExtensionQueries {
   /** Portable-fingerprint SimHash near-dup pairs: the md5-nibble
     * fingerprint is engine-neutral, so the FULL banded operator
     * (candidates + Hamming verify, lossless by pigeonhole) is
-    * hash-checked against an exhaustive SQL oracle — unlike [[qDedupSimHash]]
-    * whose xxhash kernel is JVM-only. Bounded scope keeps the oracle's
+    * hash-checked against an exhaustive SQL oracle — where
+    * [[qDedupSimHash]] runs the same operator over the full corpus
+    * against a closed-form one. Bounded scope keeps the oracle's
     * quadratic side small; the operator itself is the banded scale path.
     */
   def qSimhashPortable(s: SparkSession, dir: String): DataFrame =
@@ -143,8 +140,8 @@ object ExtensionQueries {
     * operator — banding decisions included — hash-checkable against a
     * SQL oracle that reproduces the band predicate exactly (see
     * [[graft.operators.PortableMinHash]]). Bounded scope keeps the
-    * oracle's all-pairs side small; [[qDedupMinHash]] (xxhash kernel)
-    * stays the unbounded-scale variant.
+    * oracle's all-pairs side small; [[qDedupMinHash]] runs the same
+    * operator over the full corpus.
     */
   def qMinhashPortable(s: SparkSession, dir: String): DataFrame =
     graft.operators.PortableMinHash.nearDupPairs(
@@ -157,7 +154,7 @@ object ExtensionQueries {
     * hash-checkable against a SQL oracle stating the closed-form
     * `Hamming(bucket) ≤ 2` predicate (see
     * [[graft.operators.PortableSignLsh]]). [[qDedupEmbedding]]
-    * (Gaussian planes) stays the tunable scale variant.
+    * runs the same operator with 6 planes.
     */
   def qSignLshPortable(s: SparkSession, dir: String): DataFrame =
     graft.operators.PortableSignLsh.nearDupPairs(
@@ -315,9 +312,7 @@ object ExtensionQueries {
     * the synthetic corpus's pairwise-cosine distribution (max ≈ 0.47),
     * so the query surfaces the genuinely closest pairs; 6 planes keep
     * per-bucket recall high at that level (q126 runs the 12-plane
-    * sharper-bucket variant). [[Dedup.embeddingNearDupPairs]]
-    * (tunable Gaussian planes) stays the seeded variant, spec-pinned
-    * in DedupSpec.
+    * sharper-bucket variant).
     */
   def qDedupEmbedding(s: SparkSession, dir: String): DataFrame =
     graft.operators.PortableSignLsh.nearDupPairs(

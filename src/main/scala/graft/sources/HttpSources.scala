@@ -93,9 +93,11 @@ object Http {
 
   /** Bounded retry with linear backoff — extract is the one pipeline
     * stage where transient failure is routine, and a raw-layer land is
-    * idempotent so retrying is always safe.
+    * idempotent so retrying is always safe. `attempts` counts the
+    * first try, so it must be at least 1.
     */
   def withRetry[T](attempts: Int, backoffMs: Long)(f: => T): T = {
+    require(attempts >= 1, s"attempts must be at least 1, got $attempts")
     var last: Throwable = null
     var i = 0
     while (i < attempts) {

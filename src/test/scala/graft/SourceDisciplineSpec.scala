@@ -29,9 +29,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  6. Every parquet read in `pipeline/` names its schema: an inferred
   *     read costs a Spark job that lists the files and merges their
   *     footers, once per layer per minute.
-  *  7. No spec-only public defs: a helper that only specs reach is
-  *     checked by nothing the product runs, so it either gets a
-  *     product caller or goes with its spec.
+  *  7. No spec-only public defs: a helper that only specs reach —
+  *     directly, or through other spec-only defs — is checked by
+  *     nothing the product runs, so it either gets a product caller
+  *     or goes with its spec.
   *  8. No detached scaladoc: a doc block whose closing line is
   *     followed directly by the opening of another documents nothing.
   */
@@ -44,16 +45,72 @@ class SourceDisciplineSpec extends AnyFunSuite {
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
 
-  /** Source lines with comments blanked: scaladoc and `//` lines,
-    * inline block comments and trailing `//` comments (the trailing
-    * form only after whitespace, so `http://` in a string survives).
+  /** Source lines with comments and string-literal text blanked, line
+    * structure kept: a name in a comment, a column string or oracle
+    * SQL is no use of a def. Scans `//` and nested block comments,
+    * plain and triple-quoted strings and char literals; the splices
+    * of an interpolated string (`$x`, `${...}`) stay code.
     */
-  private def codeLines(p: java.nio.file.Path): Seq[String] =
-    Files.readString(p).split("\n", -1).toSeq.map { l =>
-      val t = l.trim
-      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
-      else l.replaceAll("/\\*.*?\\*/", "").replaceAll("(^|\\s)//.*$", "")
+  private def codeLines(p: java.nio.file.Path): Seq[String] = {
+    val s = Files.readString(p)
+    val n = s.length
+    val out = new StringBuilder(n)
+    def at(k: Int): Char = if (k < n) s.charAt(k) else '\u0000'
+    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
+    // blank `len` chars from i (newlines kept) and return the next index
+    def blank(i: Int, len: Int): Int = {
+      s.substring(i, math.min(i + len, n)).foreach(c => out += (if (c == '\n') c else ' '))
+      i + len
     }
+    def copy(i: Int): Int = { out += s.charAt(i); i + 1 }
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == '/' && at(i + 1) == '/') {
+        val end = s.indexOf('\n', i)
+        i = blank(i, (if (end < 0) n else end) - i)
+      } else if (c == '/' && at(i + 1) == '*') {
+        var depth = 0
+        do {
+          if (at(i) == '/' && at(i + 1) == '*') { depth += 1; i = blank(i, 2) }
+          else if (at(i) == '*' && at(i + 1) == '/') { depth -= 1; i = blank(i, 2) }
+          else i = blank(i, 1)
+        } while (depth > 0 && i < n)
+      } else if (c == '\'' && at(i + 1) == '\\') {
+        i = blank(i, s.indexOf('\'', i + 3) + 1 - i) // '\n', '\u0041'
+      } else if (c == '\'' && at(i + 2) == '\'') {
+        i = blank(i, 3) // 'x', '"'
+      } else if (c == '"') {
+        val interp = i > 0 && isWord(s.charAt(i - 1))
+        val triple = s.startsWith("\"\"\"", i)
+        i = blank(i, if (triple) 3 else 1)
+        var open = true
+        while (open && i < n) {
+          val d = s.charAt(i)
+          if (triple && s.startsWith("\"\"\"", i)) {
+            // a run of more than three quotes closes on its last three
+            while (at(i + 3) == '"') i = blank(i, 1)
+            i = blank(i, 3); open = false
+          } else if (!triple && d == '"') { i = blank(i, 1); open = false }
+          else if (!triple && d == '\\') i = blank(i, 2)
+          else if (interp && d == '$' && at(i + 1) == '{') {
+            i = blank(i, 1)
+            var depth = 0
+            do {
+              if (s.charAt(i) == '{') depth += 1
+              else if (s.charAt(i) == '}') depth -= 1
+              i = copy(i)
+            } while (depth > 0 && i < n)
+          } else if (interp && d == '$' && isWord(at(i + 1))) {
+            i = blank(i, 1)
+            while (i < n && isWord(s.charAt(i))) i = copy(i)
+          } else if (interp && d == '$') i = blank(i, 2) // `$$`
+          else i = blank(i, 1)
+        }
+      } else i = copy(i)
+    }
+    out.toString.split("\n", -1).toSeq
+  }
 
   // Public defs that only specs drive, kept on purpose: (file, name).
   private val specOnlyAllowlist = Set(
@@ -69,16 +126,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
     ("sources/Kibana.scala", "provision"),
     ("lake/EsIndexBootstrap.scala", "flightMappingJson"),
     ("pipeline/Orchestrator.scala", "runSerialized"),
-    ("lake/DocumentSink.scala", "report"),
-    // xxhash fast paths whose portable twins the declared queries run;
-    // deleting them cascades into kernels and needs a measured decision
-    ("operators/Dedup.scala", "minHashNearDupPairs"),
-    ("operators/Dedup.scala", "simHashNearDupPairs"),
-    ("operators/Dedup.scala", "embeddingNearDupPairs"),
-    // one direction of the general as-of join
-    ("operators/AsOfJoin.scala", "forward"),
-    // the cache-refresh hook of the corpus statistics cache
-    ("core/CorpusStats.scala", "invalidate"))
+    ("lake/DocumentSink.scala", "report"))
 
   // files with documented bounded collects (see their scaladocs)
   private val collectAllowlist = Set(
@@ -151,14 +199,26 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"schema-inferring parquet reads: $offenders")
   }
 
-  // A NAME heuristic, not a call graph: a def passes when its name
-  // appears as a word in non-comment code of src/main or perfbench/src
-  // anywhere but its own declaration line, so a same-named local or
-  // column string hides a dead def. Only members of top-level
+  // A NAME heuristic, not a call graph. Names are words of code in
+  // src/main and perfbench/src with comments and string text blanked
+  // (codeLines). A def's BODY runs from its `def` line to the next
+  // line indented two spaces or less — usually the next member, but a
+  // two-space continuation ends it early and it spans anything nested.
+  // A name is live when it appears outside every body (a `val`, an
+  // object or class body, perfbench/src) or inside the body of a live
+  // or allowlisted def; iterating to a fixpoint makes a helper that
+  // only spec-only defs call spec-only too. A same-named local or
+  // overload still keeps a dead def alive. Only members of top-level
   // objects, classes and traits (two-space indent) are checked;
   // nested and local defs are out of its reach.
   test("every public def is called outside specs") {
     val decl = "^  (?:(?:final|implicit|@\\w+)\\s+)*def\\s+([A-Za-z_]\\w*).*".r
+    // every body owner, private ones too (so liveness passes through
+    // them); an `override def` is called by its framework, so its body
+    // stays a root
+    val owner = ("^  (?:(?:final|implicit|private|protected|@\\w+)(?:\\[\\w+\\])?\\s+)*" +
+      "def\\s+([A-Za-z_]\\w*).*").r
+    val member = "^ {0,2}\\S.*"
     val corpus = (scalaFilesUnder(Paths.get("src/main/scala")) ++
       scalaFilesUnder(Paths.get("perfbench/src"))).map(p => p -> codeLines(p))
     val defs = corpus.filter(_._1.startsWith(mainRoot)).flatMap { case (p, ls) =>
@@ -167,14 +227,31 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(defs.size > 500, s"only ${defs.size} public defs found")
     // a word-bounded match of a name is a whole run of word characters
     val words = "\\w+".r
-    def count(ls: Seq[String]) =
-      ls.flatMap(words.findAllIn).groupMapReduce(identity)(_ => 1)(_ + _)
-    val uses = count(corpus.flatMap(_._2))
-    val linesOf = corpus.toMap
-    val offenders = defs.filter { case (p, i, name) =>
-      uses(name) == count(Seq(linesOf(p)(i)))(name)
-    }.map { case (p, _, name) => (mainRoot.relativize(p).toString, name) }
-      .filterNot(specOnlyAllowlist)
+    // per line: the (file, def) whose body holds it (None = root), its words
+    val owned: Seq[(Option[(String, String)], Seq[String])] = corpus.flatMap { case (p, ls) =>
+      val inMain = p.startsWith(mainRoot)
+      var body: Option[(String, String)] = None
+      ls.map { l =>
+        l match {
+          case owner(name) if inMain => body = Some((mainRoot.relativize(p).toString, name))
+          case _ if l.matches(member) => body = None
+          case _ =>
+        }
+        (body, words.findAllIn(l).toSeq)
+      }
+    }
+    var live = Set.empty[String]
+    var grew = true
+    while (grew) {
+      val next = owned.collect {
+        case (o, ws) if o.forall { case (f, n) => live(n) || specOnlyAllowlist((f, n)) } => ws
+      }.flatten.toSet
+      grew = next.size > live.size
+      live = next
+    }
+    val offenders = defs.collect {
+      case (p, _, name) if !live(name) => (mainRoot.relativize(p).toString, name)
+    }.distinct.filterNot(specOnlyAllowlist)
     assert(offenders.isEmpty, s"public defs no product code calls: $offenders")
   }
 

@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.functions.expressions.TextExpressions
 
 /** Property-based checks (batched per property: ONE Spark job over all
   * generated cases, not one job per case).
@@ -61,8 +62,8 @@ class PropertySpec extends AnyFunSuite {
       .withColumn("sha", TextFunctions.wordShingles(col("ta"), 1))
       .withColumn("shb", TextFunctions.wordShingles(col("tb"), 1))
       .withColumn("true_j", TextFunctions.jaccard(col("sha"), col("shb")))
-      .withColumn("siga", graft.operators.Dedup.minHashSignature(col("sha"), 128))
-      .withColumn("sigb", graft.operators.Dedup.minHashSignature(col("shb"), 128))
+      .withColumn("siga", TextExpressions.portable_minhash_sig(col("sha"), 128))
+      .withColumn("sigb", TextExpressions.portable_minhash_sig(col("shb"), 128))
       .withColumn("est_j",
         size(filter(zip_with(col("siga"), col("sigb"), (x, y) => x === y),
           x => x)).cast("double") / 128.0)
@@ -78,7 +79,7 @@ class PropertySpec extends AnyFunSuite {
       (base.drop(replaced) ++ (0 until replaced).map(i => s"other$i")).mkString(" ")
     }
     val df = variants.zipWithIndex.toDF("text", "i")
-      .withColumn("sig", graft.operators.Dedup.simHash64(
+      .withColumn("sig", TextExpressions.portable_simhash60(
         TextFunctions.tokens(col("text"))))
     val sigs = df.orderBy("i").select("sig").as[Long].collect()
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -105,7 +106,6 @@ class PropertySpec extends AnyFunSuite {
     "a", "b", "the", "and", "of", "le", "la", "und", "x1", "zz", ""))
 
   test("jaccard kernel == interpreted array_intersect/union form") {
-    import graft.functions.expressions.TextExpressions
     val cases = Gen.listOfN(96, Gen.zip(tokGen, tokGen)).sample.get
     val df = cases.toDF("a", "b").select(
       TextExpressions.jaccard_sim($"a", $"b").as("kernel"),
@@ -125,14 +125,5 @@ class PropertySpec extends AnyFunSuite {
       TextFunctions.wordSetCount($"toks", words).as("kernel"),
       size(filter($"toks", t => t.isin(words: _*))).cast("int").as("reference"))
     df.collect().foreach(r => assert(r.getInt(0) == r.getInt(1)))
-  }
-
-  test("rolling-fingerprint kernel == interpreted aggregate fold") {
-    val cases = Gen.listOfN(96, tokGen).sample.get
-    val df = cases.toDF("toks").select(
-      TextFunctions.fingerprintFrom($"toks").as("kernel"),
-      aggregate($"toks", lit(1469598103934665603L),
-        (acc, t) => acc * lit(1099511628211L) + xxhash64(t)).as("reference"))
-    df.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 }

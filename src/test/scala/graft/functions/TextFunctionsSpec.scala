@@ -60,14 +60,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(qClean >= 0.0 && qClean <= 1.0 && qShout >= 0.0)
   }
 
-  test("fingerprint is order-sensitive and stable") {
-    val f1 = one[Long]("alpha beta gamma", TextFunctions.fingerprint(col("text")))
-    val f1b = one[Long]("alpha beta gamma", TextFunctions.fingerprint(col("text")))
-    val f2 = one[Long]("gamma beta alpha", TextFunctions.fingerprint(col("text")))
-    assert(f1 == f1b)
-    assert(f1 != f2)
-  }
-
   test("portable fingerprint matches the pinned DuckDB fold values") {
     // expected values computed independently in DuckDB:
     //   list_reduce(list_prepend(1469598103934665603::HUGEINT,
@@ -81,7 +73,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       TextFunctions.portableFingerprintFrom(
         TextFunctions.tokens(col("text"))))
     assert(empty == 1469598103934665603L)
-    // still order-sensitive like the fast-path fingerprint
+    // order-sensitive
     val rev = one[Long]("world hello",
       TextFunctions.portableFingerprintFrom(
         TextFunctions.tokens(col("text"))))
@@ -170,11 +162,11 @@ class TextFunctionsSpec extends AnyFunSuite {
     import graft.functions.expressions.TextExpressions._
     val row = spark.range(1).select(
       word_shingles(array(lit("a"), lit("b"), lit("c")), 2).as("ws"),
-      size(minhash_sig(array(lit("x"), lit("y")), 16)).as("sig_len"),
-      simhash64(array(lit("tok"))).as("sh"),
+      size(portable_minhash_sig(array(lit("x"), lit("y")), 16)).as("sig_len"),
+      portable_simhash60(array(lit("tok"))).as("sh"),
       dot_product(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("dot"),
       round(cosine_sim(array(lit(1.0), lit(0.0)), array(lit(1.0), lit(0.0))), 6).as("cos"),
-      rolling_fingerprint(array(lit("a"), lit("b"))).as("fp"),
+      portable_fingerprint(array(lit("a"), lit("b"))).as("fp"),
       unicode_normalize(lit("e\u0301"), "NFC").as("nfc"),
       interleave_bits(lit(3L), lit(5L), 8).as("z")).first()
     assert(row.getAs[collection.Seq[String]]("ws").toSet == Set("a b", "b c"))

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Backward/forward as-of join semantics on hand-checked fixtures:
+/** Backward as-of join semantics on hand-checked fixtures:
   * latest-preceding match, equal-ts inclusion vs strict, tie-break by
   * id, tolerance nulling, and no-match rows surviving as nulls.
   */
@@ -60,21 +60,6 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select("trade_id", "quote_id").as[(Long, Option[Long])].collect().toMap
     assert(out(10L).isEmpty)       // 100 - 95 = 5 > 3
     assert(out(11L) == Some(103L)) // 0 <= 3
-  }
-
-  test("forward >= picks earliest following quote; strict skips equal ts") {
-    val out = AsOfJoin.forward(trades, quotes, Seq("key"), "t_ts", "q_ts",
-      rightPayload = Seq("quote_id"), tieBreakCol = "quote_id")
-      .select("trade_id", "quote_id").as[(Long, Option[Long])].collect().toMap
-    assert(out(10L) == Some(102L)) // earliest at 200, min-id tie-break
-    assert(out(11L) == Some(102L)) // equal ts included
-    assert(out(20L) == Some(200L)) // 60 >= 50
-    assert(out(30L).isEmpty)
-
-    val strict = AsOfJoin.forward(trades, quotes, Seq("key"), "t_ts", "q_ts",
-      rightPayload = Seq("quote_id"), tieBreakCol = "quote_id", strict = true)
-      .select("trade_id", "quote_id").as[(Long, Option[Long])].collect().toMap
-    assert(strict(11L).isEmpty) // only quotes strictly after 200: none
   }
 
   test("single shuffle: plan has exactly one exchange") {

@@ -30,38 +30,19 @@ class DedupSpec extends AnyFunSuite {
     assert(dup.getAs[Long]("keep_id") == 1L) // min id survives
   }
 
-  test("minhash LSH finds planted near-dups, skips unrelated") {
-    val pairs = Dedup.minHashNearDupPairs(docs, "doc_id", "text",
-      shingleWords = 2, numHashes = 64, bands = 32, threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L))) // exact dup always survives
-    assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L))) // near dup
-    assert(pairs.contains((4L, 6L)))
-    assert(!pairs.exists { case (a, b) => Set(a, b) == Set(4L, 1L) })
-  }
-
-  test("simhash: identical→0 hamming; near-dup within band distance") {
-    val pairs = Dedup.simHashNearDupPairs(docs, "doc_id", "text",
-      bands = 32, maxHamming = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    val exact = pairs.find(p => p._1 == 1L && p._2 == 2L)
-    assert(exact.exists(_._3 == 0))
-    assert(pairs.exists(p => p._1 == 4L && p._2 == 6L && p._3 <= 16))
-  }
-
   test("near-dup operators release their internal caches (≤1 materialized result each)") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
-    Dedup.minHashNearDupPairs(docs, "doc_id", "text",
+    PortableMinHash.nearDupPairs(docs, "doc_id", "text",
       shingleWords = 2, numHashes = 64, bands = 32, threshold = 0.5).count()
     // only the localCheckpoint'd result may remain; the persisted
-    // intermediates (prepared/shingles) must be gone
+    // intermediates (signatures) must be gone
     assert(sc.getPersistentRDDs.size <= before + 1)
     val rnd = new scala.util.Random(3)
     val emb = Seq.tabulate(4)(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val mid = sc.getPersistentRDDs.size
-    Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding", dim = 8, numPlanes = 6).count()
+    PortableSignLsh.nearDupPairs(emb, "vec_id", "embedding", dim = 8, numPlanes = 6).count()
     assert(sc.getPersistentRDDs.size <= mid + 1)
   }
 
@@ -137,19 +118,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("embedding near-dup via sign-LSH with multi-probe") {
-    val rnd = new scala.util.Random(7)
-    val v1 = Array.fill(16)(rnd.nextGaussian().toFloat)
-    val v1close = v1.map(x => x + 0.01f)
-    val v2 = Array.fill(16)(rnd.nextGaussian().toFloat)
-    val emb = Seq((1L, v1.toSeq), (2L, v1close.toSeq), (3L, v2.toSeq))
-      .toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding",
-      dim = 16, threshold = 0.99, numPlanes = 8)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 2L)))
-  }
-
   test("duplicate clusters: components found, chains collapse, singletons kept") {
     // graph: 1-2, 2-3 (chain → one cluster {1,2,3}); 4-5; 6 isolated
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
@@ -211,22 +179,10 @@ class DedupSpec extends AnyFunSuite {
     val exhaustive = Dedup.embeddingVerifyExhaustive(emb, "vec_id", "embedding", 0.3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exhaustive == expected)
-    val bucketed = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding",
+    val bucketed = PortableSignLsh.nearDupPairs(emb, "vec_id", "embedding",
       dim = 16, threshold = 0.3, numPlanes = 6)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(bucketed.subsetOf(exhaustive)) // blocking can only lose pairs
-  }
-
-  test("minhash signatures are deterministic across evaluations") {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFunctions
-    val sig1 = docs.select(Dedup.minHashSignature(
-      TextFunctions.wordShingles(col("text"), 2), 16).as("s"))
-      .collect().map(_.getSeq[Long](0))
-    val sig2 = docs.select(Dedup.minHashSignature(
-      TextFunctions.wordShingles(col("text"), 2), 16).as("s"))
-      .collect().map(_.getSeq[Long](0))
-    assert(sig1.zip(sig2).forall { case (a, b) => a == b })
   }
 
   test("editVerify: exact Levenshtein + normalized similarity on a pair frame") {

@@ -104,6 +104,15 @@ class HttpSourcesSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("withRetry rejects zero attempts before running the body") {
+    var ran = false
+    val e = intercept[IllegalArgumentException] {
+      Http.withRetry(0, 0L) { ran = true }
+    }
+    assert(!ran)
+    assert(e.getMessage.contains("got 0"))
+  }
+
   test("retry survives transient 5xx; weather point failures are skipped not fatal") {
     val flaky = new AtomicInteger(0)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
