@@ -13,8 +13,9 @@ import org.apache.spark.sql.DataFrame
   */
 trait DocumentSink {
   /** Upsert one document per `keyCol` value; rows within a call are
-    * assumed already deduped to one per key (UsageProjection
-    * .latestPerAircraft).
+    * assumed already deduped to one per key (the pipeline's enriched
+    * layer holds one row per `icao24`: `NearestJoin.nearestByWindow`
+    * keeps one per aircraft).
     */
   def upsert(docs: DataFrame, keyCol: String): Unit
 }

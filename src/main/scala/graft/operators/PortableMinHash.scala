@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -78,38 +78,54 @@ object PortableMinHash {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     val sigs = signatures(df, idCol, textCol, numHashes, shingleWords).persist()
+    Dedup.materializeAndRelease(verifiedPairs(sigs, lit(bands), lit(rows), threshold), sigs)
+  }
 
-    // narrow (doc_id, band_idx, band_key) rows only through the shuffle
-    val banded = sigs.select(
-      col("doc_id"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
+  /** One (band_idx, band_key) row per doc and band, with the `carry`
+    * columns: band b keys the '|'-joined decimal slots [b·rows,
+    * (b+1)·rows) of `sig`. `bands` and `rows` are columns, so a plan
+    * committed in-engine bands the same way as a compiled-in one.
+    */
+  private def bandKeys(sigs: DataFrame, bands: Column, rows: Column,
+      carry: String*): DataFrame =
+    sigs.select(carry.map(col) :+
+      explode(transform(sequence(lit(0), bands - 1),
         b => struct(b.as("band_idx"),
           concat_ws("|", transform(
-            slice(col("sig"), b * rows + lit(1), lit(rows)),
-            x => x.cast("string"))).as("band_key")))).as("bk"))
-      .select(col("doc_id"), col("bk.band_idx").as("band_idx"),
-        col("bk.band_key").as("band_key"))
+            slice(col("sig"), b * rows + lit(1), rows),
+            x => x.cast("string"))).as("band_key")))).as("bk"): _*)
+      .select(carry.map(col) ++ Seq(col("bk.band_idx").as("band_idx"),
+        col("bk.band_key").as("band_key")): _*)
 
-    val candidates = banded.select(col("band_idx"), col("band_key"),
-        col("doc_id").as("id_a"))
-      .join(banded.select(col("band_idx"), col("band_key"),
-        col("doc_id").as("id_b")), Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // the same pair can collide in many bands
+  /** The banded near-dup core of every entry point: docs sharing a
+    * band key become (id_a < id_b) candidates, kept where `pairFilter`
+    * holds and deduped (the same pair can collide in many bands); their
+    * token sets are re-attached for the exact-Jaccard verify. Output:
+    * id_a, id_b, each `carry` column as `<c>_a`/`<c>_b`, and
+    * jaccard_sim ≥ threshold rounded to 6 dp. Only the narrow
+    * (band_idx, band_key, id) rows go through the candidate shuffle.
+    */
+  private def verifiedPairs(sigs: DataFrame, bands: Column, rows: Column,
+      threshold: Double, carry: Seq[String] = Nil,
+      pairFilter: Column = lit(true)): DataFrame = {
+    val banded = bandKeys(sigs, bands, rows, "doc_id" +: carry: _*)
+    def side(s: String) = banded.select(col("band_idx") +: col("band_key") +:
+      col("doc_id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s")): _*)
+    val pairCols = Seq("id_a", "id_b") ++ carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))
+    val candidates = side("a").join(side("b"), Seq("band_idx", "band_key"))
+      .filter(col("id_a") < col("id_b") && pairFilter)
+      .select(pairCols.map(col): _*)
+      .distinct()
 
     val lookup = sigs.select(col("doc_id"), col("toks"))
-    val verified = candidates
+    candidates
       .join(lookup.select(col("doc_id").as("id_a"), col("toks").as("t_a")),
         Seq("id_a"))
       .join(lookup.select(col("doc_id").as("id_b"), col("toks").as("t_b")),
         Seq("id_b"))
       .withColumn("jaccard_sim", TextFunctions.jaccard(col("t_a"), col("t_b")))
       .filter(col("jaccard_sim") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("jaccard_sim"), 6).as("jaccard_sim"))
-
-    Dedup.materializeAndRelease(verified, sigs)
+      .select(pairCols.map(col) :+ round(col("jaccard_sim"), 6).as("jaccard_sim"): _*)
   }
 
   /** LSH band-plan calibration — choose (bands, rows) BEFORE running
@@ -176,14 +192,7 @@ object PortableMinHash {
     requirePlans(numHashes, plans)
     val planRows = plans.map { b =>
       val r = numHashes / b
-      val banded = sigs.select(
-        explode(transform(sequence(lit(0), lit(b - 1)),
-          bb => struct(bb.as("band_idx"),
-            concat_ws("|", transform(
-              slice(col("sig"), bb * r + lit(1), lit(r)),
-              x => x.cast("string"))).as("band_key")))).as("bk"))
-        .select(col("bk.band_idx").as("band_idx"),
-          col("bk.band_key").as("band_key"))
+      val banded = bandKeys(sigs, lit(b), lit(r))
       val scurves = calib.map { case (name, s) =>
         lit(sCurveScaled(s, r, b)).as(name)
       }
@@ -289,36 +298,9 @@ object PortableMinHash {
     // banding at the COMMITTED plan: `_b`/`_r` are columns from the
     // broadcast commit row — same slice/concat_ws algebra as
     // nearDupPairs, with the plan data-driven instead of compiled in
-    val banded = sigs
-      .crossJoin(broadcast(commit.select(col("bands").as("_b"),
-        col("rows_per_band").as("_r"))))
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), col("_b") - 1),
-          b => struct(b.as("band_idx"),
-            concat_ws("|", transform(
-              slice(col("sig"), b * col("_r") + lit(1), col("_r")),
-              x => x.cast("string"))).as("band_key")))).as("bk"))
-      .select(col("doc_id"), col("bk.band_idx").as("band_idx"),
-        col("bk.band_key").as("band_key"))
-
-    val candidates = banded.select(col("band_idx"), col("band_key"),
-        col("doc_id").as("id_a"))
-      .join(banded.select(col("band_idx"), col("band_key"),
-        col("doc_id").as("id_b")), Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-
-    val lookup = sigs.select(col("doc_id"), col("toks"))
-    val verified = candidates
-      .join(lookup.select(col("doc_id").as("id_a"), col("toks").as("t_a")),
-        Seq("id_a"))
-      .join(lookup.select(col("doc_id").as("id_b"), col("toks").as("t_b")),
-        Seq("id_b"))
-      .withColumn("jaccard_sim", TextFunctions.jaccard(col("t_a"), col("t_b")))
-      .filter(col("jaccard_sim") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("jaccard_sim"), 6).as("jaccard_sim"))
+    val planned = sigs.crossJoin(broadcast(commit.select(col("bands").as("_b"),
+      col("rows_per_band").as("_r"))))
+    val verified = verifiedPairs(planned, col("_b"), col("_r"), threshold)
       .crossJoin(broadcast(commit))
 
     Dedup.materializeAndRelease(verified, sigs)
@@ -370,36 +352,11 @@ object PortableMinHash {
     val sigs = signatures(all, idCol, textCol, numHashes, shingleWords)
       .join(flags, "doc_id").persist()
 
-    val banded = sigs.select(
-      col("doc_id"), col("_new"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band_idx"),
-          concat_ws("|", transform(
-            slice(col("sig"), b * rows + lit(1), lit(rows)),
-            x => x.cast("string"))).as("band_key")))).as("bk"))
-      .select(col("doc_id"), col("_new"),
-        col("bk.band_idx").as("band_idx"), col("bk.band_key").as("band_key"))
-
-    val candidates = banded.select(col("band_idx"), col("band_key"),
-        col("doc_id").as("id_a"), col("_new").as("_new_a"))
-      .join(banded.select(col("band_idx"), col("band_key"),
-        col("doc_id").as("id_b"), col("_new").as("_new_b")),
-        Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(col("_new_a") || col("_new_b")) // base×base never joins on
-      .select(col("id_a"), col("id_b"), col("_new_a"), col("_new_b"))
-      .distinct()
-
-    val lookup = sigs.select(col("doc_id"), col("toks"))
-    val verified = candidates
-      .join(lookup.select(col("doc_id").as("id_a"), col("toks").as("t_a")),
-        Seq("id_a"))
-      .join(lookup.select(col("doc_id").as("id_b"), col("toks").as("t_b")),
-        Seq("id_b"))
-      .withColumn("jaccard_sim", TextFunctions.jaccard(col("t_a"), col("t_b")))
-      .filter(col("jaccard_sim") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("jaccard_sim"), 6).as("jaccard_sim"),
+    // base×base pairs are filtered out before the dedup and the verify
+    // joins, so they never reach the token-set lookup
+    val verified = verifiedPairs(sigs, lit(bands), lit(rows), threshold, Seq("_new"),
+      col("_new_a") || col("_new_b"))
+      .select(col("id_a"), col("id_b"), col("jaccard_sim"),
         when(col("_new_a") && col("_new_b"), "batch_internal")
           .otherwise("batch_vs_base").as("pair_kind"))
 

@@ -19,7 +19,12 @@ import graft.operators.NearestJoin
   * §4) — PhaseClassifier pins the scored frame with a lazy
   * `localCheckpoint` that its first pass materializes, so the join runs
   * once per batch, and the run metrics are counted while the returned
-  * frame is written (`PipelineRunner`).
+  * frame is written (`PipelineRunner`). Jobs per batch: that first pass
+  * (count, μ, σ), one collect of the scaled vectors for a batch of at
+  * most 100,000 rows (its K-means fit then runs on the driver; a larger
+  * batch runs the distributed solver instead), one stats aggregate and
+  * the write (the traced enrich step of a 1,000-state benchmark
+  * minute runs 9 jobs, 17 with the distributed solver).
   */
 object CombineJob {
 

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.stat.GraftSummarizerBridge
-import org.apache.spark.mllib.clustering.{KMeans, KMeansModel}
+import org.apache.spark.mllib.clustering.{GraftKMeansBridge, KMeans, KMeansModel}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -36,24 +36,32 @@ import graft.model.MlConstants._
   * `StandardScaler.fit` aggregates with), VectorAssembler still builds
   * the K-means input (and still rejects a NaN feature), and
   * `mllib.clustering.KMeans.run` is the row solver ML `KMeans.fit`
-  * delegates to here. `PhaseFitSpec` checks μ, σ, the centers and every
-  * row's cluster id against the ML pipeline bit for bit.
+  * delegates to here. A batch of at most `LocalFitMaxRows` rows is
+  * small work, so its scaled vectors are collected and
+  * `GraftKMeansBridge` replays `KMeans.run` on the driver (as *F1
+  * Query* runs small queries centrally); a larger batch runs
+  * `KMeans.run` on the cluster. `PhaseFitSpec` checks μ, σ, the
+  * centers and every row's cluster id against the ML pipeline bit for
+  * bit, and the two solvers against each other.
   *
   * Spark jobs per K-means batch: one for the count/μ/σ pass, which
-  * also materializes the lazy `localCheckpoint` the solver iterates
-  * over; the solver's own (k-means|| init, then one per Lloyd
-  * iteration until the centers move less than 1e-4); and one global
-  * aggregate for everything the driver needs: each cluster's size and
-  * mean altitude (for the labels) and the distance μ/σ (for the
-  * anomaly threshold). The ML pipeline spends four more passes on the
-  * same fit (a separate count, StandardScaler's aggregate, KMeans'
-  * solver-choice summary and its training summary's cluster sizes):
-  * on a 1,000-state benchmark minute the enrich step (join, fit, stats
-  * pass and write) runs 17 jobs, 24 with the ML pipeline. Driver-side
-  * work is O(k) only (centroids, μ/σ, one stats row) — the "fetch tiny
-  * stats → re-inject as literals" pattern the reference uses (F13).
-  * The checkpoint's blocks are released with the frame instead of
-  * staying cached after the call.
+  * also materializes the lazy `localCheckpoint` the solver reads; one
+  * to collect the scaled vectors (on the cluster, the solver's own
+  * instead: the k-means|| sampling, cost sums and candidate counts,
+  * then one per Lloyd iteration until the centers move less than
+  * 1e-4, 9 on a benchmark minute); and one global aggregate for
+  * everything the driver needs: each cluster's size and mean altitude
+  * (for the labels) and the distance μ/σ (for the anomaly
+  * threshold). On a 1,000-state benchmark minute the traced enrich
+  * step (join, fit, stats pass and write) runs 9 jobs, 17 with the
+  * distributed solver and 24 with the ML pipeline, which spends four
+  * more passes on the same fit (a separate count, StandardScaler's
+  * aggregate, KMeans' solver-choice summary and its training summary's
+  * cluster sizes). Driver-side work is otherwise O(k) (centroids,
+  * μ/σ, one stats row) — the "fetch tiny stats → re-inject as
+  * literals" pattern the reference uses (F13). The checkpoint's blocks
+  * are released with the frame instead of staying cached after the
+  * call.
   */
 object PhaseClassifier {
 
@@ -133,12 +141,22 @@ object PhaseClassifier {
       d.withColumn(s"_ml_$c", coalesce(col(c), lit(0.0)))
     }
 
+  /** Largest batch whose phase model is fitted on the driver: the
+    * scaled vectors of at most 100,000 rows × 3 doubles (≈ 2.4 MB) are
+    * collected in one job and clustered by `GraftKMeansBridge`; a larger
+    * batch runs `KMeans.run` on the cluster.
+    */
+  private[pipeline] val LocalFitMaxRows = 100000L
+
   /** Fits the phase model to a frame carrying the `_ml_` features.
     * μ and σ are kept as `StandardScalerModel` keeps them (compressed,
     * so a -0.0 reads back as 0.0). VectorAssembler fails the batch on a
-    * NaN feature in the first pass, whatever the batch size.
+    * NaN feature in the first pass, whatever the batch size. Batches of
+    * at most `localMaxRows` rows are clustered on the driver, larger
+    * ones by the distributed solver; both give the same model.
     */
-  private[pipeline] def fit(withFeatures: DataFrame): PhaseModel = {
+  private[pipeline] def fit(withFeatures: DataFrame,
+      localMaxRows: Long = LocalFitMaxRows): PhaseModel = {
     val vectors = new VectorAssembler()
       .setInputCols(featureCols.map("_ml_" + _)).setOutputCol("_ml_features_raw")
       .transform(withFeatures).select("_ml_features_raw").rdd.map(_.getAs[Vector](0))
@@ -156,10 +174,12 @@ object PhaseClassifier {
           s" ${mu.mkString("[", ",", "]")}, std ${sigma.mkString("[", ",", "]")})")
       OldVectors.dense(z)
     }
-    fitted.copy(kmeans = Some(new KMeans()
+    val solver = new KMeans()
       .setK(KClusters).setSeed(KMeansSeed).setMaxIterations(KMeansMaxIter)
       .setInitializationMode(KMeans.K_MEANS_PARALLEL).setEpsilon(KMeansTolerance)
-      .run(instances)))
+    fitted.copy(kmeans = Some(
+      if (rows <= localMaxRows) GraftKMeansBridge.runLocally(solver, instances.glom().collect())
+      else solver.run(instances)))
   }
 
   /** `(x − μ)·factor` per feature, StandardScalerModel's arithmetic. */
@@ -268,7 +288,8 @@ object PhaseClassifier {
   }
 
   /** Rule-mode anomaly when no model could be fit (n<k): distance in
-    * raw feature space to the batch mean, same μ+2σ flag.
+    * raw feature space to the origin (the norm of the `_ml_` features,
+    * not centred on the batch mean), same μ+2σ flag.
     */
   private def anomalyWithoutModel(df: DataFrame): DataFrame = {
     val dist2 = featureCols.map { c =>

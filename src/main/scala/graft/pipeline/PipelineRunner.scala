@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import java.time.LocalDateTime
+import java.util.concurrent.{ExecutionException, FutureTask}
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.expr
@@ -49,13 +52,14 @@ final class PipelineRunner(
     flightsSource.extract(spark, rawFlightsDir)
     weatherSource.extract(spark, rawWeatherDir)
 
-    // format — engine-side parse + typing
+    // format — engine-side parse + typing; the two layers do not
+    // depend on each other, so they are written at once
     val formattedFlights = FormatFlights.fromRawJson(spark, rawFlightsDir)
     val formattedWeather = FormatWeather.fromRawJson(spark, rawWeatherDir)
     val fFlightsDir = paths.partitionPath("formatted", "opensky", "flights", at)
     val fWeatherDir = paths.partitionPath("formatted", "open_meteo", "weather", at)
-    formattedFlights.write.mode(SaveMode.Overwrite).parquet(fFlightsDir)
-    formattedWeather.write.mode(SaveMode.Overwrite).parquet(fWeatherDir)
+    alongside(formattedFlights.write.mode(SaveMode.Overwrite).parquet(fFlightsDir))(
+      formattedWeather.write.mode(SaveMode.Overwrite).parquet(fWeatherDir))
 
     // combine — read back the partitions this run wrote (layer
     // contract), enrich; not the newest ones, so a re-run of an earlier
@@ -73,22 +77,38 @@ final class PipelineRunner(
       expr("sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END)").as("anomalies"))
       .write.mode(SaveMode.Overwrite).parquet(enrichedDir)
 
-    // usage + index
+    // usage + index, both projections of the enriched layer, written at
+    // once. The enriched layer already holds one row per aircraft (the
+    // nearest-station join keeps one per icao24), so the documents go
+    // to the keyed upsert as they are.
     val usage = UsageProjection.usage(readBack(spark, enriched, enrichedDir))
     val usageDir = paths.partitionPath("usage", "sky_safe", "dashboard", at)
-    usage.write.mode(SaveMode.Overwrite).parquet(usageDir)
-    val docs = UsageProjection.latestPerAircraft(
-      UsageProjection.documents(readBack(spark, usage, usageDir)))
     // typed serving contract enforced at the sink boundary — the
     // engine-side analog of the reference's pinned ES index mapping
     // (src/index_elastic.py:22-62): mis-typed documents fail here, not
     // in the serving store
-    new graft.lake.ContractSink(sink, graft.lake.ServingContract.flightDocuments)
-      .upsert(docs, "icao24")
+    alongside(usage.write.mode(SaveMode.Overwrite).parquet(usageDir))(
+      new graft.lake.ContractSink(sink, graft.lake.ServingContract.flightDocuments)
+        .upsert(UsageProjection.documents(usage), "icao24"))
 
     val metrics = counted.get
     RunMetrics(metrics("rows").asInstanceOf[Long],
       Option(metrics("anomalies")).fold(0L)(_.asInstanceOf[Long]))
+  }
+
+  /** Runs `first` on this thread while `second` runs on a fresh one,
+    * and returns once both are done. A fresh thread inherits Spark's
+    * local properties (the job group among them). A failure is
+    * rethrown as the exception its write raised, `first`'s if both
+    * fail.
+    */
+  private def alongside(first: => Unit)(second: => Unit): Unit = {
+    val task = new FutureTask[Unit](() => second)
+    new Thread(task, "pipeline-runner-write").start()
+    val firstFailure = try { first; None } catch { case NonFatal(e) => Some(e) }
+    val secondFailure =
+      try { task.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+    firstFailure.orElse(secondFailure).foreach(e => throw e)
   }
 
   /** The layer `written` was just written to `dir`, read back with its

@@ -61,7 +61,8 @@ object UsageProjection {
     * aircraft, newest `extracted_at` wins, ties to the newest non-null
     * `observation_time` (reference `_id=icao24` upsert,
     * `src/index_elastic.py:205`). `row_number`, not `dropDuplicates`,
-    * so "newest" is well-defined.
+    * so "newest" is well-defined. `PipelineRunner` does not call it:
+    * one run's enriched layer already holds one row per aircraft.
     */
   def latestPerAircraft(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("icao24"))

@@ -136,6 +136,9 @@ class SourceDisciplineSpec extends AnyFunSuite {
     "operators/ProductQuantization.scala", // nlist-row coarse quantizer
     "operators/SemanticDedup.scala", // k-row sampled quantizer
     "operators/Similarity.scala",    // k-row sampled centroids
+    // phase-fit vectors of a batch of at most LocalFitMaxRows = 100,000
+    // rows × 3 doubles (≈ 2.4 MB); larger batches fit on the cluster
+    "pipeline/PhaseClassifier.scala",
     "streaming/EventStreams.scala")  // 1-row min/max bounds
 
   test("no udf() anywhere in main source") {

@@ -19,6 +19,23 @@ object TestSpark {
     s
   }
 
+  /** `f`'s result and the Spark jobs it ran, counted through a job
+    * group (threads `f` starts inherit it). The status tracker is fed
+    * asynchronously, so the count is polled until stable.
+    */
+  def withJobs[T](tag: String)(f: => T): (T, Int) = {
+    spark.sparkContext.setJobGroup(tag, tag, interruptOnCancel = false)
+    val result = try f finally spark.sparkContext.clearJobGroup()
+    def ids = spark.sparkContext.statusTracker.getJobIdsForGroup(tag).length
+    var last = -1
+    var cur = ids
+    var spins = 0
+    while (cur != last && spins < 100) {
+      Thread.sleep(50); last = cur; cur = ids; spins += 1
+    }
+    (result, cur)
+  }
+
   /** Parse raw JSON strings through the real reader path. */
   def jsonDf(schema: org.apache.spark.sql.types.StructType, rows: Seq[String]): DataFrame = {
     import spark.implicits._

@@ -55,40 +55,103 @@ class LakeSpec extends AnyFunSuite {
     }.mkString("""{"time": 1772121600, "_extracted_at": "2026-02-26T16:00:05", "states": [""",
       ", ", "]}").replaceAll("\n", " ")
 
-  /** Runs one minute over `flights` and returns its metrics with the
-    * enriched partition it wrote.
+  /** The 37-state fixture: three separated flight groups near the two
+    * stations plus one aircraft between them (CombineJobSpec's outlier
+    * batch).
     */
-  private def runFlights(flights: String): (RunMetrics, org.apache.spark.sql.DataFrame) = {
-    val root = Files.createTempDirectory("graft_lake_m").toString
-    val fixtures = Files.createTempDirectory("graft_fx_m").toString
-    Files.writeString(java.nio.file.Paths.get(fixtures, "flights.json"), flights)
-    Files.writeString(java.nio.file.Paths.get(fixtures, "weather.json"), weatherJson)
-    val at = LocalDateTime.of(2026, 2, 26, 16, 0)
-    val metrics = new PipelineRunner(LakePaths(root),
-      new FileReplaySource(s"$fixtures/flights.json"),
-      new FileReplaySource(s"$fixtures/weather.json"),
-      new JsonDirSink(Files.createTempDirectory("graft_sink_m").toString)).runOnce(spark, at)
-    (metrics, spark.read.parquet(
-      LakePaths(root).partitionPath("enriched", "sky_safe", "flights_weather", at)))
-  }
-
-  test("run metrics equal the enriched partition's row and anomaly counts") {
-    // three separated flight groups near the two stations plus one
-    // aircraft between them (CombineJobSpec's outlier batch)
+  private val separatedStates = {
     def group(p: String, lat: Double, f: Int => (Double, Double, Double)) =
       (1 to 12).map { i =>
         val (alt, vel, vr) = f(i)
         (f"$p$i%03d", "2.3", (lat + i * 0.001).toString, alt, vel, vr)
       }
-    val states = group("lo", 48.8, i => (150.0 + i, 50 + i * 0.5, 0.1)) ++
+    group("lo", 48.8, i => (150.0 + i, 50 + i * 0.5, 0.1)) ++
       group("cl", 49.5, i => (2500.0 + i * 10, 150.0 + i, 12.0)) ++
       group("cr", 50.4, i => (11000.0 + i * 5, 230.0 + i, 0.2)) :+
       (("outlr", "3.0", "49.0", 6000.0, 100.0, 6.0))
-    val (metrics, enriched) = runFlights(snapshot(states))
+  }
+
+  /** A fresh lake with `flights` and the two stations as its fixtures,
+    * and a runner over them writing documents to `sinkDir`.
+    */
+  private final case class Minute(flights: String) {
+    val root: String = Files.createTempDirectory("graft_lake_m").toString
+    val sinkDir: String = Files.createTempDirectory("graft_sink_m").toString
+    val at: LocalDateTime = LocalDateTime.of(2026, 2, 26, 16, 0)
+    private val fixtures = Files.createTempDirectory("graft_fx_m").toString
+    Files.writeString(java.nio.file.Paths.get(fixtures, "flights.json"), flights)
+    Files.writeString(java.nio.file.Paths.get(fixtures, "weather.json"), weatherJson)
+    val runner = new PipelineRunner(LakePaths(root),
+      new FileReplaySource(s"$fixtures/flights.json"),
+      new FileReplaySource(s"$fixtures/weather.json"),
+      new JsonDirSink(sinkDir))
+
+    def layer(name: String, source: String, table: String): String =
+      LakePaths(root).partitionPath(name, source, table, at)
+    def enriched: org.apache.spark.sql.DataFrame =
+      spark.read.parquet(layer("enriched", "sky_safe", "flights_weather"))
+  }
+
+  /** Runs one minute over `flights` and returns its metrics with the
+    * enriched partition it wrote.
+    */
+  private def runFlights(flights: String): (RunMetrics, org.apache.spark.sql.DataFrame) = {
+    val m = Minute(flights)
+    (m.runner.runOnce(spark, m.at), m.enriched)
+  }
+
+  /** The bytes of one sink generation, its part files in name order. */
+  private def generation(sinkDir: String, gen: Int): Seq[Byte] =
+    Files.list(java.nio.file.Paths.get(sinkDir, f"gen=$gen%06d")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString)
+      .flatMap(p => Files.readAllBytes(p)).toSeq
+
+  test("run metrics equal the enriched partition's row and anomaly counts") {
+    val (metrics, enriched) = runFlights(snapshot(separatedStates))
     assert(metrics.enrichedRows == enriched.count())
     assert(metrics.enrichedRows == 37)
     assert(metrics.anomalies == enriched.filter(col("is_anomaly")).count())
     assert(enriched.filter(col("is_anomaly") && col("icao24") === "outlr").count() == 1)
+  }
+
+  test("a snapshot that repeats an aircraft gives one enriched row and one document for it") {
+    // the same icao24 reported twice, at two positions
+    val m = Minute(snapshot(separatedStates :+ (("lo001", "3.05", "50.5", 900.0, 80.0, 1.0))))
+    assert(m.runner.runOnce(spark, m.at).enrichedRows == 37)
+    assert(m.enriched.filter(col("icao24") === "lo001").count() == 1)
+    val docs = spark.read.json(s"${m.sinkDir}/gen=000000")
+    assert(docs.count() == 37)
+    assert(docs.filter(col("icao24") === "lo001").count() == 1)
+  }
+
+  test("one minute runs at most 11 Spark jobs, and a re-run writes byte-equal documents") {
+    val m = Minute(snapshot(separatedStates))
+    val (_, jobs) = TestSpark.withJobs("lake-spec-minute")(m.runner.runOnce(spark, m.at))
+    assert(jobs <= 11, s"$jobs jobs")
+    m.runner.runOnce(spark, m.at)
+    val first = generation(m.sinkDir, 0)
+    assert(first.nonEmpty)
+    assert(first == generation(m.sinkDir, 1))
+  }
+
+  test("a failed overlapped write is rethrown as its own exception once no job runs") {
+    val m = Minute(snapshot(separatedStates))
+    // a regular file where the formatted weather table's directory goes
+    val weatherTable = java.nio.file.Paths.get(m.root, "formatted", "open_meteo", "weather")
+    Files.createDirectories(weatherTable.getParent)
+    Files.writeString(weatherTable, "not a directory")
+    val alone = intercept[Exception] {
+      spark.range(1).write.mode("overwrite").parquet(m.layer("formatted", "open_meteo", "weather"))
+    }
+    val overlapped = intercept[Exception](m.runner.runOnce(spark, m.at))
+    assert(!overlapped.isInstanceOf[java.util.concurrent.ExecutionException], overlapped)
+    assert(overlapped.getClass == alone.getClass && overlapped.getMessage == alone.getMessage,
+      s"$overlapped vs $alone")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    // the flights write it overlapped with ran to completion
+    assert(Files.exists(java.nio.file.Paths.get(
+      m.layer("formatted", "opensky", "flights"), "_SUCCESS")))
   }
 
   test("a snapshot whose states all lack coordinates gives RunMetrics(0, 0)") {

@@ -77,7 +77,41 @@ class PhaseFitSpec extends AnyFunSuite {
           km.clusterCenters.map(c => bits(c.toArray)).toSeq, clue)
         assert(f.select(got.clusterId).as[Int].collect().toSeq ==
           ml.transform(f).select("_ml_cluster_id").as[Int].collect().toSeq, clue)
+        // the same batch through the distributed solver
+        assertSameModel(got, PhaseClassifier.fit(f, localMaxRows = 0), clue)
       }
     }
+  }
+
+  private def assertSameModel(a: PhaseClassifier.PhaseModel, b: PhaseClassifier.PhaseModel,
+      clue: String): Unit = {
+    assert(a.rows == b.rows, clue)
+    assert(bits(a.mean) == bits(b.mean) && bits(a.std) == bits(b.std), clue)
+    assert(a.kmeans.get.clusterCenters.map(c => bits(c.toArray)).toSeq ==
+      b.kmeans.get.clusterCenters.map(c => bits(c.toArray)).toSeq, clue)
+  }
+
+  test("local and distributed fits agree at the local bound and one row past it") {
+    import org.apache.spark.sql.functions.randn
+    val bound = PhaseClassifier.LocalFitMaxRows
+    def batch(n: Long) = PhaseClassifier.features(spark.range(0, n, 1, 1).select(
+      (randn(11) * 40 + 200).as("velocity"),
+      (randn(12) * 3000 + 6000).as("baro_altitude"),
+      (randn(13) * 5).as("vertical_rate")))
+
+    val atBound = batch(bound)
+    val (local, localJobs) =
+      TestSpark.withJobs("phase-fit-at-bound")(PhaseClassifier.fit(atBound))
+    // one job for the count/μ/σ pass, one for the collect
+    assert(localJobs == 2)
+    assertSameModel(local, PhaseClassifier.fit(atBound, localMaxRows = 0), s"n=$bound")
+
+    val pastBound = batch(bound + 1)
+    val (distributed, distributedJobs) =
+      TestSpark.withJobs("phase-fit-past-bound")(PhaseClassifier.fit(pastBound))
+    // the k-means|| init alone runs six jobs on the cluster
+    assert(distributedJobs >= 8)
+    assertSameModel(distributed, PhaseClassifier.fit(pastBound, localMaxRows = bound + 1),
+      s"n=${bound + 1}")
   }
 }
