@@ -69,8 +69,7 @@ object ImageHash {
     * dhash) — nulls when the bytes are not a decodable image. One
     * partition-local pass; no shuffle.
     */
-  def dHashDf(df: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): DataFrame = {
+  def dHashDf(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     val inSchema = df.schema
     val outSchema = StructType(inSchema.fields ++ Seq(
       StructField("width", IntegerType),
@@ -78,7 +77,7 @@ object ImageHash {
       StructField("dhash", StringType)))
     val payloadIdx = inSchema.fieldIndex(payloadCol)
     df.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
+      it.grouped(64).flatMap { batch =>
         batch.map { row =>
           val payload = row.getAs[Array[Byte]](payloadIdx)
           val decoded =

@@ -44,19 +44,20 @@ object ImageHeaders {
   private val SofLabels: Seq[(Long, String)] =
     Seq(0xC0L -> "baseline", 0xC1L -> "extended", 0xC2L -> "progressive")
 
+  /** Marker segments walked before giving up on an SOFn. */
+  private val MaxHops = 5
+
   /** Adds `out` = struct(sof_marker, precision, height, width,
     * n_components, n_pixels) parsed from the binary column —
     * null when the payload is not SOI-led or no SOFn appears within
-    * `maxHops` marker segments. Stages one offset column per hop
+    * `MaxHops` marker segments. Stages one offset column per hop
     * (dropped on return); see the object scaladoc for why.
     */
-  def withJpeg(df: DataFrame, binCol: String, out: String,
-      maxHops: Int = 5): DataFrame = {
-    require(maxHops >= 1 && maxHops <= 16, s"unreasonable hops: $maxHops")
+  def withJpeg(df: DataFrame, binCol: String, out: String): DataFrame = {
     val bin = col(binCol)
     def posCol(k: Int): Column = col(s"_jpos_$k")
     var staged = df.withColumn("_jpos_1", lit(3L))
-    (2 to maxHops).foreach { k =>
+    (2 to MaxHops).foreach { k =>
       staged = staged.withColumn(s"_jpos_$k",
         posCol(k - 1) + lit(2L) + be16(bin, posCol(k - 1) + lit(2L)))
     }
@@ -64,7 +65,7 @@ object ImageHeaders {
     def markerAt(pos: Column): Column =
       when(u8(bin, pos) === 0xFFL, u8(bin, pos + lit(1L)))
     // one candidate struct per hop; the first SOFn hop wins
-    val hopStructs = (1 to maxHops).map { k =>
+    val hopStructs = (1 to MaxHops).map { k =>
       val pos = posCol(k)
       val marker = markerAt(pos)
       val label = SofLabels.foldLeft(lit(null).cast("string"): Column) {
@@ -84,6 +85,6 @@ object ImageHeaders {
     val isSoi = u8(bin, lit(1L)) === 0xFFL && u8(bin, lit(2L)) === 0xD8L
     staged
       .withColumn(out, when(isSoi, coalesce(hopStructs: _*)))
-      .drop((1 to maxHops).map(k => s"_jpos_$k"): _*)
+      .drop((1 to MaxHops).map(k => s"_jpos_$k"): _*)
   }
 }

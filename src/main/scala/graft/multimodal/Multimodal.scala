@@ -144,7 +144,7 @@ object Multimodal {
   }
 
   /** Decode + feature-extract over the media struct. Runs partition-
-    * local in fixed-size batches (`batchSize` rows per decode batch).
+    * local in fixed-size batches (64 rows per decode batch).
     * Output adds a `features` struct column.
     *
     * Implemented as `Dataset.mapPartitions` with an explicit row
@@ -153,7 +153,7 @@ object Multimodal {
     * the lineage at an opaque RDD scan.
     */
   def decodeFeatures(df: DataFrame, mediaCol: String,
-      embeddingDim: Int = 16, batchSize: Int = 64): DataFrame = {
+      embeddingDim: Int = 16): DataFrame = {
     val inSchema = df.schema
     val outSchema = StructType(inSchema.fields :+
       StructField("features", StructType(Seq(
@@ -166,7 +166,7 @@ object Multimodal {
     df.mapPartitions { it =>
       // batch the iterator: a real decoder initializes its codec once
       // per batch — same shape a vectorized UDF runtime would use
-      it.grouped(batchSize).flatMap { batch =>
+      it.grouped(64).flatMap { batch =>
         batch.map { row =>
           val media = row.getStruct(mediaIdx)
           val payload0 = if (media == null) null

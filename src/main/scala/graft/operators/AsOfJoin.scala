@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
   * Scale notes (100 TB): cost is a single hash-partition shuffle of
   * |L| + |R| rows plus a per-partition sort — the same shape as a
   * sort-merge join, with no N×M candidate blow-up for wide time
-  * tolerances and no per-key driver loops. Skewed keys can be salted
+  * gaps and no per-key driver loops. Skewed keys can be salted
   * upstream with [[SkewTools]]; AQE handles moderate skew.
   *
   * Determinism: ties on `rightTs` are pinned by `tieBreakCol` (kept in
@@ -29,15 +29,12 @@ import org.apache.spark.sql.types.StructType
   */
 object AsOfJoin {
 
-  /** Most recent right row with `rightTs <= leftTs` (`strict` ⇒ `<`).
+  /** Most recent right row with `rightTs <= leftTs`.
     *
     * @param rightPayload right-side columns to carry (must not collide
     *                     with left column names)
     * @param matchedTsCol output name for the matched right timestamp
     *                     (null when no match)
-    * @param tolerance    optional max `leftTs - rightTs` in seconds
-    *                     (microsecond-exact); staler matches are
-    *                     nulled out
     */
   def backward(
       left: DataFrame,
@@ -47,9 +44,7 @@ object AsOfJoin {
       rightTs: String,
       rightPayload: Seq[String],
       tieBreakCol: String,
-      matchedTsCol: String = "matched_ts",
-      strict: Boolean = false,
-      tolerance: Option[Long] = None): DataFrame = {
+      matchedTsCol: String = "matched_ts"): DataFrame = {
 
     val payloadStruct = struct(
       (rightPayload.map(col) :+ col(rightTs).as(matchedTsCol)): _*)
@@ -58,15 +53,12 @@ object AsOfJoin {
     val lrowType = left.select(lrowStruct.as("_l")).schema("_l").dataType
     val tieType = right.schema(tieBreakCol).dataType
 
-    // Equal-ts right rows sort before the left row for inclusive
-    // semantics (so the preceding-rows frame sees them) and after it
-    // for strict (so it cannot).
-    val rightSide = if (strict) 2 else 0
-
+    // Equal-ts right rows sort before the left row (side 0 < 1), so
+    // the preceding-rows frame sees them: the match is inclusive.
     val taggedRight = right.select(
       keys.map(col) ++ Seq(
         col(rightTs).as("_ts"),
-        lit(rightSide).as("_side"),
+        lit(0).as("_side"),
         col(tieBreakCol).as("_tb"),
         payloadStruct.as("_p"),
         lit(null).cast(lrowType).as("_l")): _*)
@@ -86,19 +78,9 @@ object AsOfJoin {
       .withColumn("_m", last(col("_p"), ignoreNulls = true).over(w))
       .filter(col("_side") === 1)
 
-    val withinTol: Column = tolerance match {
-      case Some(secs) =>
-        val gapMicros =
-          unix_micros(col("_ts")) - unix_micros(col("_m")(matchedTsCol))
-        when(col("_m").isNotNull && gapMicros <= secs * 1000000L, col("_m"))
-      case None => col("_m")
-    }
-
     val payloadFields = payloadType.asInstanceOf[StructType].fieldNames.toSeq
     val leftCols = left.columns.toSeq.map(c => col("_l")(c).as(c))
-    val matchCols = payloadFields.map(f => col("_mt")(f).as(f))
-    matched
-      .withColumn("_mt", withinTol)
-      .select((leftCols ++ matchCols): _*)
+    val matchCols = payloadFields.map(f => col("_m")(f).as(f))
+    matched.select((leftCols ++ matchCols): _*)
   }
 }

@@ -37,15 +37,11 @@ object Bfs {
   def hopDistance(
       edges: DataFrame,
       seeds: DataFrame,
-      maxHops: Int,
-      distinctEdges: Boolean = false,
-      broadcastThreshold: Long = 4000000L): DataFrame = {
+      maxHops: Int): DataFrame = {
     require(maxHops >= 1, "need at least one hop")
-    val clustered = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-    val e = (if (distinctEdges) clustered
-      else clustered.dropDuplicates("src", "dst")).persist()
-    val bcast = 2 * e.count() <= broadcastThreshold
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).dropDuplicates("src", "dst").persist()
+    val bcast = 2 * e.count() <= PageRank.BroadcastThreshold
     var dist = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(true)
     var frontier = dist

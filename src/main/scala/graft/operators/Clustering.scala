@@ -20,10 +20,14 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
+  // quantizedKMeans' integer grid: q_i = floor(v_i · Scale) + Shift
+  private val Scale = 1000
+  private val Shift = 1000
+
   /** R rounds of integer Lloyd's over md5-seeded centroids.
     *
-    * Quantization: `q_i = floor(v_i · scale) + shift`, with `shift`
-    * chosen so every coordinate is non-negative (constant shifts
+    * Quantization: `q_i = floor(v_i · 1000) + 1000`, the shift chosen
+    * so every coordinate ≥ −1 is non-negative (constant shifts
     * cancel in distances; they exist only to keep the integer means
     * floor-vs-truncate-proof). Init: the k rows with the smallest
     * (md5 draw, id) — deterministic, partition-invariant. Each round:
@@ -46,25 +50,22 @@ object Clustering {
       idCol: String,
       vecCol: String,
       k: Int,
-      rounds: Int,
-      scale: Int = 1000,
-      shift: Int = 1000,
-      salt: String = "km_v1"): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k=$k rounds=$rounds must be positive")
     // the floor-vs-truncate agreement in the centroid update (and the
     // DuckDB `//` oracle parity) holds ONLY for non-negative sums, so
-    // a coordinate below -shift/scale must fail fast, not silently
+    // a coordinate below -Shift/Scale must fail fast, not silently
     // break bit-reproducibility
     val qv = vecs.select(col(idCol).as("id"),
       transform(col(vecCol), e => {
-        val q = floor(e.cast("double") * scale).cast("long") + shift
+        val q = floor(e.cast("double") * Scale).cast("long") + Shift
         when(q < 0L, raise_error(concat(
-          lit(s"quantizedKMeans: coordinate below ${-shift.toDouble / scale}"
-            + " (raise shift or rescale); value="), e.cast("string"))))
+          lit(s"quantizedKMeans: coordinate below ${-Shift.toDouble / Scale}"
+            + " (rescale the input); value="), e.cast("string"))))
           .otherwise(q)
       }).as("q"))
 
-    val draw = Sampling.hashUniform(col("id"), salt)
+    val draw = Sampling.hashUniform(col("id"), "km_v1")
     var centroids = qv
       .select(col("q").as("c"), draw.as("_d"), col("id"))
       .orderBy(col("_d"), col("id")).limit(k)

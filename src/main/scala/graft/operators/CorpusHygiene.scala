@@ -67,11 +67,10 @@ object CorpusHygiene {
     * this audit MEASURES it). Output per ordered split pair:
     * distinct leaked texts and total documents involved.
     */
-  def splitLeakage(df: DataFrame, idCol: String, textCol: String,
-      salt: String = "split_v1"): DataFrame = {
+  def splitLeakage(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val assigned = df.select(col(idCol),
       sha2(col(textCol), 256).as("_sha"),
-      Sampling.splitColumn(col(idCol), salt).as("_split"))
+      Sampling.splitColumn(col(idCol), "split_v1").as("_split"))
     val perSplit = assigned.groupBy(col("_sha"), col("_split"))
       .agg(count(lit(1)).as("_docs"))
     perSplit.as("a").join(perSplit.as("b"),

@@ -415,7 +415,8 @@ object Dedup {
     * final, strongest verify a dedup pipeline applies after a cheap
     * generator (SNM / LSH / banding) has bounded the pair set:
     * Levenshtein distance (unit insert/delete/substitute) plus the
-    * normalized similarity 1 − d/max(|a|, |b|).
+    * normalized similarity 1 − d/max(|a|, |b|). `pairs` carries the
+    * candidate ids as (id_a, id_b).
     *
     * Two kernel regimes, both exact where they answer:
     *
@@ -441,8 +442,8 @@ object Dedup {
     * of the q246/q140 generators).
     */
   def editVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, aCol: String = "id_a", bCol: String = "id_b",
-      maxDist: Int = -1): DataFrame = {
+      textCol: String, maxDist: Int = -1): DataFrame = {
+    val (aCol, bCol) = ("id_a", "id_b")
     val withTexts = pairs.select(col(aCol), col(bCol))
       .join(docs.select(col(idCol).as(aCol), col(textCol).as("_ta")), aCol)
       .join(docs.select(col(idCol).as(bCol), col(textCol).as("_tb")), bCol)

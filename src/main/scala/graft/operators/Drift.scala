@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * product of TWO integer-lattice roundings —
   * `round((p_A−p_B)·10⁸)` and the q187 lattice `round(ln(p_A/p_B)·10⁸)`
   * — summed as exact int64 (|term| ≤ 2·10¹⁷, ≤ nbins per dim) and
-  * divided back by 10¹⁶ once. Binning is `floor((x−lo)/w)` clamped —
-  * one IEEE chain, identical everywhere.
+  * divided back by 10¹⁶ once. Binning is `floor((x−lo)/w)` clamped
+  * to 8 bins of width 0.2 from lo = −0.8 — one IEEE chain, identical
+  * everywhere.
   *
   * Scale shape: one narrow posexplode of the vector column, one
   * (dim, bin, cohort) count aggregation, one nbins-row-per-dim final
@@ -27,27 +28,29 @@ import org.apache.spark.sql.functions._
   */
 object Drift {
 
+  // psiByDimension's bins: NBins of width BinWidth from Lo (clamped)
+  private val Lo = -0.8
+  private val BinWidth = 0.2
+  private val NBins = 8
+
+  /** `cohortCol` is boolean: true = cohort A. */
   def psiByDimension(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      cohortCol: String, // boolean: true = cohort A
-      lo: Double = -0.8,
-      binWidth: Double = 0.2,
-      nBins: Int = 8): DataFrame = {
-    require(nBins >= 2 && binWidth > 0, "need >= 2 bins of positive width")
+      cohortCol: String): DataFrame = {
     val e = df.select(col(cohortCol).as("_a"),
         posexplode(col(vecCol)).as(Seq("dim", "_x")))
       .select(col("_a"), col("dim"),
-        least(greatest(floor((col("_x").cast("double") - lo) / binWidth)
-          .cast("int"), lit(0)), lit(nBins - 1)).as("_bin"))
+        least(greatest(floor((col("_x").cast("double") - Lo) / BinWidth)
+          .cast("int"), lit(0)), lit(NBins - 1)).as("_bin"))
     val observed = e.groupBy(col("dim"), col("_bin"))
       .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("_na"),
         sum(when(col("_a"), 0L).otherwise(1L)).as("_nb"))
     // full dim × bin grid: bins empty in BOTH cohorts still carry a
     // (smoothed) term when the cohort sizes differ
     val counts = e.select(col("dim")).distinct()
-      .withColumn("_bin", explode(sequence(lit(0), lit(nBins - 1))))
+      .withColumn("_bin", explode(sequence(lit(0), lit(NBins - 1))))
       .join(observed, Seq("dim", "_bin"), "left")
       .select(col("dim"), col("_bin"),
         coalesce(col("_na"), lit(0L)).as("_na"),
@@ -58,9 +61,9 @@ object Drift {
       sum(when(col(cohortCol), 1L).otherwise(0L)).as("_ta"),
       sum(when(col(cohortCol), 0L).otherwise(1L)).as("_tb"))
     val pa = (col("_na") + 1L).cast("double") /
-      (col("_ta") + nBins).cast("double")
+      (col("_ta") + NBins).cast("double")
     val pb = (col("_nb") + 1L).cast("double") /
-      (col("_tb") + nBins).cast("double")
+      (col("_tb") + NBins).cast("double")
     val term = round((pa - pb) * 1e8).cast("long") *
       round(log(pa / pb) * 1e8).cast("long")
     counts.crossJoin(broadcast(totals))

@@ -84,7 +84,7 @@ object Experiments {
     * reproducible across runs, engines and partitionings, with no
     * RNG state to seed or ship. The percentile band uses the q149
     * discrete-selection convention (an ACTUAL resample mean at sorted
-    * position ⌈p·B/100⌉, no interpolation).
+    * position ⌈p·B/100⌉, no interpolation) at p = 3 and 98.
     *
     * Contract: `idxCol` must be a dense 0..n−1 index (feed arbitrary
     * ids through globalOrderRank first); `valueCol` must be DECIMAL
@@ -98,8 +98,7 @@ object Experiments {
     * bounded by design). Nothing quadratic in n.
     */
   def bootstrapMeanCI(df: DataFrame, idxCol: String, valueCol: String,
-      resamples: Int, salt: String, loPct: Int = 3,
-      hiPct: Int = 98): DataFrame = {
+      resamples: Int, salt: String): DataFrame = {
     require(resamples >= 10, s"need at least 10 resamples: $resamples")
     val spark = df.sparkSession
     // the bounds probe rides the required count pass: a non-dense
@@ -134,9 +133,9 @@ object Experiments {
       col("_rn") === (p * resamples + 99) / 100, col("_m")))
     ranked.agg(
       count(lit(1)).as("n_resamples"),
-      at(loPct).as("ci_lo"),
+      at(3).as("ci_lo"),
       at(50).as("boot_median"),
-      at(hiPct).as("ci_hi"))
+      at(98).as("ci_hi"))
   }
 
   /** One summary row from (armCol ∈ {'A','B'}, convCol boolean):

@@ -29,10 +29,8 @@ import org.apache.spark.sql.functions._
   */
 object GraphStats {
 
-  /** One row: (n_nodes, n_edges, assortativity).
-    *
-    * With `symmetrize = true` (the default, the UNDIRECTED
-    * statistic): the operator unions the reversed list and collapses
+  /** One row: (n_nodes, n_edges, assortativity) of the UNDIRECTED
+    * statistic. The operator unions the reversed list and collapses
     * duplicates, so a node appearing only as a dst still contributes
     * its degree — on input that already carries both directions the
     * union collapses to the identity and the statistic is
@@ -41,23 +39,15 @@ object GraphStats {
     * directed row, so the count is (m + self_loops) / 2, never a
     * truncating m / 2).
     *
-    * With `symmetrize = false` (DIRECTED): the edge list is taken
-    * as-is, `n_edges` is the directed count, degrees are out-degrees
-    * on both endpoints — Newman's out–out directed assortativity
-    * variant.
-    *
     * Degree-regular graphs have zero degree variance — the 0/0
     * surfaces as NULL (both Spark non-ANSI division and the oracle
     * agree), never a fabricated 0.
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
-      dstCol: String, symmetrize: Boolean = true): DataFrame = {
+      dstCol: String): DataFrame = {
     val raw = edges.select(col(srcCol).as("_s"), col(dstCol).as("_d"))
-    val e =
-      if (symmetrize)
-        raw.union(raw.select(col("_d").as("_s"), col("_s").as("_d")))
-          .distinct()
-      else raw
+    val e = raw.union(raw.select(col("_d").as("_s"), col("_s").as("_d")))
+      .distinct()
     val deg = e.groupBy(col("_s").as("_n"))
       .agg(count(lit(1)).as("_deg"))
     val withDeg = e
@@ -80,12 +70,9 @@ object GraphStats {
     val num = (m * col("_sxy") - col("_sx") * col("_sy")).cast("double")
     val radX = (m * col("_sxx") - col("_sx") * col("_sx")).cast("double")
     val radY = (m * col("_syy") - col("_sy") * col("_sy")).cast("double")
-    val nEdges =
-      if (symmetrize) ((col("_m") + col("_sl")) / 2).cast("long")
-      else col("_m").cast("long")
     agg.crossJoin(nodes).select(
       col("n_nodes"),
-      nEdges.as("n_edges"),
+      ((col("_m") + col("_sl")) / 2).cast("long").as("n_edges"),
       round(num / (sqrt(radX) * sqrt(radY)), 6).as("assortativity"))
   }
 }

@@ -19,8 +19,8 @@ import graft.functions.expressions.SketchExpressions
   * removes the sketch's overestimates. The composed result is
   * bit-identical to the plain `GROUP BY HAVING count ≥ T`.
   *
-  * Sizing: overestimate ≤ eps·N with probability `confidence` per
-  * key. Spark's CountMinSketch allocates width = ⌈2/eps⌉ counters ×
+  * Sizing: overestimate ≤ eps·N with probability 0.99 per key.
+  * Spark's CountMinSketch allocates width = ⌈2/eps⌉ counters ×
   * depth = ⌈log₂(1/(1−conf))⌉ rows of 8 B — eps 1e-4 / conf 0.99 is
   * a ~1.1 MB sketch. For the prefilter to prune, eps·N must be small
   * against (T − typical count): size eps ≈ slack/N at the call site
@@ -39,10 +39,8 @@ object HeavyHitters {
       df: DataFrame,
       key: String,
       threshold: Long,
-      eps: Double = 1e-4,
-      confidence: Double = 0.99,
-      seed: Int = 42): DataFrame = {
-    val cms = df.stat.countMinSketch(key, eps, confidence, seed)
+      eps: Double = 1e-4): DataFrame = {
+    val cms = df.stat.countMinSketch(key, eps, 0.99, 42)
     df.filter(SketchExpressions.cmsEstimate(col(key), cms) >= threshold)
       .groupBy(col(key))
       .agg(count(lit(1)).as("n"))

@@ -33,12 +33,12 @@ object HeuristicFilters {
     * cut is `filter(col("keep"))`).
     *
     * Bounds follow the published battery, scaled to this corpus's
-    * short documents: word count in [minWords, maxWords], mean word
+    * short documents: word count in [minWords, 100000], mean word
     * length in [3, 10], symbol-bearing-word ratio < 0.1, ≥ 80 % of
     * words contain a letter, ≥ 2 pinned stopwords.
     */
   def gopherRules(df: DataFrame, idCol: String, textCol: String,
-      minWords: Int = 10, maxWords: Int = 100000): DataFrame = {
+      minWords: Int = 10): DataFrame = {
     val toks = TextFunctions.tokens(lower(col(textCol)))
     val base = df.select(col(idCol), toks.as("_tk"))
     val n = size(col("_tk"))
@@ -63,7 +63,7 @@ object HeuristicFilters {
         alphaRatio.as("alpha_ratio"),
         nStop.cast("long").as("n_stopwords"))
       .withColumn("ok_words",
-        col("n_words") >= minWords && col("n_words") <= maxWords)
+        col("n_words") >= minWords && col("n_words") <= 100000)
       .withColumn("ok_mean_len",
         col("mean_word_len") >= 3.0 && col("mean_word_len") <= 10.0)
       .withColumn("ok_symbols", col("symbol_ratio") < 0.1)

@@ -90,10 +90,10 @@ object Hits {
           .otherwise(col("_v")).as("_v"))
   }
 
-  /** @param broadcastThreshold node-count ceiling for the broadcast
-    *              regime (the [[PageRank]] knob); above it the score
-    *              frame shuffle-hash-joins against the clustered
-    *              edge caches instead.
+  /** Above [[PageRank.BroadcastThreshold]] nodes the score frame
+    * shuffle-hash-joins against the clustered edge caches instead of
+    * broadcasting.
+    *
     * @param convergeEarly stop at a renorm boundary whose NORMALIZED
     *              hub frame equals the previous boundary's — the HITS
     *              analog of [[PageRank]]'s exact fixed-point test.
@@ -121,7 +121,6 @@ object Hits {
     *         `rounds_run` when `convergeEarly` is set.
     */
   def microHits(edges: DataFrame, iterations: Int,
-      broadcastThreshold: Long = 4000000L,
       convergeEarly: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 8,
       s"iterations out of the decimal-headroom envelope: $iterations")
@@ -134,7 +133,7 @@ object Hits {
     // spent a separate checkpoint job plus a per-normalize crossJoin
     // on a 1-row scale frame for the same number)
     val n = nodes.count()
-    val bcast = n <= broadcastThreshold
+    val bcast = n <= PageRank.BroadcastThreshold
     val scale = lit(new java.math.BigDecimal(
       (BigInt(n) * 1000000).bigInteger)).cast(dec)
 

@@ -38,12 +38,11 @@ object KCore {
   def coreMembers(
       edges: DataFrame,
       k: Int,
-      rounds: Int,
-      broadcastThreshold: Long = 4000000L): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).dropDuplicates("src", "dst").persist()
-    val bcast = 2 * e.count() <= broadcastThreshold
+    val bcast = 2 * e.count() <= PageRank.BroadcastThreshold
     def side(a: DataFrame) = if (bcast) broadcast(a) else a.hint("shuffle_hash")
     def induced(alive: DataFrame): DataFrame = e
       .join(side(alive.select(col("node").as("src"))), Seq("src"))

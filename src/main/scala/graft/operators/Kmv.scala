@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.TopKByAgg
@@ -30,16 +30,19 @@ import graft.functions.expressions.TopKByAgg
   */
 object Kmv {
 
+  /** The sketch's md5-derived uniform in [0,1) of a value. */
+  private def kmvUniform(v: Column): Column =
+    (conv(substring(md5(concat(v.cast("string"), lit(":kmv_v1"))), 1, 15),
+      16, 10).cast("long").cast("double") / lit(Math.pow(2.0, 60.0)))
+
   /** Per-group distinct estimate: (group, n_exact, kmv_estimate,
     * within_bound). `n_exact` is computed alongside for the
     * contract; a production sketch would drop it.
     */
   def distinctEstimate(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int = 64, salt: String = "kmv_v1"): DataFrame = {
+      k: Int = 64): DataFrame = {
     require(k >= 8, s"KMV needs a non-trivial k: $k")
-    val u = (conv(substring(md5(concat(col(valueCol).cast("string"),
-        lit(":" + salt))), 1, 15), 16, 10).cast("long").cast("double")
-      / lit(Math.pow(2.0, 60.0)))
+    val u = kmvUniform(col(valueCol))
     val sketched = df.select(col(groupCol), col(valueCol)).distinct()
       .select(col(groupCol), col(valueCol).cast("long").as("_id"),
         u.as("_u"))
@@ -79,15 +82,13 @@ object Kmv {
     * Packing's partition-totals window).
     */
   def distinctTimeline(df: DataFrame, valueCol: String, tsCol: String,
-      k: Int = 64, salt: String = "kmv_v1"): DataFrame = {
+      k: Int = 64): DataFrame = {
     require(k >= 8, s"KMV needs a non-trivial k: $k")
     val day = (unix_micros(col(tsCol)) / lit(86400000000L)).cast("long")
     val firsts = df.select(col(valueCol).cast("long").as("_v"),
         day.as("_d"))
       .groupBy(col("_v")).agg(min(col("_d")).as("_fd"))
-    val u = (conv(substring(md5(concat(col("_v").cast("string"),
-        lit(":" + salt))), 1, 15), 16, 10).cast("long").cast("double")
-      / lit(Math.pow(2.0, 60.0)))
+    val u = kmvUniform(col("_v"))
     // one bottom-k heap + first-seen count per day: D rows, pinned so
     // the cumsum and the merge don't recompute the corpus aggregate
     val perDay = firsts
@@ -142,12 +143,9 @@ object Kmv {
     * collapse to exact values there too.
     */
   def setOperations(df: DataFrame, cohortCol: String, valueCol: String,
-      cohortA: String, cohortB: String, k: Int = 64,
-      salt: String = "kmv_v1"): DataFrame = {
+      cohortA: String, cohortB: String, k: Int = 64): DataFrame = {
     require(k >= 8, s"KMV needs a non-trivial k: $k")
-    val u = (conv(substring(md5(concat(col(valueCol).cast("string"),
-        lit(":" + salt))), 1, 15), 16, 10).cast("long").cast("double")
-      / lit(Math.pow(2.0, 60.0)))
+    val u = kmvUniform(col(valueCol))
     def sketch(cohort: String, as: String) = df
       .filter(col(cohortCol) === cohort)
       .select(col(valueCol)).distinct()

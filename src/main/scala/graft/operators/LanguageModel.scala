@@ -93,9 +93,8 @@ object LanguageModel {
     * (broadcastable when the vocab is small); ln is evaluated once per
     * bigram TYPE, not per occurrence.
     */
-  def perplexityScore(df: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame = {
-    val model = knBigramProbs(df, textCol, discount)
+  def perplexityScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val model = knBigramProbs(df, textCol)
       .select(col("w1"), col("w2"),
         round(log(col("p_kn")) * 1e8).cast("long").as("_lt"))
     val tk = TextFunctions.tokens(lower(col(textCol)))
@@ -139,9 +138,9 @@ object LanguageModel {
     * — no second scan, nothing quadratic, no per-doc arrays.
     */
   def windowedPerplexity(df: DataFrame, idCol: String, textCol: String,
-      windowTokens: Int = 16, discount: Double = 0.75): DataFrame = {
+      windowTokens: Int = 16): DataFrame = {
     require(windowTokens >= 2, s"window too small: $windowTokens")
-    val model = knBigramProbs(df, textCol, discount)
+    val model = knBigramProbs(df, textCol)
       .select(col("w1"), col("w2"),
         round(log(col("p_kn")) * 1e8).cast("long").as("_lt"))
     val tk = TextFunctions.tokens(lower(col(textCol)))
@@ -304,10 +303,9 @@ object LanguageModel {
     * stage, so the per-group array is NOT corpus-scale).
     */
   def minKProbScore(df: DataFrame, idCol: String, textCol: String,
-      kNum: Int = 1, kDen: Int = 5,
-      discount: Double = 0.75): DataFrame = {
+      kNum: Int = 1, kDen: Int = 5): DataFrame = {
     require(kNum >= 1 && kDen > kNum, s"bad K fraction: $kNum/$kDen")
-    val model = knBigramProbs(df, textCol, discount)
+    val model = knBigramProbs(df, textCol)
       .select(col("w1"), col("w2"),
         round(log(col("p_kn")) * 1e8).cast("long").as("_lt"))
     val tk = TextFunctions.tokens(lower(col(textCol)))

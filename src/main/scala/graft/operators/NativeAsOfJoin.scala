@@ -26,8 +26,7 @@ object NativeAsOfJoin {
       rightTs: String,
       rightPayload: Seq[String],
       tieBreakCol: String,
-      matchedTsCol: String = "matched_ts",
-      toleranceSeconds: Option[Long] = None): DataFrame = {
+      matchedTsCol: String = "matched_ts"): DataFrame = {
     val spark = left.sparkSession
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
       spark.experimental.extraStrategies =
@@ -51,8 +50,7 @@ object NativeAsOfJoin {
       rightPayload.map(attr(rPlan, _, "right")),
       attr(rPlan, tieBreakCol, "right"),
       org.apache.spark.sql.catalyst.expressions
-        .AttributeReference(matchedTsCol, rTsAttr.dataType, nullable = true)(),
-      toleranceSeconds.map(_ * 1000000L))
+        .AttributeReference(matchedTsCol, rTsAttr.dataType, nullable = true)())
     GraftPlanBridge.ofRows(spark, node)
   }
 }

@@ -68,13 +68,19 @@ object NearestJoin {
       leftKeys: Seq[String],
       dist: Column,
       tieBreak: Column): DataFrame = {
-    val joined = left.crossJoin(broadcast(right))
-      .withColumn("dist_km", dist)
-    val others = joined.columns.filterNot(c => leftKeys.contains(c))
-    // min_by on a struct gives lexicographic (dist, tieBreak) ordering —
-    // deterministic winner per key.
+    minByWinner(left.crossJoin(broadcast(right)).withColumn("dist_km", dist),
+      leftKeys, tieBreak)
+  }
+
+  /** One winner row per left key among `candidates` (which carry
+    * `dist_km`): min_by on a struct gives lexicographic (dist,
+    * tieBreak) ordering — a deterministic winner per key.
+    */
+  private def minByWinner(candidates: DataFrame, leftKeys: Seq[String],
+      tieBreak: Column): DataFrame = {
+    val others = candidates.columns.filterNot(c => leftKeys.contains(c))
     val ordKey = struct(col("dist_km"), tieBreak)
-    joined
+    candidates
       .groupBy(leftKeys.map(col).toSeq: _*)
       .agg(min_by(struct(others.map(col).toSeq: _*), ordKey).as("_best"))
       .select((leftKeys.map(col) ++ others.map(c => col(s"_best.$c").as(c))).toSeq: _*)
@@ -93,19 +99,23 @@ object NearestJoin {
       tieBreak = Seq(col("w_latitude"), col("w_longitude")))
   }
 
+  // nearestByGridAuto's regime constants (see its steps 1 and 2)
+  private val MinGridSites = 64
+  private val SampleSize = 512
+  private val Margin = 1.25
+
   /** [[nearestByGrid]] with the cell size derived from a SAMPLED
     * nearest-distance bound — the regime guard the fixed-cell form
     * lacks, robust to ANY site distribution (uniform, clustered,
     * lattice-with-holes):
     *
-    *  1. fewer than `minGridSites` distinct site positions (or a
+    *  1. fewer than `MinGridSites` distinct site positions (or a
     *     degenerate bounding box): the broadcast exhaustive pass wins
     *     outright — skip the grid entirely;
     *  2. otherwise, measure the true nearest-site distance of
-    *     `sampleSize` hash-picked points (one bounded broadcast pass,
-    *     the same sample-fit trick IVF uses for its quantizer) and
-    *     size the cell so the 3×3 ring's PROVABLE radius covers the
-    *     sampled maximum with `margin` — the grid pass then confirms
+    *     `SampleSize` hash-picked points (one bounded broadcast pass)
+    *     and size the cell so the 3×3 ring's PROVABLE radius covers
+    *     the sampled maximum with `Margin` — the grid pass then confirms
     *     essentially every point, and sample-missed stragglers stay
     *     exact through the fallback;
     *  3. if the resulting ring would cover a large fraction of the
@@ -123,10 +133,7 @@ object NearestJoin {
       leftKeys: Seq[String],
       latL: String, lonL: String,
       latR: String, lonR: String,
-      tieBreak: Column,
-      minGridSites: Int = 64,
-      sampleSize: Int = 512,
-      margin: Double = 1.25): DataFrame = {
+      tieBreak: Column): DataFrame = {
     val spark = left.sparkSession
     val shufflePartitions = spark.sessionState.conf.numShufflePartitions
     val dist = GeoFunctions.haversineKm(col(latL), col(lonL), col(latR), col(lonR))
@@ -144,7 +151,7 @@ object NearestJoin {
       if (n == 0) 0.0
       else (s.getAs[Double]("la1") - s.getAs[Double]("la0")) *
         (s.getAs[Double]("lo1") - s.getAs[Double]("lo0"))
-    if (nPos < minGridSites || area <= 0.0)
+    if (nPos < MinGridSites || area <= 0.0)
       return nearestByMinBy(left, right, leftKeys, dist, tieBreak)
 
     // EXACT pre-reduction: distance depends only on (lat, lon) and the
@@ -166,7 +173,7 @@ object NearestJoin {
     val sampled = left
       .select(col(latL).cast("double").as("_plat"), col(lonL).cast("double").as("_plon"))
       .orderBy(xxhash64(col(latL), col(lonL)), col(latL), col(lonL))
-      .limit(sampleSize)
+      .limit(SampleSize)
       .repartition(shufflePartitions)
     val nnRows = sampled
       .crossJoin(broadcast(sites.select(
@@ -189,7 +196,7 @@ object NearestJoin {
     def cellFor(extraDeg: Double): Double = {
       val c = math.cos(math.toRadians(math.min(worstAbsLat + extraDeg, 89.0)))
       if (c <= 0.05) Double.MaxValue
-      else dMaxKm * margin / (110.0 * c)
+      else dMaxKm * Margin / (110.0 * c)
     }
     val cell0 = cellFor(0.0)
     val cellDeg = math.max(cellFor(if (cell0.isInfinite) 0.0 else cell0), 1e-4)
@@ -248,12 +255,7 @@ object NearestJoin {
     val candidates = points.join(sites, Seq("_cla", "_clo"))
       .drop("_cla", "_clo")
       .withColumn("dist_km", dist)
-    val others = candidates.columns.filterNot(c => leftKeys.contains(c))
-    val ordKey = struct(col("dist_km"), tieBreak)
-    val gridWinners = candidates
-      .groupBy(leftKeys.map(col).toSeq: _*)
-      .agg(min_by(struct(others.map(col).toSeq: _*), ordKey).as("_best"))
-      .select((leftKeys.map(col) ++ others.map(c => col(s"_best.$c").as(c))).toSeq: _*)
+    val gridWinners = minByWinner(candidates, leftKeys, tieBreak)
 
     // provably-exact winners: closer than any possible out-of-ring site
     // (110 km/deg is a lower bound on the meridian degree; longitude

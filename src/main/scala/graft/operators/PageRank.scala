@@ -56,6 +56,13 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** Ceiling on 2·|edges| (or on nodes) below which the iterative
+    * graph operators broadcast their per-round frame — this object's,
+    * [[Hits]], [[Bfs]], [[KCore]] and [[ShortestPaths]]; above it the
+    * frame shuffle-hash-joins against the src-partitioned edge cache.
+    */
+  private[operators] val BroadcastThreshold = 4000000L
+
   /** One PageRank contribution round: pull each node's rank across
     * its out-edges, summing `R(u) div outdeg(u)` per destination.
     * `eRound` must be the cached edge frame (src, dst, outdeg) —
@@ -134,7 +141,7 @@ object PageRank {
       distinctEdges: Boolean = false,
       everyNodeHasOutEdge: Boolean = false,
       everyNodeHasInEdge: Boolean = false,
-      broadcastThreshold: Long = 4000000L,
+      broadcastThreshold: Long = BroadcastThreshold,
       convergeCheckEvery: Int = 0): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     val e0 = edges.select(col("src"), col("dst"))
@@ -280,16 +287,13 @@ object PageRank {
       edges: DataFrame,
       seeds: DataFrame,
       iterations: Int,
-      distinctEdges: Boolean = false,
       everyNodeHasOutEdge: Boolean = false,
-      broadcastThreshold: Long = 4000000L,
+      broadcastThreshold: Long = BroadcastThreshold,
       convergeCheckEvery: Int = 0): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    val clustered = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-    val eDist =
-      if (distinctEdges) clustered else clustered.dropDuplicates("src", "dst")
-    val e = eDist.withColumn("outdeg",
+    val e = edges.select(col("src"), col("dst"))
+      .repartition(col("src")).dropDuplicates("src", "dst")
+      .withColumn("outdeg",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("src"))).cast("long"))
       .persist()

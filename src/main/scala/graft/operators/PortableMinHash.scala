@@ -44,6 +44,15 @@ import graft.functions.TextFunctions
   */
 object PortableMinHash {
 
+  // the band plans: candidate band counts over one signature, the
+  // S-curve similarities the calibration table reports, and the
+  // default commit bar (catch probability at s = 0.8, in 10⁻⁶)
+  private val Plans = Seq(32, 16, 8, 4)
+  private val Calib = Seq(
+    "scurve_50" -> 0.5, "scurve_70" -> 0.7,
+    "scurve_80" -> 0.8, "scurve_90" -> 0.9)
+  private val MinCatch = 900000L
+
   /** (doc_id, toks, sig): distinct shingle set and the numHashes-slot
     * portable signature. Docs too short to shingle are dropped (no
     * signature is defined; the SQL mirror's unnest emits no rows for
@@ -151,22 +160,19 @@ object PortableMinHash {
     *
     * Scale shape: signatures once ([[signatures]], persisted), then
     * per plan one narrow (band, key) explode + two aggregations —
-    * all map-side-combinable counts; output is |plans| rows.
+    * all map-side-combinable counts; output is one row per plan
+    * (32, 16, 8 and 4 bands).
     */
   def bandPlanCalibration(
       df: DataFrame,
       idCol: String,
       textCol: String,
       numHashes: Int = 128,
-      shingleWords: Int = 2,
-      plans: Seq[Int] = Seq(32, 16, 8, 4),
-      calib: Seq[(String, Double)] = Seq(
-        "scurve_50" -> 0.5, "scurve_70" -> 0.7,
-        "scurve_80" -> 0.8, "scurve_90" -> 0.9)): DataFrame = {
-    requirePlans(numHashes, plans) // fail fast, before signatures
+      shingleWords: Int = 2): DataFrame = {
+    requirePlans(numHashes) // fail fast, before signatures
     val sigs = signatures(df, idCol, textCol, numHashes, shingleWords)
       .persist()
-    val out = planTable(sigs, numHashes, plans, calib)
+    val out = planTable(sigs, numHashes)
     sigs.unpersist()
     out
   }
@@ -174,9 +180,9 @@ object PortableMinHash {
   /** Plan-list contract shared by every banding entry point: each
     * candidate must divide the signature width, validated BEFORE any
     * signature frame is built or persist-registered. */
-  private def requirePlans(numHashes: Int, plans: Seq[Int]): Unit =
-    require(plans.nonEmpty && plans.forall(b => b > 0 && numHashes % b == 0),
-      s"every plan must divide numHashes=$numHashes: $plans")
+  private def requirePlans(numHashes: Int): Unit =
+    require(Plans.forall(b => numHashes % b == 0),
+      s"every plan must divide numHashes=$numHashes: $Plans")
 
   /** The per-plan calibration table over an already-computed (and
     * ideally persisted) signature frame — shared by
@@ -186,14 +192,12 @@ object PortableMinHash {
     */
   private def planTable(
       sigs: DataFrame,
-      numHashes: Int,
-      plans: Seq[Int],
-      calib: Seq[(String, Double)]): DataFrame = {
-    requirePlans(numHashes, plans)
-    val planRows = plans.map { b =>
+      numHashes: Int): DataFrame = {
+    requirePlans(numHashes)
+    val planRows = Plans.map { b =>
       val r = numHashes / b
       val banded = bandKeys(sigs, lit(b), lit(r))
-      val scurves = calib.map { case (name, s) =>
+      val scurves = Calib.map { case (name, s) =>
         lit(sCurveScaled(s, r, b)).as(name)
       }
       banded.groupBy(col("band_idx"), col("band_key"))
@@ -214,10 +218,11 @@ object PortableMinHash {
   /** COMMIT to a band plan from [[bandPlanCalibration]]'s table —
     * the decision a pipeline makes before running banded LSH: the
     * qualifying plan (catch probability at s = 0.8 of at least
-    * `minCatch`/10⁶) with the SMALLEST measured candidate workload,
-    * ties to fewer bands. If no plan qualifies on this corpus's
-    * signature budget, fall back to the best-recall plan (largest
-    * scurve_80, i.e. the most bands) rather than returning nothing —
+    * `minCatch`/10⁶, by default 0.9) with the SMALLEST measured
+    * candidate workload, ties to fewer bands. If no plan qualifies
+    * on this corpus's signature budget, fall back to the best-recall
+    * plan (largest scurve_80, i.e. the most bands) rather than
+    * returning nothing —
     * a dedup run with weaker-than-asked recall beats no dedup run,
     * and the `qualified` flag makes the downgrade visible. One row;
     * every ordering key an exact integer or boolean, so the choice
@@ -229,11 +234,9 @@ object PortableMinHash {
       textCol: String,
       numHashes: Int = 128,
       shingleWords: Int = 2,
-      plans: Seq[Int] = Seq(32, 16, 8, 4),
-      minCatch: Long = 900000L): DataFrame =
+      minCatch: Long = MinCatch): DataFrame =
     commitRule(
-      bandPlanCalibration(df, idCol, textCol, numHashes, shingleWords,
-        plans),
+      bandPlanCalibration(df, idCol, textCol, numHashes, shingleWords),
       minCatch)
 
   /** The commit rule over a calibration table — one definition shared
@@ -279,19 +282,13 @@ object PortableMinHash {
       textCol: String,
       numHashes: Int = 128,
       shingleWords: Int = 2,
-      plans: Seq[Int] = Seq(32, 16, 8, 4),
-      minCatch: Long = 900000L,
-      threshold: Double = 0.5,
-      calib: Seq[(String, Double)] = Seq(
-        "scurve_50" -> 0.5, "scurve_70" -> 0.7,
-        "scurve_80" -> 0.8, "scurve_90" -> 0.9)): DataFrame = {
-    requirePlans(numHashes, plans) // fail fast, before signatures
+      threshold: Double = 0.5): DataFrame = {
+    requirePlans(numHashes) // fail fast, before signatures
     val sigs = signatures(df, idCol, textCol, numHashes, shingleWords)
       .persist()
     // 1 row, materialized once: the banding below and the output
     // annotation read the same committed row
-    val commit = commitRule(planTable(sigs, numHashes, plans, calib),
-      minCatch)
+    val commit = commitRule(planTable(sigs, numHashes), MinCatch)
       .select(col("bands"), col("rows_per_band"), col("qualified"))
       .localCheckpoint(true)
 
@@ -328,8 +325,9 @@ object PortableMinHash {
     * rides the banded rows, so excluded pairs never join, not just
     * never verify).
     *
-    * Same signature family, banding, and verify as [[nearDupPairs]];
-    * `pair_kind` labels batch_vs_base vs batch_internal. In
+    * Same signature family, banding, and verify as [[nearDupPairs]]
+    * at its defaults (16 slots in 8 bands over word bigrams, Jaccard
+    * ≥ 0.5); `pair_kind` labels batch_vs_base vs batch_internal. In
     * production the base side's signatures would load from the lake
     * instead of recomputing — the operator takes whatever frames it
     * is given.
@@ -338,23 +336,17 @@ object PortableMinHash {
       base: DataFrame,
       batch: DataFrame,
       idCol: String,
-      textCol: String,
-      numHashes: Int = 16,
-      bands: Int = 8,
-      shingleWords: Int = 2,
-      threshold: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+      textCol: String): DataFrame = {
     val all = base.select(col(idCol), col(textCol), lit(false).as("_new"))
       .unionByName(
         batch.select(col(idCol), col(textCol), lit(true).as("_new")))
     val flags = all.select(col(idCol).as("doc_id"), col("_new"))
-    val sigs = signatures(all, idCol, textCol, numHashes, shingleWords)
+    val sigs = signatures(all, idCol, textCol, numHashes = 16, shingleWords = 2)
       .join(flags, "doc_id").persist()
 
     // base×base pairs are filtered out before the dedup and the verify
     // joins, so they never reach the token-set lookup
-    val verified = verifiedPairs(sigs, lit(bands), lit(rows), threshold, Seq("_new"),
+    val verified = verifiedPairs(sigs, lit(8), lit(2), 0.5, Seq("_new"),
       col("_new_a") || col("_new_b"))
       .select(col("id_a"), col("id_b"), col("jaccard_sim"),
         when(col("_new_a") && col("_new_b"), "batch_internal")

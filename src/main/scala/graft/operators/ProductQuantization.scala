@@ -62,16 +62,16 @@ object ProductQuantization {
       .withColumn("rank0", (row_number().over(w) - 1).cast("long"))
   }
 
-  /** Explode a lattice frame into `m` subvectors of `subDim` dims:
-    * (…, m, sub) — pure slicing, zero shuffle.
+  /** Explode a lattice frame's `v3` vector into `m` subvectors of
+    * `subDim` dims: (…, m, sub) — pure slicing, zero shuffle.
     */
   def subspaces(lattice: DataFrame, m: Int, subDim: Int,
-      vCol: String = "v3", out: String = "sub"): DataFrame =
+      out: String = "sub"): DataFrame =
     lattice
       .select(col("*"), explode(sequence(lit(0), lit(m - 1))).as("m"))
       .withColumn(out,
-        slice(col(vCol), col("m") * subDim + 1, lit(subDim)))
-      .drop(vCol)
+        slice(col("v3"), col("m") * subDim + 1, lit(subDim)))
+      .drop("v3")
 
   /** PQ codes: per (vector, subspace) the nearest codebook entry
     * (exact int distance, ties to the smallest code). `carry` lists
@@ -592,10 +592,10 @@ object ProductQuantization {
     */
   def adcRecall(lattice: DataFrame, idCol: String, dims: Int, m: Int,
       k: Int, nQueries: Int, topK: Int, cbSalt: String,
-      qSalt: String, maxAdcQueries: Int = 1024): DataFrame =
+      qSalt: String): DataFrame =
     recallAgainstExact(lattice, idCol, nQueries, topK, qSalt,
       adcTopK(lattice, idCol, dims, m, k, nQueries, topK,
-        cbSalt, qSalt, maxAdcQueries).select(col("q_id"), col("vec_id")))
+        cbSalt, qSalt).select(col("q_id"), col("vec_id")))
 
   /** Recall@k of the IVF→ADC pruned cut ([[ivfAdcTopK]]) against the
     * SAME exact ground truth [[adcRecall]] measures — the two recall

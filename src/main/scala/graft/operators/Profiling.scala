@@ -49,12 +49,12 @@ object Profiling {
 
   /** (col_x, col_y, corr) for every unordered column pair, in the
     * given column order. Rows with a null in ANY profiled column are
-    * excluded (one consistent n for every moment).
+    * excluded (one consistent n for every moment). Values carry as
+    * DECIMAL(18,2), so every moment sum is exact in any order.
     */
-  def correlationMatrix(df: DataFrame, cols: Seq[String],
-      scale: Int = 2): DataFrame = {
+  def correlationMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "need at least two columns")
-    val dec = s"decimal(18,$scale)"
+    val dec = "decimal(18,2)"
     val clean = df.na.drop(cols).select(cols.map(col): _*)
     val d = (c: String) => col(c).cast(dec)
     val moments =
@@ -178,8 +178,7 @@ object Profiling {
     * aggregate per call; output one row per column with the sketch
     * attached.
     */
-  def mergeableProfile(df: DataFrame, cols: Seq[String], k: Int = 64,
-      salt: String = "prof_v1"): DataFrame = {
+  def mergeableProfile(df: DataFrame, cols: Seq[String], k: Int = 64): DataFrame = {
     require(cols.nonEmpty && k >= 8, s"cols=$cols k=$k")
     val aggs = cols.flatMap { c =>
       Seq(count(lit(1)).as(s"_n_$c"),
@@ -205,7 +204,7 @@ object Profiling {
       .select(col("m.c").as("column_name"), col("m.s").as("_s"))
       .filter(col("_s").isNotNull)
       .distinct()
-    val u = (conv(substring(md5(concat(col("_s"), lit(":" + salt))),
+    val u = (conv(substring(md5(concat(col("_s"), lit(":prof_v1"))),
       1, 15), 16, 10).cast("long").cast("double")
       / lit(Math.pow(2.0, 60.0)))
     // the heap's id slot is a LONG tie-break; only the u values are
@@ -272,19 +271,18 @@ object Profiling {
     * to [[zipfFit]]: natural corpora grow vocabulary as V ≈ K·N^β
     * with β ≈ 0.4–0.6; duplicated/template corpora flatten β.
     *
-    * Checkpoints are `parts` value-deciles of the id domain
-    * (`T_k = (max_id + 1)·k div parts` — one max() scalar, no global
+    * Checkpoints are the 10 value-deciles of the id domain
+    * (`T_k = (max_id + 1)·k div 10` — one max() scalar, no global
     * row-ranking of the corpus): N_k = Σ tokens over docs with
     * id < T_k, V_k = #terms whose FIRST doc id < T_k. Both are one
-    * broadcast of the `parts`-row threshold table against corpus-
+    * broadcast of the 10-row threshold table against corpus-
     * bounded frames (the doc token counts; the per-term min-id table),
     * so the whole fit is two map-side-combinable aggregates + the
     * exact-lattice OLS. Empty prefixes (N_k = 0) are excluded.
     */
   def heapsFit(docTokens: DataFrame, idCol: String, nTokensCol: String,
-      termFirstId: DataFrame, firstIdCol: String,
-      parts: Int = 10): DataFrame = {
-    require(parts >= 3, s"need at least 3 checkpoints: $parts")
+      termFirstId: DataFrame, firstIdCol: String): DataFrame = {
+    val parts = 10
     val ks = docTokens.sparkSession.range(1, parts + 1)
       .select(col("id").as("_k"))
     val maxId = docTokens.agg(max(col(idCol)).cast("long").as("_mx"))

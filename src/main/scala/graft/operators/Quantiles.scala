@@ -198,8 +198,8 @@ object RobustStats {
 
   /** Per-group MAD outlier audit over an integer-valued column:
     * median (lower convention), MAD = median(|x − med|), and the
-    * count of rows with |x − med| > (kNum/kDen)·MAD — the default
-    * 44478/10000 is the normal-consistent 3σ equivalent
+    * count of rows with |x − med| > (44478/10000)·MAD — the
+    * normal-consistent 3σ equivalent
     * (3·1.4826 = 4.4478), applied as an EXACT cross-multiplied
     * integer comparison so the flag needs no float conventions.
     *
@@ -211,9 +211,7 @@ object RobustStats {
     * instead of dividing by zero.
     */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
-      idCol: String, kNum: Long = 44478L,
-      kDen: Long = 10000L): DataFrame = {
-    require(kNum > 0 && kDen > 0, s"bad threshold: $kNum/$kDen")
+      idCol: String): DataFrame = {
     val base = df.select(col(groupCol).as("_g"),
       col(valueCol).cast("long").as("_v"), col(idCol).as("_id"))
       .withColumn("_w", lit(1L))
@@ -230,7 +228,7 @@ object RobustStats {
       .agg(count(lit(1)).as("n_rows"),
         min(col("_med")).as("median"),
         min(col("_mad")).as("mad"),
-        sum(when(col("_d") * kDen > col("_mad") * kNum, 1L)
+        sum(when(col("_d") * 10000L > col("_mad") * 44478L, 1L)
           .otherwise(0L)).as("n_outliers"))
       .withColumn("outlier_frac",
         col("n_outliers").cast("double") / col("n_rows").cast("double"))

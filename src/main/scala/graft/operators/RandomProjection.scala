@@ -27,11 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object RandomProjection {
 
-  /** ±1 from the first md5 hex nibble of "salt:i:j" (high nibble ⇒
+  /** ±1 from the first md5 hex nibble of "jl_v1:i:j" (high nibble ⇒
     * −1) — the same expression the oracle writes in SQL.
     */
-  private def signCol(salt: String, i: Column, j: Column): Column =
-    when(substring(md5(concat(lit(salt + ":"), i.cast("string"),
+  private def signCol(i: Column, j: Column): Column =
+    when(substring(md5(concat(lit("jl_v1:"), i.cast("string"),
       lit(":"), j.cast("string"))), 1, 1)
       .isin("8", "9", "a", "b", "c", "d", "e", "f"), -1L).otherwise(1L)
 
@@ -45,7 +45,7 @@ object RandomProjection {
     * extra corpus pass just to learn a constant.
     */
   def project(df: DataFrame, idCol: String, vecCol: String,
-      inDims: Int, outDims: Int, salt: String = "jl_v1"): DataFrame = {
+      inDims: Int, outDims: Int): DataFrame = {
     val root = math.sqrt(outDims.toDouble)
     require(outDims >= 1 && root == math.floor(root),
       s"outDims must be a perfect square for an exact sqrt: $outDims")
@@ -55,7 +55,7 @@ object RandomProjection {
       .select(col(idCol), col("i"), lat6(col("_x")).as("_v6"))
     val signs = spark.range(outDims.toLong).select(col("id").as("j"))
       .crossJoin(spark.range(inDims.toLong).select(col("id").cast("int").as("i")))
-      .select(col("i"), col("j"), signCol(salt, col("i"), col("j")).as("_s"))
+      .select(col("i"), col("j"), signCol(col("i"), col("j")).as("_s"))
     // dividing the lattice sum by √k as DOUBLES would land ~1/√k of
     // the outputs exactly on a .0000005 decimal boundary, where
     // Spark's BigDecimal-exact rounding and another engine's
@@ -79,8 +79,7 @@ object RandomProjection {
     * readout, hash-exact because nothing here is sampled.
     */
   def distortionPairs(df: DataFrame, idCol: String, vecCol: String,
-      inDims: Int, outDims: Int, maxId: Long,
-      salt: String = "jl_v1"): DataFrame = {
+      inDims: Int, outDims: Int, maxId: Long): DataFrame = {
     require(maxId % 2 == 0, s"maxId must be even (complete pairs): $maxId")
     val sub = df.filter(col(idCol) < maxId)
     val e = sub.select(col(idCol), posexplode(col(vecCol)).as(Seq("i", "_x")))
@@ -93,7 +92,7 @@ object RandomProjection {
       .filter(col("_nd") === 2) // both pair members present at this dim
       .groupBy(col("m"))
       .agg(sum(col("_d6") * col("_d6")).as("_o12"))
-    val proj = project(sub, idCol, vecCol, inDims, outDims, salt)
+    val proj = project(sub, idCol, vecCol, inDims, outDims)
       .select((col(idCol) / 2L).cast("long").as("m"),
         pmod(col(idCol), lit(2L)).as("_side"), col("out_dim"),
         lat6(col("value")).as("_y6"))

@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object RankFusion {
 
+  /** The RRF smoothing constant k of 1/(k + rank) — Cormack et al.'s 60. */
+  private val K = 60
+
   /** Half-up lattice reciprocal: round(10⁸ / (k + rank)). */
   def rrfPoints(rank: Column, k: Int): Column = {
     val d = rank + k
@@ -34,14 +37,13 @@ object RankFusion {
     * for it (the RRF convention for disjoint result lists).
     */
   def fuse(a: DataFrame, b: DataFrame, idCol: String, rankA: String,
-      rankB: String, k: Int = 60): DataFrame = {
-    require(k >= 1, s"rrf k must be positive: $k")
+      rankB: String): DataFrame = {
     val joined = a.select(col(idCol), col(rankA))
       .join(b.select(col(idCol), col(rankB)), Seq(idCol), "full_outer")
       .withColumn("rrf_points",
-        coalesce(when(col(rankA).isNotNull, rrfPoints(col(rankA), k)),
+        coalesce(when(col(rankA).isNotNull, rrfPoints(col(rankA), K)),
           lit(0L)) +
-        coalesce(when(col(rankB).isNotNull, rrfPoints(col(rankB), k)),
+        coalesce(when(col(rankB).isNotNull, rrfPoints(col(rankB), K)),
           lit(0L)))
     Ranks.globalRankBy(joined, idCol, "fused_rank",
       Seq(-col("rrf_points"), col(idCol)))

@@ -84,12 +84,11 @@ object Ranks {
     * the chain. Two two-level global ranks (no one-partition
     * window), one join on id, one aggregate.
     */
-  def spearman(df: DataFrame, idCol: String, xCol: String, yCol: String,
-      partitions: Int = 32): DataFrame = {
+  def spearman(df: DataFrame, idCol: String, xCol: String, yCol: String): DataFrame = {
     val rx = globalRankBy(df.select(col(idCol), col(xCol)), idCol, "_rx",
-      Seq(col(xCol)), partitions).select(col(idCol), col("_rx"))
+      Seq(col(xCol))).select(col(idCol), col("_rx"))
     val ry = globalRankBy(df.select(col(idCol), col(yCol)), idCol, "_ry",
-      Seq(col(yCol)), partitions).select(col(idCol), col("_ry"))
+      Seq(col(yCol))).select(col(idCol), col("_ry"))
     val dec = "decimal(38,0)"
     rx.join(ry, Seq(idCol))
       .agg(count(lit(1)).as("n"),

@@ -113,6 +113,11 @@ object RepeatedSpans {
     out
   }
 
+  // selfRepetitionProfile's gates, (n, max coverage): top-gram for
+  // small n, duplicated-gram for large n
+  private val TopGramMax = Seq(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
+  private val DupGramMax = Seq(5 -> 0.15, 10 -> 0.10)
+
   /** WITHIN-document self-repetition profile — the Gopher/MassiveText
     * repetition rules (Rae et al. 2021 Table A1) adapted to token
     * units: for each small n the fraction of token positions covered
@@ -138,13 +143,8 @@ object RepeatedSpans {
     * nothing corpus-pairwise anywhere.
     */
   def selfRepetitionProfile(df: DataFrame, idCol: String,
-      textCol: String,
-      topNs: Seq[Int] = Seq(2, 3, 4),
-      dupNs: Seq[Int] = Seq(5, 10),
-      topMax: Map[Int, Double] = Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16),
-      dupMax: Map[Int, Double] = Map(5 -> 0.15, 10 -> 0.10)): DataFrame = {
-    require(topNs.forall(topMax.contains) && dupNs.forall(dupMax.contains),
-      "every profiled n needs a threshold")
+      textCol: String): DataFrame = {
+    val (topNs, dupNs) = (TopGramMax.map(_._1), DupGramMax.map(_._1))
     val toks = TextFunctions.tokens(lower(col(textCol)))
     val base = df.select(col(idCol), toks.as("_tk"))
       .select(col(idCol), col("_tk"),
@@ -202,8 +202,8 @@ object RepeatedSpans {
     }
     val topCols = topNs.map(n => frac(s"_cov_top$n").as(s"top${n}gram_frac"))
     val dupCols = dupNs.map(n => frac(s"_cov_dup$n").as(s"dup${n}gram_frac"))
-    val keep = (topNs.map(n => col(s"top${n}gram_frac") < topMax(n)) ++
-      dupNs.map(n => col(s"dup${n}gram_frac") < dupMax(n)))
+    val keep = (TopGramMax.map { case (n, mx) => col(s"top${n}gram_frac") < mx } ++
+      DupGramMax.map { case (n, mx) => col(s"dup${n}gram_frac") < mx })
       .reduce(_ && _)
     val out = joined
       .select(col(idCol) +: col("n_tokens") +: (topCols ++ dupCols): _*)

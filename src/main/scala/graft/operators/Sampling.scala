@@ -58,12 +58,11 @@ object Sampling {
     else f"$t%04x"
   }
 
-  /** Train/val/test split assignment column. */
-  def splitColumn(id: Column, salt: String,
-      trainFrac: Double = 0.8, valFrac: Double = 0.1): Column = {
+  /** 80/10/10 train/val/test split assignment column. */
+  def splitColumn(id: Column, salt: String): Column = {
     val h4 = substring(hashUniform(id, salt), 1, 4)
-    when(h4 < hexThreshold(trainFrac), "train")
-      .when(h4 < hexThreshold(trainFrac + valFrac), "val")
+    when(h4 < hexThreshold(0.8), "train")
+      .when(h4 < hexThreshold(0.9), "val")
       .otherwise("test")
   }
 
@@ -81,26 +80,24 @@ object Sampling {
     * shuffle beyond whatever produced the membership frame.
     */
   def leakageSafeSplit(membership: DataFrame, idCol: String,
-      groupCol: String, trainFrac: Double = 0.8, valFrac: Double = 0.1,
-      salt: String = "cluster_split_v1"): DataFrame =
+      groupCol: String): DataFrame =
     membership.select(col(idCol), col(groupCol),
-      splitColumn(col(groupCol), salt, trainFrac, valFrac).as("split"))
+      splitColumn(col(groupCol), "cluster_split_v1").as("split"))
 
   /** Deterministic stratified subsample: per-stratum fractions (e.g.
     * language rebalancing — downsample dominant languages, keep the
-    * rest). Strata missing from `fractions` keep `defaultFraction`.
+    * rest). Strata missing from `fractions` are kept whole.
     * One scan, no shuffle: the filter is a pure per-row predicate,
     * unlike `DataFrame.stat.sampleBy` whose RNG draw depends on row
     * order within partitions.
     */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-      fractions: Map[String, Double], defaultFraction: Double = 1.0,
-      salt: String = "strat_v1"): DataFrame = {
+      fractions: Map[String, Double]): DataFrame = {
     val threshold = fractions.toSeq.sortBy(_._1)
-      .foldLeft(lit(hexThreshold(defaultFraction))) { case (acc, (stratum, f)) =>
+      .foldLeft(lit(hexThreshold(1.0))) { case (acc, (stratum, f)) =>
         when(col(stratumCol) === stratum, lit(hexThreshold(f))).otherwise(acc)
       }
-    df.filter(substring(hashUniform(col(idCol), salt), 1, 4) < threshold)
+    df.filter(substring(hashUniform(col(idCol), "strat_v1"), 1, 4) < threshold)
   }
 
   /** Exact-quota stratified selection — where the hash-threshold
@@ -174,11 +171,11 @@ object Sampling {
     * Output: (idCol, w, m) for selected rows only (m ≥ 1).
     */
   def ppsSystematicSample(df: DataFrame, idCol: String, weightCol: String,
-      k: Int, salt: String = "pps_v1"): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     val w = org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol), col(weightCol).cast("long").as("w"),
-      hashUniform(col(idCol), salt).as("_draw"))
+      hashUniform(col(idCol), "pps_v1").as("_draw"))
     val parted = base.repartitionByRange(col("_draw"), col(idCol))
       .withColumn("_pid", spark_partition_id())
     val wIn = w.partitionBy(col("_pid")).orderBy(col("_draw"), col(idCol))
@@ -213,26 +210,25 @@ object Sampling {
     * draw falls under `frac(w)` — so a stratum with weight 2.5 appears
     * ~2.5× and one with weight 0.5 is half-sampled, with E[copies] =
     * w exactly (up to the 1/65536 threshold quantization). Output adds
-    * a `copy` index (1..n). Explode-based: stays a narrow per-row op,
-    * no shuffle; the output size is Σ wᵢ·nᵢ by construction.
+    * a `copy` index (1..n). Strata missing from `weights` weigh 1.
+    * Explode-based: stays a narrow per-row op, no shuffle; the output
+    * size is Σ wᵢ·nᵢ by construction.
     */
   def mixtureWeight(df: DataFrame, idCol: String, stratumCol: String,
-      weights: Map[String, Double], defaultWeight: Double = 1.0,
-      salt: String = "mix_v1"): DataFrame = {
-    require((weights.values ++ Seq(defaultWeight)).forall(_ >= 0.0),
-      "weights must be non-negative")
+      weights: Map[String, Double]): DataFrame = {
+    require(weights.values.forall(_ >= 0.0), "weights must be non-negative")
     def whole(w: Double): Long = math.floor(w).toLong
     def fracThresh(w: Double): String = hexThreshold(w - math.floor(w))
     val base = weights.toSeq.sortBy(_._1)
-      .foldLeft(lit(whole(defaultWeight))) { case (acc, (stratum, w)) =>
+      .foldLeft(lit(whole(1.0))) { case (acc, (stratum, w)) =>
         when(col(stratumCol) === stratum, lit(whole(w))).otherwise(acc)
       }
     val thresh = weights.toSeq.sortBy(_._1)
-      .foldLeft(lit(fracThresh(defaultWeight))) { case (acc, (stratum, w)) =>
+      .foldLeft(lit(fracThresh(1.0))) { case (acc, (stratum, w)) =>
         when(col(stratumCol) === stratum, lit(fracThresh(w))).otherwise(acc)
       }
     val extra = when(
-      substring(hashUniform(col(idCol), salt), 1, 4) < thresh, 1L).otherwise(0L)
+      substring(hashUniform(col(idCol), "mix_v1"), 1, 4) < thresh, 1L).otherwise(0L)
     df.withColumn("_copies", base + extra)
       .filter(col("_copies") > 0L)
       .withColumn("copy", explode(sequence(lit(1L), col("_copies"))))
@@ -256,11 +252,11 @@ object Sampling {
     * global sort.
     */
   def capPerGroup(df: DataFrame, idCol: String, groupCol: String,
-      cap: Int, salt: String = "cap_v1"): DataFrame = {
+      cap: Int): DataFrame = {
     require(cap >= 1, s"cap must be positive: $cap")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol))
-      .orderBy(hashUniform(col(idCol), salt), col(idCol))
+      .orderBy(hashUniform(col(idCol), "cap_v1"), col(idCol))
     df.withColumn("_rk", row_number().over(w))
       .filter(col("_rk") <= cap)
       .drop("_rk")
@@ -574,8 +570,7 @@ object Sampling {
     * pass. Nothing driver-side, nothing quadratic.
     */
   def distributionMatch(source: DataFrame, target: DataFrame,
-      idCol: String, binExpr: Column, salt: String = "distmatch_v1")
-      : DataFrame = {
+      idCol: String, binExpr: Column): DataFrame = {
     val sBins = source.select(binExpr.as("_bin"))
       .groupBy(col("_bin")).agg(count(lit(1)).as("_ns"))
     val tBins = target.select(binExpr.as("_bin"))
@@ -592,7 +587,7 @@ object Sampling {
           / (col("_ns") * col("_T")).cast("double"))
       .withColumn("_p", col("_ratio") / max(col("_ratio")).over(whole))
       .select(col("_bin"), col("_p"))
-    val u = (conv(substring(hashUniform(col(idCol), salt), 1, 15), 16, 10)
+    val u = (conv(substring(hashUniform(col(idCol), "distmatch_v1"), 1, 15), 16, 10)
       .cast("long").cast("double") / lit(Math.pow(2.0, 60.0)))
     source.withColumn("_bin", binExpr)
       .join(broadcast(probs), Seq("_bin"))
@@ -617,34 +612,24 @@ object Sampling {
     * Scale shape: one projection computes keys, then the bounded-heap
     * top-k aggregate (TopKByAgg) — k entries per group survive
     * partial aggregation, so the "top-k keys" step is one map-side-
-    * combined shuffle, never a global sort. Grouped variant: one
-    * reservoir per `groupCol` value.
+    * combined shuffle, never a global sort.
     */
   def weightedReservoir(df: DataFrame, idCol: String, weightCol: String,
-      k: Int, salt: String = "wres_v1",
-      groupCol: Option[String] = None): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 1, s"sample size must be positive: $k")
-    val h = conv(substring(hashUniform(col(idCol), salt), 1, 15), 16, 10)
+    val h = conv(substring(hashUniform(col(idCol), "wres_v1"), 1, 15), 16, 10)
       .cast("long")
     val u = (h + 1L).cast("double") / lit(Math.pow(2.0, 60.0))
     val lnLat = round(log(u) * 1e8).cast("long")
     val key = lnLat.cast("double") / 1e8 / col(weightCol).cast("double")
-    val keyed = df
-      .filter(col(weightCol).cast("double") > 0.0)
-      .select(groupCol.map(col).toSeq :+ col(idCol).cast("long").as("_id")
-        :+ key.as("_key"): _*)
-    val grouped = groupCol match {
-      case Some(g) => keyed.groupBy(col(g))
-      case None => keyed.groupBy(lit(1).as("_g"))
-    }
-    val heap = grouped
+    df.filter(col(weightCol).cast("double") > 0.0)
+      .select(col(idCol).cast("long").as("_id"), key.as("_key"))
+      .groupBy(lit(1).as("_g"))
       .agg(graft.functions.expressions.TopKByAgg
         .topKBy(col("_key"), col("_id"), k).as("_top"))
-      .select(groupCol.map(col).toSeq
-        :+ posexplode(col("_top")).as(Seq("_pos", "_e")): _*)
-    heap.select(groupCol.map(col).toSeq ++ Seq(
-      col("_e.id").as(idCol),
-      (col("_pos") + 1).cast("int").as("rank"),
-      round(col("_e.score"), 6).as("sample_key")): _*)
+      .select(posexplode(col("_top")).as(Seq("_pos", "_e")))
+      .select(col("_e.id").as(idCol),
+        (col("_pos") + 1).cast("int").as("rank"),
+        round(col("_e.score"), 6).as("sample_key"))
   }
 }

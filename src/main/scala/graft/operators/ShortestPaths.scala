@@ -38,12 +38,11 @@ object ShortestPaths {
   def bounded(
       edges: DataFrame,
       seeds: DataFrame,
-      rounds: Int,
-      broadcastThreshold: Long = 4000000L): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
     val e = edges.select(col("src"), col("dst"), col("w"))
       .repartition(col("src")).persist()
-    val bcast = 2 * e.count() <= broadcastThreshold
+    val bcast = 2 * e.count() <= PageRank.BroadcastThreshold
     def side(a: DataFrame) = if (bcast) broadcast(a) else a.hint("shuffle_hash")
     var dist = seeds.select(col("node")).distinct()
       .withColumn("d", lit(0L)).localCheckpoint(true)

@@ -14,10 +14,12 @@ import graft.functions.VectorFunctions._
   *    broadcast (queries ≪ corpus), so the corpus is scanned once with
   *    no shuffle of the big side — the correct baseline even at 100 TB
   *    when the query batch is small.
-  *  - [[ivfTopK]]: IVF — KMeans coarse quantizer partitions the corpus
-  *    by nearest centroid; a query probes only its `nprobe` closest
-  *    cells. Corpus assignment is one pass + a bucket-keyed shuffle;
-  *    search touches ~nprobe/nlist of the data.
+  *  - [[ivfTopKPortable]]: IVF — a coarse quantizer partitions the
+  *    corpus by nearest centroid; a query probes only its `nprobe`
+  *    closest cells. Corpus assignment is one pass + a cell-keyed
+  *    join; search touches ~nprobe/nlist of the data. At
+  *    `nprobe = nlist` every cell is probed and the result equals
+  *    [[bruteForceTopK]] row for row.
   */
 object Similarity {
 
@@ -42,53 +44,14 @@ object Similarity {
         col("_rn").as("rank"))
   }
 
-  /** IVF (inverted-file) ANN: coarse quantizer cells + nprobe search.
-    * Returns the same schema as [[bruteForceTopK]]; recall < 1 by
-    * construction (ANN), deterministic given the fixed seed.
-    *
-    * Scale design: the quantizer is fit on a bounded driver-side
-    * sample (the standard IVF recipe — FAISS trains its coarse
-    * quantizer on a sample too), then cell assignment is a single
-    * compiled-kernel pass over the corpus with the centroid table as a
-    * plan constant — no iterative Spark jobs, no per-row ML pipeline,
-    * no join blow-up. At 100 TB the corpus is touched exactly once for
-    * assignment and candidates shuffle only by cell.
-    */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      corpusId: String, corpusVec: String,
-      queryId: String, queryVec: String,
-      k: Int,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      seed: Long = 42L,
-      maxSample: Int = 16384): DataFrame = {
-    val spark = corpus.sparkSession
-
-    // 1. coarse quantizer fit on a deterministic bounded sample.
-    //    Ordering by a seeded hash of the id (not the id itself)
-    //    decorrelates the sample from ingest order — ids commonly track
-    //    time/source, and a prefix sample would train the quantizer on
-    //    a biased slice. xxhash64 is stable, so runs stay reproducible.
-    val sample: Array[Array[Double]] = corpus
-      .select(toDouble(col(corpusVec)).as("_v"), col(corpusId).as("_id"))
-      .orderBy(xxhash64(col("_id"), lit(seed)), col("_id")).limit(maxSample)
-      .select("_v").collect()
-      .map(_.getSeq[Double](0).toArray)
-    val centroids = fitCentroidsLocal(sample, nlist, maxIter = 20, seed = seed)
-    ivfSearch(corpus, queries, corpusId, corpusVec, queryId, queryVec,
-      k, nprobe, centroids)
-  }
-
-  /** IVF with a PORTABLE coarse quantizer, making the WHOLE ANN
-    * operator — cell assignment, probe ranking, candidate pruning and
-    * top-k — hash-checkable against an external SQL oracle even with
-    * real pruning (`nprobe < nlist`), which the k-means variant can't
-    * be (RNG-seeded quantizer):
+  /** IVF (inverted-file) ANN with a PORTABLE coarse quantizer, making
+    * the WHOLE ANN operator — cell assignment, probe ranking, candidate
+    * pruning and top-k — hash-checkable against an external SQL oracle
+    * even with real pruning (`nprobe < nlist`), which an RNG-seeded
+    * (k-means) quantizer can't be:
     *
     *   - centroids = the `nlist` corpus vectors ranked first by
-    *     `(md5(id ":" salt), id)` — a deterministic, engine-neutral
+    *     `(md5(id ":ivf_v1"), id)` — a deterministic, engine-neutral
     *     decorrelated draw (md5 rank ⊥ ingest order); cell id =
     *     position in that ranking
     *   - cell assignment / probe ranking / cosine all accumulate in
@@ -97,9 +60,10 @@ object Similarity {
     *     decision, including WHICH cells are pruned, is bit-
     *     reproducible in SQL
     *
-    * Same plan shape as [[ivfTopK]] (search is shared): one compiled
-    * assignment pass, centroid table as plan constant, candidates
-    * touch ~nprobe/nlist of the corpus.
+    * Plan shape: one compiled assignment pass with the centroid table
+    * as a plan constant, a tiny broadcast probe join, then an
+    * exact-cosine top-k over candidates that touch ~nprobe/nlist of
+    * the corpus. Returns the same schema as [[bruteForceTopK]].
     */
   def ivfTopKPortable(
       corpus: DataFrame,
@@ -108,32 +72,17 @@ object Similarity {
       queryId: String, queryVec: String,
       k: Int,
       nlist: Int = 8,
-      nprobe: Int = 3,
-      salt: String = "ivf_v1"): DataFrame = {
-    // bounded collect: exactly nlist centroid rows
+      nprobe: Int = 3): DataFrame = {
+    val spark = corpus.sparkSession
+
+    // 1. bounded collect: exactly nlist centroid rows
     val centroids: Array[Array[Double]] = corpus
       .select(col(corpusId).as("_id"), toDouble(col(corpusVec)).as("_v"))
-      .orderBy(md5(concat(col("_id").cast("string"), lit(":" + salt))),
+      .orderBy(md5(concat(col("_id").cast("string"), lit(":ivf_v1"))),
         col("_id"))
       .limit(nlist)
       .select("_v").collect()
       .map(_.getSeq[Double](0).toArray)
-    ivfSearch(corpus, queries, corpusId, corpusVec, queryId, queryVec,
-      k, nprobe, centroids)
-  }
-
-  /** Shared IVF search given a fitted centroid table: assignment →
-    * probe → candidate join → exact-cosine top-k.
-    */
-  private def ivfSearch(
-      corpus: DataFrame,
-      queries: DataFrame,
-      corpusId: String, corpusVec: String,
-      queryId: String, queryVec: String,
-      k: Int,
-      nprobe: Int,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val spark = corpus.sparkSession
 
     // 2. corpus → cell assignment: one compiled pass, no shuffle
     val assigned = corpus.withColumn("_cell",
@@ -163,85 +112,6 @@ object Similarity {
       .filter(col("_rn") <= k)
       .select(col(queryId), col(corpusId), round(col("cosine_sim"), 6).as("cosine_sim"),
         col("_rn").as("rank"))
-  }
-
-  /** Deterministic driver-side Lloyd's k-means with k-means++ seeding,
-    * for quantizer training on a bounded sample (never the full
-    * corpus). Empty clusters keep their previous center.
-    */
-  private[operators] def fitCentroidsLocal(
-      vecs: Array[Array[Double]],
-      k: Int,
-      maxIter: Int,
-      seed: Long): Array[Array[Double]] = {
-    require(vecs.nonEmpty, "quantizer sample is empty")
-    val n = vecs.length
-    val dim = vecs(0).length
-    val kEff = math.min(k, n)
-    val rnd = new scala.util.Random(seed)
-
-    def sqDist(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var i = 0
-      while (i < dim) { val t = a(i) - b(i); d += t * t; i += 1 }
-      d
-    }
-
-    // k-means++ seeding
-    val centers = Array.ofDim[Array[Double]](kEff)
-    centers(0) = vecs(rnd.nextInt(n)).clone()
-    val d2 = Array.fill(n)(Double.MaxValue)
-    var c = 1
-    while (c < kEff) {
-      var i = 0
-      while (i < n) { d2(i) = math.min(d2(i), sqDist(vecs(i), centers(c - 1))); i += 1 }
-      val total = d2.sum
-      var target = rnd.nextDouble() * total
-      var idx = 0
-      while (idx < n - 1 && target > d2(idx)) { target -= d2(idx); idx += 1 }
-      centers(c) = vecs(idx).clone()
-      c += 1
-    }
-
-    // Lloyd iterations until convergence or maxIter
-    val assign = Array.fill(n)(-1)
-    var iter = 0
-    var moved = true
-    while (iter < maxIter && moved) {
-      moved = false
-      var i = 0
-      while (i < n) {
-        var best = 0; var bestD = Double.MaxValue; var j = 0
-        while (j < kEff) {
-          val d = sqDist(vecs(i), centers(j))
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
-        if (assign(i) != best) { assign(i) = best; moved = true }
-        i += 1
-      }
-      if (moved) {
-        val sums = Array.fill(kEff)(new Array[Double](dim))
-        val counts = new Array[Int](kEff)
-        i = 0
-        while (i < n) {
-          val a = assign(i); counts(a) += 1
-          var d0 = 0
-          while (d0 < dim) { sums(a)(d0) += vecs(i)(d0); d0 += 1 }
-          i += 1
-        }
-        var j = 0
-        while (j < kEff) {
-          if (counts(j) > 0) {
-            var d0 = 0
-            while (d0 < dim) { sums(j)(d0) /= counts(j); d0 += 1 }
-            centers(j) = sums(j)
-          }
-          j += 1
-        }
-      }
-      iter += 1
-    }
-    centers
   }
 
   /** Symmetric per-vector int8 quantization — the storage/bandwidth

@@ -29,8 +29,7 @@ object SortedNeighborhood {
     * jaccard_sim) with id_a < id_b in SORT order (a precedes b).
     */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      window: Int = 3, threshold: Double = 0.5,
-      partitions: Int = 32): DataFrame = {
+      window: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(window >= 1 && window <= 100, s"window out of range: $window")
     val toks = TextFunctions.tokens(lower(col(textCol)))
     val keyed = df.select(col(idCol).as("_id"), toks.as("_toks"))
@@ -40,7 +39,7 @@ object SortedNeighborhood {
 
     // two-level global rank by (_key, _id) — the shared Ranks helper
     val ranked = Ranks.globalRankBy(keyed, "_id", "_rank",
-      Seq(col("_key")), partitions)
+      Seq(col("_key")))
     val spark = df.sparkSession
     val right = ranked.select(col("_rank").as("_rank_b"),
       col("_id").as("id_b"), col("_toks").as("t_b"))

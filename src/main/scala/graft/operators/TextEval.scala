@@ -15,8 +15,8 @@ object TextEval {
     * stops a candidate from farming credit by repeating one
     * reference word.
     *
-    * @param pairs (idC, idR) — one row per pair to score
-    * @param grams (docId, gram) — one row per gram OCCURRENCE
+    * @param pairs (id_c, id_r) — one row per pair to score
+    * @param grams (doc_id, gram) — one row per gram OCCURRENCE
     *              (duplicates carry the multiset counts)
     *
     * Zero-overlap pairs still score (P = R = F1 = 0), as do empty
@@ -29,13 +29,8 @@ object TextEval {
     * appear in `pairs` (semi-joined first), and the per-pair argsum is
     * map-side combinable. No windows, no driver state.
     */
-  def rougeClipped(
-      pairs: DataFrame,
-      grams: DataFrame,
-      idC: String = "id_c",
-      idR: String = "id_r",
-      docIdCol: String = "doc_id",
-      gramCol: String = "gram"): DataFrame = {
+  def rougeClipped(pairs: DataFrame, grams: DataFrame): DataFrame = {
+    val (idC, idR, docIdCol, gramCol) = ("id_c", "id_r", "doc_id", "gram")
     val p = pairs.select(col(idC), col(idR))
     val counts = grams
       .groupBy(col(docIdCol), col(gramCol))
@@ -79,7 +74,10 @@ object TextEval {
       .withColumn("f1", round(f1, 6))
   }
 
-  /** Corpus-level BLEU (Papineni et al. 2002) over (candidate,
+  /** BLEU's n-gram orders 1..4 (the standard BLEU-4). */
+  private val BleuMaxN = 4
+
+  /** Corpus-level BLEU-4 (Papineni et al. 2002) over (candidate,
     * reference) token-array pairs — the generation-eval companion to
     * [[rougeClipped]]: per-order clipped precisions are CORPUS
     * ratios (clip and total each summed over documents before the
@@ -93,7 +91,7 @@ object TextEval {
     * half-up lattice integer −((r−c)·2·10⁸ + c) div (2c) (never a
     * double round — (1 − r/c)·10⁸ can land on representable halves
     * where engine round modes differ), and
-    * log_bleu = (maxN·bp_e8 + Σ ln_pn_e8) / (maxN·10⁸) is ONE
+    * log_bleu = (4·bp_e8 + Σ ln_pn_e8) / (4·10⁸) is ONE
     * division of an exact integer by a constant. A zero clip at any
     * order leaves ln_pn_e8 and log_bleu null (BLEU = 0; no smoothing
     * is silently applied).
@@ -105,12 +103,12 @@ object TextEval {
     * Scale shape: every order rides one tagged (doc, n, gram) count
     * aggregate per side and ONE clip join (map-side combinable
     * sums); lens and all totals come from one more corpus pass — 3
-    * scans regardless of maxN. The ≤ maxN per-order rows
+    * scans at every order. The 4 per-order rows
     * checkpoint-pin and the scalar summary broadcasts back.
     */
   def bleuCorpus(df: DataFrame, idCol: String, candCol: String,
-      refCol: String, maxN: Int = 4): DataFrame = {
-    require(maxN >= 1 && maxN <= 8, s"unreasonable BLEU order: $maxN")
+      refCol: String): DataFrame = {
+    val maxN = BleuMaxN
     // all orders AND both sides ride ONE tagged gram explode from one
     // scan (r16: the chrfCorpus shape ported back here — this operator
     // previously ran one explode scan per side plus an inner clip
@@ -253,9 +251,12 @@ object TextEval {
           .as("rouge_l_f"))
   }
 
+  /** chrF's character n-gram orders 1..6 (the paper's). */
+  private val ChrfMaxN = 6
+
   /** Corpus chrF2 (Popović 2015) — the character-level MT/generation
     * metric that credits morphology and typo-level overlap BLEU's
-    * word grams miss. Character n-grams n = 1..`maxN` (the paper's 6)
+    * word grams miss. Character n-grams n = 1..6 (the paper's)
     * over WHITESPACE-FREE strings (the caller strips separators —
     * the chrF convention), clipped multiset matches micro-averaged
     * over the corpus, β = 2 (recall weighted 2×).
@@ -270,7 +271,7 @@ object TextEval {
     * int64 products overflow at 100-TB gram counts). The headline
     * chrF = mean of F_n is computed on the exact half-up 1e-8
     * lattice (fn_e8 = (10·M·10⁸ + den) div (2·den), the q291
-    * brevity-penalty trick — never a double round), so the ≤ maxN-row
+    * brevity-penalty trick — never a double round), so the 6-row
     * integer sum is order-independent and the final score is one
     * more exact division. A dry order (no grams at either side)
     * leaves f_n and chrf null rather than silently smoothing.
@@ -281,12 +282,12 @@ object TextEval {
     * Scale shape: every order AND both sides ride ONE tagged
     * (doc, n, gram) count aggregate (side-conditional counts make
     * the clip join unnecessary), plus one corpus totals pass — 2
-    * scans and 1 shuffle regardless of maxN. The ≤ maxN rows
+    * scans and 1 shuffle at every order. The 6 per-order rows
     * checkpoint-pin before the scalar summary broadcasts back.
     */
   def chrfCorpus(df: DataFrame, idCol: String, candCol: String,
-      refCol: String, maxN: Int = 6): DataFrame = {
-    require(maxN >= 1 && maxN <= 8, s"unreasonable chrF order: $maxN")
+      refCol: String): DataFrame = {
+    val maxN = ChrfMaxN
     val dec = "decimal(38,0)"
     // BOTH sides ride one tagged explode from one scan — a single
     // (doc, n, gram) shuffle with two conditional counts replaces

@@ -40,6 +40,8 @@ object TextSearch {
     * non-negative even for terms in more than half the corpus)
     * score  = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
     *
+    * with the standard k1 = 1.2, b = 0.75.
+    *
     * Determinism: each per-term weight is rounded to 6 decimals and the
     * Σ_t carried through DECIMAL(18,6), so the score is independent of
     * partial-aggregation order AND bit-stable across engines (ln may
@@ -48,8 +50,9 @@ object TextSearch {
     * meaningful relevance difference.
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
-      queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      queryTerms: Seq[String]): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
+    val (k1, b) = (1.2, 0.75)
     val tf = termFrequencies(docs, idCol, textCol)
     // doc length from the tf aggregate: one narrow re-aggregation of
     // an already-shuffled frame, no second pass over raw text

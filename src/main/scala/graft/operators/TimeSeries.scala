@@ -224,7 +224,7 @@ object TimeSeries {
   /** Seasonal-baseline anomaly score: each event's z against ITS OWN
     * (key, day-of-week, hour) cell — the detector [[seasonalProfile]]
     * is the denominator for (a 3 a.m. Sunday spike is judged against
-    * 3 a.m. Sundays, not the global mean).
+    * 3 a.m. Sundays, not the global mean); `anomalous` = |z| > 3.
     *
     * Exactness: values quantize to cents (the decimal(18,2) cast both
     * engines agree on, ×100 as BIGINT), so per-cell n/Σv/Σv² are
@@ -239,7 +239,7 @@ object TimeSeries {
     * |keys|·168-cell grid, broadcast back — events never shuffle.
     */
   def seasonalAnomaly(events: DataFrame, idCol: String, keyCol: String,
-      tsCol: String, valueCol: String, zThreshold: Double = 3.0): DataFrame = {
+      tsCol: String, valueCol: String): DataFrame = {
     val v100 = (col(valueCol).cast("decimal(18,2)") * 100).cast("long")
     val e = events.select(col(idCol), col(keyCol),
       (dayofweek(col(tsCol)) - 1).cast("long").as("dow"),
@@ -258,7 +258,7 @@ object TimeSeries {
     val z = (col("_v").cast("double") / 100.0 - mean) / std
     e.join(broadcast(cells), Seq(keyCol, "dow", "hod"))
       .select(col(idCol), col(keyCol), col("dow"), col("hod"),
-        round(z, 6).as("z"), (abs(z) > zThreshold).as("anomalous"))
+        round(z, 6).as("z"), (abs(z) > 3.0).as("anomalous"))
   }
 
   /** Exponentially time-decayed value aggregate per key — the

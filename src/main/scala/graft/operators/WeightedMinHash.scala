@@ -33,8 +33,12 @@ import graft.functions.TextFunctions
   */
 object WeightedMinHash {
 
-  private def tfFrame(df: DataFrame, idCol: String, textCol: String,
-      cap: Int): DataFrame = {
+  // 16 seeds, term frequencies capped at 4, md5 salt
+  private val Seeds = 16
+  private val Cap = 4
+  private val Salt = "wmh_v1"
+
+  private def tfFrame(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val shufflePartitions =
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.select(col(idCol).as("_id"), col(textCol).as("_tx"))
@@ -42,7 +46,7 @@ object WeightedMinHash {
       .select(col("_id"),
         explode(TextFunctions.tokens(lower(col("_tx")))).as("_t"))
       .groupBy(col("_id"), col("_t"))
-      .agg(least(count(lit(1)), lit(cap.toLong)).cast("int").as("_c"))
+      .agg(least(count(lit(1)), lit(Cap.toLong)).cast("int").as("_c"))
   }
 
   /** Per-(doc, seed) weighted-minhash values: (_id, _s, _mh) with
@@ -53,30 +57,23 @@ object WeightedMinHash {
     * exploded row into a map-side-combinable min — bounded row
     * sizes at any document length (a per-doc array fold would hold
     * a giant document's whole expanded multiset in ONE row), and
-    * still exchange-free on top of tfFrame's doc clustering.
+    * still exchange-free on top of tfFrame's doc clustering. Takes an
+    * already-built tf frame so [[pairJaccard]] computes the
+    * tokenize+explode+tf aggregate ONCE for both its estimate and its
+    * exact branch.
     */
-  def signatures(df: DataFrame, idCol: String, textCol: String,
-      seeds: Int = 16, cap: Int = 4, salt: String = "wmh_v1"): DataFrame =
-    signaturesFromTf(tfFrame(df, idCol, textCol, cap), seeds, cap, salt)
-
-  /** [[signatures]] over an already-built tf frame — split out (r16)
-    * so [[pairJaccard]] computes the tokenize+explode+tf aggregate
-    * ONCE for both its estimate and its exact branch.
-    */
-  private def signaturesFromTf(tf: DataFrame, seeds: Int, cap: Int,
-      salt: String): DataFrame = {
-    require(seeds >= 1 && cap >= 1, s"bad parameters: seeds=$seeds cap=$cap")
+  private def signaturesFromTf(tf: DataFrame): DataFrame = {
     val P = 2147483647L
     tf
       .select(col("_id"),
         explode(transform(sequence(lit(1), col("_c")),
-          j => concat_ws(":", lit(salt), col("_t"), j.cast("string"))))
+          j => concat_ws(":", lit(Salt), col("_t"), j.cast("string"))))
           .as("_e"))
       .select(col("_id"),
         (conv(substring(md5(col("_e")), 1, 15), 16, 10)
           .cast("long") % P).as("_h"))
       .select(col("_id"), col("_h"),
-        explode(sequence(lit(0), lit(seeds - 1))).as("_s"))
+        explode(sequence(lit(0), lit(Seeds - 1))).as("_s"))
       .groupBy(col("_id"), col("_s"))
       .agg(min((((col("_s") + 1) * lit(2654435761L) % P) * col("_h")
         + col("_s") * lit(40503L) + lit(12345L)) % P).as("_mh"))
@@ -88,10 +85,8 @@ object WeightedMinHash {
     * (no signature exists for an empty multiset).
     */
   def pairJaccard(df: DataFrame, idCol: String, textCol: String,
-      pairs: DataFrame, seeds: Int = 16, cap: Int = 4,
-      salt: String = "wmh_v1"): DataFrame = {
-    val (result, tf) = pairJaccardPlan(df, idCol, textCol, pairs,
-      seeds, cap, salt)
+      pairs: DataFrame): DataFrame = {
+    val (result, tf) = pairJaccardPlan(df, idCol, textCol, pairs)
     val out = result.localCheckpoint(true)
     tf.unpersist()
     out
@@ -103,8 +98,7 @@ object WeightedMinHash {
     * public operator pins the result and releases the cache.
     */
   private[graft] def pairJaccardPlan(df: DataFrame, idCol: String,
-      textCol: String, pairs: DataFrame, seeds: Int, cap: Int,
-      salt: String): (DataFrame, DataFrame) = {
+      textCol: String, pairs: DataFrame): (DataFrame, DataFrame) = {
     val p = pairs.select(col("id_a"), col("id_b"))
     val ids = p.select(col("id_a").as("_id"))
       .union(p.select(col("id_b").as("_id"))).distinct()
@@ -114,8 +108,8 @@ object WeightedMinHash {
     // (doc, token, capped-tf) aggregate — unpersisted, the upstream
     // corpus prep + tokenize + tf shuffle ran once per branch. Released
     // after the result pins.
-    val tf = tfFrame(sub, idCol, textCol, cap).persist()
-    val sig = signaturesFromTf(tf, seeds, cap, salt)
+    val tf = tfFrame(sub, idCol, textCol).persist()
+    val sig = signaturesFromTf(tf)
     val est = p
       .join(sig.select(col("_id").as("id_a"), col("_s"),
         col("_mh").as("_ma")), "id_a")
@@ -123,7 +117,7 @@ object WeightedMinHash {
         col("_mh").as("_mb")), Seq("id_b", "_s"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(round(sum(when(col("_ma") === col("_mb"), 1L).otherwise(0L))
-        .cast("double") / lit(seeds.toDouble), 6).as("est_jaccard"))
+        .cast("double") / lit(Seeds.toDouble), 6).as("est_jaccard"))
     val ta = p.join(tf.select(col("_id").as("id_a"), col("_t"),
       col("_c").as("_ca")), "id_a")
     val tb = p.join(tf.select(col("_id").as("id_b"), col("_t"),

@@ -18,8 +18,8 @@ import scala.util.control.NonFatal
   * composes with [[PipelineRunner.runOnce]] without the runner knowing
   * about retries. The sleeper is injected for deterministic tests.
   *
-  * Only specs drive [[runSerialized]]; it stays as the paper's
-  * Airflow-parity run policy (ROADMAP direction 6).
+  * Only specs drive [[runSerialized]] and [[withRetry]]; they stay as
+  * the paper's Airflow-parity run policy (ROADMAP direction 6).
   */
 final class Orchestrator(
     retries: Int = 1,

@@ -21,17 +21,16 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *
   * Scale shape: identical to a sort-merge join (one shuffle + sort per
   * side), minus the window buffer and the padded union — and the merge
-  * never materializes a candidate set, so wide time tolerances cost
+  * never materializes a candidate set, so wide time gaps cost
   * nothing (vs the N×M blow-up of a range-predicate join).
   *
-  * Semantics (parity with `AsOfJoin.backward`, non-strict): for each
+  * Semantics (parity with `AsOfJoin.backward`): for each
   * left row, the right row of the same key with the greatest
   * `rightTs <= leftTs`; ties on `rightTs` pinned by the greatest
   * `tieBreak` (the required child ordering sorts it ascending, the
   * merge keeps the last seen). Null keys group together (window-
-  * partition semantics, matching the composed form). `tolerance`
-  * nulls out matches staler than the bound. Timestamps must be
-  * non-null (micros-encoded `TimestampType` or integral).
+  * partition semantics, matching the composed form). Timestamps must
+  * be non-null (micros-encoded `TimestampType` or integral).
   */
 case class AsOfJoinPlan(
     left: LogicalPlan,
@@ -42,8 +41,7 @@ case class AsOfJoinPlan(
     rightTs: Expression,
     payload: Seq[Attribute],
     tieBreak: Expression,
-    matchedTsOut: Attribute, // constructor-fixed: exprId must survive copy()
-    toleranceMicros: Option[Long])
+    matchedTsOut: Attribute) // constructor-fixed: exprId must survive copy()
   extends BinaryNode {
 
   val payloadOut: Seq[Attribute] = payload.map(_.withNullability(true))
@@ -67,7 +65,7 @@ object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>
       AsOfJoinExec(p.leftKeys, p.rightKeys, p.leftTs, p.rightTs, p.payload,
-        p.tieBreak, p.output, p.toleranceMicros,
+        p.tieBreak, p.output,
         planLater(p.left), planLater(p.right)) :: Nil
     case _ => Nil
   }
@@ -85,7 +83,6 @@ case class AsOfJoinExec(
     payload: Seq[Attribute],
     tieBreak: Expression,
     output: Seq[Attribute],
-    toleranceMicros: Option[Long],
     left: SparkPlan,
     right: SparkPlan)
   extends BinaryExecNode {
@@ -116,7 +113,6 @@ case class AsOfJoinExec(
     val rTsExpr = rightTs
     val matchExprs = (payload :+ rightTs).map(e => e: Expression)
     val nMatchFields = payload.size + 1
-    val tol = toleranceMicros
     val outAttrs = output
 
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
@@ -140,7 +136,6 @@ case class AsOfJoinExec(
         // last right row at-or-before the left cursor (O(1) state)
         private var cur: InternalRow = _ // copied match projection
         private var curKey: InternalRow = _ // copied key
-        private var curTs: Long = 0L
 
         private def advanceRight(): Unit =
           if (rIter.hasNext) {
@@ -169,14 +164,11 @@ case class AsOfJoinExec(
               if (rts <= lts) {
                 cur = rMatchProj(rHead).copy()
                 if (curKey == null) curKey = lkey.copy()
-                curTs = rts
                 advanceRight()
               } else advancing = false
             } else advancing = false
           }
-          val m =
-            if (cur != null && !ltsNull && tol.forall(t => lts - curTs <= t)) cur
-            else nullMatch
+          val m = if (cur != null && !ltsNull) cur else nullMatch
           resultProj(joined(lrow, m))
         }
       }

@@ -342,8 +342,7 @@ object ExtensionQueries {
     * land in which cell, which cells each query probes, which
     * candidates are pruned, the final ranking — is bit-reproducible in
     * SQL, so the approximate operator itself is hash-checked, not just
-    * its exact twin (q63 pins the nprobe=nlist degenerate case on the
-    * k-means quantizer; SimilaritySpec pins k-means-IVF recall floors).
+    * its exact twin (q63 pins the nprobe=nlist degenerate case).
     */
   def qKnnIvf(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
@@ -354,17 +353,16 @@ object ExtensionQueries {
   }
 
   /** IVF with `nprobe = nlist`: probing every cell makes IVF exact, so
-    * the whole machinery (sample fit, compiled cell assignment, probe
-    * ranking, candidate join, top-k window) must reproduce the
-    * brute-force result bit-for-bit — shares q31's oracle. The only
-    * unverified surface left in the ANN path is cell pruning itself,
-    * which ScalaTest recall floors pin.
+    * the whole machinery (quantizer draw, compiled cell assignment,
+    * probe ranking, candidate join, top-k window) must reproduce the
+    * brute-force result bit-for-bit — shares q31's oracle. Cell
+    * pruning itself is q32's.
     */
   def qKnnIvfExact(s: SparkSession, dir: String): DataFrame = {
     val emb = tbl(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
+    Similarity.ivfTopKPortable(emb, queries, "vec_id", "embedding",
       "query_id", "qvec", k = 10, nlist = 8, nprobe = 8)
   }
 

@@ -43,7 +43,7 @@ object KibanaSavedObjects {
     * making the index pattern the default. One JSON object per line —
     * the exact payload shape `/api/saved_objects/_import` consumes.
     */
-  def dashboardNdjson(indexName: String, timeField: String = "extracted_at"): String = {
+  def dashboardNdjson(indexName: String): String = {
     val patternId = idFor(indexName, "index-pattern")
     val dashboardId = idFor(indexName, "dashboard")
 
@@ -53,7 +53,7 @@ object KibanaSavedObjects {
     val ipAttrs = indexPattern.putObject("attributes")
     ipAttrs.put("title", indexName)
     ipAttrs.put("name", s"$indexName data view")
-    ipAttrs.put("timeFieldName", timeField)
+    ipAttrs.put("timeFieldName", "extracted_at")
     indexPattern.putArray("references")
 
     val dashboard = mapper.createObjectNode()

@@ -193,8 +193,7 @@ object EventStreams {
     */
   def statefulSessions(
       events: DataFrame,
-      gapSeconds: Long,
-      lateness: String = "0 seconds"): Dataset[SessionSummary] = {
+      gapSeconds: Long): Dataset[SessionSummary] = {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapSeconds * 1000000L
@@ -208,7 +207,7 @@ object EventStreams {
       SessionSummary(uid, tsOf(s.startUs), tsOf(s.endUs), s.n)
 
     events.selectExpr("user_id", "ts", "unix_micros(ts) AS us")
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", "0 seconds")
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, SessionSummary](
@@ -263,15 +262,14 @@ object EventStreams {
   def statefulCdcFold(
       events: DataFrame,
       deleteType: String,
-      horizonSeconds: Long,
-      lateness: String = "0 seconds"): Dataset[CdcRow] = {
+      horizonSeconds: Long): Dataset[CdcRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     val horizonUs = horizonSeconds * 1000000L
 
     events.selectExpr("user_id", "ts", "unix_micros(ts) AS us",
         "event_id", "event_type", "value")
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", "0 seconds")
       .as[CdcChange]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[CdcFoldState, CdcRow](
@@ -375,12 +373,11 @@ object EventStreams {
     */
   def statefulSessionsTws(
       events: DataFrame,
-      gapSeconds: Long,
-      lateness: String = "0 seconds"): Dataset[SessionSummary] = {
+      gapSeconds: Long): Dataset[SessionSummary] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.selectExpr("user_id", "ts", "unix_micros(ts) AS us")
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", "0 seconds")
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .transformWithState(new SessionProcessor(gapSeconds),
@@ -388,7 +385,7 @@ object EventStreams {
   }
 
   /** Replays a BOUNDED event frame through a real `MemoryStream` in
-    * `numBatches` arrival-order micro-batches, runs
+    * two arrival-order micro-batches, runs
     * [[statefulSessions]] over it, and returns the closed sessions —
     * the stream/batch-parity harness: the streaming operator's output
     * is comparable against the batch sessionize oracle on the same
@@ -402,13 +399,11 @@ object EventStreams {
     */
   def replaySessionSummaries(
       events: DataFrame,
-      gapSeconds: Long,
-      numBatches: Int = 2): DataFrame =
+      gapSeconds: Long): DataFrame =
     replayToTable(
       events,
       df => statefulSessions(df, gapSeconds).toDF(),
-      horizonSeconds = gapSeconds * 2 + 60,
-      numBatches = numBatches)
+      horizonSeconds = gapSeconds * 2 + 60)
       .filter(col("user_id") =!= -1L)
 
   /** [[replaySessionSummaries]] through the `transformWithState`
@@ -417,8 +412,7 @@ object EventStreams {
     */
   def replaySessionSummariesTws(
       events: DataFrame,
-      gapSeconds: Long,
-      numBatches: Int = 1): DataFrame =
+      gapSeconds: Long): DataFrame =
     replayToTable(
       events,
       df => statefulSessionsTws(df, gapSeconds).toDF(),
@@ -426,7 +420,7 @@ object EventStreams {
       // one real batch + the sentinel batch still exercises state
       // carried across a batch boundary (every session closes in the
       // sentinel commit), at one RocksDB commit cycle fewer
-      numBatches = numBatches,
+      numBatches = 1,
       // 8 state partitions: with changelog checkpointing the RocksDB
       // commit is cheap, so the single-task row processing (not the
       // commit) is the bottleneck — parallelize it. State is per-key,

@@ -32,9 +32,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  7. No spec-only public defs: a helper that only specs reach —
   *     directly, or through other spec-only defs — is checked by
   *     nothing the product runs, so it either gets a product caller
-  *     or goes with its spec.
+  *     or goes with its spec. A name several objects declare counts
+  *     per object, so a live namesake keeps no dead def alive.
   *  8. No detached scaladoc: a doc block whose closing line is
   *     followed directly by the opening of another documents nothing.
+  *  9. No parameter default that no product call passes: a default
+  *     nothing overrides is a constant in disguise, and one only specs
+  *     override is a mode the product never runs.
   */
 class SourceDisciplineSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -118,7 +122,8 @@ class SourceDisciplineSpec extends AnyFunSuite {
     ("SparkEntry.scala", "entry"),
     // paper components kept as the reproduction (ROADMAP direction 6):
     // S11 Kibana provisioning, the ES index bootstrap, Orchestrator's
-    // Airflow-parity run policy and the bulk sink's delivery report
+    // Airflow-parity run policy (serialized runs, per-task retry) and
+    // the bulk sink's delivery report
     ("sources/Kibana.scala", "dashboardNdjson"),
     ("sources/Kibana.scala", "nextPokeAt"),
     ("sources/Kibana.scala", "maxPokes"),
@@ -126,6 +131,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
     ("sources/Kibana.scala", "provision"),
     ("lake/EsIndexBootstrap.scala", "flightMappingJson"),
     ("pipeline/Orchestrator.scala", "runSerialized"),
+    ("pipeline/Orchestrator.scala", "withRetry"),
     ("lake/DocumentSink.scala", "report"))
 
   // files with documented bounded collects (see their scaladocs)
@@ -135,7 +141,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
     "operators/Sampling.scala",      // histogram/threshold/offset rows
     "operators/ProductQuantization.scala", // nlist-row coarse quantizer
     "operators/SemanticDedup.scala", // k-row sampled quantizer
-    "operators/Similarity.scala",    // k-row sampled centroids
+    "operators/Similarity.scala",    // nlist-row md5-ranked centroids
     // phase-fit vectors of a batch of at most LocalFitMaxRows = 100,000
     // rows × 3 doubles (≈ 2.4 MB); larger batches fit on the cluster
     "pipeline/PhaseClassifier.scala",
@@ -202,60 +208,292 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"schema-inferring parquet reads: $offenders")
   }
 
-  // A NAME heuristic, not a call graph. Names are words of code in
-  // src/main and perfbench/src with comments and string text blanked
-  // (codeLines). A def's BODY runs from its `def` line to the next
-  // line indented two spaces or less — usually the next member, but a
-  // two-space continuation ends it early and it spans anything nested.
-  // A name is live when it appears outside every body (a `val`, an
-  // object or class body, perfbench/src) or inside the body of a live
-  // or allowlisted def; iterating to a fixpoint makes a helper that
-  // only spec-only defs call spec-only too. A same-named local or
-  // overload still keeps a dead def alive. Only members of top-level
-  // objects, classes and traits (two-space indent) are checked;
-  // nested and local defs are out of its reach.
-  test("every public def is called outside specs") {
-    val decl = "^  (?:(?:final|implicit|@\\w+)\\s+)*def\\s+([A-Za-z_]\\w*).*".r
-    // every body owner, private ones too (so liveness passes through
-    // them); an `override def` is called by its framework, so its body
-    // stays a root
-    val owner = ("^  (?:(?:final|implicit|private|protected|@\\w+)(?:\\[\\w+\\])?\\s+)*" +
-      "def\\s+([A-Za-z_]\\w*).*").r
-    val member = "^ {0,2}\\S.*"
-    val corpus = (scalaFilesUnder(Paths.get("src/main/scala")) ++
-      scalaFilesUnder(Paths.get("perfbench/src"))).map(p => p -> codeLines(p))
-    val defs = corpus.filter(_._1.startsWith(mainRoot)).flatMap { case (p, ls) =>
-      ls.zipWithIndex.collect { case (decl(name), i) => (p, i, name) }
+  /** Product source (src/main and perfbench/src) with comments and
+    * string text blanked, as one text per file, plus the name-level
+    * facts rules 7 and 9 share.
+    *
+    * A member is a def at two-space indent, i.e. a member of a
+    * top-level object, class or trait (nested and local defs are out
+    * of reach), owned by the nearest top-level declaration above it.
+    * A name declared by members of more than one top-level type
+    * resolves per type: `X.name` refers to X's member; a bare `name`
+    * refers to the member of the type it appears in, or of a type its
+    * file imports members of; `expr.name` on any other receiver
+    * refers to the class and trait members of that name. A name
+    * declared by one type resolves to it wherever the word appears.
+    */
+  private object Product {
+    val files: Seq[(java.nio.file.Path, String)] =
+      (scalaFilesUnder(Paths.get("src/main/scala")) ++
+        scalaFilesUnder(Paths.get("perfbench/src")))
+        .map(p => p -> codeLines(p).mkString("\n"))
+
+    /** A top-level member def: `owner` is its type, `offset` is where
+      * its name starts in the blanked text, `mods` its modifiers.
+      */
+    case class Member(path: java.nio.file.Path, owner: String, kind: String,
+        name: String, mods: String, line: Int, offset: Int) {
+      def file: String = mainRoot.relativize(path).toString
+      def isPublic: Boolean = !mods.matches(".*\\b(private|protected)\\b.*")
     }
-    assert(defs.size > 500, s"only ${defs.size} public defs found")
-    // a word-bounded match of a name is a whole run of word characters
-    val words = "\\w+".r
-    // per line: the (file, def) whose body holds it (None = root), its words
-    val owned: Seq[(Option[(String, String)], Seq[String])] = corpus.flatMap { case (p, ls) =>
+
+    private val memberDecl = ("(?m)^  ((?:(?:final|implicit|override|private|protected|@\\w+)" +
+      "(?:\\[\\w+\\])?\\s+)*)def\\s+([A-Za-z_]\\w*)").r
+    private val typeDecl = ("(?m)^(?:(?:private|final|sealed|abstract|case|implicit)" +
+      "(?:\\[\\w+\\])?\\s+)*(object|class|trait)\\s+(\\w+)").r
+    // types whose members a file imports (`import a.X._`, `a.X.{..}`, `a.X.m`)
+    private val importLine = "(?m)^\\s*import\\s+([\\w.]+)\\.(?:_|\\{[^}]*\\}|\\w+)\\s*$".r
+    private val word = "\\w+".r
+
+    /** Offset → 0-based line of `text`. */
+    private def lineIndex(text: String): Int => Int = {
+      val newlines = text.indices.filter(text.charAt(_) == '\n').toArray
+      off => { val i = java.util.Arrays.binarySearch(newlines, off); if (i >= 0) i else -i - 1 }
+    }
+
+    /** (start offset, kind, name) of every top-level type in a file. */
+    private def types(text: String): Seq[(Int, String, String)] =
+      typeDecl.findAllMatchIn(text).map(m => (m.start, m.group(1), m.group(2))).toSeq
+
+    val members: Seq[Member] = files.filter(_._1.startsWith(mainRoot)).flatMap { case (p, t) =>
+      val ts = types(t)
+      val lineOf = lineIndex(t)
+      memberDecl.findAllMatchIn(t).map { m =>
+        val (_, kind, owner) = ts.takeWhile(_._1 < m.start).lastOption.getOrElse((0, "object", "?"))
+        Member(p, owner, kind, m.group(2), m.group(1), lineOf(m.start), m.start(2))
+      }.toSeq
+    }
+
+    private val ownersOf: Map[String, Set[String]] =
+      members.groupBy(_.name).view.mapValues(_.map(_.owner).toSet).toMap
+    private val kindOf: Map[String, String] = members.map(m => m.owner -> m.kind).toMap
+
+    /** A word naming a member: where it starts, its line, whether it
+      * is the name of a `def` being declared, and the owners it refers
+      * to.
+      */
+    case class Ref(offset: Int, line: Int, name: String, isDecl: Boolean,
+        owners: Set[String])
+
+    /** Every word of `text` that names a member, resolved. */
+    def refs(text: String): Seq[Ref] = {
+      val ts = types(text)
+      val imported = importLine.findAllMatchIn(text).map(_.group(1).split('.').last).toSet
+      val lineOf = lineIndex(text)
+      def wordEndingAt(end: Int): String = {
+        var j = end - 1
+        while (j >= 0 && (text.charAt(j).isLetterOrDigit || text.charAt(j) == '_')) j -= 1
+        text.substring(j + 1, end)
+      }
+      def skipSpaceBack(i: Int): Int = {
+        var j = i
+        while (j >= 0 && text.charAt(j).isWhitespace) j -= 1
+        j
+      }
+      word.findAllMatchIn(text).filter(m => ownersOf.contains(m.matched)).map { m =>
+        val owners = ownersOf(m.matched)
+        val i = skipSpaceBack(m.start - 1)
+        val dotted = i >= 0 && text.charAt(i) == '.'
+        val resolved =
+          if (owners.size <= 1) owners
+          else if (dotted) {
+            val receiver = wordEndingAt(skipSpaceBack(i - 1) + 1)
+            if (owners(receiver)) Set(receiver)
+            else owners.filter(o => kindOf.get(o).exists(_ != "object"))
+          } else {
+            val here = ts.takeWhile(_._1 < m.start).lastOption.map(_._3).getOrElse("")
+            owners.filter(o => o == here || imported(o))
+          }
+        Ref(m.start, lineOf(m.start), m.matched,
+          !dotted && wordEndingAt(i + 1) == "def", resolved)
+      }.toVector
+    }
+  }
+
+  // A NAME heuristic, not a call graph, over Product's blanked source.
+  // A member's BODY runs from its `def` line to the next line indented
+  // two spaces or less — usually the next member, but a two-space
+  // continuation ends it early and it spans anything nested. A member
+  // is live when a word resolving to it (Product.refs) appears
+  // outside every body (a `val`, an object or class body,
+  // perfbench/src) or inside the body of a live or allowlisted member;
+  // iterating to a fixpoint makes a helper that only spec-only defs
+  // call spec-only too. An `override def` is called by its framework,
+  // so its body is a root, and `main` and `apply` are called without
+  // their names (by the JVM, by `X(...)`), so they are not checked. A
+  // same-named local still keeps a dead def alive.
+  test("every public def is called outside specs") {
+    import Product._
+    val checked = members.filter(m => m.isPublic && !m.mods.contains("override") &&
+      m.name != "main" && m.name != "apply")
+    assert(checked.size > 500, s"only ${checked.size} public defs found")
+    val bodyOwners = members.filterNot(_.mods.contains("override"))
+      .map(m => (m.path, m.line) -> m).toMap
+    val memberLine = "^ {0,2}\\S.*"
+    // per word resolving to a member: the member whose body holds it
+    // (None = root) and the (owner, name) keys it refers to
+    val uses: Seq[(Option[Member], Set[(String, String)])] = files.flatMap { case (p, t) =>
+      val lines = t.split("\n", -1)
       val inMain = p.startsWith(mainRoot)
-      var body: Option[(String, String)] = None
-      ls.map { l =>
-        l match {
-          case owner(name) if inMain => body = Some((mainRoot.relativize(p).toString, name))
-          case _ if l.matches(member) => body = None
+      var body: Option[Member] = None
+      val bodyAt = lines.indices.map { i =>
+        bodyOwners.get((p, i)) match {
+          case Some(m) if inMain => body = Some(m)
+          case _ if lines(i).matches(memberLine) => body = None
           case _ =>
         }
-        (body, words.findAllIn(l).toSeq)
+        body
       }
+      refs(t).map(r => (bodyAt(r.line), r.owners.map(_ -> r.name)))
     }
-    var live = Set.empty[String]
+    def allowed(m: Member) = specOnlyAllowlist((m.file, m.name))
+    var live = Set.empty[(String, String)]
     var grew = true
     while (grew) {
-      val next = owned.collect {
-        case (o, ws) if o.forall { case (f, n) => live(n) || specOnlyAllowlist((f, n)) } => ws
+      val next = uses.collect {
+        case (o, ks) if o.forall(m => live((m.owner, m.name)) || allowed(m)) => ks
       }.flatten.toSet
       grew = next.size > live.size
       live = next
     }
-    val offenders = defs.collect {
-      case (p, _, name) if !live(name) => (mainRoot.relativize(p).toString, name)
-    }.distinct.filterNot(specOnlyAllowlist)
+    val offenders = checked.filterNot(m => live((m.owner, m.name)) || allowed(m))
+      .map(m => s"${m.file}: ${m.owner}.${m.name}").distinct
     assert(offenders.isEmpty, s"public defs no product code calls: $offenders")
+  }
+
+  // (file, def, parameter) defaults no product call passes, kept on
+  // purpose, each with its reason
+  private val unpassedDefaultAllowlist = Set(
+    // deployment settings of the HTTP client: every product call runs
+    // on the defaults, a deployment changes them
+    ("sources/HttpSources.scala", "post", "timeoutSec"),
+    ("sources/HttpSources.scala", "postForm", "headers"),
+    ("sources/HttpSources.scala", "postForm", "timeoutSec"),
+    ("sources/HttpSources.scala", "put", "headers"),
+    ("sources/HttpSources.scala", "put", "timeoutSec"))
+
+  // Defaults that only specs override to build a scenario (a small
+  // graph that must leave the broadcast regime, a plan bar no plan
+  // meets, a stream trigger a test can wait on). Each waits on its
+  // specs being rewritten onto product values (ROADMAP direction 6).
+  private val specScenarioAllowlist = Set(
+    ("operators/SemanticDedup.scala", "semanticDedup", "salt"),
+    ("operators/SemanticDedup.scala", "thresholdSelect", "thresholds"),
+    ("operators/SemanticDedup.scala", "thresholdSelect", "salt"),
+    ("operators/SemanticDedup.scala", "thresholdSelect", "maxRemovalMicro"),
+    ("operators/SemanticDedup.scala", "semanticDedupAtCommitted", "thresholds"),
+    ("operators/SemanticDedup.scala", "semanticDedupAtCommitted", "salt"),
+    ("operators/SemanticDedup.scala", "semanticDedupAtCommitted", "maxRemovalMicro"),
+    ("operators/ProductQuantization.scala", "ivfAdcRecall", "nlist"),
+    ("operators/ProductQuantization.scala", "ivfAdcResidualRecall", "nlist"),
+    ("operators/ProductQuantization.scala", "ivfAdcResidualNprobeSelect", "nlist"),
+    ("operators/ProductQuantization.scala", "ivfAdcResidualNprobeSelect", "minRecallMicro"),
+    ("operators/ProductQuantization.scala", "adcTopK", "maxAdcQueries"),
+    ("operators/RandomWalks.scala", "walks", "salt"),
+    ("operators/PortableMinHash.scala", "bandPlanSelect", "minCatch"),
+    ("operators/PageRank.scala", "microPageRank", "broadcastThreshold"),
+    ("operators/PageRank.scala", "microPersonalizedPageRank", "broadcastThreshold"),
+    ("operators/Ranks.scala", "kendallTauB", "maxGridCells"),
+    ("operators/Sampling.scala", "budgetByScore", "maxScoreBins"),
+    ("operators/Sampling.scala", "topFractionByScore", "maxScoreBins"),
+    ("operators/Sampling.scala", "globalOrderRank", "partitions"),
+    ("operators/Ranks.scala", "globalRankBy", "partitions"),
+    ("operators/Dedup.scala", "duplicateClusters", "maxIter"),
+    ("operators/LanguageModel.scala", "knBigramProbs", "discount"),
+    ("operators/LanguageModel.scala", "worstWindowCutCalibration", "margins"),
+    ("streaming/FlightStream.scala", "start", "trigger"))
+
+  /** Top-level (depth-0) comma-separated parts of `s`; none if blank. */
+  private def topLevelParts(s: String): Seq[String] = {
+    val parts = scala.collection.mutable.ArrayBuffer(new StringBuilder)
+    var depth = 0
+    s.foreach { c =>
+      if ("([{".indexOf(c) >= 0) depth += 1
+      else if (")]}".indexOf(c) >= 0) depth -= 1
+      if (c == ',' && depth == 0) parts += new StringBuilder else parts.last += c
+    }
+    if (parts.size == 1 && parts.head.toString.trim.isEmpty) Nil else parts.map(_.toString).toSeq
+  }
+
+  /** Index just past the bracket group that opens at `i`. */
+  private def closeOf(s: String, i: Int): Int = {
+    var depth = 0
+    var j = i
+    do {
+      if ("([{".indexOf(s.charAt(j)) >= 0) depth += 1
+      else if (")]}".indexOf(s.charAt(j)) >= 0) depth -= 1
+      j += 1
+    } while (depth > 0 && j < s.length)
+    j
+  }
+
+  // The parameter lists of a declaration or the argument lists of a
+  // call starting at `from`: an optional `[...]`, then each `(...)` or
+  // `{...}` group (a block is one argument). `gap` is what may sit
+  // between groups.
+  private def bracketLists(s: String, from: Int, gap: Char => Boolean): Seq[Seq[String]] = {
+    def skip(i: Int): Int = { var j = i; while (j < s.length && gap(s.charAt(j))) j += 1; j }
+    var i = skip(from)
+    if (i < s.length && s.charAt(i) == '[') i = skip(closeOf(s, i))
+    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    while (i < s.length && (s.charAt(i) == '(' || s.charAt(i) == '{')) {
+      val end = closeOf(s, i)
+      out += (if (s.charAt(i) == '{') Seq("{}") else topLevelParts(s.substring(i + 1, end - 1)))
+      i = skip(end)
+    }
+    out.toSeq
+  }
+
+  // Rule 9. A default-valued parameter of a member (Product.members)
+  // outside queries/ and SparkEntry.scala, `override`s and implicit
+  // lists aside, is PASSED by a call when the call's list at the
+  // parameter's position has more positional arguments than the
+  // parameter's index, names it (`p = ...`), or splats (`: _*`).
+  // Calls are words resolving to the member (Product.refs) followed
+  // by argument lists on the same line, in src/main and perfbench/src
+  // only: a default only specs set is a mode the product never runs.
+  test("every parameter default is passed by some product call") {
+    import Product._
+    val named = "(?s)\\s*(\\w+)\\s*=(?![=>]).*".r
+    val isDefault = "(?s)[^=]*[^=!<>]=(?![=>]).*"
+    val checked = members.filter { m =>
+      !m.file.startsWith("queries/") && m.file != "SparkEntry.scala" &&
+        !m.mods.contains("override")
+    }
+    val text = files.toMap
+    // (member, list index, parameter index, parameter name)
+    val defaults = checked.flatMap { m =>
+      val lists = bracketLists(text(m.path), m.offset + m.name.length, _.isWhitespace)
+      lists.zipWithIndex.filterNot(_._1.headOption.exists(_.trim.startsWith("implicit")))
+        .flatMap { case (ps, li) =>
+          ps.zipWithIndex.collect {
+            case (p, pi) if p.matches(isDefault) => (m, li, pi, p.trim.takeWhile(_ != ':').trim)
+          }
+        }
+    }
+    assert(defaults.size > 100, s"only ${defaults.size} parameter defaults found")
+    // (owner, name) -> argument lists of every product call
+    val calls: Map[(String, String), Seq[Seq[Seq[String]]]] = files.flatMap { case (_, t) =>
+      refs(t).filterNot(_.isDecl).flatMap { r =>
+        val args = bracketLists(t, r.offset + r.name.length, c => c == ' ' || c == '\t')
+        r.owners.map(o => (o, r.name) -> args)
+      }
+    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val unpassed = defaults.filterNot { case (m, li, pi, p) =>
+      calls.getOrElse((m.owner, m.name), Nil).exists { lists =>
+        lists.lift(li).exists { args =>
+          val (byName, positional) = args.partition(_.matches(named.regex))
+          positional.size > pi || positional.exists(_.trim.endsWith("_*")) ||
+            byName.exists { case named(n) => n == p }
+        }
+      }
+    }.map { case (m, _, _, p) => (m.file, m.name, p) }.distinct
+    info(s"${defaults.size} parameter defaults; ${unpassed.size} passed by no product call")
+    val offenders = unpassed.filterNot(k =>
+      unpassedDefaultAllowlist(k) || specScenarioAllowlist(k))
+    assert(offenders.isEmpty, s"parameter defaults no product call passes: $offenders")
+    val stale = (unpassedDefaultAllowlist ++ specScenarioAllowlist) -- unpassed
+    assert(stale.isEmpty, s"allowlisted defaults that are gone or passed: $stale")
   }
 
   test("no scaladoc block directly followed by another") {

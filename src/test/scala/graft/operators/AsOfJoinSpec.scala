@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Backward as-of join semantics on hand-checked fixtures:
-  * latest-preceding match, equal-ts inclusion vs strict, tie-break by
-  * id, tolerance nulling, and no-match rows surviving as nulls.
+  * latest-preceding match, equal-ts inclusion, tie-break by id, and
+  * no-match rows surviving as nulls.
   */
 class AsOfJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -44,22 +44,6 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(out(11L) == (Some(103L), Some(4.0)))  // equal ts included, tie → 103
     assert(out(20L) == (None, None))             // only later quotes
     assert(out(30L) == (None, None))             // no quotes for key
-  }
-
-  test("backward strict < excludes the equal-ts quote") {
-    val out = AsOfJoin.backward(trades, quotes, Seq("key"), "t_ts", "q_ts",
-      rightPayload = Seq("quote_id"), tieBreakCol = "quote_id", strict = true)
-      .select("trade_id", "quote_id").as[(Long, Option[Long])].collect().toMap
-    assert(out(11L) == Some(101L)) // 200-ts quotes skipped → 95
-  }
-
-  test("backward tolerance nulls out stale matches") {
-    val out = AsOfJoin.backward(trades, quotes, Seq("key"), "t_ts", "q_ts",
-      rightPayload = Seq("quote_id"), tieBreakCol = "quote_id",
-      tolerance = Some(3L))
-      .select("trade_id", "quote_id").as[(Long, Option[Long])].collect().toMap
-    assert(out(10L).isEmpty)       // 100 - 95 = 5 > 3
-    assert(out(11L) == Some(103L)) // 0 <= 3
   }
 
   test("single shuffle: plan has exactly one exchange") {

@@ -29,7 +29,7 @@ class GraphStatsDriftSpec extends AnyFunSuite {
     assert(r.isNullAt(2))
   }
 
-  test("assortativity: self-loops count once; directed mode keeps the list") {
+  test("assortativity: a self-loop counts once in n_edges") {
     // one undirected edge (1,2) + a self-loop on 1: the self-loop
     // survives symmetrization as ONE directed row, so n_edges must be
     // (m + self_loops) / 2 = (3 + 1) / 2 = 2, never a truncated 3/2
@@ -37,10 +37,6 @@ class GraphStatsDriftSpec extends AnyFunSuite {
     val r = GraphStats.degreeAssortativity(g, "src", "dst").collect()(0)
     assert(r.getLong(0) === 2L)
     assert(r.getLong(1) === 2L, s"self-loop counted once: $r")
-    // directed mode: the 3-row list is taken as-is
-    val d = GraphStats.degreeAssortativity(g, "src", "dst",
-      symmetrize = false).collect()(0)
-    assert(d.getLong(1) === 3L, s"directed edge count: $d")
   }
 
   test("weighted reservoir: heavy weights dominate, sample is exact-k") {

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Native (custom-SparkPlan) as-of join vs the composed form: same
-  * results on every fixture — ties, tolerance, unmatched keys, key
-  * interleaving across partitions.
+  * results on every fixture — ties, unmatched keys, key interleaving
+  * across partitions.
   */
 class NativeAsOfJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -32,17 +32,14 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
     (4L, ts(400), 15L)
   ).toDF("k", "rts", "rid")
 
-  private def join(native: Boolean, l: DataFrame, r: DataFrame,
-      tol: Option[Long]): DataFrame =
+  private def join(native: Boolean, l: DataFrame, r: DataFrame): DataFrame =
     if (native)
-      NativeAsOfJoin.backward(l, r, Seq("k"), "lts", "rts", Seq("rid"), "rid",
-        "matched_ts", tol)
+      NativeAsOfJoin.backward(l, r, Seq("k"), "lts", "rts", Seq("rid"), "rid")
     else
-      AsOfJoin.backward(l, r, Seq("k"), "lts", "rts", Seq("rid"), "rid",
-        "matched_ts", strict = false, tol)
+      AsOfJoin.backward(l, r, Seq("k"), "lts", "rts", Seq("rid"), "rid")
 
-  private def run(native: Boolean, tol: Option[Long] = None): Set[(Long, Long, Option[Long])] = {
-    join(native, leftDf, rightDf, tol)
+  private def run(native: Boolean): Set[(Long, Long, Option[Long])] = {
+    join(native, leftDf, rightDf)
       .select($"lid", $"k", $"rid")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
@@ -62,13 +59,6 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
     assert(run(native = false) == expected)
   }
 
-  test("tolerance nulls stale matches identically in both forms") {
-    val expected = run(native = false, tol = Some(30L))
-    assert(run(native = true, tol = Some(30L)) == expected)
-    // and the tolerance actually bites: lid=2 (gap 50s) must be null
-    assert(expected.contains((2L, 1L, None)))
-  }
-
   test("native equals composed on a large random multi-partition input") {
     val rnd = new scala.util.Random(5)
     val lefts = Seq.tabulate(5000) { i =>
@@ -78,7 +68,7 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
       (rnd.nextInt(50).toLong, ts(rnd.nextInt(100000).toLong), (100000 + i).toLong)
     }.toDF("k", "rts", "rid")
     def out(native: Boolean) = {
-      join(native, lefts, rights, None)
+      join(native, lefts, rights)
         .select($"lid", $"rid", $"matched_ts").collect()
         .map(r => (r.getLong(0),
           if (r.isNullAt(1)) -1L else r.getLong(1),

@@ -155,16 +155,21 @@ class TextEvalAttributionSpec extends AnyFunSuite {
     // cand "the cat the cat" vs ref "the cat sat":
     //  1-grams: clip the=1, cat=1 → 2/4 → ln(.5)·1e8 = −69314718
     //  2-grams: clip "the cat"=1 → 1/3 → −109861229
-    //  3-grams: no overlap → clip 0 → null ln, null log_bleu at maxN=3
+    //  3-grams: no overlap → clip 0 of 2 → null ln
+    //  4-grams: the ref has none → clip 0 of 1 → null ln
+    //  so log_bleu (BLEU-4) is null
     val df = Seq((1L, Seq("the", "cat", "the", "cat"),
       Seq("the", "cat", "sat"))).toDF("id", "cand", "ref")
-    val rows = TextEval.bleuCorpus(df, "id", "cand", "ref", maxN = 3)
-      .collect()
+    val rows = TextEval.bleuCorpus(df, "id", "cand", "ref").collect()
     val byN = rows.map(r => r.getInt(0) -> r).toMap
+    assert(byN.keySet === Set(1, 2, 3, 4))
     assert(byN(1).getLong(1) === 2L && byN(1).getLong(2) === 4L)
     assert(byN(1).getLong(4) === -69314718L)
     assert(byN(2).getLong(1) === 1L && byN(2).getLong(4) === -109861229L)
-    assert(byN(3).getLong(1) === 0L && byN(3).isNullAt(4))
+    assert(byN(3).getLong(1) === 0L && byN(3).getLong(2) === 2L &&
+      byN(3).isNullAt(4))
+    assert(byN(4).getLong(1) === 0L && byN(4).getLong(2) === 1L &&
+      byN(4).isNullAt(4))
     assert(rows.forall(_.isNullAt(8))) // log_bleu null: one dry order
     // c=4 > r=3 → no brevity penalty
     assert(byN(1).getLong(7) === 0L)
@@ -173,16 +178,18 @@ class TextEvalAttributionSpec extends AnyFunSuite {
   test("BLEU: perfect candidate scores log 0; short one pays BP") {
     val perfect = Seq((1L, Seq("a", "b", "c", "d", "e"),
       Seq("a", "b", "c", "d", "e"))).toDF("id", "cand", "ref")
-    val p = TextEval.bleuCorpus(perfect, "id", "cand", "ref", maxN = 2)
-      .collect()
+    val p = TextEval.bleuCorpus(perfect, "id", "cand", "ref").collect()
+    assert(p.length === 4)
     assert(p.forall(_.getDouble(3) === 1.0)) // p_n
     assert(p.forall(_.getDouble(8) === 0.0)) // log_bleu
-    // 4-token prefix of a 5-token ref: precisions 1, BP = 1 − 5/4
-    // → bp_e8 = −25000000 exactly (integer lattice, no double round)
+    // 4-token prefix of a 5-token ref: precisions 1 at orders 1..4
+    // (4/4, 3/3, 2/2, 1/1), BP = 1 − 5/4 → bp_e8 = −25000000 exactly
+    // (integer lattice, no double round); log_bleu = 4·bp / (4·10⁸)
     val short = Seq((1L, Seq("a", "b", "c", "d"),
       Seq("a", "b", "c", "d", "e"))).toDF("id", "cand", "ref")
-    val s = TextEval.bleuCorpus(short, "id", "cand", "ref", maxN = 2)
-      .collect()
+    val s = TextEval.bleuCorpus(short, "id", "cand", "ref").collect()
+    assert(s.map(r => r.getLong(2)).sorted.toSeq === Seq(1L, 2L, 3L, 4L))
+    assert(s.forall(_.getDouble(3) === 1.0))
     assert(s.forall(_.getLong(7) === -25000000L))
     assert(s.forall(_.getDouble(8) === -0.25))
   }
@@ -257,41 +264,46 @@ class TextEvalAttributionSpec extends AnyFunSuite {
   }
 
   test("chrF: closed-form per-order F, exact lattice headline") {
-    // cand "abcd" vs ref "abcf" at maxN = 2:
-    //  n=1: M=3 (a,b,c), C=R=4 → F1 = 5·3/(4·4+4) = 0.75
-    //  n=2: M=2 (ab,bc), C=R=3 → F2 = 5·2/(4·3+3) = 2/3
-    //  fn_e8: 75000000 and (10·2·1e8+15)//30 = 66666667 (half-up)
-    //  chrf = 141666667 / 2e8
-    val df = Seq((1L, "abcd", "abcf")).toDF("id", "cand", "ref")
-    val rows = TextEval.chrfCorpus(df, "id", "cand", "ref", maxN = 2)
-      .collect()
+    // cand "abcdefg" vs ref "abcdefh": at order n, C = R = 8 − n and
+    // every gram but the last matches, M = 7 − n; den = 4R + C = 5·R
+    //  n=1: F = 5·6/35 → fn_e8 (10·6·1e8+35)//70 = 85714286 (half-up)
+    //  n=2: 25/30 → 83333333    n=3: 20/25 → 80000000
+    //  n=4: 15/20 → 75000000    n=5: 10/15 → 66666667 (half-up)
+    //  n=6: 5/10  → 50000000
+    //  chrf = 440714286 / 6e8
+    val df = Seq((1L, "abcdefg", "abcdefh")).toDF("id", "cand", "ref")
+    val rows = TextEval.chrfCorpus(df, "id", "cand", "ref").collect()
     val byN = rows.map(r => r.getInt(0) -> r).toMap
-    assert(byN(1).getLong(1) === 3L && byN(1).getLong(2) === 4L &&
-      byN(1).getLong(3) === 4L)
-    assert(byN(1).getDouble(4) === 0.75 &&
-      byN(1).getLong(5) === 75000000L)
-    assert(byN(2).getLong(1) === 2L &&
-      byN(2).getDouble(4) === 10.0 / 15.0 &&
-      byN(2).getLong(5) === 66666667L)
-    assert(rows.forall(_.getDouble(6) === 141666667.0 / 2.0e8))
+    assert(byN.keySet === (1 to 6).toSet)
+    assert(byN(1).getLong(1) === 6L && byN(1).getLong(2) === 7L &&
+      byN(1).getLong(3) === 7L)
+    assert(byN(1).getDouble(4) === 30.0 / 35.0 &&
+      byN(1).getLong(5) === 85714286L)
+    assert(byN(5).getLong(1) === 2L &&
+      byN(5).getDouble(4) === 10.0 / 15.0 &&
+      byN(5).getLong(5) === 66666667L)
+    assert((1 to 6).map(byN(_).getLong(5)) === Seq(85714286L, 83333333L,
+      80000000L, 75000000L, 66666667L, 50000000L))
+    assert(rows.forall(_.getDouble(6) === 440714286.0 / 6.0e8))
   }
 
   test("chrF: repeats clip; a dry order nulls f_n and the headline") {
     // cand "aaa" vs ref "aa": n=1 M=2,C=3,R=2 → 10/11; n=2 M=1,C=2,
-    // R=1 → 5/6
+    // R=1 → 5/6; n=3 M=0,C=1,R=0 → 0 (a one-sided order scores 0)
     val df = Seq((1L, "aaa", "aa")).toDF("id", "cand", "ref")
-    val byN = TextEval.chrfCorpus(df, "id", "cand", "ref", maxN = 2)
+    val byN = TextEval.chrfCorpus(df, "id", "cand", "ref")
       .collect().map(r => r.getInt(0) -> r).toMap
     assert(byN(1).getLong(1) === 2L && byN(1).getDouble(4) === 10.0 / 11.0)
     assert(byN(2).getLong(1) === 1L && byN(2).getDouble(4) === 5.0 / 6.0)
-    // single chars: order 2 has zero grams on BOTH sides → null F,
-    // null headline (no silent smoothing)
+    assert(byN(3).getLong(1) === 0L && byN(3).getDouble(4) === 0.0)
+    // single chars: orders 2..6 have zero grams on BOTH sides → null
+    // F, null headline (no silent smoothing)
     val dry = Seq((1L, "a", "b")).toDF("id", "cand", "ref")
-    val d = TextEval.chrfCorpus(dry, "id", "cand", "ref", maxN = 2)
+    val d = TextEval.chrfCorpus(dry, "id", "cand", "ref")
       .collect().map(r => r.getInt(0) -> r).toMap
     assert(d(1).getLong(1) === 0L && d(1).getDouble(4) === 0.0)
-    assert(d(2).isNullAt(4) && d(2).isNullAt(5))
-    assert(d(1).isNullAt(6) && d(2).isNullAt(6))
+    assert((2 to 6).forall(n => d(n).isNullAt(4) && d(n).isNullAt(5)))
+    assert(d.values.forall(_.isNullAt(6)))
   }
 
   test("attribution: boundary exactly lookback-before is included") {

@@ -348,8 +348,7 @@ class PlanAssertionsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
     val (result, tf) = graft.operators.WeightedMinHash
-      .pairJaccardPlan(docs, "doc_id", "text", pairs,
-        seeds = 16, cap = 4, salt = "wmh_v1")
+      .pairJaccardPlan(docs, "doc_id", "text", pairs)
     try {
       val plan = result.queryExecution.executedPlan.toString()
       assert(plan.contains("partial_min"),
