@@ -32,10 +32,10 @@ object Bench {
     */
   private def buildSession(cpus: String): SparkSession = {
     val spark = GraftSession.local(cpus.toInt, "graft-bench")
-    // The two-level prefix-sum in Packing runs one deliberate window
-    // over the O(#partitions) totals frame; Spark warns "No Partition
-    // Defined" on every run, and dozens of benign copies bury real
-    // warnings in the bench log. Silence that category only.
+    // The bounded single-partition windows (score lattices, resample
+    // frames, domain splits) make Spark warn "No Partition Defined" on
+    // every run, and dozens of benign copies bury real warnings in the
+    // bench log. Silence that category only.
     try {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.window",

@@ -247,7 +247,7 @@ object SparkEntry {
     "q135_jaccard_indexed" -> (X.qJaccardPairsIndexed _),
     // near-dup canonicalization: trigram edges -> CC -> keep best quality
     "q136_neardup_canonical" -> (X.qNearDupCanonical _),
-    // deterministic training order: two-level md5 rank, no global window
+    // deterministic training order: GlobalOrder rank by md5, no global window
     "q137_train_order" -> (X.qTrainOrder _),
     // per-source KL(P_src || P_corpus) over unigrams (mixture drift)
     "q138_domain_kl" -> (X.qDomainDivergence _),
@@ -360,7 +360,7 @@ object SparkEntry {
     "q191_seasonal_anomaly" -> (X.qSeasonalAnomaly _),
     // media-struct checksum dedup ledger (sha-256 payload identity)
     "q192_media_dedup" -> (X.qMediaDedup _),
-    // exact Gini of token-mass concentration (two-level rank)
+    // exact Gini of token-mass concentration (GlobalOrder rank)
     "q193_gini" -> (X.qGini _),
     // per-group weighted median (cumulative-mass walk, no division)
     "q194_weighted_median" -> (X.qWeightedMedian _),
@@ -466,7 +466,7 @@ object SparkEntry {
     "q244_survival_curve" -> (X.qSurvivalCurve _),
     // tokenizer-sizing vocabulary coverage curve (top-30 ranks)
     "q245_vocab_coverage" -> (X.qVocabCoverage _),
-    // sorted-neighborhood dedup (two-level rank, w=3 neighbor scan)
+    // sorted-neighborhood dedup (GlobalOrder rank, w=3 neighbor scan)
     "q246_sorted_neighborhood" -> (X.qSortedNeighborhood _),
     // association rules over (user, day) event-type baskets
     "q247_assoc_rules" -> (X.qAssocRules _),
@@ -484,7 +484,7 @@ object SparkEntry {
     "q253_effective_tokens" -> (X.qEffectiveTokens _),
     // watermark-sizing disorder audit (planted lateness)
     "q254_disorder_audit" -> (X.qDisorderAudit _),
-    // token-balanced snake sharding over the two-level rank
+    // token-balanced snake sharding over the GlobalOrder rank
     "q255_snake_shards" -> (X.qSnakeShards _),
     // per-source quantile normalization (histogram percentiles)
     "q256_quantile_norm" -> (X.qQuantileNorm _),

@@ -87,7 +87,7 @@ object Experiments {
     * position ⌈p·B/100⌉, no interpolation) at p = 3 and 98.
     *
     * Contract: `idxCol` must be a dense 0..n−1 index (feed arbitrary
-    * ids through globalOrderRank first); `valueCol` must be DECIMAL
+    * ids through GlobalOrder.rank first); `valueCol` must be DECIMAL
     * so each resample's sum is exact in any order — its mean is then
     * ONE IEEE division.
     *
@@ -112,7 +112,7 @@ object Experiments {
       bounds.get(2).toString.toLong == n - 1,
       s"idxCol '$idxCol' must be dense 0..${n - 1}; got " +
         s"[${bounds.get(1)}, ${bounds.get(2)}] — rank ids first " +
-        "(globalOrderRank produces 1..N; subtract 1)")
+        "(GlobalOrder.rank produces 1..N; subtract 1)")
     val draws = spark.range(resamples.toLong * n).select(
       expr(s"id div $n").as("_b"),
       expr(s"id % $n").as("_slot"))

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for LLM pretraining (SURVEY.md §7.5 extension
@@ -12,13 +11,9 @@ import org.apache.spark.sql.functions._
   * doc's global token start offset and pack id without ever building
   * the stream.
   *
-  * Scale design: the global prefix sum is the textbook two-level
-  * recipe — range-partition by id, per-partition window prefix sums
-  * (partition-local sort only), then one tiny per-partition-totals
-  * frame (rows = #partitions) turned into base offsets and broadcast
-  * back. No global-ordering window over the data ever exists, so the
-  * plan has no single-partition sort of the corpus — the only
-  * all-to-one step is over the #partitions-row totals frame.
+  * Scale design: the global prefix sum is [[GlobalOrder.runningSum]]
+  * in id order, so the plan has no single-partition sort of the
+  * corpus.
   */
 object Packing {
 
@@ -33,25 +28,10 @@ object Packing {
       nTokensCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    // repartitionByRange gives non-overlapping id ranges per partition,
-    // so partition-local prefix sums + partition base offsets compose
-    // to the exact global prefix sum. The result is independent of the
-    // (sampled) range boundaries — determinism does not rest on them.
-    val parted = df.select(col(idCol), col(nTokensCol).cast("long").as(nTokensCol))
-      .repartitionByRange(col(idCol))
-      .withColumn("_pid", spark_partition_id())
-    val wIn = Window.partitionBy(col("_pid")).orderBy(col(idCol))
-    val local = parted.withColumn("_local_end", sum(col(nTokensCol)).over(wIn))
-    // one row per partition — the single-partition window below is
-    // O(#partitions), not O(rows)
-    val wBase = Window.orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = local.groupBy(col("_pid"))
-      .agg(max(col("_local_end")).as("_ptotal"))
-      .withColumn("_base", coalesce(sum(col("_ptotal")).over(wBase), lit(0L)))
-      .select(col("_pid"), col("_base"))
-    local.join(broadcast(bases), Seq("_pid"))
-      .withColumn("start_offset", col("_base") + col("_local_end") - col(nTokensCol))
+    GlobalOrder.runningSum(
+        df.select(col(idCol), col(nTokensCol).cast("long").as(nTokensCol)),
+        idCol, Nil, nTokensCol, "_end")._1
+      .withColumn("start_offset", col("_end") - col(nTokensCol))
       .withColumn("pack_id", floor(col("start_offset") / budget).cast("long"))
       .select(col(idCol), col(nTokensCol), col("start_offset"), col("pack_id"))
   }
@@ -64,7 +44,7 @@ object Packing {
     * neighbors unless masked).
     *
     * The global start offsets are budget-INDEPENDENT, so they are
-    * computed once (the two-level prefix-sum recipe above) and every
+    * computed once ([[packByTokenBudget]]) and every
     * budget's flags are pure arithmetic over the same frame:
     * a doc splits iff start div B ≠ (start+n−1) div B, and its
     * crossing tokens are n − (B − start mod B) (everything past the

@@ -309,31 +309,18 @@ object Profiling {
     * the token mass owned by a handful of documents?): G =
     * (2·Σᵢ i·wᵢ − (n+1)·Σw) / (n·Σw) over weights sorted ascending.
     *
-    * Exactness: the global rank comes from the two-level
-    * decomposition (partition-local row_number over a range
-    * partitioning by (w, id) + O(#partitions) base offsets — no
-    * single-partition window), all three moments are decimal-carried
-    * integer sums — the per-row rank·w product is formed IN
-    * decimal(38,0), never long, so n·max(w) up to 10³⁸ stays exact
-    * (a long product would wrap silently past 2⁶³ with ANSI off) —
-    * and the statistic is ONE division over two exact totals.
+    * Exactness: the global rank is [[GlobalOrder.rank]] over (w, id),
+    * with no single-partition window. All three moments are
+    * decimal-carried integer sums: the per-row rank·w product is
+    * formed IN decimal(38,0), never long, so n·max(w) up to 10³⁸
+    * stays exact (a long product would wrap silently past 2⁶³ with
+    * ANSI off). The statistic is ONE division over two exact totals.
     */
   def giniCoefficient(df: DataFrame, idCol: String,
       weightCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol).as("_id"),
       col(weightCol).cast("long").as("_w"))
-    val parted = base.repartitionByRange(col("_w"), col("_id"))
-      .withColumn("_pid", spark_partition_id())
-    val wIn = w.partitionBy(col("_pid")).orderBy(col("_w"), col("_id"))
-    val local = parted.withColumn("_lrn", row_number().over(wIn))
-    val wBase = w.orderBy(col("_pid")).rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val bases = local.groupBy(col("_pid")).agg(count(lit(1)).as("_c"))
-      .withColumn("_off", coalesce(sum(col("_c")).over(wBase), lit(0L)))
-      .select(col("_pid"), col("_off"))
-    val ranked = local.join(broadcast(bases), Seq("_pid"))
-      .select(col("_w"), (col("_off") + col("_lrn")).as("_r"))
+    val ranked = GlobalOrder.rank(base, "_id", Seq(col("_w")), "_r")
     val m = ranked.agg(
       count(lit(1)).as("n"),
       sum(col("_w").cast("decimal(38,0)")).as("sw"),

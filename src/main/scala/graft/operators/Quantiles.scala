@@ -26,7 +26,7 @@ object WeightedQuantiles {
     * winner a map-side-combinable `min(struct)` — no global sort, no
     * driver. Groups are assumed group-sized-bounded (the usual
     * dimension-keyed case); for a single giant group use the
-    * two-level decomposition instead (see `Profiling.giniCoefficient`).
+    * two-level decomposition instead (see [[GlobalOrder.runningSum]]).
     */
   def weightedMedian(df: DataFrame, groupCol: String, valueCol: String,
       weightCol: String, idCol: String): DataFrame = {

@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * 1/61 + 1/73 is order-dependent; summing lattice integers is not.
   * The fused rank re-ranks by (points desc, id asc), pinned.
   *
-  * Scale shape: each input ranking comes from the fleet's
-  * single-exchange rank kernel ([[Ranks.globalRankBy]]); the fusion
-  * itself is two hash joins on the id and one more rank pass — no
-  * global sort anywhere (q297).
+  * Scale shape: each input ranking comes from [[GlobalOrder.rank]];
+  * the fusion itself is two hash joins on the id and one more rank
+  * pass — no global sort anywhere (q297).
   */
 object RankFusion {
 
@@ -45,7 +44,7 @@ object RankFusion {
           lit(0L)) +
         coalesce(when(col(rankB).isNotNull, rrfPoints(col(rankB), K)),
           lit(0L)))
-    Ranks.globalRankBy(joined, idCol, "fused_rank",
-      Seq(-col("rrf_points"), col(idCol)))
+    GlobalOrder.rank(joined, idCol, Seq(-col("rrf_points"), col(idCol)),
+      "fused_rank")
   }
 }

@@ -1,77 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact global rank 1..N by an arbitrary key — the two-level rank
-  * (range-partition by the key so partitions tile the total order,
-  * rank within partitions, add per-partition offsets from a P-row
-  * driver cumsum) generalized from Sampling.globalOrderRank's
-  * hash-order special case to any (keys..., idCol) order. The
-  * boundary-invariance argument is unchanged: ranges are contiguous
-  * in the full sort key, so offset + local rank is the exact global
-  * rank wherever repartitionByRange's sampled cuts land.
-  *
-  * The LOCAL rank is monotonically_increasing_id arithmetic over the
-  * partition-sorted frame (`_mid − min(_mid per partition)`), NOT a
-  * `Window.partitionBy(_pid)`: Catalyst cannot know that `_pid` rows
-  * are already co-located (it is the partition id!), so the window
-  * form inserts a second full `Exchange hashpartitioning(_pid)` on
-  * the data — a redundant 100-TB-scale shuffle. The mid ids are
-  * consecutive within a partition in row order, the sort pins that
-  * order, and the per-partition min rides the SAME bounded P-row
-  * aggregate as the counts, so the rewrite costs nothing and drops
-  * the big side to exactly ONE exchange (the range partition). The
-  * frame is pinned with persist() between the stats and rank passes
-  * and the result is localCheckpoint()ed before release.
+/** Rank statistics over exact global ranks: Spearman's ρ, snake
+  * sharding and Kendall's τ-b. Every global rank comes from
+  * [[GlobalOrder.rank]].
   */
 object Ranks {
-
-  /** Returns the input columns plus `rankCol` (long, 1..N). The total
-    * order is (keys..., idCol) — idCol makes it total, so the rank is
-    * deterministic under any partitioning.
-    */
-  def globalRankBy(df: DataFrame, idCol: String, rankCol: String,
-      keys: Seq[Column], partitions: Int = 32): DataFrame = {
-    val (out, ranged) = rankedUnpinned(df, idCol, rankCol, keys, partitions)
-    try out.localCheckpoint() finally ranged.unpersist()
-  }
-
-  /** The pre-checkpoint rank frame plus the pinned intermediate (so
-    * the caller controls unpersist) — package-private so the plan
-    * suite can assert the single-exchange shape directly.
-    */
-  private[graft] def rankedUnpinned(df: DataFrame, idCol: String,
-      rankCol: String, keys: Seq[Column], partitions: Int)
-      : (DataFrame, DataFrame) = {
-    require(partitions >= 1, s"partitions must be positive: $partitions")
-    val orderCols = keys :+ col(idCol)
-    val ranged = df
-      .repartitionByRange(partitions, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      // both ids are nondeterministic expressions, so Catalyst keeps
-      // them ABOVE the sort: _mid is assigned in sorted row order
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_mid", monotonically_increasing_id())
-      .persist()
-    val stats = ranged.groupBy(col("_pid"))
-      .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_m0"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    var cum = 0L
-    val offsets = stats.map { case (pid, c, m0) =>
-      val off = cum; cum += c; (pid, off, m0)
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("_pid", "_off", "_m0")
-    val out = ranged
-      .join(broadcast(offDf), Seq("_pid"))
-      .withColumn(rankCol, col("_off") + (col("_mid") - col("_m0")) + 1L)
-      .drop("_pid", "_off", "_m0", "_mid")
-    (out, ranged)
-  }
 
   /** Spearman rank correlation between two columns, permutation
     * convention: each column ranks by (value, id) — a TOTAL order, so
@@ -81,16 +18,15 @@ object Ranks {
     *
     * is exact. Σd² accumulates in DECIMAL(38,0) (d² ≤ n², summed n
     * times ⇒ n³ — past int64 at ~2 M rows) and ONE division closes
-    * the chain. Two two-level global ranks (no one-partition
-    * window), one join on id, one aggregate.
+    * the chain. The y rank runs over the x rank's output, so the
+    * pair needs no join: two global orders, one aggregate.
     */
   def spearman(df: DataFrame, idCol: String, xCol: String, yCol: String): DataFrame = {
-    val rx = globalRankBy(df.select(col(idCol), col(xCol)), idCol, "_rx",
-      Seq(col(xCol))).select(col(idCol), col("_rx"))
-    val ry = globalRankBy(df.select(col(idCol), col(yCol)), idCol, "_ry",
-      Seq(col(yCol))).select(col(idCol), col("_ry"))
+    val rx = GlobalOrder.rank(df.select(col(idCol), col(xCol), col(yCol)),
+      idCol, Seq(col(xCol)), "_rx")
+    val ranked = GlobalOrder.rank(rx, idCol, Seq(col(yCol)), "_ry")
     val dec = "decimal(38,0)"
-    rx.join(ry, Seq(idCol))
+    ranked
       .agg(count(lit(1)).as("n"),
         sum(((col("_rx") - col("_ry")) * (col("_rx") - col("_ry")))
           .cast(dec)).as("_sd2"))
@@ -112,8 +48,8 @@ object Ranks {
   def snakeShards(df: DataFrame, idCol: String, weightCol: String,
       shards: Int): DataFrame = {
     require(shards >= 2, s"need at least 2 shards: $shards")
-    val ranked = globalRankBy(df.select(col(idCol), col(weightCol)),
-      idCol, "_rank", Seq(col(weightCol).desc))
+    val ranked = GlobalOrder.rank(df.select(col(idCol), col(weightCol)),
+      idCol, Seq(col(weightCol).desc), "_rank")
     val r0 = ranked.col("_rank") - 1L // 0-based
     val m = r0 % (2L * shards)
     ranked.withColumn("shard",
@@ -221,8 +157,8 @@ object Ranks {
               ((col("_c") - col("_d")) * 2).cast("double") /
                 sqrt((a * b).cast("double"))).as("tau_b")
           })
-      // eagerly pin the 1-row result — the globalRankBy
-      // cache-release discipline; repeated library calls leave only
+      // eagerly pin the 1-row result — the cache-release
+      // discipline; repeated library calls leave only
       // a 1-row checkpoint behind, not the |X|·|Y| grid feed
       out.localCheckpoint()
     } finally h.unpersist()

@@ -155,52 +155,34 @@ object Sampling {
     * when totalW ≥ k² (then totalW mod k < step); rows heavier than
     * `step` are certainty inclusions with multiplicity m > 1. Weights
     * must be non-negative; zero-weight rows are never selected;
-    * totalW < k (stride 0) fails fast at execution rather than
-    * silently returning an empty frame.
+    * totalW < k (stride 0) fails fast rather than silently returning
+    * an empty frame.
     *
     * The md5 shuffle kills the classic systematic-sampling failure
     * mode (periodicity in the input order correlating with the
     * stride) and makes the draw reproducible and oracle-checkable —
     * no RNG state, no float.
     *
-    * Scale shape: exact prefix sums via the two-level decomposition
-    * (partition-local window + an O(#partitions) base-offset frame,
-    * as in [[Packing.packByTokenBudget]]) — no global single-partition
-    * window; totals ride a one-row broadcast.
+    * Scale shape: the exact prefix sums and the total come from
+    * [[GlobalOrder.runningSum]] — no global single-partition window.
     *
     * Output: (idCol, w, m) for selected rows only (m ≥ 1).
     */
   def ppsSystematicSample(df: DataFrame, idCol: String, weightCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
-    val w = org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol), col(weightCol).cast("long").as("w"),
       hashUniform(col(idCol), "pps_v1").as("_draw"))
-    val parted = base.repartitionByRange(col("_draw"), col(idCol))
-      .withColumn("_pid", spark_partition_id())
-    val wIn = w.partitionBy(col("_pid")).orderBy(col("_draw"), col(idCol))
-    val local = parted.withColumn("_hi_local", sum(col("w")).over(wIn))
-    val wBase = w.orderBy(col("_pid"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val bases = local.groupBy(col("_pid"))
-      .agg(max(col("_hi_local")).as("_pt"))
-      .withColumn("_base", coalesce(sum(col("_pt")).over(wBase), lit(0L)))
-      .select(col("_pid"), col("_base"), col("_pt"))
-    // totalW < k would make _step = 0 and (with ANSI off) turn the
-    // stride walk into a silent empty result (DuckDB's `//0` errors
-    // instead) — fail fast at execution on the one-row total rather
-    // than return a wrong answer outside the documented regime
-    val tot = bases.agg(max(col("_base") + col("_pt")).as("_tot"))
-      .withColumn("_step",
-        when(col("_tot") < k, raise_error(concat(
-          lit(s"ppsSystematicSample: total weight "), col("_tot"),
-          lit(s" < k=$k — stride would be 0"))))
-          .otherwise(expr(s"_tot div $k")))
-    local.join(broadcast(bases.select(col("_pid"), col("_base"))), Seq("_pid"))
-      .crossJoin(broadcast(tot))
-      .withColumn("_hi", col("_base") + col("_hi_local"))
+    val (walked, tot) = GlobalOrder.runningSum(base, idCol, Seq(col("_draw")),
+      "w", "_hi")
+    // totalW < k would make the stride 0 and (with ANSI off) turn the
+    // walk into a silent empty result (DuckDB's `//0` errors instead)
+    require(tot >= k,
+      s"ppsSystematicSample: total weight $tot < k=$k — stride would be 0")
+    val step = tot / k
+    walked
       .withColumn("_lo", col("_hi") - col("w"))
-      .withColumn("m", expr("_hi div _step - _lo div _step"))
+      .withColumn("m", expr(s"_hi div $step - _lo div $step"))
       .filter(col("m") > 0L)
       .select(col(idCol), col("w"), col("m"))
   }
@@ -307,59 +289,12 @@ object Sampling {
     * md5(id:salt) order — "shuffle the corpus once, reproducibly"
     * (every epoch = a new salt), WITHOUT funnelling N rows through
     * the single partition a global `ROW_NUMBER() OVER (ORDER BY u)`
-    * window requires.
-    *
-    * Two-level rank (the declarative zipWithIndex): range-partition
-    * by the md5 uniform so partitions tile the total order, rank
-    * WITHIN each partition, then add per-partition offsets (a
-    * P-row driver cumsum — bounded by the partition count). Boundary
-    * placement by repartitionByRange's sampler does NOT affect the
-    * result: ranges are contiguous in (u, id), so offset + local rank
-    * is the exact global rank wherever the cuts land. The frame is
-    * pinned with persist() between the stats and rank passes —
-    * unpinned lineage could resample different boundaries per pass,
-    * corrupting offsets.
-    *
-    * The local rank is monotonically_increasing_id arithmetic over
-    * the partition-sorted frame (ids are consecutive within a
-    * partition in row order), so the big side sees exactly ONE
-    * exchange — the range partition. A Window.partitionBy(_pid)
-    * would re-shuffle everything by partition id, because Catalyst
-    * cannot see that the layout already satisfies it.
+    * window requires: the rank is [[GlobalOrder.rank]] keyed by the
+    * md5 uniform.
     */
-  def globalOrderRank(df: DataFrame, idCol: String, salt: String,
-      partitions: Int = 32): DataFrame = {
-    require(partitions >= 1, s"partitions must be positive: $partitions")
-    // the local rank is mid-arithmetic over the partition-sorted
-    // frame, not a Window.partitionBy(_pid) — the window form would
-    // re-shuffle the whole frame by _pid (see Ranks scaladoc)
-    val ranged = df.select(col(idCol))
-      .withColumn("_u", hashUniform(col(idCol), salt))
-      .repartitionByRange(partitions, col("_u"), col(idCol))
-      .sortWithinPartitions(col("_u"), col(idCol))
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_mid", monotonically_increasing_id())
-      .persist()
-    try {
-      val stats = ranged.groupBy(col("_pid"))
-        .agg(count(lit(1)).as("_c"), min(col("_mid")).as("_m0"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      var cum = 0L
-      val offsets = stats.map { case (pid, c, m0) =>
-        val off = cum; cum += c; (pid, off, m0)
-      }
-      val spark = df.sparkSession
-      import spark.implicits._
-      val offDf = offsets.toSeq.toDF("_pid", "_off", "_m0")
-      ranged
-        .join(broadcast(offDf), Seq("_pid"))
-        .select(col(idCol),
-          (col("_off") + (col("_mid") - col("_m0")) + 1L).as("train_order"))
-        // materialize before releasing the pinned partitioning
-        .localCheckpoint()
-    } finally ranged.unpersist()
-  }
+  def globalOrderRank(df: DataFrame, idCol: String, salt: String): DataFrame =
+    GlobalOrder.rank(df.select(col(idCol)), idCol,
+      Seq(hashUniform(col(idCol), salt)), "train_order")
 
   /** Shard-interleaved curriculum order: assign each doc to one of S
     * md5-shards, rank by difficulty WITHIN each shard, and interleave
@@ -468,9 +403,9 @@ object Sampling {
     *
     * Scale shape: the threshold comes from the same bounded
     * score-histogram collect as [[topFractionByScore]], now carrying
-    * token sums; the boundary bin's prefix sums ride Packing's
-    * two-level recipe (range partition + partition offsets) — no
-    * one-partition window over data-scale rows anywhere. The
+    * token sums; the boundary bin's prefix sums come from
+    * [[GlobalOrder.runningSum]] through Packing — no one-partition
+    * window over data-scale rows anywhere. The
     * histogram bound is ENFORCED, not assumed: the collect ships at
     * most `maxScoreBins + 1` rows (LocalLimit caps the transfer) and
     * raises when the score column is finer than the 6-dp-lattice

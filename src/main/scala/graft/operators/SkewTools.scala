@@ -25,8 +25,8 @@ object SkewTools {
       saltBuckets: Int,
       partial: Seq[Column],
       fin: Seq[Column]): DataFrame =
-    df.withColumn("_salt", pmod(spark_partition_id() + monotonically_increasing_id(),
-        lit(saltBuckets)))
+    df.withColumn("_salt",
+        pmod(xxhash64(monotonically_increasing_id()), lit(saltBuckets)))
       .groupBy((keys.map(col) :+ col("_salt")): _*)
       .agg(partial.head, partial.tail: _*)
       .groupBy(keys.map(col): _*)

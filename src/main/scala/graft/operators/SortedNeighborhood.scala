@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -16,10 +15,8 @@ import graft.functions.TextFunctions
   * runs multi-pass with different keys in production; one pass here,
   * key = the canonical text prefix).
   *
-  * Scale shape: the global sort rank uses the two-level rank pattern
-  * (range-partition by (key, id), rank within partitions, add
-  * P-row driver offsets — Sampling.globalOrderRank's argument with
-  * the blocking key as the order): no one-partition window anywhere.
+  * Scale shape: the global sort rank is [[GlobalOrder.rank]] with the
+  * blocking key as the order: no one-partition window anywhere.
   * The neighbor join is rank-arithmetic (rank + j for j ≤ w) — a
   * narrow equi join; token sets attach only to candidates.
   */
@@ -37,9 +34,7 @@ object SortedNeighborhood {
         substring(graft.operators.CorpusHygiene.canonicalText(
           concat_ws(" ", col("_toks"))), 1, 24))
 
-    // two-level global rank by (_key, _id) — the shared Ranks helper
-    val ranked = Ranks.globalRankBy(keyed, "_id", "_rank",
-      Seq(col("_key")))
+    val ranked = GlobalOrder.rank(keyed, "_id", Seq(col("_key")), "_rank")
     val spark = df.sparkSession
     val right = ranked.select(col("_rank").as("_rank_b"),
       col("_id").as("id_b"), col("_toks").as("t_b"))

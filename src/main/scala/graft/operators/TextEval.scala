@@ -100,6 +100,12 @@ object TextEval {
     * (n, clip_n, total_n, p_n, ln_pn_e8, c_len, r_len, bp_e8,
     * log_bleu).
     *
+    * Precondition: every token is non-empty and contains no space.
+    * Grams are single-space-joined and a cell recovers its order n as
+    * `size(split(g, ' '))`, so a token with a space in it counts in a
+    * higher order, and a 1-gram can then equal a 2-gram and merge with
+    * it, silently.
+    *
     * Scale shape: every order rides one tagged (doc, n, gram) count
     * aggregate per side and ONE clip join (map-side combinable
     * sums); lens and all totals come from one more corpus pass — 3

@@ -648,37 +648,13 @@ object ExtensionQueries {
     * run stops after one round (rounds_run = 1), and the oracle
     * replays the same stop test over its unrolled rounds — the r12
     * verdict's "exit engaged on a planted fast-converging fixture",
-    * hash-checked. (The ring is built with the range-partitioned
-    * two-level successor recipe — no global-order window.)
+    * hash-checked. (The ring is [[graft.operators.GlobalOrder.successor]]
+    * over the keys — no global-order window.)
     */
   def qPageRankConverged(s: SparkSession, dir: String): DataFrame = {
-    // ring = successor in global key order, max wrapping to min —
-    // built with the range-partitioned two-level recipe
-    // (Packing.packByTokenBudget's): per-partition lead() for the
-    // local successor, then a #partitions-row frame (broadcast back)
-    // supplies each partition-last row the NEXT partition's first key
-    // and the global last its wrap target. No unpartitioned window
-    // ever sees the full key column (r13 verdict #5 — the old
-    // Window.orderBy(src) serialized every key through one task).
-    val parted = tbl(s, dir, "customer")
-      .select(col("c_custkey").cast("long").as("src"))
-      .repartitionByRange(col("src"))
-      .withColumn("_pid", spark_partition_id())
-    val wIn = Window.partitionBy(col("_pid")).orderBy(col("src"))
-    val local = parted.withColumn("_next", lead(col("src"), 1).over(wIn))
-    // one row per non-empty partition; the single-partition windows
-    // below are O(#partitions), not O(rows)
-    val wP = Window.orderBy(col("_pid"))
-    val seams = parted.groupBy(col("_pid"))
-      .agg(min(col("src")).as("_pfirst"))
-      .withColumn("_next_first", lead(col("_pfirst"), 1).over(wP))
-      .withColumn("_gmin", min(col("_pfirst")).over(
-        wP.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-      .select(col("_pid"), col("_next_first"), col("_gmin"))
-    val ring = local.join(broadcast(seams), Seq("_pid"))
-      .select(col("src"),
-        coalesce(col("_next"), col("_next_first"), col("_gmin")).as("dst"))
+    val ring = graft.operators.GlobalOrder.successor(
+        tbl(s, dir, "customer").select(col("c_custkey").cast("long").as("src")),
+        "src", "dst")
     graft.operators.PageRank.microPageRank(ring, 8,
       distinctEdges = true, everyNodeHasOutEdge = true,
       everyNodeHasInEdge = true, convergeCheckEvery = 1)
@@ -1384,7 +1360,7 @@ object ExtensionQueries {
       qQualityScore(s, dir), "doc_id", "quality", fraction = 0.2)
 
   /** Deterministic global training order over the corpus —
-    * two-level rank in md5(doc_id:salt) order, no global window.
+    * GlobalOrder rank in md5(doc_id:salt) order, no global window.
     */
   def qTrainOrder(s: SparkSession, dir: String): DataFrame =
     graft.operators.Sampling.globalOrderRank(
@@ -4920,8 +4896,8 @@ object ExtensionQueries {
   }
 
   /** Reciprocal-rank fusion (q297): the q24 quality ranking fused
-    * with the length ranking (both through the single-exchange rank
-    * kernel, ties pinned by doc_id) — the calibration-free hybrid
+    * with the length ranking (both through [[graft.operators.GlobalOrder.rank]], ties
+    * pinned by doc_id) — the calibration-free hybrid
     * ranker composition a retrieval stack ships.
     */
   def qRankFusion(s: SparkSession, dir: String): DataFrame = {
@@ -4931,13 +4907,11 @@ object ExtensionQueries {
         round(TextFunctions.qualityScoreFrom(col("text"), col("_toks"))
           * 1000000, 0).cast("long").as("_q6"))
       .localCheckpoint()
-    val byQuality = graft.operators.Ranks.globalRankBy(
-      scored, "doc_id", "rank_quality",
-      Seq(-col("_q6"), col("doc_id")))
+    val byQuality = graft.operators.GlobalOrder.rank(
+      scored, "doc_id", Seq(-col("_q6"), col("doc_id")), "rank_quality")
       .select(col("doc_id"), col("rank_quality"))
-    val byLength = graft.operators.Ranks.globalRankBy(
-      scored, "doc_id", "rank_length",
-      Seq(-col("n_chars"), col("doc_id")))
+    val byLength = graft.operators.GlobalOrder.rank(
+      scored, "doc_id", Seq(-col("n_chars"), col("doc_id")), "rank_length")
       .select(col("doc_id"), col("rank_length"))
     graft.operators.RankFusion.fuse(byQuality, byLength, "doc_id",
       "rank_quality", "rank_length")

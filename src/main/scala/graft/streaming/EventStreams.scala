@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
@@ -464,6 +465,11 @@ object EventStreams {
     * each micro-batch commits one state store per partition, and at
     * replay scale per-task commit overhead dominates — a few wide-open
     * state tasks beat 32 mostly-idle ones.
+    *
+    * The emitted rows come back as a local relation copied out of the
+    * memory sink, whose `graft_replay_<uuid>` temp view is dropped
+    * before return, on failure too: replays leave nothing in the
+    * session catalog.
     */
   def replayToTable(
       events: DataFrame,
@@ -529,7 +535,6 @@ object EventStreams {
     def release(sub: String): Unit = {
       val dir = java.nio.file.Paths.get(stageDir, sub)
       if (java.nio.file.Files.isDirectory(dir)) {
-        import scala.jdk.CollectionConverters._
         java.nio.file.Files.list(dir).iterator().asScala.toSeq
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .foreach { p =>
@@ -539,34 +544,41 @@ object EventStreams {
       }
     }
 
-    val out = buildStream(
-      spark.readStream.schema(typed.schema).parquet(watchDir))
-    val partitionsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions)
-    val confsBefore = extraConfs.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    extraConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val q = out.writeStream.format("memory")
-        .queryName(qname).outputMode("append")
-        .option("checkpointLocation", ckptRoot)
-        .start()
+      val out = buildStream(
+        spark.readStream.schema(typed.schema).parquet(watchDir))
+      val partitionsBefore = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions)
+      val confsBefore = extraConfs.keys
+        .map(k => k -> spark.conf.getOption(k)).toMap
+      extraConfs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        for (k <- 0 until numBatches) {
-          release(s"_b=$k")
+        val q = out.writeStream.format("memory")
+          .queryName(qname).outputMode("append")
+          .option("checkpointLocation", ckptRoot)
+          .start()
+        try {
+          for (k <- 0 until numBatches) {
+            release(s"_b=$k")
+            q.processAllAvailable()
+          }
+          release(s"_b=$numBatches")
           q.processAllAvailable()
+        } finally q.stop()
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", partitionsBefore)
+        confsBefore.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
         }
-        release(s"_b=$numBatches")
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", partitionsBefore)
-      confsBefore.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
+      // the sink's rows already sit on the driver: copying them into a
+      // local relation runs no job and leaves no catalog entry
+      val emitted = spark.table(qname)
+      spark.createDataFrame(emitted.collect().toSeq.asJava, emitted.schema)
+    } finally {
+      spark.catalog.dropTempView(qname)
       try {
-        import scala.jdk.CollectionConverters._
         val rootPath = java.nio.file.Paths.get(root)
         if (java.nio.file.Files.exists(rootPath)) {
           java.nio.file.Files.walk(rootPath).iterator().asScala.toSeq.reverse
@@ -574,6 +586,5 @@ object EventStreams {
         }
       } catch { case NonFatal(_) => () }
     }
-    spark.table(qname)
   }
 }

@@ -39,6 +39,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  9. No parameter default that no product call passes: a default
   *     nothing overrides is a constant in disguise, and one only specs
   *     override is a mode the product never runs.
+  * 10. One global-order implementation: no `spark_partition_id()` and
+  *     no window over a `_pid` column outside
+  *     `operators/GlobalOrder.scala`. A hand copy of the two-level
+  *     recipe with a `Window.partitionBy(col("_pid"))` re-shuffles the
+  *     whole input, because Catalyst cannot see that the rows of one
+  *     partition id already sit together.
   */
 class SourceDisciplineSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala/graft")
@@ -137,7 +143,7 @@ class SourceDisciplineSpec extends AnyFunSuite {
   // files with documented bounded collects (see their scaladocs)
   private val collectAllowlist = Set(
     "operators/Experiments.scala",   // k-bounded assignment tables
-    "operators/Ranks.scala",         // P-row partition-count offsets
+    "operators/GlobalOrder.scala",   // P-row partition offsets
     "operators/Sampling.scala",      // histogram/threshold/offset rows
     "operators/ProductQuantization.scala", // nlist-row coarse quantizer
     "operators/SemanticDedup.scala", // k-row sampled quantizer
@@ -145,7 +151,9 @@ class SourceDisciplineSpec extends AnyFunSuite {
     // phase-fit vectors of a batch of at most LocalFitMaxRows = 100,000
     // rows × 3 doubles (≈ 2.4 MB); larger batches fit on the cluster
     "pipeline/PhaseClassifier.scala",
-    "streaming/EventStreams.scala")  // 1-row min/max bounds
+    // 1-row min/max bounds; a replay's emitted rows, which the memory
+    // sink already holds on the driver
+    "streaming/EventStreams.scala")
 
   test("no udf() anywhere in main source") {
     val offenders = scalaFiles.filter { p =>
@@ -164,6 +172,19 @@ class SourceDisciplineSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"undocumented .collect() in: ${offenders.map(mainRoot.relativize)}")
+  }
+
+  test("global orders only through operators/GlobalOrder.scala") {
+    val recipe = ("spark_partition_id\\s*\\(|" +
+      "(partitionBy|orderBy)\\s*\\(\\s*col\\s*\\(\\s*\"_pid\"").r
+    val offenders = scalaFiles.filter { p =>
+      mainRoot.relativize(p).toString != "operators/GlobalOrder.scala" &&
+        Files.readString(p).linesIterator.exists(l =>
+          !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
+            recipe.findFirstIn(l).nonEmpty)
+    }.map(mainRoot.relativize(_).toString)
+    assert(offenders.isEmpty,
+      s"hand copy of the global-order recipe in: $offenders")
   }
 
   test("SparkSession.builder only in core/GraftSession.scala") {
@@ -396,8 +417,6 @@ class SourceDisciplineSpec extends AnyFunSuite {
     ("operators/Ranks.scala", "kendallTauB", "maxGridCells"),
     ("operators/Sampling.scala", "budgetByScore", "maxScoreBins"),
     ("operators/Sampling.scala", "topFractionByScore", "maxScoreBins"),
-    ("operators/Sampling.scala", "globalOrderRank", "partitions"),
-    ("operators/Ranks.scala", "globalRankBy", "partitions"),
     ("operators/Dedup.scala", "duplicateClusters", "maxIter"),
     ("operators/LanguageModel.scala", "knBigramProbs", "discount"),
     ("operators/LanguageModel.scala", "worstWindowCutCalibration", "margins"),

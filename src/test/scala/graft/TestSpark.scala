@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.GraftSession
 
@@ -16,6 +23,17 @@ object TestSpark {
         s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  /** A session on the test context whose range partitions number
+    * exactly `n` (its own shuffle partition count, AQE coalescing
+    * off): global orders built from its frames run on `n` ranges.
+    */
+  def onPartitions(n: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", n.toLong)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
     s
   }
 
@@ -35,6 +53,40 @@ object TestSpark {
     }
     (result, cur)
   }
+
+  /** `f`'s result and the physical plans of the actions it ran (a
+    * checkpoint, a collect). Plans reach the listener asynchronously,
+    * in order, so a marker action closes the recording.
+    */
+  def withPlans[T](f: => T): (T, Seq[SparkPlan]) = {
+    val marker = "_plans_marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) closed.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = f
+      spark.range(1).toDF(marker).collect()
+      assert(closed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the plan listener never saw the marker action")
+      (result, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private object Stages extends AdaptiveSparkPlanHelper
+
+  /** The partitioning of every shuffle exchange in `plan`, adaptive
+    * query stages included.
+    */
+  def shuffles(plan: SparkPlan): Seq[Partitioning] =
+    Stages.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
 
   /** Parse raw JSON strings through the real reader path. */
   def jsonDf(schema: org.apache.spark.sql.types.StructType, rows: Seq[String]): DataFrame = {

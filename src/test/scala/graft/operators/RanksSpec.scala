@@ -5,17 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** VALUE-level guard for the single-exchange rank kernel: the plan
-  * suite asserts its exchange count, but the kernel's correctness
-  * rests on an implicit Catalyst invariant (the nondeterministic
-  * `monotonically_increasing_id` projection staying ABOVE
-  * `sortWithinPartitions`, ids consecutive per partition in row
-  * order). If a Spark upgrade ever reorders that, the plan-shape
-  * test would stay green while ranks silently scrambled — so this
-  * spec checks the VALUES: over an adversarially shuffled fixture,
-  * `globalRankBy` must yield the exact 1..N permutation of the
-  * (key, id) total order.
-  */
 class RanksSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -53,41 +42,5 @@ class RanksSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("3000 x 3000"), ex.getMessage)
     assert(Ranks.kendallTauB(rows.toDF(), "x", "y",
       maxGridCells = 10000000L).collect()(0).getLong(0) === 3000L)
-  }
-
-  test("globalRankBy yields the exact 1..N permutation on shuffled input") {
-    val n = 5000
-    // adversarial physical layout: hash-scrambled insert order, then
-    // a round-robin repartition so no partition is key-contiguous
-    val rows = (1L to n.toLong).map(i => (i, (i * 2654435761L) % 977L))
-      .sortBy { case (i, _) => (i * 40503L) % 65521L }
-    val df = rows.toDF("id", "key").repartition(17)
-    val ranked = Ranks.globalRankBy(df, "id", "rk", Seq(col("key")),
-      partitions = 13)
-    val got = ranked.select(col("id"), col("key"), col("rk"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.length === n)
-    // expected: rank = position in the (key, id) total order
-    val expected = rows.sortBy { case (i, k) => (k, i) }
-      .zipWithIndex.map { case ((i, _), p) => i -> (p + 1L) }.toMap
-    val bad = got.filter { case (i, _, rk) => expected(i) != rk }
-    assert(bad.isEmpty,
-      s"${bad.length} scrambled ranks, first: ${bad.take(3).toSeq}")
-    // and the rank set is exactly 1..N (no dup, no gap)
-    assert(got.map(_._3).sorted.toSeq === (1L to n.toLong))
-  }
-
-  test("globalRankBy is deterministic across physical layouts") {
-    val rows = (1L to 2000L).map(i => (i, i % 7L))
-    val a = Ranks.globalRankBy(rows.toDF("id", "key").repartition(3),
-        "id", "rk", Seq(col("key")), partitions = 5)
-      .select("id", "rk").collect().map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    val b = Ranks.globalRankBy(
-        rows.reverse.toDF("id", "key").repartition(29),
-        "id", "rk", Seq(col("key")), partitions = 32)
-      .select("id", "rk").collect().map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(a === b)
   }
 }

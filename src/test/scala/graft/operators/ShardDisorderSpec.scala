@@ -11,14 +11,6 @@ class ShardDisorderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("globalRankBy: exact 1..N under an arbitrary sort key") {
-    val df = (1L to 500L).map(i => (i, (i * 7919) % 101)).toDF("id", "k")
-    val ranked = Ranks.globalRankBy(df, "id", "r",
-        Seq(col("k"), col("id")), partitions = 8)
-      .collect().map(r => r.getAs[Long]("r"))
-    assert(ranked.sorted.toSeq === (1L to 500L))
-  }
-
   test("snake shards: near-balanced token totals across shards") {
     // heavily skewed weights: doc i weighs i
     val docs = (1L to 400L).map(i => (i, i)).toDF("doc_id", "w")

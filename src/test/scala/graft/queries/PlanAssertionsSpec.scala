@@ -253,25 +253,54 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), plan)
   }
 
-  test("q255/rank core: the big side sees exactly ONE exchange (the range partition)") {
-    // the rank kernel under q255/q257/q246/q137/q160: local rank is
-    // monotonically_increasing_id arithmetic over the partition-sorted
-    // frame — a Window.partitionBy(_pid) here would re-shuffle
-    // everything by partition id (Catalyst can't see the layout
-    // already satisfies it); this guards the single-exchange shape
+  test("GlobalOrder core: ONE exchange, the range partition") {
+    // the core under every global rank, prefix sum and ring: each
+    // sorted range is walked by one mapPartitions — a window
+    // partitioned by the partition id here would re-shuffle everything
+    // (Catalyst can't see the layout already satisfies it)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.functions.{col, length}
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), length(col("text")).cast("long").as("w"))
-    val (out, ranged) = graft.operators.Ranks.rankedUnpinned(
-      docs, "doc_id", "rank", Seq(col("w").desc), 8)
-    try {
-      val plan = out.queryExecution.executedPlan.toString()
-      assert(plan.contains("rangepartitioning"), plan)
-      assert(!plan.contains("Exchange hashpartitioning"),
-        "rank re-shuffles by _pid — the redundant second exchange is back:\n" + plan)
-      assert(!plan.contains("Window"), plan)
-      assert(plan.contains("BroadcastHashJoin"), plan)
-    } finally ranged.unpersist()
+    val (out, plans) = TestSpark.withPlans(graft.operators.GlobalOrder.rank(
+      docs, "doc_id", Seq(col("w").desc), "rank"))
+    val walks = plans.filter(_.toString.contains("MapPartitions"))
+    assert(walks.size == 1, plans.mkString("\n"))
+    val parts = TestSpark.shuffles(walks.head)
+    assert(parts.size == 1 && parts.head.isInstanceOf[RangePartitioning],
+      "the walk re-shuffles — the redundant second exchange is back:\n" +
+        walks.head)
+    assert(!walks.head.toString.contains("Window"), walks.head.toString)
+    val plan = out.queryExecution.executedPlan
+    assert(TestSpark.shuffles(plan).isEmpty, plan.toString)
+    assert(plan.toString.contains("BroadcastHashJoin"), plan.toString)
+  }
+
+  test("q95/q137/q182/q193/q257/q325/q332: each global order shuffles " +
+      "the full input once; nothing shuffles on a partition id") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    val orders = Seq("q95_sequence_packing" -> 1, "q137_train_order" -> 1,
+      "q182_pps_sample" -> 1, "q193_gini" -> 1, "q257_spearman" -> 2,
+      "q325_packing_report" -> 1, "q332_pagerank_converged" -> 1)
+    for ((name, n) <- orders) {
+      val (df, ran) = TestSpark.withPlans(
+        graft.SparkEntry.queries(name)(spark, sfDir))
+      val plans = ran :+ df.queryExecution.executedPlan
+      // a plan with a range exchange is a global order's walk; no
+      // walk input here shuffles, so the range exchange is its only one
+      val walks = plans.filter(p =>
+        TestSpark.shuffles(p).exists(_.isInstanceOf[RangePartitioning]))
+      assert(walks.size == n, s"$name: ${walks.size} walks, expected $n")
+      walks.foreach { w =>
+        assert(TestSpark.shuffles(w).size == 1, s"$name walk:\n$w")
+      }
+      val onPid = plans.flatMap(TestSpark.shuffles).collect {
+        case h: HashPartitioning if h.expressions.exists(_.references
+          .exists((a: Attribute) => a.name.endsWith("_pid"))) => h
+      }
+      assert(onPid.isEmpty, s"$name shuffles on a partition id: $onPid")
+    }
   }
 
   test("q259: df-cap filter runs BELOW the pair join; no loop joins anywhere") {
