@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * (broadcast when the node set fits an executor, shuffle-hash
   * against the clustered cache otherwise) plus the map-side-combined
   * aggregate exchange. No edge re-shuffle and no per-round sort
-  * anywhere; all rounds batch LAZILY into one job, and only the
-  * closing totals ride 1-row broadcasts. Pure hubs / pure
+  * anywhere; rounds batch LAZILY between the renorm-boundary cuts,
+  * and only the normalize totals ride 1-row broadcasts. Pure hubs / pure
   * authorities surface with an exact 0.
   */
 object Hits {
@@ -94,34 +94,26 @@ object Hits {
     * shuffle-hash-joins against the clustered edge caches instead of
     * broadcasting.
     *
-    * @param convergeEarly stop at a renorm boundary whose NORMALIZED
-    *              hub frame equals the previous boundary's — the HITS
-    *              analog of [[PageRank]]'s exact fixed-point test.
-    *              Raw decimals grow every half-step by design, so the
-    *              only round-comparable representation is the
-    *              normalized long frame, and that exists exactly at
-    *              the 2-round renorm boundaries the magnitude
-    *              envelope already forces — the test therefore rides
-    *              a frame the loop ALREADY materializes (one extra
-    *              co-partitioned join + cache-read probe per
-    *              boundary, nothing per round). Boundary equality is
-    *              exact convergence: two rounds + renorm is a pure
-    *              integer function of the normalized hub frame, so a
-    *              repeated boundary state pins every later stretch,
-    *              and for EVEN `iterations` the remaining rounds are
-    *              whole stretches — the early result is bit-identical
-    *              to the full run (odd iteration counts break that
-    *              parity, so the test only engages when `iterations`
-    *              is even; it is then also skipped at boundaries the
-    *              magnitude envelope already renormalizes away, i.e.
-    *              none). Adds `rounds_run` (= the boundary round at
-    *              the fixed point, else `iterations`).
-    * @return (node, micro_hub, micro_auth) after `iterations` full
-    *         hub+authority rounds; Σ of each side ≈ N·10⁶ — plus
-    *         `rounds_run` when `convergeEarly` is set.
+    * The rounds run on [[Fixpoint]] with a cut every 2 rounds, at the
+    * renorm boundaries the magnitude envelope forces. For EVEN
+    * `iterations` each boundary before the last round is probed: the
+    * run stops when the NORMALIZED hub frame equals the previous
+    * boundary's — the HITS analog of [[PageRank]]'s exact fixed-point
+    * test. Raw decimals grow every half-step by design, so the
+    * normalized frame is the only round-comparable one, and the cut
+    * already materializes it. Two rounds + renorm is a pure integer
+    * function of the normalized hub frame, so a repeated boundary
+    * state pins every later stretch, and for even `iterations` the
+    * remaining rounds are whole stretches: the early result is
+    * bit-identical to the full run. Odd counts break that parity and
+    * run every round.
+    *
+    * @return (node, micro_hub, micro_auth, rounds_run) after
+    *         `iterations` full hub+authority rounds; Σ of each side ≈
+    *         N·10⁶; rounds_run is the boundary round at the fixed
+    *         point, else `iterations`.
     */
-  def microHits(edges: DataFrame, iterations: Int,
-      convergeEarly: Boolean = false): DataFrame = {
+  def microHits(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1 && iterations <= 8,
       s"iterations out of the decimal-headroom envelope: $iterations")
     val (eBySrc, eByDst) = edgeCaches(edges)
@@ -170,89 +162,66 @@ object Hits {
     // (the renormalized a is DEAD — round i+1 rebuilds a from h —
     // so the r10 shape's a-side mid-point normalize was pure plan
     // weight; the ORACLE's unrolled a2n CTE is likewise unread), and
-    // in the final round a pins BEFORE h consumes it, so pinning h
-    // replays nothing.
-    def pin(f: DataFrame): DataFrame = f.localCheckpoint()
-    var h = nodes.select(col("node"),
-      lit(1000000L).cast(dec).as("_v"))
-    // the convergence test's previous-boundary state. The INITIAL hub
-    // frame is its own normalized form (Σ = N·10⁶ exactly) and is
-    // CONSTANT — so the first boundary's test is a literal filter
-    // (no join, no shuffle of a synthetic all-10⁶ frame); only later
-    // boundaries compare frame against frame (r13 verdict #4: the
-    // boundary join priced ~+1 s on q321's single-boundary run)
-    var prevNorm: DataFrame = null
-    var a: DataFrame = null
-    var earlyHub: DataFrame = null
-    var roundsRun = iterations
-    var i = 1
-    var stop = false
-    while (i <= iterations && !stop) {
-      a = halfStep(eBySrc, eByDst, h, "src", "dst", bcast)
-      if (i == iterations) a = pin(a)
-      h = halfStep(eByDst, eBySrc, a, "dst", "src", bcast)
+    // in the final round a pins BEFORE h consumes it, so the cut of h
+    // replays nothing. These side pins are released on return.
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(f: DataFrame): DataFrame = {
+      val p = f.localCheckpoint()
+      pins += p
+      p
+    }
+    val h0 = nodes.select(col("node"), lit(1000000L).cast(dec).as("_v"))
+    // the boundary probe. The INITIAL hub frame is its own normalized
+    // form (Σ = N·10⁶ exactly) and is CONSTANT — so the first
+    // boundary's test is a literal filter (no join, no shuffle of a
+    // synthetic all-10⁶ frame); only later boundaries compare cut
+    // against cut, co-partitioned (r13 verdict #4: the boundary join
+    // priced ~+1 s on q321's single-boundary run)
+    val settled: Option[(DataFrame, DataFrame) => Boolean] =
+      if (iterations % 2 == 1) None
+      else Some { (prev, next) =>
+        if (prev eq h0) next.filter(col("_v") =!= 1000000L).isEmpty
+        else next.join(prev.withColumnRenamed("_v", "_pv")
+            .hint("shuffle_hash"), Seq("node"))
+          .filter(col("_v") =!= col("_pv")).isEmpty
+      }
+    def auth(h: DataFrame) = halfStep(eBySrc, eByDst, h, "src", "dst", bcast)
+    def hub(a: DataFrame) = halfStep(eByDst, eBySrc, a, "dst", "src", bcast)
+    var a: DataFrame = null // the final round's pinned authority side
+    val (h, roundsRun) = Fixpoint.run(h0, iterations, 2, settled) { (h, i) =>
+      val ai = if (i == iterations) { a = pin(auth(h)); a } else auth(h)
+      val hNext = hub(ai)
       // Exact renormalization of h every SECOND round bounds the
       // decimal magnitude: unnormalized growth is ×(side mass) per
       // half-step and K_{2000,500}-dense graphs overflow 38 digits
       // by round 4 (found by the round-10 scale probe, BASELINE.md —
       // the closing rescale's v·scale product went null). A 2-round
       // stretch is the envelope the r11 re-probe validated through 8
-      // rounds. (The r10
-      // single-mid-point placement let 6-8-iteration runs regrow a
-      // 4-round stretch — exactly the undetected-overflow window
-      // ADVICE r10 flagged.)
-      if (iterations >= 3 && i % 2 == 0 && i < iterations) {
-        val hN = normalize(pin(h), "_m")
-        if (convergeEarly && iterations % 2 == 0) {
-          // boundary fixed-point test on the frame the renorm already
-          // built: ONE eager pin materializes the boundary state,
-          // then the test is a cache-read probe — against the
-          // LITERAL 10⁶ at the first boundary (the previous state is
-          // the constant initial frame), a co-partitioned cache-vs-
-          // cache join only at later boundaries
-          val hNp = hN.localCheckpoint(true)
-          val converged =
-            if (prevNorm == null)
-              hNp.filter(col("_m") =!= 1000000L).isEmpty
-            else hNp.join(
-                prevNorm.withColumnRenamed("_m", "_pm")
-                  .hint("shuffle_hash"), Seq("node"))
-              .filter(col("_m") =!= col("_pm")).isEmpty
-          if (converged) {
-            // boundary state repeated: every remaining stretch replays
-            // it, so micro_hub = this normalized frame and micro_auth
-            // = normalize(a at this boundary) — bit-identical to the
-            // full run (see the convergeEarly scaladoc)
-            roundsRun = i
-            stop = true
-            earlyHub = hNp
-            a = pin(a)
-          } else {
-            prevNorm = hNp
-            h = hNp.select(col("node"), col("_m").cast(dec).as("_v"))
-          }
-        } else {
-          h = hN.select(col("node"), col("_m").cast(dec).as("_v"))
-        }
-      }
-      if (i == iterations) h = pin(h)
-      i += 1
+      // rounds.
+      if (iterations >= 3 && i % 2 == 0 && i < iterations)
+        normalize(pin(hNext), "_m")
+          .select(col("node"), col("_m").cast(dec).as("_v"))
+      else hNext
     }
-
+    // an early stop ends on a normalized boundary cut S equal to the
+    // previous boundary state, so S is the hub side and the stopping
+    // round's a — three half-steps from that state — is three
+    // half-steps from S (the released previous cut is not re-read)
+    val early = roundsRun < iterations
+    if (early) a = pin(auth(hub(auth(h))))
     val hubSide =
-      if (earlyHub != null) earlyHub.withColumnRenamed("_m", "micro_hub")
+      if (early) h.select(col("node"), col("_v").cast("long").as("micro_hub"))
       else normalize(h, "micro_hub")
-    val out0 = nodes
+    val out = nodes
       .join(hubSide, Seq("node"), "left")
       .join(normalize(a, "micro_auth"), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("micro_hub"), lit(0L)).as("micro_hub"),
-        coalesce(col("micro_auth"), lit(0L)).as("micro_auth"))
-    val out = (if (convergeEarly)
-        out0.withColumn("rounds_run", lit(roundsRun).cast("int"))
-      else out0)
+        coalesce(col("micro_auth"), lit(0L)).as("micro_auth"),
+        lit(roundsRun).as("rounds_run"))
       .localCheckpoint()
-    eBySrc.unpersist(); eByDst.unpersist(); nodes.unpersist()
+    Seq(eBySrc, eByDst, nodes).foreach(_.unpersist())
+    (h +: pins).foreach(Fixpoint.release)
     out
   }
 }

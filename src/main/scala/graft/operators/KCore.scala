@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   * the shrinking alive set plus one map-side-combined degree count.
   * The alive side is broadcast when the graph is provably small
   * (2·|edges| ≤ threshold), else shuffle-hash — never a sort-merge
-  * that would re-sort the edge cache. `localCheckpoint` severs each
-  * round's lineage (the alive frame is O(nodes), cheap to pin).
+  * that would re-sort the edge cache. The rounds run on [[Fixpoint]]
+  * with a cut every round (the alive frame is O(nodes), cheap to pin)
+  * and the count probe on each cut before the last.
   */
 object KCore {
 
@@ -49,23 +50,19 @@ object KCore {
       .join(side(alive.select(col("node").as("dst"))), Seq("dst"))
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_degree"))
 
-    var alive = e.select(col("src").as("node")).distinct().localCheckpoint(true)
-    var n = alive.count()
-    val pins = scala.collection.mutable.ArrayBuffer(alive)
-    var r = 0
-    var fixed = false
-    while (r < rounds && !fixed) {
-      val next = induced(alive).filter(col("core_degree") >= k)
-        .select("node").localCheckpoint(true)
-      pins += next
+    val init = e.select(col("src").as("node")).distinct().localCheckpoint(true)
+    // subset + equal cardinality = equal set, so a count suffices
+    var n = init.count()
+    val (last, _) = Fixpoint.run(init, rounds, 1, Some { (_, next) =>
       val n2 = next.count()
-      if (n2 == n || n2 == 0L) fixed = true
-      alive = next
+      val fixed = n2 == n || n2 == 0L
       n = n2
-      r += 1
+      fixed
+    }) { (alive, _) =>
+      induced(alive).filter(col("core_degree") >= k).select("node")
     }
-    val result = induced(alive).localCheckpoint(true)
-    pins.foreach(_.unpersist())
+    val result = induced(last).localCheckpoint(true)
+    Fixpoint.release(last)
     e.unpersist()
     result
   }

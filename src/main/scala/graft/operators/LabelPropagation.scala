@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * and cached; a round is one join of the narrow (node, label) frame
   * against the cached edges, a map-side-combined (dst, label) count,
   * and a per-dst argmax — all hash exchanges, no sorts, no driver
-  * state; `localCheckpoint` severs lineage every 4th round so the
-  * plan stays O(1) deep over any round count.
+  * state; the rounds run on [[Fixpoint]] with a cut every 4th round,
+  * so the plan stays O(1) deep over any round count.
   *
   * CONTRACT: feed both directions for an undirected graph; every
   * node must appear as a dst (true for both-direction edge sets —
@@ -39,11 +39,9 @@ object LabelPropagation {
       .repartition(col("src")).dropDuplicates("src", "dst").persist()
     e.count()
     val nodes = e.select(col("src").as("node")).distinct().persist()
-    var labels = nodes.withColumn("label", col("node")).localCheckpoint(true)
-    var pinned = labels
-    for (i <- 1 to rounds) {
-      val next = e
-        .join(labels.withColumnRenamed("node", "src"), Seq("src"))
+    val init = nodes.withColumn("label", col("node")).localCheckpoint(true)
+    val (last, _) = Fixpoint.run(init, rounds, 4, None) { (labels, _) =>
+      e.join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("dst"))
         // lexicographic struct max: highest count, then (via negated
@@ -51,13 +49,8 @@ object LabelPropagation {
         .agg(max_by(col("label"),
           struct(col("c"), (lit(-1L) * col("label")).as("negl"))).as("label"))
         .withColumnRenamed("dst", "node")
-      if (i % 4 == 0 || i == rounds) {
-        labels = next.localCheckpoint(true)
-        pinned.unpersist()
-        pinned = labels
-      } else labels = next
     }
     Seq(e, nodes).foreach(_.unpersist())
-    labels.select(col("node"), col("label"))
+    last.select(col("node"), col("label"))
   }
 }

@@ -45,11 +45,10 @@ import org.apache.spark.sql.functions._
   * extra setup shuffle. In the shuffle-hash regime partial
   * aggregation map-side-combines the edge-side contributions before
   * the one small per-round shuffle on dst.
-  * `localCheckpoint` severs lineage every 8th round so the plan stays
-  * O(1) deep over any iteration count (the CC recipe) — in the common
-  * everyNodeHasInEdge broadcast regime a round is one join + one agg,
-  * so 8 lazy rounds are still a shallow plan, and batching them into
-  * one job amortizes the fixed optimize/schedule/materialize cost
+  * The rounds run on [[Fixpoint]]: a cut every `convergeCheckEvery`
+  * rounds and at the last keeps the plan O(1) deep over any iteration
+  * count, and the lazy rounds between cuts batch into one job, which
+  * amortizes the fixed optimize/schedule/materialize cost
   * that dominates small-graph runs. Edges (with degrees) are computed
   * once and persisted across rounds; all caches except the final
   * O(nodes) result are released on return.
@@ -58,7 +57,7 @@ object PageRank {
 
   /** Ceiling on 2·|edges| (or on nodes) below which the iterative
     * graph operators broadcast their per-round frame — this object's,
-    * [[Hits]], [[Bfs]], [[KCore]] and [[ShortestPaths]]; above it the
+    * [[Hits]], [[KCore]] and [[ShortestPaths]]; above it the
     * frame shuffle-hash-joins against the src-partitioned edge cache.
     */
   private[operators] val BroadcastThreshold = 4000000L
@@ -107,33 +106,19 @@ object PageRank {
     *              joined against src-partitioned edges instead
     *              (billion-node graphs can't broadcast their rank
     *              vector, but they can still avoid re-sorting edges)
-    * @param convergeCheckEvery 0 = off; c ≥ 1 arms the convergence
-    *              exit: every c-th round materializes and stops if it
-    *              left every rank UNCHANGED — exact integer
-    *              arithmetic makes "rank_i == rank_{i−1}" a
-    *              deterministic predicate (no epsilon, no float
-    *              tolerance), and the map is a pure function of the
-    *              previous rank frame, so a fixed point at ANY
-    *              checked round pins every later round to the same
-    *              values: the early result is bit-identical to the
-    *              full run, only cheaper (r12 verdict #4 — wasted
-    *              rounds are real money at 100× scale). Adds a
-    *              `rounds_run` int column (= the first checked round
-    *              at a fixed point, else `iterations`). The cadence
-    *              is the cost dial: a checked round is one eager job
-    *              (fused materialize + change count) where lazy
-    *              rounds batch ~free, so c amortizes the check the
-    *              same way the 8-round checkpoint amortizes lineage —
-    *              c = 1 reads the tightest rounds_run, c ≈ 4 is right
-    *              when the check rivals a round's own cost (bench-
-    *              scale graphs), and at production round counts any
-    *              small c saves the whole converged tail at 1/c of
-    *              the check spend. The final round is never checked:
-    *              rounds_run = R there with or without a fixed point,
-    *              so the test would buy nothing.
-    * @return (node, micro_rank) — micro_rank/10⁶ ≈ N·rank after
-    *         `iterations` rounds — plus `rounds_run` when
-    *         `convergeCheckEvery` > 0.
+    * @param convergeCheckEvery c ≥ 1: the [[Fixpoint]] cadence. Every
+    *              c-th round is cut, and each cut before the last
+    *              stops the run if it left every rank UNCHANGED (see
+    *              `rounds`; r12 verdict #4 — wasted rounds are real
+    *              money at 100× scale). A checked round costs a
+    *              materialize and a probe job where lazy rounds batch
+    *              ~free, so c is the cost dial: c = 1 reads the
+    *              tightest `rounds_run`, c ≈ 4 suits graphs where the
+    *              check rivals a round's own cost, and c =
+    *              `iterations` checks nothing.
+    * @return (node, micro_rank, rounds_run) — micro_rank/10⁶ ≈ N·rank
+    *         after `iterations` rounds; rounds_run is the first
+    *         checked round at a fixed point, else `iterations`.
     */
   def microPageRank(
       edges: DataFrame,
@@ -142,7 +127,7 @@ object PageRank {
       everyNodeHasOutEdge: Boolean = false,
       everyNodeHasInEdge: Boolean = false,
       broadcastThreshold: Long = BroadcastThreshold,
-      convergeCheckEvery: Int = 0): DataFrame = {
+      convergeCheckEvery: Int): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     val e0 = edges.select(col("src"), col("dst"))
     // Setup is ONE shuffle + ONE job: cluster the raw edges by src,
@@ -179,7 +164,7 @@ object PageRank {
     // HITS half-step lesson, measured 4-5× there). One extra setup
     // shuffle of the edge cache buys every round's agg exchange.
     val eRound = if (bcast) e.repartition(col("dst")).persist() else e
-    var rank = nodes.withColumn("r", lit(1000000L)).localCheckpoint(true)
+    val rank = nodes.withColumn("r", lit(1000000L)).localCheckpoint(true)
     if (bcast) {
       // nodes' cache and rank's checkpoint are already materialized
       // (the eager checkpoint above scanned them), so eRound is the
@@ -189,11 +174,7 @@ object PageRank {
       eRound.count()
       e.unpersist()
     }
-    var pinned = rank
-    var roundsRun = iterations
-    var i = 1
-    var stop = false
-    while (i <= iterations && !stop) {
+    val (last, roundsRun) = rounds(rank, iterations, convergeCheckEvery) { rank =>
       // one pass over the cached edges: R(u) div outdeg(u) evaluates
       // per edge row (constant per src — identical to pre-dividing),
       // partial aggregation map-side-combines before the dst shuffle
@@ -203,65 +184,42 @@ object PageRank {
       // partitioned already (nodes via its distinct, contribs via the
       // dst-clustered cache), so the join is co-partitioned shuffle-
       // hash with zero exchanges — no per-round broadcast build
-      val next = (if (everyNodeHasInEdge) contribs
+      (if (everyNodeHasInEdge) contribs
         else nodes.join(
           if (bcast) contribs.hint("shuffle_hash") else contribs,
           Seq("node"), "left"))
         .select(col("node"),
           (lit(150000L) + expr("(85 * coalesce(sc, 0L)) div 100")).as("r"))
-      if (convergeCheckEvery > 0 && i % convergeCheckEvery == 0 &&
-          i < iterations) {
-        // the FINAL round never needs the test: rounds_run = R there
-        // whether or not round R repeats round R−1 (the oracle's
-        // MIN(checked i where unchanged) reads R in both cases), so
-        // the last round takes the plain checkpoint branch below
-        val (cache, cut, converged) = persistWithChange(next, rank)
-        pinned.unpersist()
-        pinned = cache
-        rank = cut
-        if (converged) { roundsRun = i; stop = true }
-      } else if (i % 8 == 0 || i == iterations) {
-        // checkpoint every 8th round: a round is 1-2 joins + 1 agg, so
-        // an 8-round lazy plan is still cheap to optimize, and batching
-        // 8 rounds into one eager job amortizes the fixed per-job cost
-        // that dominates small-graph runs
-        rank = next.localCheckpoint(true)
-        pinned.unpersist()
-        pinned = rank
-      } else rank = next
-      i += 1
     }
     Seq(e, eRound, nodes).distinct.foreach(_.unpersist())
-    val out = rank.select(col("node"), col("r").as("micro_rank"))
-    if (convergeCheckEvery > 0)
-      out.withColumn("rounds_run", lit(roundsRun).cast("int"))
-    else out
+    last.select(col("node"), col("r").as("micro_rank"),
+      lit(roundsRun).as("rounds_run"))
   }
 
-  /** Checked-round closer: the round joins its predecessor's rank
-    * (both sides node-hash-partitioned — contribution agg / rebase
-    * output vs the previous round's checkpoint — so the join is a
-    * co-partitioned zero-exchange shuffle-hash), eagerly checkpoints
-    * (severing lineage — the prev frame is consumed twice per checked
-    * round, so an uncut logical tree would double per round, the HITS
-    * lesson — while PRESERVING the hash partitioning for the next
-    * round's joins), then probes the cached frame for any changed
-    * rank: a limit-1 cache read that stops at the first difference.
-    * Two scheduled jobs per CHECKED round (materialize + probe) is
-    * what `convergeCheckEvery` exists to amortize; an RDD-rebase
-    * fusion was tried and rejected — it saved the probe job but
-    * discarded the frame's outputPartitioning (re-exchanging every
-    * later checked round) and paid a full serde round trip. Returns
-    * (cache handle for the unpersist chain, the (node, r) cut,
-    * fixed-point verdict).
+  /** Both PageRanks' rounds on [[Fixpoint]] at cadence `every`. A
+    * checked round (a cut before the last) joins its predecessor's
+    * rank as `_pr`: both sides are node-hash-partitioned (contribution
+    * agg / rebase output vs the previous round's frame), so the join
+    * is a co-partitioned zero-exchange shuffle-hash, and the cut keeps
+    * that partitioning for the next round's joins. The probe is then
+    * a limit-1 read of the cut that stops at the first changed rank.
+    * Exact integer arithmetic makes "rank_i == rank_{i−1}" a
+    * deterministic predicate, and a round is a pure function of the
+    * previous rank frame, so a fixed point at any checked round pins
+    * every later round: the early result is bit-identical to the full
+    * run.
     */
-  private def persistWithChange(next: DataFrame,
-      prev: DataFrame): (DataFrame, DataFrame, Boolean) = {
-    val prevR = prev.hint("shuffle_hash").withColumnRenamed("r", "_pr")
-    val ck = next.join(prevR, Seq("node")).localCheckpoint(true)
-    val converged = ck.filter(col("r") =!= col("_pr")).isEmpty
-    (ck, ck.select(col("node"), col("r")), converged)
-  }
+  private def rounds(init: DataFrame, iterations: Int, every: Int)(
+      step: DataFrame => DataFrame): (DataFrame, Int) =
+    Fixpoint.run(init, iterations, every,
+      Some((_, cut) => cut.filter(col("r") =!= col("_pr")).isEmpty)) { (state, i) =>
+      val rank = state.select(col("node"), col("r"))
+      val next = step(rank)
+      if (i % every == 0 && i < iterations)
+        next.join(rank.hint("shuffle_hash").withColumnRenamed("r", "_pr"),
+          Seq("node"))
+      else next
+    }
 
   /** Personalized PageRank: restart mass flows only to the SEED set —
     * the "relevance to these nodes" centrality behind
@@ -276,6 +234,7 @@ object PageRank {
     * — every step long arithmetic, bit-reproducible on any engine
     * (see microPageRank's scaladoc for why floats are a trap here).
     * Nodes unreached after `iterations` rounds surface with rank 0.
+    * `convergeCheckEvery` and `rounds_run` are microPageRank's.
     *
     * Scale shape: identical to microPageRank's rounds (cached
     * src-clustered edges + broadcast/shuffle-hash rank frame), plus
@@ -289,7 +248,7 @@ object PageRank {
       iterations: Int,
       everyNodeHasOutEdge: Boolean = false,
       broadcastThreshold: Long = BroadcastThreshold,
-      convergeCheckEvery: Int = 0): DataFrame = {
+      convergeCheckEvery: Int): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).dropDuplicates("src", "dst")
@@ -317,7 +276,7 @@ object PageRank {
     // broadcast regime: dst-clustered edge cache → partition-local
     // per-round contribution agg, zero shuffles (see microPageRank)
     val eRound = if (bcast) e.repartition(col("dst")).persist() else e
-    var rank = base
+    val rank = base
       .select(col("node"),
         when(col("base") > 0L, lit(1000000L)).otherwise(lit(0L)).as("r"))
       .localCheckpoint(true)
@@ -328,11 +287,7 @@ object PageRank {
       eRound.count()
       e.unpersist()
     }
-    var pinned = rank
-    var roundsRun = iterations
-    var i = 1
-    var stop = false
-    while (i <= iterations && !stop) {
+    val (last, roundsRun) = rounds(rank, iterations, convergeCheckEvery) { rank =>
       val contribs = contribStep(eRound, rank, bcast)
       // both sides are already node-hash-partitioned (base via the
       // distinct that built the node set, contribs via the
@@ -340,30 +295,14 @@ object PageRank {
       // so the rebase is a co-partitioned shuffle-hash join with ZERO
       // exchanges — a broadcast here would round-trip the contribs
       // frame through the driver once per round for nothing
-      val next = base.join(
+      base.join(
           if (bcast) contribs.hint("shuffle_hash") else contribs,
           Seq("node"), "left")
         .select(col("node"),
           (col("base") + expr("(85 * coalesce(sc, 0L)) div 100")).as("r"))
-      if (convergeCheckEvery > 0 && i % convergeCheckEvery == 0 &&
-          i < iterations) {
-        // final round: plain checkpoint branch (see microPageRank)
-        val (cache, cut, converged) = persistWithChange(next, rank)
-        pinned.unpersist()
-        pinned = cache
-        rank = cut
-        if (converged) { roundsRun = i; stop = true }
-      } else if (i % 8 == 0 || i == iterations) {
-        rank = next.localCheckpoint(true)
-        pinned.unpersist()
-        pinned = rank
-      } else rank = next
-      i += 1
     }
     Seq(e, eRound, base).distinct.foreach(_.unpersist())
-    val out = rank.select(col("node"), col("r").as("micro_rank"))
-    if (convergeCheckEvery > 0)
-      out.withColumn("rounds_run", lit(roundsRun).cast("int"))
-    else out
+    last.select(col("node"), col("r").as("micro_rank"),
+      lit(roundsRun).as("rounds_run"))
   }
 }

@@ -102,9 +102,9 @@ object TextEval {
     *
     * Precondition: every token is non-empty and contains no space.
     * Grams are single-space-joined and a cell recovers its order n as
-    * `size(split(g, ' '))`, so a token with a space in it counts in a
-    * higher order, and a 1-gram can then equal a 2-gram and merge with
-    * it, silently.
+    * `size(split(g, ' '))`, so a token with a space in it would count
+    * in a higher order, and a 1-gram could then equal a 2-gram and
+    * merge with it. The gram pass therefore raises on such a token.
     *
     * Scale shape: every order rides one tagged (doc, n, gram) count
     * aggregate per side and ONE clip join (map-side combinable
@@ -147,9 +147,15 @@ object TextEval {
     // Σ_cells cc at order n IS the order-n candidate gram total
     // (every occurrence lands in exactly one (doc, gram) cell), which
     // equals the Σ max(|C|−n+1, 0) the separate totals pass computed.
+    // the precondition, checked on the tokens the explode reads (no
+    // extra job): an empty or spaced token fails the query
+    def checked(c: String) = transform(col(c), t =>
+      when(t === "" || t.contains(" "), raise_error(concat(
+          lit(s"bleuCorpus: empty or spaced token in $c: '"), t, lit("'"))))
+        .otherwise(t))
     val clip = df
-      .select(col(idCol).as("_id"), col(candCol).as("_c0"),
-        col(refCol).as("_r0"))
+      .select(col(idCol).as("_id"), checked(candCol).as("_c0"),
+        checked(refCol).as("_r0"))
       .repartition(shufflePartitions, col("_id"))
       .select(col("_id"),
         explode(concat(gramStructs("_c0", 0), gramStructs("_r0", 1)))

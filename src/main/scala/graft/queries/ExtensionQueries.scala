@@ -1827,18 +1827,21 @@ object ExtensionQueries {
   }
 
   /** Multi-source BFS over q109's undirected supplier-part graph:
-    * min hop distance from suppliers 0-4, ≤ 4 hops.
+    * min hop distance from suppliers 0-4, ≤ 4 hops — unit-weight
+    * [[graft.operators.ShortestPaths.bounded]], which drops the
+    * duplicate pairs in its setup.
     */
   def qBfsHops(s: SparkSession, dir: String): DataFrame = {
     val b = tbl(s, dir, "lineitem").select(
         col("l_suppkey").cast("long").as("s"),
         (col("l_partkey").cast("long") + 10000000L).as("p"))
-    val edges = b.select(col("s").as("src"), col("p").as("dst"))
-      .union(b.select(col("p").as("src"), col("s").as("dst")))
+    val edges = b.select(col("s").as("src"), col("p").as("dst"), lit(1L).as("w"))
+      .union(b.select(col("p").as("src"), col("s").as("dst"), lit(1L).as("w")))
     val seeds = tbl(s, dir, "lineitem")
       .filter(col("l_suppkey") < 5)
       .select(col("l_suppkey").cast("long").as("node"))
-    graft.operators.Bfs.hopDistance(edges, seeds, maxHops = 4)
+    graft.operators.ShortestPaths.bounded(edges, seeds, rounds = 4)
+      .withColumnRenamed("cost", "dist")
   }
 
   /** Leakage-safe train/val/test split: q136's near-dup clusters
@@ -4849,8 +4852,7 @@ object ExtensionQueries {
     val edges = tbl(s, dir, "lineitem").select(
       col("l_suppkey").cast("long").as("src"),
       (col("l_partkey").cast("long") + 10000000L).as("dst"))
-    graft.operators.Hits.microHits(edges, iterations = 4,
-      convergeEarly = true)
+    graft.operators.Hits.microHits(edges, iterations = 4)
   }
 
   /** ER end-to-end: golden records (q320) — the survivorship stage

@@ -5,15 +5,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.{CombineJob, FormatFlights, UsageProjection}
 
-/** Streaming wrapper of the whole pipeline: raw-JSON file source →
-  * format → (per micro-batch) combine + usage → parquet sink.
+/** Streaming wrapper of the pipeline: raw-JSON file source → format
+  * → (per micro-batch) combine + usage → parquet sink.
   *
   * The reference's "real time" is an Airflow cron re-running batch
   * jobs every minute (`dags/sky_safe_dag.py:31`); this is the
   * Spark-native equivalent — `Trigger.ProcessingTime` micro-batches
-  * with `foreachBatch` running the exact same batch stages, so batch
-  * and streaming share one code path and one set of semantics
-  * (snapshot-overwrite per batch, keyed latest-state downstream).
+  * whose `foreachBatch` runs the batch runner's combine and usage
+  * stages (`CombineJob.enrich`, `UsageProjection.usage`) with the same
+  * semantics (snapshot-overwrite per batch, keyed latest-state
+  * downstream). It is not the runner's whole path: a batch skips
+  * three steps of `PipelineRunner.runOnce`, because those steps are
+  * keyed to the runner's minute (dated lake partitions, one sink
+  * upsert per run) and a micro-batch has only its batch id.
+  *   - The enriched-layer write: enrich feeds usage in memory.
+  *   - The document sink: `start` takes no sink; the usage parquet
+  *     under `outDir` is the stream's only output.
+  *   - Run metrics: the runner counts them with an `Observation` on
+  *     the enriched-layer write, which a batch does not make.
   * No watermark is needed: each batch is a self-contained snapshot,
   * not an event-time window (SURVEY.md §2.10).
   */

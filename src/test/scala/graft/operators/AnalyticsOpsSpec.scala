@@ -2,6 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -145,30 +146,33 @@ class LinearTrendSpec extends AnyFunSuite {
   }
 }
 
-/** Multi-source BFS: min hop from any seed, bounded, delta frontier. */
+/** Multi-source BFS as unit-weight shortest paths (q157's form): min
+  * hop from any seed, bounded, delta frontier.
+  */
 class BfsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def hops(edges: DataFrame, seeds: Seq[Long], maxHops: Int) =
+    ShortestPaths.bounded(edges.distinct().withColumn("w", lit(1L)),
+        seeds.toDF("node"), maxHops)
+      .as[(Long, Long)].collect().toMap
 
   test("min hop across seeds; unreachable and beyond-maxHops excluded") {
     // path 1-2-3-4-5 plus island 9; seeds 1 and 4
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (9L, 9L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val seeds = Seq(1L, 4L).toDF("node")
-    val got = Bfs.hopDistance(edges, seeds, maxHops = 4)
-      .as[(Long, Long)].collect().toMap
+    val got = hops(edges, Seq(1L, 4L), maxHops = 4)
     // 3 is 1 hop from 4 (not 2 from 1); island 9 unreachable
     assert(got == Map(1L -> 0L, 4L -> 0L, 2L -> 1L, 3L -> 1L, 5L -> 1L))
   }
 
   test("maxHops truncates a long path; early exit on exhausted frontier") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    val got = Bfs.hopDistance(edges, Seq(1L).toDF("node"), maxHops = 2)
-      .as[(Long, Long)].collect().toMap
+    val got = hops(edges, Seq(1L), maxHops = 2)
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
     // directed chain fully explored before maxHops: loop must stop early
-    val got2 = Bfs.hopDistance(edges, Seq(1L).toDF("node"), maxHops = 30)
-      .as[(Long, Long)].collect().toMap
+    val got2 = hops(edges, Seq(1L), maxHops = 30)
     assert(got2 == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
   }
 }

@@ -29,41 +29,45 @@ class PageRankSpec extends AnyFunSuite {
     r
   }
 
+  private def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.select("node", "micro_rank").as[(Long, Long)].collect().toMap
+
   // star around hub 1 plus a chain: 1<->2, 1<->3, 1<->4, 4<->5
   private val undirected = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 5L))
   private val edges = undirected ++ undirected.map(_.swap)
 
   test("matches the independent fixed-point reference exactly") {
-    val got = PageRank.microPageRank(edges.toDF("src", "dst"), iterations = 8)
-      .as[(Long, Long)].collect().toMap
-    assert(got == reference(edges, 8))
+    // cadence 8 cuts only the last round; 3 leaves a lazy tail
+    for (c <- Seq(1, 3, 8)) {
+      val got = ranks(PageRank.microPageRank(edges.toDF("src", "dst"),
+        iterations = 8, convergeCheckEvery = c))
+      assert(got == reference(edges, 8), s"cadence $c")
+    }
   }
 
   test("undirected fast-path flags are bit-equal to the default path") {
     val got = PageRank.microPageRank(edges.toDF("src", "dst"), 8,
-      everyNodeHasOutEdge = true, everyNodeHasInEdge = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == reference(edges, 8))
+      everyNodeHasOutEdge = true, everyNodeHasInEdge = true,
+      convergeCheckEvery = 4)
+    assert(ranks(got) == reference(edges, 8))
   }
 
   test("shuffle-hash regime (broadcastThreshold=1) is bit-equal") {
     val got = PageRank.microPageRank(edges.toDF("src", "dst"), 8,
-      broadcastThreshold = 1L)
-      .as[(Long, Long)].collect().toMap
-    assert(got == reference(edges, 8))
+      broadcastThreshold = 1L, convergeCheckEvery = 4)
+    assert(ranks(got) == reference(edges, 8))
   }
 
   test("shuffle-hash regime with undirected flags is bit-equal") {
     val got = PageRank.microPageRank(edges.toDF("src", "dst"), 8,
       everyNodeHasOutEdge = true, everyNodeHasInEdge = true,
-      broadcastThreshold = 1L)
-      .as[(Long, Long)].collect().toMap
-    assert(got == reference(edges, 8))
+      broadcastThreshold = 1L, convergeCheckEvery = 4)
+    assert(ranks(got) == reference(edges, 8))
   }
 
   test("hub outranks leaves and micro-mass stays near N*1e6") {
-    val got = PageRank.microPageRank(edges.toDF("src", "dst"), 8)
-      .as[(Long, Long)].collect().toMap
+    val got = ranks(PageRank.microPageRank(edges.toDF("src", "dst"), 8,
+      convergeCheckEvery = 4))
     assert(got(1L) > got(2L) && got(1L) > got(5L))
     // floor leaks at most a few micro-units per node per round
     assert(math.abs(got.values.sum - 5000000L) < 1000L)
@@ -73,8 +77,8 @@ class PageRankSpec extends AnyFunSuite {
     // chain 1→2→3 with seed {1}; isolated seedless pair 8→9
     val edges = Seq((1L, 2L), (2L, 3L), (8L, 9L)).toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
-    val got = PageRank.microPersonalizedPageRank(edges, seeds, 2)
-      .as[(Long, Long)].collect().toMap
+    val got = ranks(PageRank.microPersonalizedPageRank(edges, seeds, 2,
+      convergeCheckEvery = 2))
     // r1: 1→150000, 2→850000, 3→0
     // r2: 1→150000, 2→(85·150000)div 100, 3→(85·850000)div 100
     assert(got == Map(
@@ -87,13 +91,13 @@ class PageRankSpec extends AnyFunSuite {
     val und = Seq((1L, 2L), (1L, 3L), (3L, 4L), (4L, 5L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
-    val base = PageRank.microPersonalizedPageRank(und, seeds, 6)
-      .as[(Long, Long)].collect().toMap
-    val fast = PageRank.microPersonalizedPageRank(und, seeds, 6,
-      everyNodeHasOutEdge = true).as[(Long, Long)].collect().toMap
-    val shj = PageRank.microPersonalizedPageRank(und, seeds, 6,
-      everyNodeHasOutEdge = true, broadcastThreshold = 1L)
-      .as[(Long, Long)].collect().toMap
+    val base = ranks(PageRank.microPersonalizedPageRank(und, seeds, 6,
+      convergeCheckEvery = 3))
+    val fast = ranks(PageRank.microPersonalizedPageRank(und, seeds, 6,
+      everyNodeHasOutEdge = true, convergeCheckEvery = 3))
+    val shj = ranks(PageRank.microPersonalizedPageRank(und, seeds, 6,
+      everyNodeHasOutEdge = true, broadcastThreshold = 1L,
+      convergeCheckEvery = 3))
     assert(fast == base)
     assert(shj == base)
   }
@@ -145,13 +149,13 @@ class PageRankSpec extends AnyFunSuite {
     assert(conv.forall(_.getInt(2) == 1))
     assert(conv.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1000000L, 2L -> 0L, 3L -> 0L))
+    // the chain's hand-checked rounds: see "restart mass gated to seeds"
     val chain = Seq((1L, 2L), (2L, 3L), (8L, 9L)).toDF("src", "dst")
-    val plain = PageRank.microPersonalizedPageRank(chain, seeds, 2)
-      .as[(Long, Long)].collect().toMap
     val early = PageRank.microPersonalizedPageRank(chain, seeds, 2,
       convergeCheckEvery = 1).collect()
     assert(early.forall(_.getInt(2) == 2))
-    assert(early.map(r => r.getLong(0) -> r.getLong(1)).toMap == plain)
+    assert(early.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(
+      1L -> 150000L, 2L -> 127500L, 3L -> 722500L, 8L -> 0L, 9L -> 0L))
   }
 
   test("personalized: the seed dominates; a pure sink's echo is damped") {
@@ -163,9 +167,8 @@ class PageRankSpec extends AnyFunSuite {
     // (fed solely by half of 4's damped mass) stays below 4.
     val und = Seq((1L, 2L), (1L, 3L), (3L, 4L), (4L, 5L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val got = PageRank.microPersonalizedPageRank(
-        und, Seq(1L).toDF("node"), 8)
-      .as[(Long, Long)].collect().toMap
+    val got = ranks(PageRank.microPersonalizedPageRank(
+        und, Seq(1L).toDF("node"), 8, convergeCheckEvery = 4))
     assert(got.filter(_._1 != 1L).values.forall(_ < got(1L)))
     assert(got(5L) < got(4L))
   }

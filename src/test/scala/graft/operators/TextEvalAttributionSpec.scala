@@ -194,6 +194,19 @@ class TextEvalAttributionSpec extends AnyFunSuite {
     assert(s.forall(_.getDouble(8) === -0.25))
   }
 
+  test("BLEU: an empty or spaced token fails loudly") {
+    for (bad <- Seq("new york", "")) {
+      val df = Seq((1L, Seq("in", bad), Seq("in", "paris")))
+        .toDF("id", "cand", "ref")
+      val err = intercept[Exception] {
+        TextEval.bleuCorpus(df, "id", "cand", "ref").collect()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+      assert(msgs.exists(_.contains("empty or spaced token")), err.toString)
+    }
+  }
+
   test("MAD outliers: robust to the outlier itself; zero-MAD groups " +
       "flag every deviation; normal spread stays quiet") {
     val df = (
