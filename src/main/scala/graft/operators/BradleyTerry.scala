@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: matches aggregate once to wins W_i and unordered
   * pair counts n_ij (both map-side combinable); the fixed point then
   * runs on the ITEM/PAIR frames (k items, ≤ k² pairs — the model's
-  * own parameter space, corpus-independent), each round
-  * localCheckpoint-pinned so R rounds stay R bounded passes (the
-  * q113 re-inlining lesson). No driver collect.
+  * own parameter space, corpus-independent) as a [[Fixpoint]] loop
+  * that cuts every round, so R rounds stay R bounded passes (the
+  * q113 re-inlining lesson) and each superseded round is released.
+  * No driver collect.
   */
 object BradleyTerry {
 
@@ -62,9 +63,10 @@ object BradleyTerry {
         col("games"))
       .localCheckpoint()
 
-    var p = items.select(col("item"), lit(1000000L).as("p"))
-      .localCheckpoint()
-    (1 to rounds).foreach { _ =>
+    // one cut per round; the lazy result reads pairs, items and the
+    // final cut, so those three stay pinned
+    val (p, _) = Fixpoint.run(items.select(col("item"), lit(1000000L).as("p")),
+        rounds, every = 1, settled = None) { (p, _) =>
       val joined = pairs
         .join(p.select(col("item").as("lo"), col("p").as("_plo")), Seq("lo"))
         .join(p.select(col("item").as("hi"), col("p").as("_phi")), Seq("hi"))
@@ -74,11 +76,10 @@ object BradleyTerry {
       val denom = joined.select(col("lo").as("item"), col("_t"))
         .union(joined.select(col("hi").as("item"), col("_t")))
         .groupBy(col("item")).agg(sum(col("_t")).as("_d"))
-      p = items.join(denom, Seq("item"))
+      items.join(denom, Seq("item"))
         .withColumn("p", greatest(
           expr("(2 * wins * 1000000000000 + _d) div (2 * _d)"), lit(1L)))
         .select(col("item"), col("p"))
-        .localCheckpoint()
     }
     val total = p.agg(sum(col("p")).as("_tot"))
     items.join(p, Seq("item"))

@@ -339,6 +339,7 @@ object Dedup {
     // paying for itself (pathological chains).
     val jumpAfter = 2
     var pinned: Option[DataFrame] = Some(labels0) // round's persisted frame
+    var cut: Option[DataFrame] = None // last pointer-jump checkpoint
     var labels: DataFrame = labels0
     var iter = 0
     var converged = false
@@ -377,8 +378,7 @@ object Dedup {
         // the round's frame twice, so carrying lineage across rounds
         // would double the logical plan per round (exponential plan
         // strings → driver OOM within ~10 rounds). Checkpointing
-        // materializes the round AND severs the lineage; superseded
-        // checkpoint blocks are freed by the context cleaner.
+        // materializes the round AND severs the lineage.
         val next = nm.join(lbl, nm("_lbl") === lbl("_jn"), "left")
           .select(nm("_n"),
             coalesce(col("_jlbl"), nm("_lbl")).as("_lbl"),
@@ -388,6 +388,8 @@ object Dedup {
         nm.unpersist()
         pinned.foreach(_.unpersist())
         pinned = None
+        cut.foreach(Fixpoint.release)
+        cut = Some(next)
         labels = next.select("_n", "_lbl")
       }
       iter += 1
@@ -398,6 +400,7 @@ object Dedup {
     // cluster ids — refuse instead of lying.
     if (!converged) {
       pinned.foreach(_.unpersist())
+      cut.foreach(Fixpoint.release)
       throw new IllegalStateException(
         s"duplicateClusters did not converge in $maxIter rounds — raise maxIter " +
           s"(labels would be incorrect)")
@@ -408,6 +411,7 @@ object Dedup {
     val out = labels.select(col("_n").as(nodeCol), col("_lbl").as("cluster_id"))
       .localCheckpoint(true)
     pinned.foreach(_.unpersist())
+    cut.foreach(Fixpoint.release)
     out
   }
 

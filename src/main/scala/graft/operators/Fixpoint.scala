@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one round loop behind the iterative graph operators
   * ([[PageRank]], [[Hits]], [[KCore]], [[ShortestPaths]],
-  * [[LabelPropagation]]).
+  * [[LabelPropagation]]) and the [[BradleyTerry]] rating fit.
   *
   * A round maps the state frame to the next one. Rounds stay lazy
   * between cuts: every `every`-th round and the last become an eager

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.reflect.internal.util.BatchSourceFile
+import scala.reflect.io.VirtualFile
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,16 +32,20 @@ import org.scalatest.funsuite.AnyFunSuite
   *  6. Every parquet read in `pipeline/` names its schema: an inferred
   *     read costs a Spark job that lists the files and merges their
   *     footers, once per layer per minute.
-  *  7. No spec-only public defs: a helper that only specs reach —
-  *     directly, or through other spec-only defs — is checked by
-  *     nothing the product runs, so it either gets a product caller
-  *     or goes with its spec. A name several objects declare counts
-  *     per object, so a live namesake keeps no dead def alive.
+  *  7. No spec-only public defs: every public def of a top-level
+  *     type must be reachable, in the typer's symbol graph, from a
+  *     product root (every `main`, the declared query maps, perfbench,
+  *     the session factory perfbench reflects on, and overriders of
+  *     library methods in reached classes). A def only specs reach is
+  *     checked by nothing the product runs, so it either gets a
+  *     product caller or goes with its spec.
   *  8. No detached scaladoc: a doc block whose closing line is
   *     followed directly by the opening of another documents nothing.
   *  9. No parameter default that no product call passes: a default
   *     nothing overrides is a constant in disguise, and one only specs
-  *     override is a mode the product never runs.
+  *     override is a mode the product never runs. After the typer, a
+  *     call that leaves parameter N to its default evaluates the
+  *     getter `m$default$N`, so the check is exact per call site.
   * 10. One global-order implementation: no `spark_partition_id()` and
   *     no window over a `_pid` column outside
   *     `operators/GlobalOrder.scala`. A hand copy of the two-level
@@ -55,76 +62,10 @@ class SourceDisciplineSpec extends AnyFunSuite {
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
 
-  /** Source lines with comments and string-literal text blanked, line
-    * structure kept: a name in a comment, a column string or oracle
-    * SQL is no use of a def. Scans `//` and nested block comments,
-    * plain and triple-quoted strings and char literals; the splices
-    * of an interpolated string (`$x`, `${...}`) stay code.
-    */
-  private def codeLines(p: java.nio.file.Path): Seq[String] = {
-    val s = Files.readString(p)
-    val n = s.length
-    val out = new StringBuilder(n)
-    def at(k: Int): Char = if (k < n) s.charAt(k) else '\u0000'
-    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
-    // blank `len` chars from i (newlines kept) and return the next index
-    def blank(i: Int, len: Int): Int = {
-      s.substring(i, math.min(i + len, n)).foreach(c => out += (if (c == '\n') c else ' '))
-      i + len
-    }
-    def copy(i: Int): Int = { out += s.charAt(i); i + 1 }
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '/' && at(i + 1) == '/') {
-        val end = s.indexOf('\n', i)
-        i = blank(i, (if (end < 0) n else end) - i)
-      } else if (c == '/' && at(i + 1) == '*') {
-        var depth = 0
-        do {
-          if (at(i) == '/' && at(i + 1) == '*') { depth += 1; i = blank(i, 2) }
-          else if (at(i) == '*' && at(i + 1) == '/') { depth -= 1; i = blank(i, 2) }
-          else i = blank(i, 1)
-        } while (depth > 0 && i < n)
-      } else if (c == '\'' && at(i + 1) == '\\') {
-        i = blank(i, s.indexOf('\'', i + 3) + 1 - i) // '\n', '\u0041'
-      } else if (c == '\'' && at(i + 2) == '\'') {
-        i = blank(i, 3) // 'x', '"'
-      } else if (c == '"') {
-        val interp = i > 0 && isWord(s.charAt(i - 1))
-        val triple = s.startsWith("\"\"\"", i)
-        i = blank(i, if (triple) 3 else 1)
-        var open = true
-        while (open && i < n) {
-          val d = s.charAt(i)
-          if (triple && s.startsWith("\"\"\"", i)) {
-            // a run of more than three quotes closes on its last three
-            while (at(i + 3) == '"') i = blank(i, 1)
-            i = blank(i, 3); open = false
-          } else if (!triple && d == '"') { i = blank(i, 1); open = false }
-          else if (!triple && d == '\\') i = blank(i, 2)
-          else if (interp && d == '$' && at(i + 1) == '{') {
-            i = blank(i, 1)
-            var depth = 0
-            do {
-              if (s.charAt(i) == '{') depth += 1
-              else if (s.charAt(i) == '}') depth -= 1
-              i = copy(i)
-            } while (depth > 0 && i < n)
-          } else if (interp && d == '$' && isWord(at(i + 1))) {
-            i = blank(i, 1)
-            while (i < n && isWord(s.charAt(i))) i = copy(i)
-          } else if (interp && d == '$') i = blank(i, 2) // `$$`
-          else i = blank(i, 1)
-        }
-      } else i = copy(i)
-    }
-    out.toString.split("\n", -1).toSeq
-  }
-
   // Public defs that only specs drive, kept on purpose: (file, name).
   private val specOnlyAllowlist = Set(
-    // the flagship-query entry point that outside callers invoke
+    // the flagship-query entry point that outside callers invoke; this
+    // entry is its declaration as a root
     ("SparkEntry.scala", "entry"),
     // paper components kept as the reproduction (ROADMAP direction 6):
     // S11 Kibana provisioning, the ES index bootstrap, Orchestrator's
@@ -229,157 +170,64 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"schema-inferring parquet reads: $offenders")
   }
 
-  /** Product source (src/main and perfbench/src) with comments and
-    * string text blanked, as one text per file, plus the name-level
-    * facts rules 7 and 9 share.
-    *
-    * A member is a def at two-space indent, i.e. a member of a
-    * top-level object, class or trait (nested and local defs are out
-    * of reach), owned by the nearest top-level declaration above it.
-    * A name declared by members of more than one top-level type
-    * resolves per type: `X.name` refers to X's member; a bare `name`
-    * refers to the member of the type it appears in, or of a type its
-    * file imports members of; `expr.name` on any other receiver
-    * refers to the class and trait members of that name. A name
-    * declared by one type resolves to it wherever the word appears.
+  /** Rules 7 and 9 read one typer run over the product: `src/main`'s
+    * graft sources as nodes, the rest of `src/main/scala` and
+    * `perfbench/src` as roots. A typer error or a thin graph fails
+    * here, so a classpath drift cannot turn the rules into no-ops.
     */
-  private object Product {
-    val files: Seq[(java.nio.file.Path, String)] =
-      (scalaFilesUnder(Paths.get("src/main/scala")) ++
-        scalaFilesUnder(Paths.get("perfbench/src")))
-        .map(p => p -> codeLines(p).mkString("\n"))
-
-    /** A top-level member def: `owner` is its type, `offset` is where
-      * its name starts in the blanked text, `mods` its modifiers.
-      */
-    case class Member(path: java.nio.file.Path, owner: String, kind: String,
-        name: String, mods: String, line: Int, offset: Int) {
-      def file: String = mainRoot.relativize(path).toString
-      def isPublic: Boolean = !mods.matches(".*\\b(private|protected)\\b.*")
-    }
-
-    private val memberDecl = ("(?m)^  ((?:(?:final|implicit|override|private|protected|@\\w+)" +
-      "(?:\\[\\w+\\])?\\s+)*)def\\s+([A-Za-z_]\\w*)").r
-    private val typeDecl = ("(?m)^(?:(?:private|final|sealed|abstract|case|implicit)" +
-      "(?:\\[\\w+\\])?\\s+)*(object|class|trait)\\s+(\\w+)").r
-    // types whose members a file imports (`import a.X._`, `a.X.{..}`, `a.X.m`)
-    private val importLine = "(?m)^\\s*import\\s+([\\w.]+)\\.(?:_|\\{[^}]*\\}|\\w+)\\s*$".r
-    private val word = "\\w+".r
-
-    /** Offset → 0-based line of `text`. */
-    private def lineIndex(text: String): Int => Int = {
-      val newlines = text.indices.filter(text.charAt(_) == '\n').toArray
-      off => { val i = java.util.Arrays.binarySearch(newlines, off); if (i >= 0) i else -i - 1 }
-    }
-
-    /** (start offset, kind, name) of every top-level type in a file. */
-    private def types(text: String): Seq[(Int, String, String)] =
-      typeDecl.findAllMatchIn(text).map(m => (m.start, m.group(1), m.group(2))).toSeq
-
-    val members: Seq[Member] = files.filter(_._1.startsWith(mainRoot)).flatMap { case (p, t) =>
-      val ts = types(t)
-      val lineOf = lineIndex(t)
-      memberDecl.findAllMatchIn(t).map { m =>
-        val (_, kind, owner) = ts.takeWhile(_._1 < m.start).lastOption.getOrElse((0, "object", "?"))
-        Member(p, owner, kind, m.group(2), m.group(1), lineOf(m.start), m.start(2))
-      }.toSeq
-    }
-
-    private val ownersOf: Map[String, Set[String]] =
-      members.groupBy(_.name).view.mapValues(_.map(_.owner).toSet).toMap
-    private val kindOf: Map[String, String] = members.map(m => m.owner -> m.kind).toMap
-
-    /** A word naming a member: where it starts, its line, whether it
-      * is the name of a `def` being declared, and the owners it refers
-      * to.
-      */
-    case class Ref(offset: Int, line: Int, name: String, isDecl: Boolean,
-        owners: Set[String])
-
-    /** Every word of `text` that names a member, resolved. */
-    def refs(text: String): Seq[Ref] = {
-      val ts = types(text)
-      val imported = importLine.findAllMatchIn(text).map(_.group(1).split('.').last).toSet
-      val lineOf = lineIndex(text)
-      def wordEndingAt(end: Int): String = {
-        var j = end - 1
-        while (j >= 0 && (text.charAt(j).isLetterOrDigit || text.charAt(j) == '_')) j -= 1
-        text.substring(j + 1, end)
-      }
-      def skipSpaceBack(i: Int): Int = {
-        var j = i
-        while (j >= 0 && text.charAt(j).isWhitespace) j -= 1
-        j
-      }
-      word.findAllMatchIn(text).filter(m => ownersOf.contains(m.matched)).map { m =>
-        val owners = ownersOf(m.matched)
-        val i = skipSpaceBack(m.start - 1)
-        val dotted = i >= 0 && text.charAt(i) == '.'
-        val resolved =
-          if (owners.size <= 1) owners
-          else if (dotted) {
-            val receiver = wordEndingAt(skipSpaceBack(i - 1) + 1)
-            if (owners(receiver)) Set(receiver)
-            else owners.filter(o => kindOf.get(o).exists(_ != "object"))
-          } else {
-            val here = ts.takeWhile(_._1 < m.start).lastOption.map(_._3).getOrElse("")
-            owners.filter(o => o == here || imported(o))
-          }
-        Ref(m.start, lineOf(m.start), m.matched,
-          !dotted && wordEndingAt(i + 1) == "def", resolved)
-      }.toVector
-    }
+  private lazy val typed: TypedSource.Facts = {
+    def sources(root: String, name: java.nio.file.Path => String) =
+      scalaFilesUnder(Paths.get(root)).map(p => source(name(p), Files.readString(p)))
+    val f = TypedSource(sources("src/main/scala/graft", mainRoot.relativize(_).toString),
+      sources("src/main/scala/org", _.toString) ++ sources("perfbench/src", _.toString))
+    assert(f.errors.isEmpty, s"the typer failed on the product sources: ${f.errors.take(5)}")
+    assert(f.methods > 1000, s"the typer found only ${f.methods} graft methods")
+    f
   }
 
-  // A NAME heuristic, not a call graph, over Product's blanked source.
-  // A member's BODY runs from its `def` line to the next line indented
-  // two spaces or less — usually the next member, but a two-space
-  // continuation ends it early and it spans anything nested. A member
-  // is live when a word resolving to it (Product.refs) appears
-  // outside every body (a `val`, an object or class body,
-  // perfbench/src) or inside the body of a live or allowlisted member;
-  // iterating to a fixpoint makes a helper that only spec-only defs
-  // call spec-only too. An `override def` is called by its framework,
-  // so its body is a root, and `main` and `apply` are called without
-  // their names (by the JVM, by `X(...)`), so they are not checked. A
-  // same-named local still keeps a dead def alive.
+  private def source(name: String, text: String) =
+    new BatchSourceFile(new VirtualFile(name), text.toCharArray)
+
+  // Rule 7's roots besides the root sources and every `main`: the
+  // declared query maps, and the session factory perfbench reaches
+  // by reflection. Overriders of library methods in reached classes
+  // are edges of the graph; an allowlisted def is a root as well.
+  private val declaredRoots =
+    Set(("SparkEntry", "queries"), ("SparkEntry", "oracleSql"), ("Bench", "buildSession"))
+
+  private def reached(f: TypedSource.Facts, from: Iterable[Int]): Set[Int] = {
+    val seen = mutable.Set.from(from)
+    val todo = mutable.Stack.from(from)
+    while (todo.nonEmpty)
+      f.edges.getOrElse(todo.pop(), Set.empty[Int]).foreach(n => if (seen.add(n)) todo.push(n))
+    seen.toSet
+  }
+
+  /** Checked defs no root reaches, as "file: Owner.name", and the
+    * allowlisted (file, name) entries that name no such def.
+    */
+  private def unreached(f: TypedSource.Facts,
+      allow: Set[(String, String)]): (Seq[String], Set[(String, String)]) = {
+    val ms = f.members.zipWithIndex
+    val roots = ms.collect {
+      case (m, i) if m.name == "main" || declaredRoots((m.owner, m.name)) => i
+    }
+    val live = reached(f, roots :+ TypedSource.Roots)
+    val kept = reached(f, live ++ ms.collect { case (m, i) if allow((m.file, m.name)) => i })
+    val offenders = ms.collect {
+      case (m, i) if m.checked && !kept(i) && !allow((m.file, m.name)) =>
+        s"${m.file}: ${m.owner}.${m.name}"
+    }.distinct
+    (offenders, allow -- ms.collect { case (m, i) if m.checked && !live(i) => (m.file, m.name) })
+  }
+
   test("every public def is called outside specs") {
-    import Product._
-    val checked = members.filter(m => m.isPublic && !m.mods.contains("override") &&
-      m.name != "main" && m.name != "apply")
-    assert(checked.size > 500, s"only ${checked.size} public defs found")
-    val bodyOwners = members.filterNot(_.mods.contains("override"))
-      .map(m => (m.path, m.line) -> m).toMap
-    val memberLine = "^ {0,2}\\S.*"
-    // per word resolving to a member: the member whose body holds it
-    // (None = root) and the (owner, name) keys it refers to
-    val uses: Seq[(Option[Member], Set[(String, String)])] = files.flatMap { case (p, t) =>
-      val lines = t.split("\n", -1)
-      val inMain = p.startsWith(mainRoot)
-      var body: Option[Member] = None
-      val bodyAt = lines.indices.map { i =>
-        bodyOwners.get((p, i)) match {
-          case Some(m) if inMain => body = Some(m)
-          case _ if lines(i).matches(memberLine) => body = None
-          case _ =>
-        }
-        body
-      }
-      refs(t).map(r => (bodyAt(r.line), r.owners.map(_ -> r.name)))
-    }
-    def allowed(m: Member) = specOnlyAllowlist((m.file, m.name))
-    var live = Set.empty[(String, String)]
-    var grew = true
-    while (grew) {
-      val next = uses.collect {
-        case (o, ks) if o.forall(m => live((m.owner, m.name)) || allowed(m)) => ks
-      }.flatten.toSet
-      grew = next.size > live.size
-      live = next
-    }
-    val offenders = checked.filterNot(m => live((m.owner, m.name)) || allowed(m))
-      .map(m => s"${m.file}: ${m.owner}.${m.name}").distinct
-    assert(offenders.isEmpty, s"public defs no product code calls: $offenders")
+    val checked = typed.members.count(_.checked)
+    assert(checked > 500, s"only $checked public defs found")
+    info(s"${typed.methods} graft methods; $checked public defs checked")
+    val (offenders, stale) = unreached(typed, specOnlyAllowlist)
+    assert(offenders.isEmpty, s"public defs no product root reaches: $offenders")
+    assert(stale.isEmpty, s"allowlisted defs that are gone or reached from a root: $stale")
   }
 
   // (file, def, parameter) defaults no product call passes, kept on
@@ -395,8 +243,8 @@ class SourceDisciplineSpec extends AnyFunSuite {
 
   // Defaults that only specs override to build a scenario (a small
   // graph that must leave the broadcast regime, a plan bar no plan
-  // meets, a stream trigger a test can wait on). Each waits on its
-  // specs being rewritten onto product values (ROADMAP direction 6).
+  // meets). Each waits on its specs being rewritten onto product
+  // values (ROADMAP direction 6).
   private val specScenarioAllowlist = Set(
     ("operators/SemanticDedup.scala", "semanticDedup", "salt"),
     ("operators/SemanticDedup.scala", "thresholdSelect", "thresholds"),
@@ -419,100 +267,59 @@ class SourceDisciplineSpec extends AnyFunSuite {
     ("operators/Sampling.scala", "topFractionByScore", "maxScoreBins"),
     ("operators/Dedup.scala", "duplicateClusters", "maxIter"),
     ("operators/LanguageModel.scala", "knBigramProbs", "discount"),
-    ("operators/LanguageModel.scala", "worstWindowCutCalibration", "margins"),
-    ("streaming/FlightStream.scala", "start", "trigger"))
+    ("operators/LanguageModel.scala", "worstWindowCutCalibration", "margins"))
 
-  /** Top-level (depth-0) comma-separated parts of `s`; none if blank. */
-  private def topLevelParts(s: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer(new StringBuilder)
-    var depth = 0
-    s.foreach { c =>
-      if ("([{".indexOf(c) >= 0) depth += 1
-      else if (")]}".indexOf(c) >= 0) depth -= 1
-      if (c == ',' && depth == 0) parts += new StringBuilder else parts.last += c
-    }
-    if (parts.size == 1 && parts.head.toString.trim.isEmpty) Nil else parts.map(_.toString).toSeq
+  /** (file, def, parameter) of each default no product call passes:
+    * a call that leaves parameter N to its default evaluates the
+    * getter `def$default$N`, a call that passes it does not.
+    */
+  private def unpassed(f: TypedSource.Facts): Set[(String, String, String)] = {
+    val passed = f.calls
+      .flatMap(c => (1 to c.covered).filterNot(c.omitted).map(c.method -> _)).toSet
+    f.defaults.filterNot(d => passed((d.method, d.index)))
+      .map(d => (f.members(d.method).file, f.members(d.method).name, d.param)).toSet
   }
 
-  /** Index just past the bracket group that opens at `i`. */
-  private def closeOf(s: String, i: Int): Int = {
-    var depth = 0
-    var j = i
-    do {
-      if ("([{".indexOf(s.charAt(j)) >= 0) depth += 1
-      else if (")]}".indexOf(s.charAt(j)) >= 0) depth -= 1
-      j += 1
-    } while (depth > 0 && j < s.length)
-    j
-  }
-
-  // The parameter lists of a declaration or the argument lists of a
-  // call starting at `from`: an optional `[...]`, then each `(...)` or
-  // `{...}` group (a block is one argument). `gap` is what may sit
-  // between groups.
-  private def bracketLists(s: String, from: Int, gap: Char => Boolean): Seq[Seq[String]] = {
-    def skip(i: Int): Int = { var j = i; while (j < s.length && gap(s.charAt(j))) j += 1; j }
-    var i = skip(from)
-    if (i < s.length && s.charAt(i) == '[') i = skip(closeOf(s, i))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    while (i < s.length && (s.charAt(i) == '(' || s.charAt(i) == '{')) {
-      val end = closeOf(s, i)
-      out += (if (s.charAt(i) == '{') Seq("{}") else topLevelParts(s.substring(i + 1, end - 1)))
-      i = skip(end)
-    }
-    out.toSeq
-  }
-
-  // Rule 9. A default-valued parameter of a member (Product.members)
-  // outside queries/ and SparkEntry.scala, `override`s and implicit
-  // lists aside, is PASSED by a call when the call's list at the
-  // parameter's position has more positional arguments than the
-  // parameter's index, names it (`p = ...`), or splats (`: _*`).
-  // Calls are words resolving to the member (Product.refs) followed
-  // by argument lists on the same line, in src/main and perfbench/src
-  // only: a default only specs set is a mode the product never runs.
+  // Rule 9's population: defaults of the defs outside queries/ and
+  // SparkEntry.scala, `override`s and implicit lists aside.
   test("every parameter default is passed by some product call") {
-    import Product._
-    val named = "(?s)\\s*(\\w+)\\s*=(?![=>]).*".r
-    val isDefault = "(?s)[^=]*[^=!<>]=(?![=>]).*"
-    val checked = members.filter { m =>
-      !m.file.startsWith("queries/") && m.file != "SparkEntry.scala" &&
-        !m.mods.contains("override")
-    }
-    val text = files.toMap
-    // (member, list index, parameter index, parameter name)
-    val defaults = checked.flatMap { m =>
-      val lists = bracketLists(text(m.path), m.offset + m.name.length, _.isWhitespace)
-      lists.zipWithIndex.filterNot(_._1.headOption.exists(_.trim.startsWith("implicit")))
-        .flatMap { case (ps, li) =>
-          ps.zipWithIndex.collect {
-            case (p, pi) if p.matches(isDefault) => (m, li, pi, p.trim.takeWhile(_ != ':').trim)
-          }
-        }
-    }
+    def inScope(file: String) = !file.startsWith("queries/") && file != "SparkEntry.scala"
+    val defaults = typed.defaults.filter(d => inScope(typed.members(d.method).file))
     assert(defaults.size > 100, s"only ${defaults.size} parameter defaults found")
-    // (owner, name) -> argument lists of every product call
-    val calls: Map[(String, String), Seq[Seq[Seq[String]]]] = files.flatMap { case (_, t) =>
-      refs(t).filterNot(_.isDecl).flatMap { r =>
-        val args = bracketLists(t, r.offset + r.name.length, c => c == ' ' || c == '\t')
-        r.owners.map(o => (o, r.name) -> args)
-      }
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val unpassed = defaults.filterNot { case (m, li, pi, p) =>
-      calls.getOrElse((m.owner, m.name), Nil).exists { lists =>
-        lists.lift(li).exists { args =>
-          val (byName, positional) = args.partition(_.matches(named.regex))
-          positional.size > pi || positional.exists(_.trim.endsWith("_*")) ||
-            byName.exists { case named(n) => n == p }
-        }
-      }
-    }.map { case (m, _, _, p) => (m.file, m.name, p) }.distinct
-    info(s"${defaults.size} parameter defaults; ${unpassed.size} passed by no product call")
-    val offenders = unpassed.filterNot(k =>
+    val unpassedNow = unpassed(typed).filter(k => inScope(k._1))
+    info(s"${defaults.size} parameter defaults; ${unpassedNow.size} passed by no product call")
+    val offenders = unpassedNow.filterNot(k =>
       unpassedDefaultAllowlist(k) || specScenarioAllowlist(k))
     assert(offenders.isEmpty, s"parameter defaults no product call passes: $offenders")
-    val stale = (unpassedDefaultAllowlist ++ specScenarioAllowlist) -- unpassed
+    val stale = (unpassedDefaultAllowlist ++ specScenarioAllowlist) -- unpassedNow
     assert(stale.isEmpty, s"allowlisted defaults that are gone or passed: $stale")
+  }
+
+  // The ObjectNode.put calls of sources/Kibana.scala once read as
+  // calls of Http.put: here, typed through the same code path, a
+  // library `put` is no call of a graft `put`.
+  test("rules 7 and 9 tell a library put from Http.put") {
+    val planted = """package graft.planted
+      |object Http {
+      |  def put(url: String, body: String, headers: Map[String, String] = Map.empty,
+      |      timeoutSec: Long = 30L): String = url + body
+      |}
+      |object Kibana {
+      |  def main(args: Array[String]): Unit = provision()
+      |  def provision(): String = {
+      |    val node = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+      |    node.put("title", "flights")
+      |    node.put("timeFieldName", "extracted_at")
+      |    Http.put("http://kibana/api", node.toString, headers = Map("kbn-xsrf" -> "true"))
+      |  }
+      |  def put(key: String, value: String = ""): String = key + value
+      |}
+      |""".stripMargin
+    val f = TypedSource(Seq(source("Planted.scala", planted)), Nil)
+    assert(f.errors.isEmpty, f.errors)
+    assert(unreached(f, Set.empty)._1 == Seq("Planted.scala: Kibana.put"))
+    assert(unpassed(f) == Set(("Planted.scala", "put", "timeoutSec"),
+      ("Planted.scala", "put", "value")))
   }
 
   test("no scaladoc block directly followed by another") {

@@ -2,12 +2,15 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.GraftSession
 
@@ -78,6 +81,38 @@ object TestSpark {
         "the plan listener never saw the marker action")
       (result, plans.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** How many RDDs that were not persisted before `f` it leaves
+    * persisted. Every RDD persisted when one of f's jobs starts is
+    * held until the count is taken, so a checkpoint f drops without
+    * releasing it counts even if its Dataset was collected meanwhile
+    * (which lets the context cleaner free it, but only after a GC).
+    * Job events reach the listener in order, so a marker job closes
+    * the recording.
+    */
+  def pinnedBy(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val marker = "_pinned_marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          closed.countDown()
+        else seen.addAll(sc.getPersistentRDDs.values.asJavaCollection)
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(closed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the job listener never saw the marker job")
+      seen.asScala.filter(r => !before(r.id) && r.getStorageLevel != StorageLevel.NONE)
+        .map(_.id).toSet.size
+    } finally sc.removeSparkListener(listener)
   }
 
   private object Stages extends AdaptiveSparkPlanHelper

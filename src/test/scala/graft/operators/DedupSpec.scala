@@ -143,9 +143,14 @@ class DedupSpec extends AnyFunSuite {
     val ids = (100L to 163L).toSeq
     val nodes = ids.toDF("doc_id")
     val edges = ids.zip(ids.tail).toDF("id_a", "id_b")
-    val got = Dedup.duplicateClusters(nodes, edges, "doc_id", "id_a", "id_b")
-      .as[(Long, Long)].collect().toMap
+    var got = Map.empty[Long, Long]
+    // every pointer-jump checkpoint is released; only the result's stays
+    val left = TestSpark.pinnedBy {
+      got = Dedup.duplicateClusters(nodes, edges, "doc_id", "id_a", "id_b")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(got.size == 64 && got.values.toSet == Set(100L))
+    assert(left <= 1, s"$left RDDs left persisted")
   }
 
   test("duplicate clusters: refuses to return partial labels when maxIter is too low") {

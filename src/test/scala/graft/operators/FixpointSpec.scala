@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The iterative graph operators on [[Fixpoint]]: each releases every
-  * cut and cache but its result's, and each runs the jobs its loop's
-  * accounting predicts.
+/** The iterative operators on [[Fixpoint]]: each releases every cut
+  * and cache its result does not read, and each runs the jobs its
+  * loop's accounting predicts.
   */
 class FixpointSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -25,24 +25,28 @@ class FixpointSpec extends AnyFunSuite {
     .toDF("src", "dst", "w")
   private def seed = Seq(1L).toDF("node")
 
-  private val runs: Seq[(String, () => DataFrame)] = Seq(
-    "PageRank" -> (() => PageRank.microPageRank(star, 8,
+  private def matches = Seq(("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"),
+    ("a", "c"), ("c", "a")).toDF("winner", "loser")
+
+  // (operator, RDDs its result may keep pinned, run)
+  private val runs: Seq[(String, Int, () => DataFrame)] = Seq(
+    ("PageRank", 1, () => PageRank.microPageRank(star, 8,
       convergeCheckEvery = 4)),
-    "personalized PageRank" -> (() => PageRank.microPersonalizedPageRank(
+    ("personalized PageRank", 1, () => PageRank.microPersonalizedPageRank(
       star, seed, 6, convergeCheckEvery = 3)),
-    "Hits" -> (() => Hits.microHits(star, 4)),
-    "KCore" -> (() => KCore.coreMembers(pendant, k = 2, rounds = 8)),
-    "ShortestPaths" -> (() => ShortestPaths.bounded(weighted, seed, 4)),
-    "unit-weight ShortestPaths" -> (() => ShortestPaths.bounded(
+    ("Hits", 1, () => Hits.microHits(star, 4)),
+    ("KCore", 1, () => KCore.coreMembers(pendant, k = 2, rounds = 8)),
+    ("ShortestPaths", 1, () => ShortestPaths.bounded(weighted, seed, 4)),
+    ("unit-weight ShortestPaths", 1, () => ShortestPaths.bounded(
       star.withColumn("w", lit(1L)), seed, 4)),
-    "LabelPropagation" -> (() => LabelPropagation.propagate(star, 4)))
+    ("LabelPropagation", 1, () => LabelPropagation.propagate(star, 4)),
+    // the lazy result reads the pair and item frames besides its cut
+    ("BradleyTerry", 3, () => BradleyTerry.ratings(matches, "winner", "loser", 4)))
 
   test("every iterative graph operator leaves only its result pinned") {
-    val sc = spark.sparkContext
-    for ((name, run) <- runs) {
-      val before = sc.getPersistentRDDs.size
-      run().count()
-      assert(sc.getPersistentRDDs.size <= before + 1, name)
+    for ((name, pins, run) <- runs) {
+      val left = TestSpark.pinnedBy(run().count())
+      assert(left <= pins, s"$name left $left RDDs persisted")
     }
   }
 

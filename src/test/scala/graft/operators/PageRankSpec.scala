@@ -102,8 +102,7 @@ class PageRankSpec extends AnyFunSuite {
     assert(shj == base)
   }
 
-  test("convergeEarly: a non-converged graph runs all R rounds and " +
-      "stays bit-equal to the plain path") {
+  test("every-round probe: all R rounds run and match the reference") {
     // sanity: the star/chain fixture really has no fixed point in 8
     // rounds (otherwise this test would silently weaken)
     val ref = reference(edges, 8)
@@ -115,8 +114,7 @@ class PageRankSpec extends AnyFunSuite {
     assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == ref)
   }
 
-  test("convergeEarly: the exit engages on a ring at round 1 (the " +
-      "integer fixed point) in both join regimes") {
+  test("every-round probe: a ring stops at round 1 in both join regimes") {
     val ring = (1L to 6L).map(i => (i, i % 6 + 1)).toDF("src", "dst")
     for (thr <- Seq(4000000L, 1L)) {
       val got = PageRank.microPageRank(ring, 8, distinctEdges = true,
@@ -140,8 +138,7 @@ class PageRankSpec extends AnyFunSuite {
     assert(got.forall(_.getLong(1) == 1000000L))
   }
 
-  test("personalized convergeEarly: a pure self-loop graph is its own " +
-      "fixed point (rounds_run = 1); a chain is not (all R rounds)") {
+  test("personalized probe: self-loops stop at round 1, a chain runs all R") {
     val loops = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("src", "dst")
     val seeds = Seq(1L).toDF("node")
     val conv = PageRank.microPersonalizedPageRank(loops, seeds, 6,

@@ -1,15 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.model.Schemas
 
 case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
 
@@ -197,43 +194,6 @@ class StreamingSpec extends AnyFunSuite {
     val latest = EventStreams.latestStateByKey(batch, "user_id")
       .select("user_id", "event_type").as[(Long, String)].collect().toMap
     assert(latest == Map(1L -> "b", 2L -> "c"))
-  }
-
-  test("flight stream end-to-end: raw json files -> usage parquet") {
-    val rawDir = Files.createTempDirectory("graft_raw").toString
-    val outDir = Files.createTempDirectory("graft_usage").toString
-    val payload =
-      """{"time": 1772121600, "_extracted_at": "2026-02-26T16:00:05",
-        | "states": [["3c6444", "DLH9CK  ", "Germany", 1772121599, 1772121600,
-        | 2.3522, 48.8566, 11277.6, false, 231.5, 85.2, -0.33,
-        | null, 11582.4, "1000", false, 0],
-        | ["ab1234", "AFR01", "France", 1772121599, 1772121600,
-        | 5.1, 45.7, 150.0, false, 50.0, 10.0, 0.0,
-        | null, 160.0, "7000", false, 0],
-        | ["cd5678", "BAW9", "UK", 1772121599, 1772121600,
-        | 3.0, 50.5, 2500.0, false, 150.0, 20.0, 12.0,
-        | null, 2600.0, "7001", false, 1]]}""".stripMargin.replaceAll("\n", " ")
-    Files.writeString(java.nio.file.Paths.get(rawDir, "batch1.json"), payload)
-
-    val weather = Schemas.stations
-      .map(st => (st.latitude, st.longitude, 20.0, 180.0, 10.0, 0.0, 0.0, 0.0,
-        0.0, 10000.0, 7.0))
-      .toDF("latitude", "longitude", "elevation", "wind_direction_10m",
-        "wind_speed_10m", "wind_gusts_10m", "precipitation", "rain",
-        "weather_code", "visibility", "temperature_2m")
-      .withColumn("cloud_cover", lit(0.0))
-
-    val q = FlightStream.start(spark, rawDir, weather, outDir,
-      Trigger.AvailableNow())
-    q.awaitTermination(120000)
-
-    val out = spark.read.parquet(s"$outDir/batch=0")
-    assert(out.count() == 3)
-    assert(out.columns.length == 28)
-    // low-and-slow flight gets the airborne-below-300m risk term
-    val lowRisk = out.filter(col("icao24") === "ab1234")
-      .select("risk_score").first().getInt(0)
-    assert(lowRisk >= 15)
   }
 
   test("replayed CDC fold equals the batch change-log fold") {
